@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.Tables.t
+import graft.functions.ReserveTrial.reserve_trial
 import graft.ops.Num._
 
 /** A policy row — canonical input schema of the reference system
@@ -45,11 +46,11 @@ case class PolicyTypeStats(
   * not a global average (calculate_average_reserves.py:27-35).
   *
   * Scale design: instead of exploding `trials × policies × claims` rows,
-  * the sum of n i.i.d. Normal(100,10) draws is sampled in closed form as
-  * Normal(100·n, 10·√n) — distribution-identical, removes the inner
-  * generator entirely (SURVEY.md §7.3 M5), and keeps the whole pipeline in
-  * whole-stage codegen. The trials dimension stays an `explode(sequence)`
-  * — a narrow 1→nSims generator with no shuffle.
+  * two exact distribution identities collapse the draws. The sum of n
+  * i.i.d. Normal(100,10) severities is Normal(100·n, 10·√n) (SURVEY.md
+  * §7.3 M5), and the claim counts of the policies sharing a term sum to
+  * one negative-binomial draw. One row per (type, trial) remains, drawn
+  * by a codegen'd native expression.
   */
 object Actuarial {
 
@@ -128,61 +129,73 @@ object Actuarial {
        |GROUP BY o_orderpriority
        |ORDER BY policy_type""".stripMargin
 
-  /** Seeded Monte Carlo reserve simulation (rows-only check — stochastic).
+  /** Seeded Monte Carlo reserve simulation (rows-only check — stochastic):
+    * per policy type, the over-`nSims`-trials average of the summed claim
+    * severities.
     *
-    * Pipeline: policies ×(explode)× trials → per-trial closed-form claim
-    * total → partial/final agg per (type, sim) → avg over sims per type.
-    * No RDDs, no UDFs: `rand`/`randn`/`explode(sequence)` keep everything
-    * in codegen; Spark's HashAggregate partial/final split replaces the
-    * reference's worker/Lambda two-level gather.
+    * Stratified: a type's policies fall into strata of equal term, and a
+    * stratum of c policies draws its trial claim count as one exact
+    * NegativeBinomial(c, 1−q) variate — the sum of its c per-policy
+    * Geometric(1−q) = ⌊Exp(365/term)⌋ draws (see
+    * [[graft.functions.ReserveTrial]]). Plan:
+    *   1. one `groupBy(policy_type)` collects the terms into a sorted
+    *      `strata` array of (term, n, theta);
+    *   2. each type row explodes into `simChunks` of the session's
+    *      shuffle parallelism, spread by [[graft.Tables.barrier]], and
+    *      each chunk into its trials — one row per (type, sim);
+    *   3. `reserve_trial` draws that trial, keyed on
+    *      seed ⊕ xxhash64(policy_type, sim).
+    * Work scales with strata × trials, not policies × trials, and every
+    * draw is a function of its row, so the result is bit-identical at any
+    * partition count (the average is an exact `dsum6` sum).
     */
-  def simulateReserves(
-      policies: DataFrame, nSims: Int, seed: Long,
-      nativeExpr: Boolean = true): DataFrame = {
+  def simulateReserves(policies: DataFrame, nSims: Int, seed: Long): DataFrame =
+    trials(policies, nSims, seed)
+      .groupBy("policy_type")
+      .agg((dsum6(col("trial_reserves")) / nSims).as("mc_reserves"))
+
+  /** The (policy_type, sim, trial_reserves) rows [[simulateReserves]]
+    * averages: exactly trials 1..nSims per type with a valid policy.
+    */
+  def trials(policies: DataFrame, nSims: Int, seed: Long): DataFrame = {
+    require(nSims > 0, "nSims must be positive")
     // term ≤ 0 panics the reference worker (main.rs:67, Exp::new of a
     // non-positive rate); here such rows are excluded up front — an
     // analysis-level guard instead of a runtime crash (SURVEY.md §7.5).
-    //
-    // Generator-expansion-aware partitioning: the 1→nSims explode
-    // multiplies rows ×10⁴, but Spark plans scan splits from INPUT bytes —
-    // a policy table that fits one parquet split would run the entire
-    // post-explode pipeline (draws + partial agg) on ONE task. Spread the
-    // small pre-explode side across the session's shuffle parallelism
-    // first (measured at sf0.1/10k sims: 80 s single-task → seconds).
-    val par = try policies.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-      catch { case _: Throwable => policies.sparkSession.sparkContext.defaultParallelism }
-    val valid = policies.filter(col("term") > 0).repartition(par)
-    // NOTE (r21): a broadcast-range nested-loop join was tried in place
-    // of this generator (to remove the per-policy nSims-element sequence
-    // array) and measured 1.5× MORE task CPU — BNLJ's per-output-row
-    // join machinery costs more than the generator's array churn. The
-    // explode stays.
-    val trials = valid.withColumn("sim", explode(sequence(lit(1), lit(nSims))))
-    // n ~ floor(Exp(rate 365/term)) (main.rs:67,70): either the native
-    // Catalyst sampler or its built-in inverse-CDF rewrite — statistically
-    // identical (SURVEY.md §2.8)
-    val expSample =
-      if (nativeExpr)
-        graft.functions.RandExponential.rand_exponential(lit(365.0) / col("term"), seed)
-      else -log(lit(1.0) - rand(seed)) * col("term") / lit(365.0)
-    // Two nested normal sums collapse in closed form (both distribution-
-    // identical, by normal additivity):
-    //  * per policy-trial, Σ of n i.i.d. N(100,10) severities == N(100n, 10√n)
-    //    — removes the per-claim generator (SURVEY §7.3 M5);
-    //  * per (type, sim), Σ_p [100·n_p + 10·√n_p·z_p] over independent z_p
-    //    == 100·Σn_p + 10·√(Σn_p)·z — ONE gaussian draw per (type, sim)
-    //    group instead of one per policy-trial row. At 10k trials × 150k
-    //    policies that removes 1.5 G nextGaussian calls; the only per-row
-    //    work left is the exponential claim-count draw, and the n_claims
-    //    sum partial-aggregates map-side before the (type, sim) shuffle.
-    trials
-      .withColumn("n_claims", floor(expSample))
-      .groupBy("policy_type", "sim")
-      .agg(sum("n_claims").as("tot_n"))
-      .withColumn("trial_reserves",
-        col("tot_n") * 100.0 + sqrt(col("tot_n")) * 10.0 * randn(seed + 1))
+    val terms = policies.filter(col("term") > 0)
       .groupBy("policy_type")
-      .agg((sum("trial_reserves") / nSims).as("mc_reserves"))
+      .agg(array_sort(collect_list(col("term"))).as("terms"))
+    // run-length encode the sorted terms in one pass: a stratum starts at
+    // each (1-based) position whose term differs from its predecessor
+    val starts = terms.select(col("policy_type"), col("terms"),
+      filter(sequence(lit(1), size(col("terms"))), i =>
+        i === 1 || element_at(col("terms"), i) =!= element_at(col("terms"), i - 1)).as("starts"))
+    val strata = starts.select(col("policy_type"), zip_with(
+      col("starts"),
+      concat(slice(col("starts"), lit(2), size(col("starts"))), array(size(col("terms")) + 1)),
+      (from, until) => {
+        val term = element_at(col("terms"), from)
+        struct(term.as("term"), (until - from).cast("long").as("n"),
+          (lit(1.0) / expm1(lit(365.0) / term)).as("theta"))
+      }).as("strata"))
+    val chunks = array(simChunks(nSims, policies.sparkSession.sessionState.conf.numShufflePartitions)
+      .map { case (lo, hi) => struct(lit(lo).as("lo"), lit(hi).as("hi")) }: _*)
+    // the 1→nSims generator multiplies rows past what split planning sees:
+    // spread the (type, chunk) rows over the shuffle parallelism first
+    graft.Tables.barrier(strata.withColumn("chunk", explode(chunks)))
+      .select(col("policy_type"), col("strata"),
+        explode(sequence(col("chunk.lo"), col("chunk.hi"))).as("sim"))
+      .select(col("policy_type"), col("sim"),
+        reserve_trial(col("strata"),
+          xxhash64(col("policy_type"), col("sim")).bitwiseXOR(lit(seed))).as("trial_reserves"))
+  }
+
+  /** Trials 1..nSims split into min(parts, nSims) contiguous, non-empty
+    * (first, last) chunks of near-equal size.
+    */
+  private def simChunks(nSims: Int, parts: Int): Seq[(Int, Int)] = {
+    val k = math.min(nSims, parts)
+    (0 until k).map(c => ((c.toLong * nSims / k).toInt + 1, ((c + 1L) * nSims / k).toInt))
   }
 
   // ---- q21: Monte Carlo vs closed form by policy type (rows-only) ---------
@@ -207,9 +220,9 @@ object Actuarial {
   // Identical pipeline to q21 but at the reference's 10,000 trials — the
   // configuration the original system actually ran. The trials dimension
   // is a narrow explode(sequence) generator, so 50× more trials is 50×
-  // more codegen'd rows through the same partial/final agg: no new
-  // shuffle, no driver involvement, which is why the reference scale is
-  // just a parameter here and not a different plan.
+  // more codegen'd (type, trial) rows through the same partial/final agg:
+  // no new shuffle, no driver involvement, which is why the reference
+  // scale is just a parameter here and not a different plan.
   def q36McReferenceScale(s: SparkSession, dir: String): DataFrame = {
     val p = policiesFromOrders(s, dir)
     val mc = simulateReserves(p, nSims = referenceNumSimulations, seed = 42L)

@@ -114,6 +114,44 @@ class ActuarialSpec extends SparkSpec {
     assert(out(0).getDouble(1) >= 0.0)
   }
 
+  private def withShufflePartitions[T](n: Int)(body: => T): T = {
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, n.toString)
+    try body finally spark.conf.set(key, prev)
+  }
+
+  test("each type gets trials 1..nSims exactly once, whatever nSims vs the partitions") {
+    val p = Actuarial.policiesFromOrders(spark, sf)
+    val nTypes = p.select("policy_type").distinct().count()
+    withShufflePartitions(4) {
+      // fewer sims than partitions, an uneven split, and a larger uneven one
+      Seq(1, 3, 10001).foreach { nSims =>
+        val perType = Actuarial.trials(p, nSims, seed = 3L)
+          .groupBy("policy_type")
+          .agg(count(lit(1)), countDistinct(col("sim")), min(col("sim")), max(col("sim")))
+          .collect()
+        assert(perType.length == nTypes)
+        perType.foreach { r =>
+          assert(r.getLong(1) == nSims && r.getLong(2) == nSims &&
+            r.getInt(3) == 1 && r.getInt(4) == nSims, s"nSims=$nSims: $r")
+        }
+      }
+    }
+  }
+
+  test("seeded Monte Carlo is bit-identical at any shuffle partition count") {
+    val p = Actuarial.policiesFromOrders(spark, sf)
+    def run(n: Int) = withShufflePartitions(n) {
+      Actuarial.simulateReserves(p, nSims = 500, seed = 9L).collect()
+        .map(r => (r.getString(0), java.lang.Double.doubleToRawLongBits(r.getDouble(1))))
+        .sortBy(_._1).toSeq
+    }
+    val four = run(4)
+    assert(four.nonEmpty)
+    assert(run(1) == four && run(3) == four)
+  }
+
   test("N < W leaves trailing workers empty (entrypoint.sh edge)") {
     val plan = Actuarial.partitionPlan(Seq("a", "b", "c"), 5)
     assert(plan.take(3).forall(_.length == 1) && plan.drop(3).forall(_.isEmpty))

@@ -235,6 +235,35 @@ class FunctionsSpec extends SparkSpec {
     assert(!rows(0).isNullAt(0) && rows(1).isNullAt(0))
   }
 
+  test("reserve_trial's negative-binomial sampler matches NB(c, 1-q) moments and pmf") {
+    import graft.functions.ReserveTrial
+    val draws = 100000
+    // per c, one term with the gamma rate λ ≈ c·theta below the Poisson
+    // branch point (10, inversion) and one straddling it or above (PTRS)
+    val cases = Seq((1L, 365.0), (1L, 3650.0), (3L, 365.0), (3L, 3650.0),
+      (3000L, 60.0), (3000L, 3650.0))
+    cases.zipWithIndex.foreach { case ((c, term), i) =>
+      val theta = 1.0 / math.expm1(365.0 / term) // q/(1-q), q = e^{-365/term}
+      val rng = new ReserveTrial.Stream(1000L + i)
+      val xs = Array.fill(draws)(ReserveTrial.negBinomial(rng, c, theta).toDouble)
+      val mean = xs.sum / draws
+      val m2 = xs.map(x => (x - mean) * (x - mean)).sum / draws
+      val m4 = xs.map(x => math.pow(x - mean, 4)).sum / draws
+      val (mu, vr) = (c * theta, c * theta * (1.0 + theta)) // c·q/(1-q), c·q/(1-q)²
+      val tag = s"c=$c term=$term"
+      assert(math.abs(mean - mu) < 5.0 * math.sqrt(vr / draws), s"$tag mean=$mean vs $mu")
+      assert(math.abs(m2 - vr) < 5.0 * math.sqrt((m4 - m2 * m2) / draws), s"$tag var=$m2 vs $vr")
+      if (c == 1L) {
+        val q = theta / (1.0 + theta)
+        (0 to 3).foreach { k =>
+          val p = (1.0 - q) * math.pow(q, k) // geometric pmf
+          val f = xs.count(_ == k).toDouble / draws
+          assert(math.abs(f - p) < 5.0 * math.sqrt(p * (1.0 - p) / draws), s"$tag P(N=$k)=$f vs $p")
+        }
+      }
+    }
+  }
+
   test("sketch aggregates reject mistyped input at analysis time, " +
       "not as an executor-side ClassCastException") {
     import graft.functions.{BitmapAgg, CountMinAgg, HllAgg, MinHashAgg, MisraGriesAgg, SimHashAgg}
