@@ -49,30 +49,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // expensive lambda exprs must not be re-inlined into scan filters
-      .config("spark.sql.constraintPropagation.enabled", "false")
-      // events.parquet ts unit has drifted across testdata generations (ns/µs);
-      // the loader adapts (Tables.events). nanosAsLong stays on: required for
-      // ns files, harmless for µs ones.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // Spark 4.1 writes + verifies a checksum COMPANION FILE for every
-      // streaming-checkpoint file (offset/commit logs, every state-store
-      // delta of every partition of every batch) through a per-manager
-      // thread pool. For this bench's run-to-completion streams that
-      // doubles tiny-file checkpoint I/O, and the pool construction runs
-      // inside the global state-store provider-load lock — thread dumps
-      // during q208 show 31/32 task threads serialized behind it and 600+
-      // live ChecksumCheckpointFileManager threads. Scale-independent to
-      // disable: HDFS/S3 already checksum at the filesystem layer (r21).
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = session(cpus)
     spark.sparkContext.setLogLevel("WARN")
     // warm up the session (codegen, shuffle machinery, broadcast env) so
     // the first timed query isn't charged JVM start-up costs
@@ -268,4 +245,33 @@ object Bench {
     }
     println(compactLine(kept, results.size - kept.size))
   }
+
+  /** The one session configuration of every main, tool and spec:
+    * `local[cpus]` with `cpus` shuffle partitions.
+    */
+  def session(cpus: String): SparkSession =
+    SparkSession.builder()
+      .withExtensions(new graft.functions.GraftExtensions)
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      // expensive lambda exprs must not be re-inlined into scan filters
+      .config("spark.sql.constraintPropagation.enabled", "false")
+      // events.parquet ts unit has drifted across testdata generations (ns/µs);
+      // the loader adapts (Tables.events). nanosAsLong stays on: required for
+      // ns files, harmless for µs ones.
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.adaptive.enabled", "true")
+      // Spark 4.1 writes + verifies a checksum COMPANION FILE for every
+      // streaming-checkpoint file (offset/commit logs, every state-store
+      // delta of every partition of every batch) through a per-manager
+      // thread pool. For run-to-completion streams that
+      // doubles tiny-file checkpoint I/O, and the pool construction runs
+      // inside the global state-store provider-load lock — thread dumps
+      // during q208 show 31/32 task threads serialized behind it and 600+
+      // live ChecksumCheckpointFileManager threads. Scale-independent to
+      // disable: HDFS/S3 already checksum at the filesystem layer (r21).
+      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
 }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
@@ -21,22 +20,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // expensive lambda exprs must not be re-inlined into scan filters
-      .config("spark.sql.constraintPropagation.enabled", "false")
-      // events.parquet ts unit has drifted across testdata generations (ns/µs);
-      // the loader adapts (Tables.events). nanosAsLong stays on: required for
-      // ns files, harmless for µs ones.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // see Bench.scala: 4.1's checkpoint checksum companion files double
-      // tiny-file checkpoint I/O and serialize provider loads (r21)
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Bench.session(cpus)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // Dev-only subset filter (comma-separated name prefixes); the driver

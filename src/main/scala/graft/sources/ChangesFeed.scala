@@ -418,30 +418,7 @@ class DigestChangesScan(path: String, from: Int, to: Int,
   // readChangeFeed shape). Downstream CDC consumers tail the table's
   // commit log directly instead of re-diffing snapshots.
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-    new DigestChangesMicroBatchStream(path, from, ref)
-}
-
-/** Streaming form of the change feed (q244): offsets are manifest
-  * versions (as in [[DigestMicroBatchStream]]) but each batch carries the
-  * CHANGE rows of its version range — including deletes and compaction
-  * skips, which the append-only table stream cannot represent.
-  */
-class DigestChangesMicroBatchStream(path: String, from: Int,
-    ref: String = DigestManifest.MainRef)
-    extends MicroBatchStream {
-  private def offset(v: Int) = DigestVersionOffset(v)
-  override def initialOffset(): Offset = offset(from)
-  override def latestOffset(): Offset =
-    offset(DigestManifest.currentVersion(path, ref))
-  override def deserializeOffset(json: String): Offset = offset(json.trim.toInt)
-  override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] =
-    DigestChanges.plan(path,
-      start.asInstanceOf[DigestVersionOffset].v,
-      end.asInstanceOf[DigestVersionOffset].v, ref).toArray
-  override def createReaderFactory(): PartitionReaderFactory =
-    new ChangesReaderFactory
+    new ChangesMicroBatchStream(path, from, ref, new ChangesReaderFactory)
 }
 
 /** One whole base file entering (`insert`) or leaving (`delete`) the
@@ -700,111 +677,6 @@ class ChangesReaderFactory extends PartitionReaderFactory {
       override def get(): InternalRow = current
       override def close(): Unit = if (pqReader != null) pqReader.close()
     }
-}
-
-/** STREAMING READ of the digest table (q242): the commit log doubles as a
-  * stream — offsets ARE manifest versions, and each micro-batch reads
-  * exactly the base files ADDED in `(start, end]`. This is the "table as
-  * queue" capability every lakehouse format ships: downstream jobs
-  * consume a 100 TB table incrementally, paying O(new files) per
-  * trigger, with exactly-once delivery riding on the engine's offset
-  * checkpointing (offsets are durable versions, so replanning a batch
-  * after restart yields the same files).
-  *
-  * Append-only by contract: a version that REMOVES files (overwrite,
-  * DELETE, compaction) is not expressible as an append stream — the
-  * planner REFUSES it loudly instead of silently re-emitting or dropping
-  * rows (restart from a fresh checkpoint, or consume the q241 changes
-  * feed, which does represent deletes).
-  */
-class DigestMicroBatchStream(path: String,
-    maxVersionsPerTrigger: Option[Int] = None) extends MicroBatchStream
-    with org.apache.spark.sql.connector.read.streaming.SupportsAdmissionControl
-    with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
-  import org.apache.spark.sql.connector.read.streaming.{ReadLimit, ReadMaxFiles}
-
-  private def offset(v: Int) = DigestVersionOffset(v)
-
-  // ADMISSION CONTROL (q243): `maxVersionsPerTrigger` caps how many
-  // COMMITS one micro-batch absorbs — the bounded-backfill control every
-  // production table-stream ships (Delta's maxFilesPerTrigger, Kafka's
-  // maxOffsetsPerTrigger). A 100 TB table with months of history then
-  // streams in bounded, checkpointed slices instead of one giant batch.
-  // Under Trigger.AvailableNow the drain TARGET is pinned before batch
-  // one, so the run processes exactly the pinned backlog in ⌈backlog/n⌉
-  // batches and terminates even while new commits keep landing.
-  @volatile private var pinned: Option[Int] = None
-  private def live: Int =
-    pinned.getOrElse(DigestManifest.currentVersion(path))
-
-  override def prepareForTriggerAvailableNow(): Unit =
-    pinned = Some(DigestManifest.currentVersion(path))
-
-  override def getDefaultReadLimit: ReadLimit =
-    maxVersionsPerTrigger.fold(ReadLimit.allAvailable())(n => ReadLimit.maxFiles(n))
-
-  override def initialOffset(): Offset = offset(0)
-  override def latestOffset(): Offset = offset(live)
-  override def reportLatestOffset(): Offset = offset(live)
-
-  override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-    val s = start.asInstanceOf[DigestVersionOffset].v
-    val step = limit match {
-      case mf: ReadMaxFiles => mf.maxFiles()
-      case _ => math.max(live - s, 0)
-    }
-    offset(math.min(s + math.max(step, 1), live))
-  }
-
-  override def deserializeOffset(json: String): Offset = offset(json.trim.toInt)
-  override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
-
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val s = start.asInstanceOf[DigestVersionOffset].v
-    val e = end.asInstanceOf[DigestVersionOffset].v
-    // REGISTERED versions only (see [[DigestChanges.registeredVersions]]):
-    // an orphaned claim from a crashed committer leaves a snapshot file
-    // whose content was never committed — diffing against it would serve
-    // phantom rows
-    val registered = DigestChanges.registeredVersions(path)
-    val versions = registered.filter(v => v > s && v <= e)
-    // snap the diff base to the last REGISTERED version <= s: an
-    // admission-control step can checkpoint an offset that lands exactly
-    // on an orphaned claim, and diffing against that phantom listing
-    // would wedge the stream at that checkpoint forever
-    var prevV = registered.filter(_ <= s).lastOption.getOrElse(0)
-    versions.flatMap { v =>
-      val prevE = DigestChanges.manifestEntries(path, prevV)
-      val curE = DigestChanges.manifestEntries(path, v)
-      prevV = v
-      val prev = prevE.map(en => en.file -> en).toMap
-      val removed = prev.keySet -- curE.map(_.file).toSet
-      require(removed.isEmpty,
-        s"graft_digest streaming: version $v removed files " +
-          s"${removed.toSeq.sorted.mkString(",")} — a streaming read is " +
-          "append-only; restart from a fresh checkpoint or read the changes feed")
-      // a deletion-vector commit (q252) modifies a surviving entry in
-      // place — deletes are no more representable in an append stream
-      // than file removals, so refuse just as loudly
-      val masked = curE.filter(en =>
-        prev.get(en.file).exists(pe =>
-          pe.attrs.getOrElse("dv", "") != en.attrs.getOrElse("dv", "")))
-      require(masked.isEmpty,
-        s"graft_digest streaming: version $v committed deletion vectors on " +
-          s"${masked.map(_.file).sorted.mkString(",")} — a streaming read " +
-          "is append-only; read the changes feed")
-      val added = curE.filterNot(en => prev.contains(en.file))
-      require(!added.exists(_.file.startsWith("delta-")),
-        s"graft_digest streaming: version $v committed delta-log files — " +
-          "stream the compacted table instead")
-      added.map(en => DigestFilePartition(path, en.file,
-        dv = en.attrs.getOrElse("dv", "")): InputPartition)
-    }.toArray
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new DigestReaderFactory
 }
 
 case class DigestVersionOffset(v: Int) extends Offset {

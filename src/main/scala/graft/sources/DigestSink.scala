@@ -2040,57 +2040,14 @@ class DigestWrite(path: String, langSplit: Boolean, requireDist: Boolean,
     new DigestBatchWrite(path, langSplit, overwriteFilters, cols, retainHistory,
       ref, zonemapCols, plane, bloomCols)
 
-  // q234: `writeStream.toTable(...)` — the MANIFEST-GATED table as a
-  // streaming sink. Each epoch reuses the lang-split writers with the
-  // EPOCH as its job tag, so a replayed epoch overwrites its own final
-  // names (offsets are checkpointed → byte-identical rewrite) and the
-  // epoch-level manifest append is skipped when the epoch's entries are
-  // already present — the same exactly-once shape as [[EpochSink]], but
-  // committing into the table's OWN commit log: every epoch becomes a
-  // `_MANIFEST.v<N>` version, so batch readers, time travel, and
-  // partition DDL all see streamed data the moment its epoch commits.
+  // q234: `writeStream.toTable(...)` — the MANIFEST-GATED table as an
+  // epoch-idempotent streaming sink into its own commit log
+  // ([[TableStreamingWrite]])
   override def toStreaming: org.apache.spark.sql.connector.write.streaming.StreamingWrite = {
     require(langSplit && overwriteFilters.isEmpty,
       "graft_digest streaming writes are append-mode on the lang-split flavor")
-    new DigestStreamingWrite(path, cols, plane, zonemapCols, bloomCols)
-  }
-}
-
-class DigestStreamingWrite(path: String, cols: Array[Int],
-    plane: DataPlane = DataPlane.Csv,
-    zonemapCols: Set[String] = DigestSink.zmCols.keySet,
-    bloomCols: Set[String] = Set.empty)
-    extends org.apache.spark.sql.connector.write.streaming.StreamingWrite {
-
-  override def createStreamingWriterFactory(info: PhysicalWriteInfo)
-      : org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory =
-    DigestStreamingWriterFactory(path, cols, plane)
-
-  override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    val fresh = messages.collect { case m: DigestCommitMessage => m.files }.flatten
-    val (baseVersion, old) = DigestManifest.head(path)
-    // replay idempotency: the epoch's entries already in the manifest win
-    // — the replayed attempt rewrote the SAME final names, so skipping
-    // the append leaves one consistent copy of the epoch
-    val oldNames = old.map(_.split(",")(0)).toSet
-    if (fresh.forall(f => oldNames.contains(f.fileName))) return
-    // streamed epochs carry the declared zone/bloom attrs like any
-    // batch commit — a table fed by writeStream prunes identically
-    DigestManifest.publishAppend(path,
-      fresh.map(DigestSink.entryLine(_, zonemapCols, bloomCols)).sorted
-        .filterNot(l => oldNames.contains(l.split(",")(0))), baseVersion)
-  }
-
-  override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    val dir = Paths.get(path)
-    if (Files.isDirectory(dir)) {
-      val listing = Files.list(dir)
-      try listing.forEach { p =>
-        val n = p.getFileName.toString
-        if (n.contains(s"-je$epochId-") && n.endsWith(".staged"))
-          Files.deleteIfExists(p)
-      } finally listing.close()
-    }
+    new TableStreamingWrite(path,
+      TableLayout.Digest(plane, zonemapCols, bloomCols), ref)
   }
 }
 
@@ -2186,15 +2143,8 @@ class DigestBatchWrite(path: String, langSplit: Boolean = false,
     }
   }
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val dir = Paths.get(path)
-    if (Files.isDirectory(dir)) {
-      val listing = Files.list(dir)
-      try listing.forEach { p =>
-        if (p.getFileName.toString.endsWith(".staged")) Files.deleteIfExists(p)
-      } finally listing.close()
-    }
-  }
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    StagedFiles.sweep(path)
 }
 
 /** The ROW-LEVEL-OPERATIONS flavor of the digest table (q203/q204,
@@ -2359,15 +2309,8 @@ class DigestDeltaBatchWrite(path: String, cols: Array[Int])
       fresh.map(DigestSink.entryLine(_)).sorted, baseVersion)
   }
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val dir = Paths.get(path)
-    if (Files.isDirectory(dir)) {
-      val listing = Files.list(dir)
-      try listing.forEach { p =>
-        if (p.getFileName.toString.endsWith(".staged")) Files.deleteIfExists(p)
-      } finally listing.close()
-    }
-  }
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    StagedFiles.sweep(path)
 }
 
 /** BRANCH flavor (q255, `TBLPROPERTIES('branch'='b')`): the same data
@@ -2463,220 +2406,9 @@ class DigestDvTable(path: String,
   override def newRowLevelOperationBuilder(
       info: org.apache.spark.sql.connector.write.RowLevelOperationInfo)
       : org.apache.spark.sql.connector.write.RowLevelOperationBuilder =
-    () => new DigestDvOperation(path, info.command(), dvRef, dataPlane,
-      zonemapCols, bloomCols)
-}
-
-class DigestDvOperation(path: String,
-    cmd: org.apache.spark.sql.connector.write.RowLevelOperation.Command,
-    ref: String = DigestManifest.MainRef,
-    dataPlane: DataPlane = DataPlane.Csv,
-    zonemapCols: Set[String] = DigestSink.zmCols.keySet,
-    bloomCols: Set[String] = Set.empty)
-    extends org.apache.spark.sql.connector.write.RowLevelOperation
-    with org.apache.spark.sql.connector.write.SupportsDelta {
-
-  // the version the operation's scan plans against: the commit validates
-  // the head has not moved past it (a DV computed from stale positions
-  // must never be folded into a listing it did not read)
-  private val baseVersion = DigestManifest.currentVersion(path, ref)
-
-  override def command(): org.apache.spark.sql.connector.write.RowLevelOperation.Command = cmd
-  override def description(): String = s"graft_digest dv $cmd"
-
-  // UPDATE/MERGE ride the SAME two primitives as DELETE (q256): an
-  // update is a position delete of the old row plus an append of the new
-  // one — the Iceberg merge-on-read UPDATE shape — so Spark is told to
-  // represent updates as delete+insert pairs and the writer only ever
-  // sees the two verbs it can commit as metadata + fresh files
-  override def representUpdateAsDeleteAndInsert(): Boolean = true
-
-  override def rowId(): Array[org.apache.spark.sql.connector.expressions.NamedReference] =
-    Array(Expressions.column("_file"), Expressions.column("_pos"))
-
-  // pruning stays ON — unlike the group-based rewrite (which must scan
-  // every group it will re-emit), a DELETE's unmatched files simply get
-  // no deletion vector, so lang/zone-map file skips are correct AND the
-  // scalable plan: a lang- or id-banded DELETE on a 100 TB table scans
-  // only the files its predicate can touch. Metadata ON: the scan emits
-  // each row's physical coordinates (the rowId).
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new DigestScanBuilder(path, mergeDeltas = false,
-      manifestName = DigestManifest.mName(ref),
-      allowPruning = true, emitMeta = true)
-
-  override def newWriteBuilder(info: LogicalWriteInfo)
-      : org.apache.spark.sql.connector.write.DeltaWriteBuilder = {
-    val rid = info.rowIdSchema().orElseThrow(() => new IllegalStateException(
-      "graft_digest dv: WriteDelta planned without a rowId schema"))
-    val fileIdx = rid.fieldIndex("_file")
-    val posIdx = rid.fieldIndex("_pos")
-    // inserts (from MERGE NOT MATCHED and the insert half of updates)
-    // arrive in the rewritten query's column order — resolve BY NAME,
-    // same contract as every other write path here. A pure DELETE plans
-    // an EMPTY data schema (only rowId is projected): no insert verb can
-    // arrive, so no data columns to resolve.
-    val sch = info.schema()
-    val dataCols =
-      if (Seq("doc_id", "lang", "n_chars").forall(sch.fieldNames.contains))
-        Array("doc_id", "lang", "n_chars").map(sch.fieldIndex)
-      else Array.empty[Int]
-    new org.apache.spark.sql.connector.write.DeltaWriteBuilder {
-      override def build(): org.apache.spark.sql.connector.write.DeltaWrite =
-        new org.apache.spark.sql.connector.write.DeltaWrite {
-          override def toBatch(): org.apache.spark.sql.connector.write.DeltaBatchWrite =
-            new DigestDvBatchWrite(path, baseVersion, fileIdx, posIdx,
-              dataCols, ref, dataPlane, zonemapCols, bloomCols)
-        }
-    }
-  }
-}
-
-case class DvCommitMessage(deletes: Map[String, Array[Long]],
-    files: Seq[CommittedFile] = Seq.empty)
-    extends WriterCommitMessage
-
-/** DV-flavor task writer: position deletes accumulate in memory (they
-  * are pure metadata), inserts stream through the standard lang-split
-  * staged writer — one task commit message carries both halves.
-  */
-case class DigestDvWriterFactory(path: String, fileIdx: Int, posIdx: Int,
-    dataCols: Array[Int], jobTag: String,
-    plane: DataPlane = DataPlane.Csv)
-    extends org.apache.spark.sql.connector.write.DeltaWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long)
-      : org.apache.spark.sql.connector.write.DeltaWriter[InternalRow] =
-    new org.apache.spark.sql.connector.write.DeltaWriter[InternalRow] {
-      private val dels =
-        scala.collection.mutable.LinkedHashMap.empty[String, scala.collection.mutable.ArrayBuffer[Long]]
-      private var ins: LangSplitDataWriter = _
-      override def delete(meta: InternalRow, id: InternalRow): Unit =
-        dels.getOrElseUpdate(id.getUTF8String(fileIdx).toString,
-          scala.collection.mutable.ArrayBuffer.empty) += id.getLong(posIdx)
-      override def update(meta: InternalRow, id: InternalRow, row: InternalRow): Unit =
-        throw new IllegalStateException(
-          "graft_digest dv: updates must arrive as delete+insert pairs")
-      override def insert(row: InternalRow): Unit = {
-        if (ins == null)
-          ins = new LangSplitDataWriter(path, partitionId, taskId, dataCols,
-            jobTag, plane)
-        ins.write(row)
-      }
-      override def reinsert(meta: InternalRow, row: InternalRow): Unit = insert(row)
-      override def commit(): WriterCommitMessage = {
-        val files =
-          if (ins == null) Seq.empty[CommittedFile]
-          else ins.commit().asInstanceOf[DigestCommitMessage].files
-        DvCommitMessage(dels.view.mapValues(_.toArray).toMap, files)
-      }
-      override def abort(): Unit = if (ins != null) ins.abort()
-      override def close(): Unit = ()
-    }
-}
-
-class DigestDvBatchWrite(path: String, baseVersion: Int,
-    fileIdx: Int, posIdx: Int, dataCols: Array[Int],
-    ref: String = DigestManifest.MainRef,
-    plane: DataPlane = DataPlane.Csv,
-    zonemapCols: Set[String] = DigestSink.zmCols.keySet,
-    bloomCols: Set[String] = Set.empty)
-    extends org.apache.spark.sql.connector.write.DeltaBatchWrite {
-
-  // one unique tag per job (same contract as DigestBatchWrite): insert
-  // halves land as globally-unique final file names
-  private val jobTag: String =
-    java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-
-  override def createBatchWriterFactory(info: PhysicalWriteInfo)
-      : org.apache.spark.sql.connector.write.DeltaWriterFactory =
-    DigestDvWriterFactory(path, fileIdx, posIdx, dataCols, jobTag, plane)
-
-  // job commit: fold every task's (file → positions) into the listing —
-  // union with any existing DV, decrement the entry's live-row count —
-  // append the insert halves' fresh entries, and publish ONE replace
-  // against the version the scan planned from (positions computed
-  // against a moved head would mask the wrong rows, so a stale base
-  // aborts loudly through the CAS protocol). Deletes and inserts commit
-  // atomically: no reader can see an update's halves separately.
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val merged = scala.collection.mutable.LinkedHashMap
-      .empty[String, scala.collection.mutable.ArrayBuffer[Long]]
-    val fresh = scala.collection.mutable.ArrayBuffer.empty[CommittedFile]
-    messages.foreach {
-      case DvCommitMessage(dels, files) =>
-        dels.foreach { case (f, ps) =>
-          merged.getOrElseUpdate(f, scala.collection.mutable.ArrayBuffer.empty) ++= ps
-        }
-        fresh ++= files
-      case m => throw new IllegalStateException(s"graft_digest dv: unexpected $m")
-    }
-    if (merged.isEmpty && fresh.isEmpty) return // matched no rows: no commit
-    val (hv, lines) = DigestManifest.head(path, ref)
-    if (hv != baseVersion)
-      throw new java.util.ConcurrentModificationException(
-        s"graft_digest: DV operation planned against version $baseVersion " +
-          s"but the head is now $hv; re-run it")
-    val known = lines.map(_.split(",")(0)).toSet
-    val unknown = merged.keys.filterNot(known.contains)
-    require(unknown.isEmpty,
-      s"graft_digest dv: deletes target files absent from the listing: $unknown")
-    val clashes = fresh.map(_.fileName).filter(known.contains)
-    require(clashes.isEmpty,
-      s"graft_digest dv: job would commit file names already in the " +
-        s"manifest (${clashes.mkString(",")})")
-    // the commit KNOWS its own change records (in-place DV mutations +
-    // appended insert halves) — collected while building the listing, so
-    // the publish never re-diffs O(table) lines (commit CPU stays
-    // O(changed entries); the records reproduce the listing exactly by
-    // construction: mutations in place, adds appended in order)
-    val records = scala.collection.mutable.ArrayBuffer.empty[String]
-    val mutatedLines = lines.map { l =>
-      val e = ManifestEntry.parse(l)
-      merged.get(e.file).fold(l) { ps =>
-        var dv = DvCodec.decode(e.attrs.getOrElse("dv", ""))
-        var added = 0L
-        ps.foreach { p =>
-          // the scan masks already-deleted positions, so a repeat here
-          // means two writers raced the same base — the require is the
-          // loud backstop behind the version check above
-          require(!DvCodec.contains(dv, p),
-            s"graft_digest dv: position $p of ${e.file} is already deleted")
-          dv = DvCodec.add(dv, p); added += 1
-        }
-        val nl = ManifestEntry(e.file, e.rows - added,
-          e.attrs + ("dv" -> DvCodec.encode(dv))).line
-        records += s"~$l|$nl"
-        nl
-      }
-    }
-    // the insert halves of DELETE/UPDATE/MERGE are real data files —
-    // they carry the table's DECLARED zone/bloom attrs exactly like a
-    // plain INSERT's files, or point-lookup pruning silently degrades
-    // as the table is mutated
-    val adds = fresh.map(DigestSink.entryLine(_, zonemapCols, bloomCols)).sorted
-    records ++= adds.map("+" + _)
-    DigestManifest.publishReplace(path, mutatedLines ++ adds, baseVersion,
-      ref, Some(records.toSeq))
-  }
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val dir = Paths.get(path)
-    if (Files.isDirectory(dir)) {
-      val listing = Files.list(dir)
-      try listing.forEach { p =>
-        if (p.getFileName.toString.endsWith(".staged")) Files.deleteIfExists(p)
-      } finally listing.close()
-    }
-  }
-}
-
-case class DigestStreamingWriterFactory(path: String, cols: Array[Int],
-    plane: DataPlane = DataPlane.Csv)
-    extends org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long,
-      epochId: Long): DataWriter[InternalRow] =
-    new LangSplitDataWriter(path, partitionId, taskId, cols, s"e$epochId",
-      plane)
+    () => new DvOperation(path,
+      TableLayout.Digest(dataPlane, zonemapCols, bloomCols), info.command(),
+      dvRef)
 }
 
 case class DigestDeltaWriterFactory(path: String, cols: Array[Int],
@@ -3053,12 +2785,13 @@ class DigestScan(path: String, mergeDeltas: Boolean = false,
     else required.getOrElse(DigestSink.rowSchema)
   override def toBatch: Batch = this
 
-  // q242: the commit log doubles as a stream — see [[DigestMicroBatchStream]]
+  // q242: the commit log doubles as a stream — see [[TableMicroBatchStream]]
   override def toMicroBatchStream(checkpointLocation: String): org.apache.spark.sql.connector.read.streaming.MicroBatchStream = {
     require(!mergeDeltas,
       "graft_digest: streaming read of the delta flavor is not supported — " +
         "compact first, or consume the changes feed")
-    new DigestMicroBatchStream(path, streamMaxVersions)
+    new TableMicroBatchStream(path, TableLayout.Digest(),
+      DigestManifest.MainRef, streamMaxVersions)
   }
   override def description(): String =
     s"graft_digest manifest-read $path/$manifestName" +

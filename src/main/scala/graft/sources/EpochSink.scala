@@ -125,17 +125,8 @@ class EpochStreamingWrite(path: String) extends StreamingWrite {
     Files.move(tmp, marker, StandardCopyOption.ATOMIC_MOVE)
   }
 
-  override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    val dir = Paths.get(path)
-    if (Files.isDirectory(dir)) {
-      val listing = Files.list(dir)
-      try listing.forEach { p =>
-        val n = p.getFileName.toString
-        if (n.startsWith(s"epoch-$epochId-") && n.endsWith(".staged"))
-          Files.deleteIfExists(p)
-      } finally listing.close()
-    }
-  }
+  override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
+    StagedFiles.sweep(path, _.startsWith(s"epoch-$epochId-"))
 }
 
 case class EpochCommitMessage(epochId: Long, fileName: String, rows: Long)

@@ -7,7 +7,7 @@ import java.util
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableChange}
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
+import org.apache.spark.sql.connector.read.streaming.MicroBatchStream
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -288,6 +288,7 @@ class EvolveTable(path: String, fields: Seq[EvolveField],
       s"graft_evolve: bloom column '$c' must be BIGINT, is ${f.dataType.sql}")
     f.id
   }
+  private val layout = TableLayout.Evolve(fields, plane, zoneIds, bloomIds)
   override def name(): String =
     s"graft_evolve($path${if (ref == DigestManifest.MainRef) "" else s"@$ref"})"
   override def schema(): StructType = EvolveSchema.struct(fields)
@@ -317,8 +318,7 @@ class EvolveTable(path: String, fields: Seq[EvolveField],
   override def newRowLevelOperationBuilder(
       info: org.apache.spark.sql.connector.write.RowLevelOperationInfo)
       : org.apache.spark.sql.connector.write.RowLevelOperationBuilder =
-    () => new EvolveDvOperation(path, fields, info.command(), ref, plane,
-      zoneIds, bloomIds)
+    () => new DvOperation(path, layout, info.command(), ref)
 
   // writes bind to the schema CURRENT AT PLAN TIME: the committed file
   // records exactly those ids, so a concurrent ALTER never reinterprets
@@ -334,8 +334,7 @@ class EvolveTable(path: String, fields: Seq[EvolveField],
       override def truncate(): WriteBuilder = { replaceAll = true; this }
       override def build(): Write = new Write {
         override def toBatch: BatchWrite =
-          new EvolveBatchWrite(path, fields, ref, plane, zoneIds, bloomIds,
-            replaceAll)
+          new EvolveBatchWrite(path, layout, ref, replaceAll)
         // STREAMING WRITE (round-20): epoch-idempotent commits into the
         // table's own log — the digest q234 contract on the declared
         // schema, so evolve-to-evolve replication is exactly-once
@@ -343,7 +342,7 @@ class EvolveTable(path: String, fields: Seq[EvolveField],
             : org.apache.spark.sql.connector.write.streaming.StreamingWrite = {
           require(!replaceAll,
             "graft_evolve streaming writes are append-mode")
-          new EvolveStreamingWrite(path, fields, ref, plane, zoneIds, bloomIds)
+          new TableStreamingWrite(path, layout, ref)
         }
       }
     }
@@ -454,138 +453,36 @@ case class EvolveCommittedFile(fileName: String, rows: Long,
 case class EvolveCommitMessage(files: Seq[EvolveCommittedFile])
     extends WriterCommitMessage
 
-class EvolveBatchWrite(path: String, fields: Seq[EvolveField],
+class EvolveBatchWrite(path: String, layout: TableLayout.Evolve,
     ref: String = DigestManifest.MainRef,
-    plane: DataPlane = DataPlane.Csv,
-    zoneIds: Seq[Int] = Nil,
-    bloomIds: Seq[Int] = Nil,
     replaceAll: Boolean = false) extends BatchWrite {
   private val jobTag: String =
     java.util.UUID.randomUUID().toString.replace("-", "").take(12)
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    new EvolveWriterFactory(path, fields, jobTag, plane, zoneIds, bloomIds)
+    LayoutWriterFactory(path, layout, jobTag)
 
   // manifest entries carry the writing schema's field-id list
   // (`ids=1;2;3` — the per-file evolution metadata readers resolve
   // against, same role as parquet footers under mergeSchema) plus the
   // writer-observed zone attrs (`zmin.c<id>`/`zmax.c<id>`, round-18)
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val fresh = messages.collect { case m: EvolveCommitMessage => m.files }.flatten
-    val ids = fields.map(_.id)
-    val freshLines = fresh.map(f => EvolveEntry.render(f.fileName, f.rows, ids,
-      EvolveWriterFactory.zoneAttrs(f.zones) ++
-        EvolveWriterFactory.bloomAttrs(f.blooms))).sorted
+    val freshLines = messages.toSeq.flatMap(layout.lines).sorted
+    val baseVersion = DigestManifest.currentVersion(path, ref)
     if (replaceAll)
       // one visibility event: the truncate-overwrite publishes ONLY the
       // fresh listing through the optimistic replace (which consumes a
       // pending content-preserving tag — the clustering rewrites' path);
       // retired files stay on disk, so history keeps time-traveling
-      DigestManifest.publishReplace(path, freshLines,
-        DigestManifest.currentVersion(path, ref), ref)
-    else {
-      val old: Seq[String] =
-        DigestManifest.listingFor(path, DigestManifest.mName(ref))
-      DigestManifest.publish(path, old ++ freshLines, ref)
-    }
+      DigestManifest.publishReplace(path, freshLines, baseVersion, ref)
+    else
+      // a plain append commutes with interleaved commits: the rebasing
+      // commit appends onto whatever head registered since baseVersion
+      DigestManifest.publishAppend(path, freshLines, baseVersion, ref)
   }
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val dir = Paths.get(path)
-    if (Files.isDirectory(dir)) {
-      val listing = Files.list(dir)
-      try listing.forEach { p =>
-        if (p.getFileName.toString.endsWith(".staged")) Files.deleteIfExists(p)
-      } finally listing.close()
-    }
-  }
-}
-
-/** Epoch-idempotent streaming sink for the evolve table (round-20): the
-  * [[DigestStreamingWrite]] contract on the declared schema. The EPOCH
-  * is the job tag, so a replayed epoch (driver failure between sink
-  * commit and checkpoint write-ahead) rewrites its own byte-identical
-  * final names, and the epoch-level manifest append skips entries the
-  * log already holds — each micro-batch lands exactly once as one
-  * `_MANIFEST.v<N>` version carrying the writing schema's field ids and
-  * the declared zone/bloom attrs like any batch commit.
-  */
-class EvolveStreamingWrite(path: String, fields: Seq[EvolveField],
-    ref: String = DigestManifest.MainRef,
-    plane: DataPlane = DataPlane.Csv,
-    zoneIds: Seq[Int] = Nil, bloomIds: Seq[Int] = Nil)
-    extends org.apache.spark.sql.connector.write.streaming.StreamingWrite {
-
-  override def createStreamingWriterFactory(info: PhysicalWriteInfo)
-      : org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory =
-    // a standalone case class, NOT an inner class: the factory ships to
-    // tasks, and an inner class would drag this (non-serializable)
-    // StreamingWrite along as its outer pointer
-    EvolveStreamingWriterFactory(path, fields, plane, zoneIds, bloomIds)
-
-  override def commit(epochId: Long,
-      messages: Array[WriterCommitMessage]): Unit = {
-    val fresh = messages.collect { case m: EvolveCommitMessage => m.files }.flatten
-    val ids = fields.map(_.id)
-    val (baseVersion, old) = DigestManifest.head(path, ref)
-    // replay idempotency: entries the manifest already holds win — the
-    // replayed attempt rewrote the same final names. Only THIS epoch's
-    // own prefix can collide (final names carry `ev-je<epochId>-`), so
-    // the dedup probe scans O(epoch files), not the whole folded listing
-    // — the O(changes)-per-commit discipline at 10⁶+ entry tables
-    // (ADVICE r20)
-    val epochPrefix = s"ev-je$epochId-"
-    val oldNames = old.iterator.map(l => l.split(",")(0))
-      .filter(_.startsWith(epochPrefix)).toSet
-    val lines = fresh.map(f => EvolveEntry.render(f.fileName, f.rows, ids,
-        EvolveWriterFactory.zoneAttrs(f.zones) ++
-          EvolveWriterFactory.bloomAttrs(f.blooms)))
-      .sorted.filterNot(l => oldNames.contains(l.split(",")(0)))
-    if (lines.nonEmpty)
-      DigestManifest.publishAppend(path, lines, baseVersion, ref)
-  }
-
-  override def abort(epochId: Long,
-      messages: Array[WriterCommitMessage]): Unit = {
-    val dir = Paths.get(path)
-    if (Files.isDirectory(dir)) {
-      val listing = Files.list(dir)
-      try listing.forEach { p =>
-        val n = p.getFileName.toString
-        if (n.startsWith(s"ev-je$epochId-") && n.endsWith(".staged"))
-          Files.deleteIfExists(p)
-      } finally listing.close()
-    }
-  }
-}
-
-case class EvolveStreamingWriterFactory(path: String,
-    fields: Seq[EvolveField], plane: DataPlane,
-    zoneIds: Seq[Int], bloomIds: Seq[Int])
-    extends org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long,
-      epochId: Long): DataWriter[InternalRow] =
-    new EvolveDataWriter(path, fields, s"e$epochId", partitionId, taskId,
-      plane, zoneIds, bloomIds)
-}
-
-object EvolveWriterFactory {
-  def zoneAttrs(zones: Map[Int, (Long, Long)]): Map[String, String] =
-    zones.flatMap { case (id, (lo, hi)) =>
-      Seq(s"zmin.c$id" -> lo.toString, s"zmax.c$id" -> hi.toString)
-    }
-
-  def bloomAttrs(blooms: Map[Int, String]): Map[String, String] =
-    blooms.map { case (id, enc) => s"bf.c$id" -> enc }
-}
-
-class EvolveWriterFactory(path: String, fields: Seq[EvolveField],
-    jobTag: String, plane: DataPlane = DataPlane.Csv,
-    zoneIds: Seq[Int] = Nil, bloomIds: Seq[Int] = Nil)
-    extends DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new EvolveDataWriter(path, fields, jobTag, partitionId, taskId, plane,
-      zoneIds, bloomIds)
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    StagedFiles.sweep(path)
 }
 
 /** Same staged-attempt/rename-on-commit protocol as [[DigestDataWriter]].
@@ -762,119 +659,11 @@ class EvolveScan(path: String, fields: Seq[EvolveField],
     (p: InputPartition) => new EvolveFileReader(p.asInstanceOf[EvolveFilePartition], fs)
   }
 
-  // STREAMING READ of the evolve table (round-20, judge item 6): the
-  // q242 "table as queue" capability on the declared schema
+  // STREAMING READ of the evolve table (round-20): the q242 "table as
+  // queue" capability on the declared schema
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-    new EvolveMicroBatchStream(path, fields, ref, streamMaxVersions)
-}
-
-/** Micro-batch stream over the DECLARED-SCHEMA table (round-20): offsets
-  * are manifest versions (durable — replanning a batch after restart
-  * yields the same files, so exactly-once rides the engine's offset
-  * checkpointing, as in [[DigestMicroBatchStream]]), and each batch
-  * reads exactly the files ADDED in `(start, end]`, their cells resolved
-  * BY FIELD ID against the reader's schema — so a mid-stream RENAME
-  * (a pure metadata commit) never re-keys history: a restarted stream
-  * under the renamed schema serves pre-rename files under the new names,
-  * and files the stream's schema predates serve their existence
-  * defaults. Append-only by the same loud contract as the digest
-  * stream: a version that removes files or grows a deletion vector
-  * refuses (consume the change feed instead).
-  */
-class EvolveMicroBatchStream(path: String, fields: Seq[EvolveField],
-    ref: String = DigestManifest.MainRef,
-    maxVersionsPerTrigger: Option[Int] = None) extends MicroBatchStream
-    with org.apache.spark.sql.connector.read.streaming.SupportsAdmissionControl
-    with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
-  import org.apache.spark.sql.connector.read.streaming.{ReadLimit, ReadMaxFiles}
-
-  private def offset(v: Int) = DigestVersionOffset(v)
-
-  // ADMISSION CONTROL (the q243 contract on the declared schema,
-  // round-20): `maxVersionsPerTrigger` caps how many commits one
-  // micro-batch absorbs; under Trigger.AvailableNow the drain target is
-  // pinned before batch one, so a months-deep backfill processes its
-  // pinned backlog in bounded checkpointed slices and terminates even
-  // while new commits keep landing
-  @volatile private var pinned: Option[Int] = None
-  private def live: Int =
-    pinned.getOrElse(DigestManifest.currentVersion(path, ref))
-
-  override def prepareForTriggerAvailableNow(): Unit =
-    pinned = Some(DigestManifest.currentVersion(path, ref))
-
-  override def getDefaultReadLimit: ReadLimit =
-    maxVersionsPerTrigger.fold(ReadLimit.allAvailable())(n => ReadLimit.maxFiles(n))
-
-  override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-    val s = start.asInstanceOf[DigestVersionOffset].v
-    val step = limit match {
-      case mf: ReadMaxFiles => mf.maxFiles()
-      case _ => math.max(live - s, 0)
-    }
-    offset(math.min(s + math.max(step, 1), live))
-  }
-
-  override def reportLatestOffset(): Offset = offset(live)
-
-  override def initialOffset(): Offset = offset(0)
-  override def latestOffset(): Offset = offset(live)
-  override def deserializeOffset(json: String): Offset = offset(json.trim.toInt)
-  override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
-
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val s = start.asInstanceOf[DigestVersionOffset].v
-    val e = end.asInstanceOf[DigestVersionOffset].v
-    // REGISTERED versions only, like every metadata consumer — an
-    // orphaned claim from a crashed committer must not serve phantom rows
-    val registered = DigestChanges.registeredVersions(path, ref)
-    val versions = registered.filter(v => v > s && v <= e)
-    // (file, ids, dv) per entry of one version — EvolveEntry.parse, so
-    // legacy positional-id lines resolve the same as attr-form ones
-    def entriesAt(v: Int): Seq[(String, Seq[Int], String)] =
-      if (v == 0) Seq.empty
-      else {
-        require(Files.exists(
-            Paths.get(path, s"${DigestManifest.mName(ref)}.v$v")),
-          s"graft_evolve streaming: version $v of ref '$ref' is not " +
-            s"resolvable at $path (expired? snapshots must be retained)")
-        DigestManifest.listingAt(path, ref, v).map { l =>
-          val (file, _, ids, attrs) = EvolveEntry.parse(l)
-          (file, ids, attrs.getOrElse("dv", ""))
-        }
-      }
-    // the diff base is the last REGISTERED version <= s, never the raw
-    // checkpointed offset: under admission-control stepping an offset
-    // can land exactly on an orphaned (claimed-but-unregistered)
-    // version, and diffing against that phantom listing would wedge the
-    // stream permanently at that checkpoint
-    var prevV = registered.filter(_ <= s).lastOption.getOrElse(0)
-    versions.flatMap { v =>
-      val prevE = entriesAt(prevV)
-      val curE = entriesAt(v)
-      prevV = v
-      val prev = prevE.map(en => en._1 -> en).toMap
-      val removed = prev.keySet -- curE.map(_._1).toSet
-      require(removed.isEmpty,
-        s"graft_evolve streaming: version $v removed files " +
-          s"${removed.toSeq.sorted.mkString(",")} — a streaming read is " +
-          "append-only; restart from a fresh checkpoint or read the changes feed")
-      val masked = curE.filter(en => prev.get(en._1).exists(_._3 != en._3))
-      require(masked.isEmpty,
-        s"graft_evolve streaming: version $v committed deletion vectors on " +
-          s"${masked.map(_._1).sorted.mkString(",")} — a streaming read " +
-          "is append-only; read the changes feed")
-      curE.filterNot(en => prev.contains(en._1)).map { case (file, ids, dv) =>
-        EvolveFilePartition(path, file, ids, dv): InputPartition
-      }
-    }.toArray
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val fs = fields
-    (p: InputPartition) => new EvolveFileReader(p.asInstanceOf[EvolveFilePartition], fs)
-  }
+    new TableMicroBatchStream(path, TableLayout.Evolve(fields), ref,
+      streamMaxVersions)
 }
 
 /** Shared (position, cells) iterator over one evolve data file under the
@@ -1009,177 +798,6 @@ class EvolveFileReader(p: EvolveFilePartition, fields: Seq[EvolveField])
 }
 
 // ---------------------------------------------------------------------------
-// Row-level operations on the declared schema (round-18 item 3): the
-// digest DV machinery (q252/q256) generalized — rowId = (_file, _pos),
-// deletes fold as bitmap growth on the entry, UPDATE/MERGE arrive as
-// delete+insert pairs, insert halves land as fresh files under the
-// CURRENT field ids, and the whole change publishes as ONE replace
-// against the version the scan planned from.
-// ---------------------------------------------------------------------------
-class EvolveDvOperation(path: String, fields: Seq[EvolveField],
-    cmd: org.apache.spark.sql.connector.write.RowLevelOperation.Command,
-    ref: String, plane: DataPlane, zoneIds: Seq[Int],
-    bloomIds: Seq[Int] = Nil)
-    extends org.apache.spark.sql.connector.write.RowLevelOperation
-    with org.apache.spark.sql.connector.write.SupportsDelta {
-  import org.apache.spark.sql.connector.expressions.Expressions
-
-  private val baseVersion = DigestManifest.currentVersion(path, ref)
-
-  override def command(): org.apache.spark.sql.connector.write.RowLevelOperation.Command = cmd
-  override def description(): String = s"graft_evolve dv $cmd"
-  override def representUpdateAsDeleteAndInsert(): Boolean = true
-  override def rowId(): Array[org.apache.spark.sql.connector.expressions.NamedReference] =
-    Array(Expressions.column("_file"), Expressions.column("_pos"))
-
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new EvolveScanBuilder(path, fields, ref, zoneIds, emitMeta = true)
-
-  override def newWriteBuilder(info: LogicalWriteInfo)
-      : org.apache.spark.sql.connector.write.DeltaWriteBuilder = {
-    val rid = info.rowIdSchema().orElseThrow(() => new IllegalStateException(
-      "graft_evolve dv: WriteDelta planned without a rowId schema"))
-    val fileIdx = rid.fieldIndex("_file")
-    val posIdx = rid.fieldIndex("_pos")
-    // insert halves arrive in the rewritten query's column order —
-    // resolve BY NAME; a pure DELETE plans an empty data schema
-    val sch = info.schema()
-    val colIdx =
-      if (fields.forall(f => sch.fieldNames.contains(f.name)))
-        fields.map(f => sch.fieldIndex(f.name)).toArray
-      else Array.empty[Int]
-    new org.apache.spark.sql.connector.write.DeltaWriteBuilder {
-      override def build(): org.apache.spark.sql.connector.write.DeltaWrite =
-        new org.apache.spark.sql.connector.write.DeltaWrite {
-          override def toBatch(): org.apache.spark.sql.connector.write.DeltaBatchWrite =
-            new EvolveDvBatchWrite(path, fields, baseVersion, fileIdx,
-              posIdx, colIdx, ref, plane, zoneIds, bloomIds)
-        }
-    }
-  }
-}
-
-class EvolveDvBatchWrite(path: String, fields: Seq[EvolveField],
-    baseVersion: Int, fileIdx: Int, posIdx: Int, colIdx: Array[Int],
-    ref: String, plane: DataPlane, zoneIds: Seq[Int],
-    bloomIds: Seq[Int] = Nil)
-    extends org.apache.spark.sql.connector.write.DeltaBatchWrite {
-  private val jobTag: String =
-    java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-
-  override def createBatchWriterFactory(info: PhysicalWriteInfo)
-      : org.apache.spark.sql.connector.write.DeltaWriterFactory =
-    EvolveDvWriterFactory(path, fields, fileIdx, posIdx, colIdx, jobTag,
-      bloomIds,
-      plane, zoneIds)
-
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val merged = scala.collection.mutable.LinkedHashMap
-      .empty[String, scala.collection.mutable.ArrayBuffer[Long]]
-    val fresh = scala.collection.mutable.ArrayBuffer.empty[EvolveCommittedFile]
-    messages.foreach {
-      case EvolveDvMessage(dels, files) =>
-        dels.foreach { case (f, ps) =>
-          merged.getOrElseUpdate(f,
-            scala.collection.mutable.ArrayBuffer.empty) ++= ps
-        }
-        fresh ++= files
-      case m => throw new IllegalStateException(s"graft_evolve dv: unexpected $m")
-    }
-    if (merged.isEmpty && fresh.isEmpty) return
-    val (hv, lines) = DigestManifest.head(path, ref)
-    if (hv != baseVersion)
-      throw new java.util.ConcurrentModificationException(
-        s"graft_evolve: DV operation planned against version $baseVersion " +
-          s"but the head is now $hv; re-run it")
-    val known = lines.map(l => EvolveEntry.parse(l)._1).toSet
-    val unknown = merged.keys.filterNot(known.contains)
-    require(unknown.isEmpty,
-      s"graft_evolve dv: deletes target files absent from the listing: $unknown")
-    val records = scala.collection.mutable.ArrayBuffer.empty[String]
-    val mutatedLines = lines.map { l =>
-      val (file, rows, ids, attrs) = EvolveEntry.parse(l)
-      merged.get(file).fold(l) { ps =>
-        var dv = DvCodec.decode(attrs.getOrElse("dv", ""))
-        var added = 0L
-        ps.foreach { p =>
-          require(!DvCodec.contains(dv, p),
-            s"graft_evolve dv: position $p of $file is already deleted")
-          dv = DvCodec.add(dv, p); added += 1
-        }
-        val nl = EvolveEntry.render(file, rows - added, ids,
-          (attrs - "ids") + ("dv" -> DvCodec.encode(dv)))
-        records += s"~$l|$nl"
-        nl
-      }
-    }
-    val ids = fields.map(_.id)
-    val adds = fresh.map(f => EvolveEntry.render(f.fileName, f.rows, ids,
-      EvolveWriterFactory.zoneAttrs(f.zones) ++
-        EvolveWriterFactory.bloomAttrs(f.blooms))).sorted
-    records ++= adds.map("+" + _)
-    DigestManifest.publishReplace(path, mutatedLines ++ adds, baseVersion,
-      ref, Some(records.toSeq))
-  }
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val dir = Paths.get(path)
-    if (Files.isDirectory(dir)) {
-      val listing = Files.list(dir)
-      try listing.forEach { p =>
-        if (p.getFileName.toString.endsWith(".staged")) Files.deleteIfExists(p)
-      } finally listing.close()
-    }
-  }
-}
-
-case class EvolveDvMessage(deletes: Map[String, Array[Long]],
-    files: Seq[EvolveCommittedFile] = Seq.empty) extends WriterCommitMessage
-
-/** DV-flavor task writer for the declared schema: position deletes
-  * accumulate in memory (pure metadata), inserts stream through the
-  * evolve staged writer under the current ids — one task message
-  * carries both halves. A top-level case class: it ships to executors.
-  */
-case class EvolveDvWriterFactory(path: String, fields: Seq[EvolveField],
-    fileIdx: Int, posIdx: Int, colIdx: Array[Int], jobTag: String,
-    bloomIds: Seq[Int], plane: DataPlane, zoneIds: Seq[Int])
-    extends org.apache.spark.sql.connector.write.DeltaWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long)
-      : org.apache.spark.sql.connector.write.DeltaWriter[InternalRow] =
-    new org.apache.spark.sql.connector.write.DeltaWriter[InternalRow] {
-      private val dels = scala.collection.mutable.LinkedHashMap
-        .empty[String, scala.collection.mutable.ArrayBuffer[Long]]
-      private var ins: EvolveDataWriter = _
-      override def delete(meta: InternalRow, id: InternalRow): Unit =
-        dels.getOrElseUpdate(id.getUTF8String(fileIdx).toString,
-          scala.collection.mutable.ArrayBuffer.empty) += id.getLong(posIdx)
-      override def update(meta: InternalRow, id: InternalRow,
-          row: InternalRow): Unit =
-        throw new IllegalStateException(
-          "graft_evolve dv: updates must arrive as delete+insert pairs")
-      override def insert(row: InternalRow): Unit = {
-        require(colIdx.nonEmpty,
-          "graft_evolve dv: insert arrived without resolvable data columns")
-        if (ins == null)
-          ins = new EvolveDataWriter(path, fields, jobTag, partitionId,
-            taskId, plane, zoneIds, bloomIds, colIdx)
-        ins.write(row)
-      }
-      override def reinsert(meta: InternalRow, row: InternalRow): Unit =
-        insert(row)
-      override def commit(): WriterCommitMessage = {
-        val files =
-          if (ins == null) Seq.empty[EvolveCommittedFile]
-          else ins.commit().asInstanceOf[EvolveCommitMessage].files
-        EvolveDvMessage(dels.view.mapValues(_.toArray).toMap, files)
-      }
-      override def abort(): Unit = if (ins != null) ins.abort()
-      override def close(): Unit = ()
-    }
-}
-
-// ---------------------------------------------------------------------------
 // CHANGE DATA FEED on the declared schema (round-18 item 3): evolve
 // commits publish through the same manifest protocol, so per-version
 // `_CHANGES.v<N>` records exist and [[DigestChanges.plan]] is reused
@@ -1224,29 +842,8 @@ class EvolveChangesScan(path: String, fields: Seq[EvolveField],
   // CHANGE rows (deletes and compaction skips included), cells resolved
   // by field id
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-    new EvolveChangesMicroBatchStream(path, fields, from, ref)
-}
-
-/** Streaming form of the evolve change feed (round-20): the declared
-  * schema's twin of [[DigestChangesMicroBatchStream]] — downstream CDC
-  * consumers tail the table's commit log, paying O(changes) per trigger.
-  */
-class EvolveChangesMicroBatchStream(path: String, fields: Seq[EvolveField],
-    from: Int, ref: String = DigestManifest.MainRef)
-    extends MicroBatchStream {
-  private def offset(v: Int) = DigestVersionOffset(v)
-  override def initialOffset(): Offset = offset(from)
-  override def latestOffset(): Offset =
-    offset(DigestManifest.currentVersion(path, ref))
-  override def deserializeOffset(json: String): Offset = offset(json.trim.toInt)
-  override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] =
-    DigestChanges.plan(path,
-      start.asInstanceOf[DigestVersionOffset].v,
-      end.asInstanceOf[DigestVersionOffset].v, ref).toArray
-  override def createReaderFactory(): PartitionReaderFactory =
-    new EvolveChangesReaderFactory(fields)
+    new ChangesMicroBatchStream(path, from, ref,
+      new EvolveChangesReaderFactory(fields))
 }
 
 class EvolveChangesReaderFactory(fields: Seq[EvolveField])

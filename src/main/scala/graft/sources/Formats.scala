@@ -2624,7 +2624,7 @@ object Formats {
       |ORDER BY 1""".stripMargin
 
   // ---- q242: streaming READ of the digest table — the table as a queue ----
-  // See [[DigestMicroBatchStream]]: offsets are manifest versions, each
+  // See [[TableMicroBatchStream]]: offsets are manifest versions, each
   // micro-batch reads exactly the files ADDED in its range. Driven as
   // table-to-table incremental replication: three INSERT commits stream
   // into a second digest table, then a FOURTH commit lands and the SAME
@@ -2690,7 +2690,7 @@ object Formats {
   // ---- q243: bounded streaming backfill — admission control on versions ---
   // q242 drains the whole backlog in one batch; this is the BOUNDED form
   // (SupportsAdmissionControl + native SupportsTriggerAvailableNow on
-  // [[DigestMicroBatchStream]]): `maxVersionsPerTrigger` caps how many
+  // [[TableMicroBatchStream]]): `maxVersionsPerTrigger` caps how many
   // commits one micro-batch absorbs — Delta's maxFilesPerTrigger shape —
   // so a months-deep table backfills in checkpointed slices. AvailableNow
   // pins the drain target BEFORE batch one, processes ⌈backlog/n⌉ bounded
@@ -2745,7 +2745,7 @@ object Formats {
       |ORDER BY 1""".stripMargin
 
   // ---- q244: STREAMING the change feed — CDC off the commit log -----------
-  // The streaming form of q241 ([[DigestChangesMicroBatchStream]]):
+  // The streaming form of q241 ([[ChangesMicroBatchStream]]):
   // `changesFrom` is the initial offset, every later commit is a
   // micro-batch of CHANGE rows — deletes and update postimages included,
   // which the append-only table stream (q242) cannot represent. This is

@@ -1,0 +1,538 @@
+package graft.sources
+
+import java.nio.file.{Files, Paths}
+
+import scala.collection.mutable
+
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
+import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory, ScanBuilder}
+import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxFiles, SupportsAdmissionControl, SupportsTriggerAvailableNow}
+import org.apache.spark.sql.connector.write.{DataWriter, DataWriterFactory, DeltaBatchWrite, DeltaWrite, DeltaWriteBuilder, DeltaWriter, DeltaWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RowLevelOperation, SupportsDelta, WriterCommitMessage}
+import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
+
+// ---------------------------------------------------------------------------
+// THE TABLE CORE: the row-level (DV) write, the epoch streaming write, the
+// append table stream and the change stream shared by `graft_digest` and
+// `graft_evolve`. Both flavors commit through one manifest protocol
+// ([[DigestManifest]]); what differs between them — the manifest-line
+// codec, the insert writer, the row-level scan, the stream's partitions —
+// is one [[TableLayout]] value, so every guard below holds for both.
+// ---------------------------------------------------------------------------
+
+/** The per-flavor half of the table core: everything the shared write and
+  * stream paths need that the fixed-schema digest table and the
+  * declared-schema evolve table do differently. Serializable: the task
+  * writer factories ship it to executors.
+  */
+private[graft] sealed abstract class TableLayout extends Serializable {
+  /** The flavor's name in error messages. */
+  def label: String
+
+  /** The manifest lines of one task's committed files; other messages
+    * carry none.
+    */
+  def lines(m: WriterCommitMessage): Seq[String]
+
+  /** `(file, dv)` of one manifest line. */
+  def fileAndDv(line: String): (String, String)
+
+  /** `line` with deletion vector `dv` and `deleted` fewer live rows. */
+  def withDv(line: String, dv: String, deleted: Long): String
+
+  /** The column names an insert's incoming rows resolve by. */
+  def insertCols: Seq[String]
+
+  /** The task writer for inserts; empty `cols` means the rows arrive in
+    * the table's own column order.
+    */
+  def insertWriter(path: String, partitionId: Int, taskId: Long,
+      jobTag: String, cols: Array[Int]): DataWriter[InternalRow]
+
+  /** The row-level-operation scan: full rows plus each row's physical
+    * `(_file, _pos)` coordinates.
+    */
+  def dvScan(path: String, ref: String): ScanBuilder
+
+  /** The table stream's partition for one added manifest line. */
+  def streamPartition(path: String, line: String): InputPartition
+  def streamReaderFactory: PartitionReaderFactory
+
+  /** The marker in the name of every file epoch `epochId` writes. */
+  def epochMarker(epochId: Long): String
+}
+
+private[graft] object TableLayout {
+  /** The fixed `(doc_id, lang, n_chars)` schema: lang-split files,
+    * [[ManifestEntry]] lines carrying the declared zone/bloom attrs.
+    */
+  final case class Digest(plane: DataPlane = DataPlane.Csv,
+      zonemapCols: Set[String] = DigestSink.zmCols.keySet,
+      bloomCols: Set[String] = Set.empty) extends TableLayout {
+    override def label: String = "graft_digest"
+    override def lines(m: WriterCommitMessage): Seq[String] = m match {
+      case DigestCommitMessage(files) =>
+        files.map(DigestSink.entryLine(_, zonemapCols, bloomCols))
+      case _ => Nil
+    }
+    override def fileAndDv(line: String): (String, String) = {
+      val e = ManifestEntry.parse(line)
+      (e.file, e.attrs.getOrElse("dv", ""))
+    }
+    override def withDv(line: String, dv: String, deleted: Long): String = {
+      val e = ManifestEntry.parse(line)
+      ManifestEntry(e.file, e.rows - deleted, e.attrs + ("dv" -> dv)).line
+    }
+    override def insertCols: Seq[String] = Seq("doc_id", "lang", "n_chars")
+    override def insertWriter(path: String, partitionId: Int, taskId: Long,
+        jobTag: String, cols: Array[Int]): DataWriter[InternalRow] =
+      new LangSplitDataWriter(path, partitionId, taskId,
+        if (cols.isEmpty) Array(0, 1, 2) else cols, jobTag, plane)
+    // pruning stays ON — unlike the group-based rewrite (which must scan
+    // every group it will re-emit), a DELETE's unmatched files simply get
+    // no deletion vector, so lang/zone-map file skips are correct AND the
+    // scalable plan: a lang- or id-banded DELETE on a 100 TB table scans
+    // only the files its predicate can touch
+    override def dvScan(path: String, ref: String): ScanBuilder =
+      new DigestScanBuilder(path, manifestName = DigestManifest.mName(ref),
+        emitMeta = true)
+    override def streamPartition(path: String, line: String): InputPartition = {
+      val (file, dv) = fileAndDv(line)
+      DigestFilePartition(path, file, dv = dv)
+    }
+    override def streamReaderFactory: PartitionReaderFactory =
+      new DigestReaderFactory
+    // lang-split writers name epoch files `lang_<l>-je<epoch>-part-...`
+    override def epochMarker(epochId: Long): String = s"-je$epochId-"
+  }
+
+  /** The declared schema: files record the field ids they were written
+    * under ([[EvolveEntry]]), zone/bloom attrs are keyed by field id.
+    */
+  final case class Evolve(fields: Seq[EvolveField],
+      plane: DataPlane = DataPlane.Csv,
+      zoneIds: Seq[Int] = Nil, bloomIds: Seq[Int] = Nil) extends TableLayout {
+    override def label: String = "graft_evolve"
+    override def lines(m: WriterCommitMessage): Seq[String] = m match {
+      case EvolveCommitMessage(files) =>
+        val ids = fields.map(_.id)
+        files.map(f => EvolveEntry.render(f.fileName, f.rows, ids,
+          f.zones.flatMap { case (id, (lo, hi)) =>
+            Seq(s"zmin.c$id" -> lo.toString, s"zmax.c$id" -> hi.toString)
+          } ++ f.blooms.map { case (id, enc) => s"bf.c$id" -> enc }))
+      case _ => Nil
+    }
+    override def fileAndDv(line: String): (String, String) = {
+      val (file, _, _, attrs) = EvolveEntry.parse(line)
+      (file, attrs.getOrElse("dv", ""))
+    }
+    override def withDv(line: String, dv: String, deleted: Long): String = {
+      val (file, rows, ids, attrs) = EvolveEntry.parse(line)
+      EvolveEntry.render(file, rows - deleted, ids,
+        (attrs - "ids") + ("dv" -> dv))
+    }
+    override def insertCols: Seq[String] = fields.map(_.name)
+    override def insertWriter(path: String, partitionId: Int, taskId: Long,
+        jobTag: String, cols: Array[Int]): DataWriter[InternalRow] =
+      new EvolveDataWriter(path, fields, jobTag, partitionId, taskId, plane,
+        zoneIds, bloomIds, cols)
+    override def dvScan(path: String, ref: String): ScanBuilder =
+      new EvolveScanBuilder(path, fields, ref, zoneIds, emitMeta = true)
+    // legacy positional-id lines resolve the same as attr-form ones
+    override def streamPartition(path: String, line: String): InputPartition = {
+      val (file, _, ids, attrs) = EvolveEntry.parse(line)
+      EvolveFilePartition(path, file, ids, attrs.getOrElse("dv", ""))
+    }
+    override def streamReaderFactory: PartitionReaderFactory = {
+      val fs = fields
+      (p: InputPartition) =>
+        new EvolveFileReader(p.asInstanceOf[EvolveFilePartition], fs)
+    }
+    override def epochMarker(epochId: Long): String = s"ev-je$epochId-"
+  }
+}
+
+/** Abort cleanup for every job and epoch writer: removes the staged
+  * (never committed) task outputs in `path` whose names match `name`.
+  */
+private[sources] object StagedFiles {
+  def sweep(path: String, name: String => Boolean = _ => true): Unit = {
+    val dir = Paths.get(path)
+    if (Files.isDirectory(dir)) {
+      val listing = Files.list(dir)
+      try listing.forEach { p =>
+        val n = p.getFileName.toString
+        if (n.endsWith(".staged") && name(n)) Files.deleteIfExists(p)
+      } finally listing.close()
+    }
+  }
+}
+
+/** Insert task writers of a layout, for batch jobs (one job tag) and for
+  * streaming epochs (the EPOCH is the tag, so a replayed epoch rewrites
+  * its own byte-identical final names). A top-level case class: it ships
+  * to tasks, and an inner class would drag its non-serializable outer
+  * write along.
+  */
+private[sources] case class LayoutWriterFactory(path: String,
+    layout: TableLayout, jobTag: String = "")
+    extends DataWriterFactory with StreamingDataWriterFactory {
+  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
+    layout.insertWriter(path, partitionId, taskId, jobTag, Array.empty)
+  override def createWriter(partitionId: Int, taskId: Long,
+      epochId: Long): DataWriter[InternalRow] =
+    layout.insertWriter(path, partitionId, taskId, s"e$epochId", Array.empty)
+}
+
+// ---------------------------------------------------------------------------
+// DELETION-VECTOR row-level operations (q252/q256, and the declared schema
+// since round 18): `SupportsDelta` with rowId = (_file, _pos) — the
+// table's METADATA COLUMNS, the Iceberg position-delete shape — makes
+// Spark plan WriteDelta projecting each deleted row's physical
+// coordinates. Deletes fold as bitmap growth on the entry, UPDATE/MERGE
+// arrive as delete+insert pairs, insert halves land as fresh files, and
+// the whole change publishes as ONE replace against the version the scan
+// planned from. Base files stay byte-identical.
+// ---------------------------------------------------------------------------
+class DvOperation(path: String, layout: TableLayout,
+    cmd: RowLevelOperation.Command, ref: String = DigestManifest.MainRef)
+    extends RowLevelOperation with SupportsDelta {
+
+  // the version the operation's scan plans against: the commit validates
+  // the head has not moved past it (a DV computed from stale positions
+  // must never be folded into a listing it did not read)
+  private val baseVersion = DigestManifest.currentVersion(path, ref)
+
+  override def command(): RowLevelOperation.Command = cmd
+  override def description(): String = s"${layout.label} dv $cmd"
+
+  // UPDATE/MERGE ride the SAME two primitives as DELETE (q256): an
+  // update is a position delete of the old row plus an append of the new
+  // one — the Iceberg merge-on-read UPDATE shape — so the writer only
+  // ever sees the two verbs it can commit as metadata + fresh files
+  override def representUpdateAsDeleteAndInsert(): Boolean = true
+
+  override def rowId(): Array[NamedReference] =
+    Array(Expressions.column("_file"), Expressions.column("_pos"))
+
+  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
+    layout.dvScan(path, ref)
+
+  override def newWriteBuilder(info: LogicalWriteInfo): DeltaWriteBuilder = {
+    val rid = info.rowIdSchema().orElseThrow(() => new IllegalStateException(
+      s"${layout.label} dv: WriteDelta planned without a rowId schema"))
+    val fileIdx = rid.fieldIndex("_file")
+    val posIdx = rid.fieldIndex("_pos")
+    // inserts (from MERGE NOT MATCHED and the insert half of updates)
+    // arrive in the rewritten query's column order — resolve BY NAME. A
+    // pure DELETE plans an EMPTY data schema (only rowId is projected):
+    // no insert verb can arrive, so no data columns to resolve.
+    val sch = info.schema()
+    val cols =
+      if (layout.insertCols.forall(sch.fieldNames.contains))
+        layout.insertCols.map(sch.fieldIndex).toArray
+      else Array.empty[Int]
+    new DeltaWriteBuilder {
+      override def build(): DeltaWrite = new DeltaWrite {
+        override def toBatch(): DeltaBatchWrite =
+          new DvBatchWrite(path, layout, baseVersion, fileIdx, posIdx, cols, ref)
+      }
+    }
+  }
+}
+
+case class DvCommitMessage(deletes: Map[String, Array[Long]],
+    inserts: Option[WriterCommitMessage] = None)
+    extends WriterCommitMessage
+
+/** DV task writer: position deletes accumulate in memory (they are pure
+  * metadata), inserts stream through the layout's staged writer — one
+  * task commit message carries both halves. A top-level case class: it
+  * ships to executors.
+  */
+case class DvWriterFactory(path: String, layout: TableLayout,
+    fileIdx: Int, posIdx: Int, cols: Array[Int], jobTag: String)
+    extends DeltaWriterFactory {
+  override def createWriter(partitionId: Int, taskId: Long): DeltaWriter[InternalRow] =
+    new DeltaWriter[InternalRow] {
+      private val dels = mutable.LinkedHashMap.empty[String, mutable.ArrayBuffer[Long]]
+      private var ins: DataWriter[InternalRow] = _
+      override def delete(meta: InternalRow, id: InternalRow): Unit =
+        dels.getOrElseUpdate(id.getUTF8String(fileIdx).toString,
+          mutable.ArrayBuffer.empty) += id.getLong(posIdx)
+      override def update(meta: InternalRow, id: InternalRow, row: InternalRow): Unit =
+        throw new IllegalStateException(
+          s"${layout.label} dv: updates must arrive as delete+insert pairs")
+      override def insert(row: InternalRow): Unit = {
+        require(cols.nonEmpty,
+          s"${layout.label} dv: insert arrived without resolvable data columns")
+        if (ins == null)
+          ins = layout.insertWriter(path, partitionId, taskId, jobTag, cols)
+        ins.write(row)
+      }
+      override def reinsert(meta: InternalRow, row: InternalRow): Unit = insert(row)
+      override def commit(): WriterCommitMessage =
+        DvCommitMessage(dels.view.mapValues(_.toArray).toMap,
+          Option(ins).map(_.commit()))
+      override def abort(): Unit = if (ins != null) ins.abort()
+      override def close(): Unit = ()
+    }
+}
+
+class DvBatchWrite(path: String, layout: TableLayout, baseVersion: Int,
+    fileIdx: Int, posIdx: Int, cols: Array[Int],
+    ref: String = DigestManifest.MainRef) extends DeltaBatchWrite {
+
+  // one unique tag per job (same contract as DigestBatchWrite): insert
+  // halves land as globally-unique final file names
+  private val jobTag: String =
+    java.util.UUID.randomUUID().toString.replace("-", "").take(12)
+
+  override def createBatchWriterFactory(info: PhysicalWriteInfo): DeltaWriterFactory =
+    DvWriterFactory(path, layout, fileIdx, posIdx, cols, jobTag)
+
+  // job commit: fold every task's (file → positions) into the listing —
+  // union with any existing DV, decrement the entry's live-row count —
+  // append the insert halves' fresh entries, and publish ONE replace
+  // against the version the scan planned from (positions computed
+  // against a moved head would mask the wrong rows, so a stale base
+  // aborts loudly). Deletes and inserts commit atomically: no reader can
+  // see an update's halves separately.
+  override def commit(messages: Array[WriterCommitMessage]): Unit = {
+    val merged = mutable.LinkedHashMap.empty[String, mutable.ArrayBuffer[Long]]
+    val fresh = mutable.ArrayBuffer.empty[String]
+    messages.foreach {
+      case DvCommitMessage(dels, ins) =>
+        dels.foreach { case (f, ps) =>
+          merged.getOrElseUpdate(f, mutable.ArrayBuffer.empty) ++= ps
+        }
+        ins.foreach(fresh ++= layout.lines(_))
+      case m => throw new IllegalStateException(s"${layout.label} dv: unexpected $m")
+    }
+    if (merged.isEmpty && fresh.isEmpty) return // matched no rows: no commit
+    val (hv, lines) = DigestManifest.head(path, ref)
+    if (hv != baseVersion)
+      throw new java.util.ConcurrentModificationException(
+        s"${layout.label}: DV operation planned against version $baseVersion " +
+          s"but the head is now $hv; re-run it")
+    val known = lines.map(_.split(",")(0)).toSet
+    val unknown = merged.keys.filterNot(known.contains)
+    require(unknown.isEmpty,
+      s"${layout.label} dv: deletes target files absent from the listing: $unknown")
+    // the insert halves are real data files — they carry the table's
+    // DECLARED zone/bloom attrs exactly like a plain INSERT's files, or
+    // point-lookup pruning silently degrades as the table is mutated
+    val adds = fresh.toSeq.sorted
+    val clashes = adds.map(_.split(",")(0)).filter(known.contains)
+    require(clashes.isEmpty,
+      s"${layout.label} dv: job would commit file names already in the " +
+        s"manifest (${clashes.mkString(",")})")
+    // the commit KNOWS its own change records (in-place DV mutations +
+    // appended insert halves) — collected while building the listing, so
+    // the publish never re-diffs O(table) lines
+    val records = mutable.ArrayBuffer.empty[String]
+    val mutatedLines = lines.map { l =>
+      val (file, dv0) = layout.fileAndDv(l)
+      merged.get(file).fold(l) { ps =>
+        var dv = DvCodec.decode(dv0)
+        ps.foreach { p =>
+          // the scan masks already-deleted positions, so a repeat here
+          // means two writers raced the same base — the require is the
+          // loud backstop behind the version check above
+          require(!DvCodec.contains(dv, p),
+            s"${layout.label} dv: position $p of $file is already deleted")
+          dv = DvCodec.add(dv, p)
+        }
+        val nl = layout.withDv(l, DvCodec.encode(dv), ps.size.toLong)
+        records += s"~$l|$nl"
+        nl
+      }
+    }
+    records ++= adds.map("+" + _)
+    DigestManifest.publishReplace(path, mutatedLines ++ adds, baseVersion,
+      ref, Some(records.toSeq))
+  }
+
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    StagedFiles.sweep(path)
+}
+
+// ---------------------------------------------------------------------------
+// STREAMING: the table's commit log as a sink (q234) and as a source
+// (q242/q244).
+// ---------------------------------------------------------------------------
+
+/** `writeStream.toTable(...)` into a table's OWN commit log (q234): each
+  * epoch writes through the layout's insert writers with the EPOCH as its
+  * job tag, so a replayed epoch (driver failure between sink commit and
+  * checkpoint write-ahead) rewrites its own byte-identical final names,
+  * and the epoch's manifest append skips the entries the log already
+  * holds. Every epoch becomes one `_MANIFEST.v<N>` version carrying the
+  * declared zone/bloom attrs like any batch commit, so batch readers,
+  * time travel and partition DDL see streamed data the moment its epoch
+  * commits — the [[EpochSink]] exactly-once shape, inside the table.
+  */
+class TableStreamingWrite(path: String, layout: TableLayout,
+    ref: String = DigestManifest.MainRef) extends StreamingWrite {
+
+  override def createStreamingWriterFactory(info: PhysicalWriteInfo)
+      : StreamingDataWriterFactory =
+    LayoutWriterFactory(path, layout)
+
+  override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
+    val (baseVersion, old) = DigestManifest.head(path, ref)
+    // replay idempotency: entries the manifest already holds win. Only
+    // THIS epoch's own names can collide (they carry its marker), so the
+    // dedup set is O(epoch files), not the whole folded listing — the
+    // O(changes)-per-commit discipline at 10⁶+ entry tables
+    val marker = layout.epochMarker(epochId)
+    val epochNames = old.iterator.map(_.split(",")(0))
+      .filter(_.contains(marker)).toSet
+    val lines = messages.toSeq.flatMap(layout.lines).sorted
+      .filterNot(l => epochNames.contains(l.split(",")(0)))
+    if (lines.nonEmpty)
+      DigestManifest.publishAppend(path, lines, baseVersion, ref)
+  }
+
+  override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
+    StagedFiles.sweep(path, _.contains(layout.epochMarker(epochId)))
+}
+
+/** STREAMING READ of a table (q242): the commit log doubles as a stream —
+  * offsets ARE manifest versions, and each micro-batch reads exactly the
+  * files ADDED in `(start, end]`. This is the "table as queue" capability
+  * every lakehouse format ships: downstream jobs consume a 100 TB table
+  * incrementally, paying O(new files) per trigger, with exactly-once
+  * delivery riding on the engine's offset checkpointing (offsets are
+  * durable versions, so replanning a batch after restart yields the same
+  * files). On the declared schema each file's cells resolve BY FIELD ID
+  * against the reader's schema, so a mid-stream RENAME never re-keys
+  * history.
+  *
+  * Append-only by contract: a version that REMOVES files (overwrite,
+  * DELETE, compaction) or grows a deletion vector is not expressible as
+  * an append stream — the planner REFUSES it loudly instead of silently
+  * re-emitting or dropping rows (restart from a fresh checkpoint, or
+  * consume the changes feed, which does represent deletes).
+  */
+class TableMicroBatchStream(path: String, layout: TableLayout,
+    ref: String = DigestManifest.MainRef,
+    maxVersionsPerTrigger: Option[Int] = None) extends MicroBatchStream
+    with SupportsAdmissionControl with SupportsTriggerAvailableNow {
+
+  private def offset(v: Int) = DigestVersionOffset(v)
+
+  // ADMISSION CONTROL (q243): `maxVersionsPerTrigger` caps how many
+  // COMMITS one micro-batch absorbs — the bounded-backfill control every
+  // production table-stream ships (Delta's maxFilesPerTrigger, Kafka's
+  // maxOffsetsPerTrigger). Under Trigger.AvailableNow the drain TARGET is
+  // pinned before batch one, so the run processes exactly the pinned
+  // backlog in ⌈backlog/n⌉ batches and terminates even while new commits
+  // keep landing.
+  @volatile private var pinned: Option[Int] = None
+  private def live: Int =
+    pinned.getOrElse(DigestManifest.currentVersion(path, ref))
+
+  override def prepareForTriggerAvailableNow(): Unit =
+    pinned = Some(DigestManifest.currentVersion(path, ref))
+
+  override def getDefaultReadLimit: ReadLimit =
+    maxVersionsPerTrigger.fold(ReadLimit.allAvailable())(n => ReadLimit.maxFiles(n))
+
+  override def initialOffset(): Offset = offset(0)
+  override def latestOffset(): Offset = offset(live)
+  override def reportLatestOffset(): Offset = offset(live)
+
+  override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
+    val s = start.asInstanceOf[DigestVersionOffset].v
+    val step = limit match {
+      case mf: ReadMaxFiles => mf.maxFiles()
+      case _ => math.max(live - s, 0)
+    }
+    offset(math.min(s + math.max(step, 1), live))
+  }
+
+  override def deserializeOffset(json: String): Offset = offset(json.trim.toInt)
+  override def commit(end: Offset): Unit = ()
+  override def stop(): Unit = ()
+
+  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
+    val s = start.asInstanceOf[DigestVersionOffset].v
+    val e = end.asInstanceOf[DigestVersionOffset].v
+    val label = s"${layout.label} streaming"
+    // REGISTERED versions only (see [[DigestChanges.registeredVersions]]):
+    // an orphaned claim from a crashed committer leaves a snapshot file
+    // whose content was never committed — diffing against it would serve
+    // phantom rows
+    val registered = DigestChanges.registeredVersions(path, ref)
+    val versions = registered.filter(v => v > s && v <= e)
+    // (file, dv, line) per entry of one version
+    def entriesAt(v: Int): Seq[(String, String, String)] =
+      if (v == 0) Seq.empty
+      else {
+        require(Files.exists(
+            Paths.get(path, s"${DigestManifest.mName(ref)}.v$v")),
+          s"$label: version $v of ref '$ref' is not resolvable at $path " +
+            "(expired? snapshots must be retained)")
+        DigestManifest.listingAt(path, ref, v).map { l =>
+          val (file, dv) = layout.fileAndDv(l)
+          (file, dv, l)
+        }
+      }
+    // snap the diff base to the last REGISTERED version <= s: an
+    // admission-control step can checkpoint an offset that lands exactly
+    // on an orphaned claim, and diffing against that phantom listing
+    // would wedge the stream at that checkpoint forever
+    var prevV = registered.filter(_ <= s).lastOption.getOrElse(0)
+    versions.flatMap { v =>
+      val prev = entriesAt(prevV).map(en => en._1 -> en._2).toMap
+      val curE = entriesAt(v)
+      prevV = v
+      val removed = prev.keySet -- curE.map(_._1).toSet
+      require(removed.isEmpty,
+        s"$label: version $v removed files " +
+          s"${removed.toSeq.sorted.mkString(",")} — a streaming read is " +
+          "append-only; restart from a fresh checkpoint or read the changes feed")
+      // a deletion-vector commit (q252) modifies a surviving entry in
+      // place — deletes are no more representable in an append stream
+      // than file removals, so refuse just as loudly
+      val masked = curE.filter(en => prev.get(en._1).exists(_ != en._2))
+      require(masked.isEmpty,
+        s"$label: version $v committed deletion vectors on " +
+          s"${masked.map(_._1).sorted.mkString(",")} — a streaming read " +
+          "is append-only; read the changes feed")
+      val added = curE.filterNot(en => prev.contains(en._1))
+      require(!added.exists(_._1.startsWith("delta-")),
+        s"$label: version $v committed delta-log files — " +
+          "stream the compacted table instead")
+      added.map(en => layout.streamPartition(path, en._3))
+    }.toArray
+  }
+
+  override def createReaderFactory(): PartitionReaderFactory =
+    layout.streamReaderFactory
+}
+
+/** Streaming form of a change feed (q244): offsets are manifest versions
+  * (as in [[TableMicroBatchStream]]) but each batch carries the CHANGE
+  * rows of its version range — including deletes and compaction skips,
+  * which the append-only table stream cannot represent. Downstream CDC
+  * consumers tail the table's commit log, paying O(changes) per trigger;
+  * `readers` materializes the flavor's change rows.
+  */
+class ChangesMicroBatchStream(path: String, from: Int, ref: String,
+    readers: PartitionReaderFactory) extends MicroBatchStream {
+  private def offset(v: Int) = DigestVersionOffset(v)
+  override def initialOffset(): Offset = offset(from)
+  override def latestOffset(): Offset =
+    offset(DigestManifest.currentVersion(path, ref))
+  override def deserializeOffset(json: String): Offset = offset(json.trim.toInt)
+  override def commit(end: Offset): Unit = ()
+  override def stop(): Unit = ()
+  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] =
+    DigestChanges.plan(path,
+      start.asInstanceOf[DigestVersionOffset].v,
+      end.asInstanceOf[DigestVersionOffset].v, ref).toArray
+  override def createReaderFactory(): PartitionReaderFactory = readers
+}

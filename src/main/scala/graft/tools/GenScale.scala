@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev-only: materialize an N×-scaled copy of a testdata directory for
@@ -27,13 +27,7 @@ object GenScale {
     val out = args.lift(1).getOrElse("/tmp/graft_sf1")
     val copies = args.lift(2).map(_.toInt).getOrElse(10)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Bench.session(cpus)
     spark.sparkContext.setLogLevel("WARN")
 
     def stride(table: String, key: String): Long =

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev-only: print the physical plan of ONE LPA/BFS round against a
@@ -11,16 +10,7 @@ object GraphProbe {
   def main(args: Array[String]): Unit = {
     val dir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.constraintPropagation.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Bench.session(cpus)
     spark.sparkContext.setLogLevel("WARN")
     val docs = graft.Tables.t(spark, dir, "documents")
     val edges = docs.select((col("doc_id") % 4000).as("src"),

@@ -2,7 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dev-only: dump `.explain("formatted")` for named queries to files —
@@ -23,16 +22,7 @@ object Plans {
     val dir = if (args.length > 3) args(3) else "/root/testdata/sf0.1"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     Files.createDirectories(outDir)
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.constraintPropagation.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Bench.session(cpus)
     spark.sparkContext.setLogLevel("WARN")
     names.foreach { name =>
       val fn = graft.SparkEntry.queries(name)

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only: time + explain a single named query. Usage:
   * runMain graft.tools.Profile <queryName> [sfDir] [explain]
   */
@@ -10,20 +8,7 @@ object Profile {
     val name = args(0)
     val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val doExplain = args.length > 2 && args(2) == "explain"
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      // expensive lambda exprs must not be re-inlined into scan filters
-      .config("spark.sql.constraintPropagation.enabled", "false")
-      // events.parquet ts unit has drifted across testdata generations (ns/µs);
-      // the loader adapts (Tables.events). nanosAsLong stays on: required for
-      // ns files, harmless for µs ones.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Bench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     spark.sparkContext.setLogLevel("WARN")
     spark.range(1000000).selectExpr("sum(id)").collect() // warm-up
     val fn = graft.SparkEntry.queries(name)

@@ -3,7 +3,6 @@ package graft.tools
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Dev-only: run named queries once and print NOISE-FREE structural
   * metrics per query — total shuffle write bytes, task count, job count,
@@ -22,16 +21,7 @@ object Shuffles {
     val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val perJob = sys.env.get("SHUFFLES_PER_JOB").contains("1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.constraintPropagation.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Bench.session(cpus)
     spark.sparkContext.setLogLevel("WARN")
     val shufWrite = new AtomicLong(0L)
     val shufRead = new AtomicLong(0L)

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only: measure the ROUND-14 connector paths at scale (PLANS.md
   * "round 14 part 8"). Same protocol as [[SoakDml]]: a FRESH table +
   * staging dir per rep (nothing memoized), each verb's committed job
@@ -24,16 +22,7 @@ object SoakFeed {
     val sfDir = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val reps = args.lift(1).map(_.toInt).getOrElse(3)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.constraintPropagation.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Bench.session(cpus)
     spark.sparkContext.setLogLevel("WARN")
     spark.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
     graft.Tables.t(spark, sfDir, "documents").createOrReplaceTempView("soak_docs")

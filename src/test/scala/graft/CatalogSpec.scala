@@ -467,22 +467,28 @@ class CatalogSpec extends SparkSpec {
   }
 
   test("q234: streaming epoch commit is replay-idempotent against the manifest") {
-    import graft.sources.{DigestCommitMessage, CommittedFile, DigestStreamingWrite}
-    val dir = tmp("graft_stream_commit_spec_").toString
-    val w = new DigestStreamingWrite(dir, Array(0, 1, 2))
-    val msg: org.apache.spark.sql.connector.write.WriterCommitMessage =
-      DigestCommitMessage(Seq(CommittedFile("lang_en-je0-part-00000.csv", 3)))
-    w.commit(0L, Array(msg))
-    val after1 = DigestManifest.listingFor(dir, "_MANIFEST")
-    w.commit(0L, Array(msg)) // epoch replay: must not duplicate the entry
-    val after2 = DigestManifest.listingFor(dir, "_MANIFEST")
-    assert(after1.size == 1 && after2 == after1,
-      s"epoch replay duplicated manifest entries: $after2")
-    // a later epoch appends
-    w.commit(1L, Array(DigestCommitMessage(
-      Seq(CommittedFile("lang_en-je1-part-00000.csv", 2)))
-      : org.apache.spark.sql.connector.write.WriterCommitMessage))
-    assert(DigestManifest.listingFor(dir, "_MANIFEST").size == 2)
+    import graft.sources.{CommittedFile, DigestCommitMessage, EvolveCommitMessage, EvolveCommittedFile, TableLayout, TableStreamingWrite}
+    import org.apache.spark.sql.connector.write.WriterCommitMessage
+    // (layout, epoch's commit message for (epoch, rows)) per table flavor
+    val flavors: Seq[(TableLayout, (Long, Long) => WriterCommitMessage)] = Seq(
+      (TableLayout.Digest(), (e, rows) => DigestCommitMessage(
+        Seq(CommittedFile(s"lang_en-je$e-part-00000.csv", rows)))),
+      (TableLayout.Evolve(Seq(EvolveField(1, "id", LongType))),
+        (e, rows) => EvolveCommitMessage(
+          Seq(EvolveCommittedFile(s"ev-je$e-part-00000.csv", rows)))))
+    flavors.foreach { case (layout, msg) =>
+      val dir = tmp("graft_stream_commit_spec_").toString
+      val w = new TableStreamingWrite(dir, layout)
+      w.commit(0L, Array(msg(0L, 3L)))
+      val after1 = DigestManifest.listingFor(dir, "_MANIFEST")
+      w.commit(0L, Array(msg(0L, 3L))) // epoch replay: must not duplicate the entry
+      val after2 = DigestManifest.listingFor(dir, "_MANIFEST")
+      assert(after1.size == 1 && after2 == after1,
+        s"${layout.label}: epoch replay duplicated manifest entries: $after2")
+      // a later epoch appends
+      w.commit(1L, Array(msg(1L, 2L)))
+      assert(DigestManifest.listingFor(dir, "_MANIFEST").size == 2)
+    }
   }
 
   test("q235: file pruning keeps files whose names carry no lang (they may " +
@@ -701,7 +707,7 @@ class CatalogSpec extends SparkSpec {
   test("q243/q244: version admission caps micro-batches and AvailableNow " +
       "pins its drain target; the changes stream plans per-version changes; " +
       "the table stream refuses removal commits") {
-    import graft.sources.{ChangesFilePartition, DigestChangesMicroBatchStream, DigestFilePartition, DigestManifest, DigestMicroBatchStream, DigestVersionOffset}
+    import graft.sources.{ChangesFilePartition, ChangesMicroBatchStream, ChangesReaderFactory, DigestFilePartition, DigestManifest, DigestVersionOffset, TableLayout, TableMicroBatchStream}
     import org.apache.spark.sql.connector.read.streaming.ReadLimit
     val dir = tmp("graft_adm_spec_").toString
     DigestManifest.publish(dir, Seq("lang_de-part-00000.csv,1"))                // v1
@@ -710,7 +716,8 @@ class CatalogSpec extends SparkSpec {
     DigestManifest.publish(dir, Seq(
       "lang_de-part-00000.csv,1", "lang_en-part-00000.csv,1",
       "lang_fr-part-00000.csv,1"))                                             // v3
-    val st = new DigestMicroBatchStream(dir, Some(1))
+    val st = new TableMicroBatchStream(dir, TableLayout.Digest(),
+      DigestManifest.MainRef, Some(1))
     assert(st.getDefaultReadLimit.toString == ReadLimit.maxFiles(1).toString)
     // one version per batch: 0 → 1 under the cap, even with 3 available
     assert(st.latestOffset(DigestVersionOffset(0), ReadLimit.maxFiles(1))
@@ -738,7 +745,8 @@ class CatalogSpec extends SparkSpec {
     // must exist on disk: the history-retention gate)
     Seq("fr", "es").foreach(l => java.nio.file.Files.writeString(
       java.nio.file.Paths.get(dir, s"lang_$l-part-00000.csv"), s"1,$l,1\n"))
-    val cs = new DigestChangesMicroBatchStream(dir, 2)
+    val cs = new ChangesMicroBatchStream(dir, 2, DigestManifest.MainRef,
+      new ChangesReaderFactory)
     assert(cs.initialOffset().asInstanceOf[DigestVersionOffset].v == 2)
     val ch = cs.planInputPartitions(DigestVersionOffset(3), DigestVersionOffset(5))
       .map(_.asInstanceOf[ChangesFilePartition])
@@ -1056,6 +1064,28 @@ class CatalogSpec extends SparkSpec {
     }
   }
 
+  test("graft_evolve INSERT rebases onto the registered head: a lagging " +
+      "_MANIFEST pointer never drops a committed version") {
+    withCatalog {
+      val dir = tmp("graft_evolve_lost_update_")
+      val tbl = s"graft.ns.evlost_${System.nanoTime()}"
+      spark.sql(s"""CREATE TABLE $tbl (id BIGINT)
+                   |USING graft_evolve TBLPROPERTIES ('path'='$dir')""".stripMargin)
+      spark.sql(s"INSERT INTO $tbl VALUES (1)")
+      spark.sql(s"INSERT INTO $tbl VALUES (2)")
+      // another committer has registered its version but not yet flipped
+      // the pointer: `_MANIFEST` still names the version before it
+      val head = DigestManifest.currentVersion(dir.toString)
+      java.nio.file.Files.writeString(dir.resolve("_MANIFEST"),
+        s"#version:${head - 1}\n")
+      spark.sql(s"INSERT INTO $tbl VALUES (3)")
+      val ids = spark.table(tbl).collect().map(_.getLong(0)).sorted.toSeq
+      assert(ids == Seq(1L, 2L, 3L), ids.toString)
+      assert(DigestManifest.head(dir.toString)._2.size == 3)
+      spark.sql(s"DROP TABLE $tbl")
+    }
+  }
+
   // ---- deletion vectors (q252) --------------------------------------------
 
   test("q252: DvCodec round-trips sparse 63-bit-word bitmaps") {
@@ -1078,40 +1108,54 @@ class CatalogSpec extends SparkSpec {
 
   test("q252: a DV delete planned against a stale base aborts loudly " +
       "instead of masking the wrong rows") {
+    import graft.sources.{DvBatchWrite, DvCommitMessage, TableLayout}
+    val flavors: Seq[(String, String, TableLayout)] = Seq(
+      ("graft_digest", ", 'dv'='true'", TableLayout.Digest()),
+      ("graft_evolve", "", TableLayout.Evolve(Seq(EvolveField(1, "doc_id", LongType),
+        EvolveField(2, "lang", StringType), EvolveField(3, "n_chars", LongType)))))
     withCatalog {
-      val dir = tmp("graft_dv_stale_")
-      val tbl = s"graft.ns.dvstale_${System.nanoTime()}"
-      spark.sql(s"""CREATE TABLE $tbl (doc_id BIGINT, lang STRING, n_chars BIGINT)
-                   |USING graft_digest TBLPROPERTIES ('path'='$dir', 'dv'='true')""".stripMargin)
-      spark.sql(s"INSERT INTO $tbl VALUES (1, 'en', 10), (2, 'en', 20)")
-      val stale = graft.sources.DigestManifest.currentVersion(dir.toString)
-      val file = graft.sources.DigestManifest.head(dir.toString)._2.head.split(",")(0)
-      // the head moves past the version the (hypothetical) scan planned on
-      spark.sql(s"INSERT INTO $tbl VALUES (3, 'de', 30)")
-      val bw = new graft.sources.DigestDvBatchWrite(dir.toString, stale, 0, 1,
-        Array(0, 1, 2))
-      intercept[java.util.ConcurrentModificationException] {
-        bw.commit(Array(graft.sources.DvCommitMessage(Map(file -> Array(0L)))))
+      flavors.foreach { case (provider, props, layout) =>
+        val dir = tmp("graft_dv_stale_")
+        val tbl = s"graft.ns.dvstale_${System.nanoTime()}"
+        spark.sql(s"""CREATE TABLE $tbl (doc_id BIGINT, lang STRING, n_chars BIGINT)
+                     |USING $provider TBLPROPERTIES ('path'='$dir'$props)""".stripMargin)
+        spark.sql(s"INSERT INTO $tbl VALUES (1, 'en', 10), (2, 'en', 20)")
+        val stale = graft.sources.DigestManifest.currentVersion(dir.toString)
+        val file = graft.sources.DigestManifest.head(dir.toString)._2.head.split(",")(0)
+        // the head moves past the version the (hypothetical) scan planned on
+        spark.sql(s"INSERT INTO $tbl VALUES (3, 'de', 30)")
+        val bw = new DvBatchWrite(dir.toString, layout, stale, 0, 1,
+          Array(0, 1, 2))
+        intercept[java.util.ConcurrentModificationException] {
+          bw.commit(Array(DvCommitMessage(Map(file -> Array(0L)))))
+        }
+        // and the winning commit is untouched
+        assert(spark.table(tbl).count() == 3L)
+        spark.sql(s"DROP TABLE $tbl")
       }
-      // and the winning commit is untouched
-      assert(spark.table(tbl).count() == 3L)
-      spark.sql(s"DROP TABLE $tbl")
     }
   }
 
   test("q252: the append-only table stream refuses a DV commit as loudly " +
       "as a file removal") {
-    val dir = tmp("graft_dv_stream_")
-    graft.sources.DigestManifest.publish(dir.toString,
-      Seq("lang_en-part-00000.csv,3"))
-    graft.sources.DigestManifest.publish(dir.toString,
-      Seq("lang_en-part-00000.csv,2,dv=0:1"))
-    val stream = new graft.sources.DigestMicroBatchStream(dir.toString)
-    val e = intercept[IllegalArgumentException] {
-      stream.planInputPartitions(graft.sources.DigestVersionOffset(0),
-        graft.sources.DigestVersionOffset(2))
+    import graft.sources.{TableLayout, TableMicroBatchStream}
+    // (layout, the file's entry before and after its DV commit) per flavor
+    val flavors: Seq[(TableLayout, String, String)] = Seq(
+      (TableLayout.Digest(),
+        "lang_en-part-00000.csv,3", "lang_en-part-00000.csv,2,dv=0:1"),
+      (TableLayout.Evolve(Seq(EvolveField(1, "id", LongType))),
+        "ev-j0-part-00000.csv,3,ids=1", "ev-j0-part-00000.csv,2,dv=0:1,ids=1"))
+    flavors.foreach { case (layout, before, after) =>
+      val dir = tmp("graft_dv_stream_")
+      graft.sources.DigestManifest.publish(dir.toString, Seq(before))
+      graft.sources.DigestManifest.publish(dir.toString, Seq(after))
+      val stream = new TableMicroBatchStream(dir.toString, layout)
+      val e = intercept[IllegalArgumentException] {
+        stream.planInputPartitions(graft.sources.DigestVersionOffset(0),
+          graft.sources.DigestVersionOffset(2))
+      }
+      assert(e.getMessage.contains("deletion vectors"), e.getMessage)
     }
-    assert(e.getMessage.contains("deletion vectors"), e.getMessage)
   }
 
   test("q252/q275: the change feed plans a PURE DV shrink as resurrected " +
@@ -1192,7 +1236,7 @@ class CatalogSpec extends SparkSpec {
 
   test("q251/q242: an orphaned claim (crashed committer) is invisible to " +
       "the table stream and the change feed") {
-    import graft.sources.{ChangesFilePartition, DigestChanges, DigestFilePartition, DigestManifest, DigestMicroBatchStream, DigestVersionOffset}
+    import graft.sources.{ChangesFilePartition, DigestChanges, DigestFilePartition, DigestManifest, DigestVersionOffset, TableLayout, TableMicroBatchStream}
     val dir = tmp("graft_orphclaim_")
     java.nio.file.Files.write(dir.resolve("a.csv"), java.util.List.of("1,en,10"))
     java.nio.file.Files.write(dir.resolve("b.csv"), java.util.List.of("2,en,20"))
@@ -1206,7 +1250,7 @@ class CatalogSpec extends SparkSpec {
     val head = DigestManifest.currentVersion(dir.toString)
     assert(head == 2, s"expected the live commit to reclaim the orphan slot, got v$head")
     // the table stream plans exactly the two REGISTERED commits' adds
-    val stream = new DigestMicroBatchStream(dir.toString)
+    val stream = new TableMicroBatchStream(dir.toString, TableLayout.Digest())
     val files = stream.planInputPartitions(DigestVersionOffset(0),
       DigestVersionOffset(head))
       .collect { case p: DigestFilePartition => p.file }

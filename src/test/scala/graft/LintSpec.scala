@@ -70,4 +70,42 @@ class LintSpec extends AnyFunSuite {
         "round first or stay double; raw grid columns and f64-exact " +
         "products are fine), then update the audited map")
   }
+
+  /** `DigestManifest.publish` is the LAST-WRITER-WINS commit: it publishes
+    * its listing one past whatever head it reads, so a writer that built
+    * that listing from an earlier read silently drops every commit that
+    * landed in between. It is reserved for the single-writer maintenance
+    * paths its scaladoc names; job commits rebase (`publishAppend`) or
+    * abort on a moved head (`publishReplace`). This lint pins its call
+    * sites in main sources to an audited per-file count, like the decimal
+    * casts above.
+    */
+  test("last-writer-wins manifest publishes appear only at audited sites") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala/graft")
+    val sites: Map[String, Int] = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap { p =>
+        java.nio.file.Files.readAllLines(p).asScala
+          .filter { l =>
+            val t = l.trim
+            l.contains("DigestManifest.publish(") &&
+              !t.startsWith("import") && !t.startsWith("//") && !t.startsWith("*")
+          }
+          .map(_ => root.relativize(p).toString.replace('\\', '/'))
+      }
+      .toSeq.groupBy(identity).view.mapValues(_.size).toMap
+    val audited = Map(
+      // partition DDL (DROP PARTITION, single and atomic multi-partition)
+      // and branch creation (the fork's first snapshot)
+      "sources/TableOps.scala" -> 3,
+      // the change-feed soak tool's hand-built listings
+      "tools/SoakFeed.scala" -> 1,
+    )
+    assert(sites == audited,
+      s"un-audited DigestManifest.publish call sites: $sites vs audited " +
+        s"$audited — a job commit must use publishAppend (appends) or " +
+        "publishReplace (everything else); only single-writer maintenance " +
+        "may use the last-writer-wins form, then update the audited map")
+  }
 }

@@ -8,23 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      // expensive lambda exprs must not be re-inlined into scan filters
-      .config("spark.sql.constraintPropagation.enabled", "false")
-      // events.parquet ts unit has drifted across testdata generations
-      // (ns/µs); the loader adapts (Tables.events). nanosAsLong stays on:
-      // required for ns files, harmless for µs ones.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // see Bench.scala: 4.1's checkpoint checksum companion files double
-      // tiny-file checkpoint I/O and serialize provider loads (r21)
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = Bench.session("4")
     s.sparkContext.setLogLevel("WARN")
     s
   }
