@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths}
 import java.util
 
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
@@ -329,47 +330,21 @@ object DigestChanges {
           bf.forall(enc => BloomCodec.mayContain(enc, id)))
       if (mayHold) {
         val dv = DvCodec.decode(e.attrs.getOrElse("dv", ""))
-        val p = Paths.get(path, e.file)
-        // within-file hits: last live occurrence of each id wins
+        // within-file hits: last live occurrence of each id wins. The
+        // remaining ids' band and points prune parquet row groups off the
+        // footer's stats and per-group blooms before any column chunk
+        // decodes, and rows stream — a 1M-row base file never
+        // materializes on this task's heap
         val hits = scala.collection.mutable.Map.empty[Long, (String, Long)]
-        if (ParquetData.isParquet(e.file)) {
-          // STREAMED + ROW-GROUP-PRUNED read: the remaining ids' band and
-          // points prune groups off the footer's stats and per-group
-          // blooms before any column chunk decodes, then the vectorized
-          // iterator serves only the surviving groups batch-by-batch —
-          // a 1M-row base file never materializes on this task's heap
-          val (groups, ex) = ParquetData.rowGroupsWithBloomExclusions(p,
-            Map("doc_id" -> remaining))
-          val kept = ParquetData.survivingGroups(groups,
-            Map("doc_id" -> (remaining.min, remaining.max)))
-            .filterNot(g => ex.contains(g.index))
-          val batches = new ParquetData.BatchIterator(p,
-            DigestSink.rowSchema, kept)
-          try batches.foreach { case (b, start) =>
-            var i = 0
-            while (i < b.numRows()) {
-              val pos = start + i
-              if (!DvCodec.contains(dv, pos)) {
-                val id = b.column(0).getLong(i)
-                if (remaining.contains(id))
-                  hits(id) = (b.column(1).getUTF8String(i).toString,
-                    b.column(2).getLong(i))
-              }
-              i += 1
-            }
-          } finally batches.close()
-        } else {
-          var pos = -1L
-          scala.jdk.CollectionConverters.ListHasAsScala(Files.readAllLines(p))
-            .asScala.iterator.filter(_.nonEmpty).foreach { l =>
-              pos += 1
-              if (!DvCodec.contains(dv, pos)) {
-                val a = l.split(",")
-                val id = a(0).toLong
-                if (remaining.contains(id)) hits(id) = (a(1), a(2).toLong)
-              }
-            }
-        }
+        val rows = new TableRows(path, e.file,
+          TableLayout.Digest().fileCols(Nil),
+          Map("doc_id" -> (remaining.min, remaining.max)),
+          Map("doc_id" -> remaining))
+        try rows.foreach { case (pos, c) =>
+          val id = c(0).asInstanceOf[Long]
+          if (!DvCodec.contains(dv, pos) && remaining.contains(id))
+            hits(id) = (c(1).toString, c(2).asInstanceOf[Long])
+        } finally rows.close()
         hits.foreach { case (id, st) => resolved(id) = st }
         remaining = remaining -- hits.keySet
       }
@@ -411,14 +386,15 @@ class DigestChangesScan(path: String, from: Int, to: Int,
   override def planInputPartitions(): Array[InputPartition] =
     DigestChanges.plan(path, from, to, ref).toArray
   override def createReaderFactory(): PartitionReaderFactory =
-    new ChangesReaderFactory
+    new ChangesReaderFactory(TableLayout.Digest())
 
   // q244: the feed STREAMS — `changesFrom` is the initial offset, every
   // later commit is a micro-batch of change rows (the Delta
   // readChangeFeed shape). Downstream CDC consumers tail the table's
   // commit log directly instead of re-diffing snapshots.
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-    new ChangesMicroBatchStream(path, from, ref, new ChangesReaderFactory)
+    new ChangesMicroBatchStream(path, from, ref,
+      new ChangesReaderFactory(TableLayout.Digest()))
 }
 
 /** One whole base file entering (`insert`) or leaving (`delete`) the
@@ -464,52 +440,64 @@ case class ChangesInverseDeltaPartition(path: String, files: Seq[String],
     shard: Int = 0, nShards: Int = 1)
     extends InputPartition
 
-class ChangesReaderFactory extends PartitionReaderFactory {
+/** The change rows of either flavor's partitions: a data file's rows
+  * (cells resolved through `layout`) plus `_change_type` and
+  * `_commit_version`. Whole-file, position-sharded and DV partitions read
+  * through [[TableRows]]; the delta verb-log and inverse-delta partitions
+  * exist only on the digest flavor.
+  */
+class ChangesReaderFactory(layout: TableLayout) extends PartitionReaderFactory {
+  /** The live change rows of one data file: positions outside `dv` that
+    * `keep` admits, minus the rows whose id a same-version dropped verb
+    * log already represents.
+    */
+  private def fileReader(path: String, file: String, ids: String,
+      dv: String, keep: Long => Boolean, excludeVerbsOf: Seq[String],
+      changeType: String, version: Int, shard: (Int, Int) = (0, 1))
+      : PartitionReader[InternalRow] =
+    new PartitionReader[InternalRow] {
+      private val mask = DvCodec.decode(dv)
+      private val excl = DigestChanges.verbTouchedIds(path, excludeVerbsOf)
+      private val rows = new TableRows(path, file,
+        layout.fileCols(ids.split(";").filter(_.nonEmpty).map(_.toInt).toSeq),
+        shard = shard)
+      private var current: InternalRow = _
+      override def next(): Boolean = {
+        while (rows.hasNext) {
+          val (pos, cells) = rows.next()
+          // only digest versions drop verb logs, so a non-empty `excl`
+          // means cell 0 is the doc_id
+          if (!DvCodec.contains(mask, pos) && keep(pos) &&
+              !(excl.nonEmpty && excl.contains(cells(0).asInstanceOf[Long]))) {
+            current = new GenericInternalRow(cells ++
+              Array[Any](UTF8String.fromString(changeType), version.toLong))
+            return true
+          }
+        }
+        false
+      }
+      override def get(): InternalRow = current
+      override def close(): Unit = rows.close()
+    }
+
   override def createReader(p: InputPartition): PartitionReader[InternalRow] =
     p match {
-      case fp: ChangesFilePartition if fp.nShards > 1 =>
-        // position-range shard of a LARGE parquet file: this task reads
-        // only the row groups overlapping its range (footer-derived —
-        // physical row count, not the entry's DV-netted figure)
-        val dv = DvCodec.decode(fp.dv)
-        val excl = DigestChanges.verbTouchedIds(fp.path, fp.excludeVerbsOf)
-        val f = java.nio.file.Paths.get(fp.path, fp.file)
-        val groups = ParquetData.rowGroups(f)
-        val phys = groups.map(_.rows).sum
-        val lo = fp.shard * phys / fp.nShards
-        val hi = (fp.shard + 1) * phys / fp.nShards
-        val sel = groups.filter(g => g.rowStart < hi && g.rowStart + g.rows > lo)
-        val batches = new ParquetData.BatchIterator(f,
-          DigestSink.rowSchema, sel)
-        val rows: Iterator[InternalRow] = batches.flatMap { case (b, start) =>
-          scala.jdk.CollectionConverters.IteratorHasAsScala(b.rowIterator())
-            .asScala.zipWithIndex.flatMap { case (r, i) =>
-              val pos = start + i
-              if (pos < lo || pos >= hi || DvCodec.contains(dv, pos) ||
-                  excl.contains(r.getLong(0))) None
-              else Some(InternalRow(r.getLong(0),
-                UTF8String.fromString(r.getUTF8String(1).toString),
-                r.getLong(2),
-                UTF8String.fromString(fp.changeType), fp.version.toLong))
-            }
-        }
-        new PartitionReader[InternalRow] {
-          private var current: InternalRow = _
-          override def next(): Boolean =
-            if (rows.hasNext) { current = rows.next(); true } else false
-          override def get(): InternalRow = current
-          override def close(): Unit = batches.close()
-        }
       case fp: ChangesFilePartition =>
-        val dv = DvCodec.decode(fp.dv)
-        val excl = DigestChanges.verbTouchedIds(fp.path, fp.excludeVerbsOf)
-        var pos = -1L
-        lineReader(fp.path, fp.file) { a =>
-          pos += 1
-          if (DvCodec.contains(dv, pos) || excl.contains(a(0).toLong)) null
-          else InternalRow(a(0).toLong, UTF8String.fromString(a(1)), a(2).toLong,
-            UTF8String.fromString(fp.changeType), fp.version.toLong)
-        }
+        // a position-range shard of a LARGE parquet file reads only the
+        // row groups overlapping its range (derived from the task's own
+        // footer read)
+        fileReader(fp.path, fp.file, fp.ids, fp.dv, _ => true,
+          fp.excludeVerbsOf, fp.changeType, fp.version, (fp.shard, fp.nShards))
+      case vp: ChangesDvPartition =>
+        // "delete" for a DV growth, "insert" for a rollback's pure shrink
+        // (the resurrected positions)
+        val want = vp.positions.toSet
+        fileReader(vp.path, vp.file, vp.ids, "", want.contains,
+          vp.excludeVerbsOf, vp.changeType, vp.version)
+      case other if !layout.isInstanceOf[TableLayout.Digest] =>
+        throw new IllegalStateException(
+          s"${layout.label} changes: unexpected partition $other " +
+            "(the flavor has no delta verb logs)")
       case dp: ChangesDeltaPartition =>
         // verb replay WITH pre-images: an id's pre-state comes from this
         // log's own earlier verbs when it has them, else from the
@@ -574,16 +562,6 @@ class ChangesReaderFactory extends PartitionReaderFactory {
           override def get(): InternalRow = current
           override def close(): Unit = ()
         }
-      case vp: ChangesDvPartition =>
-        val want = vp.positions.toSet
-        val excl = DigestChanges.verbTouchedIds(vp.path, vp.excludeVerbsOf)
-        var pos = -1L
-        lineReader(vp.path, vp.file) { a =>
-          pos += 1
-          if (!want.contains(pos) || excl.contains(a(0).toLong)) null
-          else InternalRow(a(0).toLong, UTF8String.fromString(a(1)), a(2).toLong,
-            UTF8String.fromString(vp.changeType), vp.version.toLong)
-        }
       case ip: ChangesInverseDeltaPartition =>
         // NET INVERSE of dropped verb logs (round-20): for every id the
         // logs touched, the transition prevV-state → version-state is
@@ -640,42 +618,6 @@ class ChangesReaderFactory extends PartitionReaderFactory {
           override def get(): InternalRow = current
           override def close(): Unit = ()
         }
-    }
-
-  /** Sequential row reader over a DATA file, dispatched on its byte
-    * format (CSV lines or parquet rows — the change feed is data-plane
-    * agnostic, like every metadata consumer); `mk` may return null to
-    * SKIP a row. Row order is file order, so the i-th row is DV
-    * position i on both planes.
-    */
-  private def lineReader(path: String, file: String)(
-      mk: Array[String] => InternalRow): PartitionReader[InternalRow] =
-    new PartitionReader[InternalRow] {
-      // held as the concrete reader so close() can release the parquet
-      // file handle on EARLY termination (LIMIT) — exhaustion-close
-      // alone leaks one fd per partially-read file
-      private val pqReader: ParquetData.RowsReader =
-        if (ParquetData.isParquet(file))
-          new ParquetData.RowsReader(Paths.get(path, file))
-        else null
-      private val rows: Iterator[Array[String]] =
-        if (pqReader != null)
-          pqReader.map { case (id, lang, n) =>
-            Array(id.toString, lang, n.toString)
-          }
-        else scala.jdk.CollectionConverters.IteratorHasAsScala(
-          Files.readAllLines(Paths.get(path, file)).iterator())
-          .asScala.map(_.split(","))
-      private var current: InternalRow = _
-      override def next(): Boolean = {
-        while (rows.hasNext) {
-          val r = mk(rows.next())
-          if (r != null) { current = r; return true }
-        }
-        false
-      }
-      override def get(): InternalRow = current
-      override def close(): Unit = if (pqReader != null) pqReader.close()
     }
 }
 

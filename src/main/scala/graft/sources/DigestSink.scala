@@ -5,6 +5,7 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.util
 
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsDelete, SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
 import org.apache.spark.sql.connector.expressions.{Expressions, SortDirection, SortOrder, Transform}
@@ -3183,9 +3184,12 @@ class DigestReaderFactory(columnar: Boolean = false)
     }
 }
 
+/** The digest row reader: [[TableRows]] under the file's deletion vector,
+  * with the merge-on-read overrides, the `(_file, _pos)` metadata columns
+  * and the q245 task metrics layered on top.
+  */
 class DigestFileReader(p: DigestFilePartition)
     extends PartitionReader[InternalRow] {
-  DigestSink.fileReadEvents.incrementAndGet()
   // the entry's deletion vector (q252): positions masked here are deleted
   // rows — skipped on every read path, no base-file rewrite ever happened
   private val dv = DvCodec.decode(p.dv)
@@ -3198,196 +3202,85 @@ class DigestFileReader(p: DigestFilePartition)
     else p.overrides
   private var current: InternalRow = _
   private var served = 0L
-  private var rgPlanned = 0L
-  private var rgPruned = 0L
-  private var rgBloomSkips = 0L
-  private var batches: ParquetData.BatchIterator = _
 
   // COLUMN pruning (q272): a pushed projection narrower than the table
   // schema serves projected rows — parquet decodes only the requested
-  // columns' chunks; CSV projects post-parse. Only planned in scan roles
-  // without overrides or metadata columns (the builder's gate), so the
-  // pruned path never meets the merge/rowid logic below.
-  private val prunedTo: Option[StructType] =
-    p.req.filter(r => !p.emitMeta && p.overrides.isEmpty &&
-      p.verbFiles.isEmpty &&
-      r.fieldNames.toSeq != DigestSink.rowSchema.fieldNames.toSeq)
-
-  private def keptGroups(file: java.nio.file.Path): Seq[ParquetData.RowGroup] = {
-    // one footer open serves BOTH the group listing and the bloom probes
-    if (p.pts.size > ParquetData.BloomProbeMaxPoints) rgBloomSkips += 1
-    val (groups, ex) = ParquetData.rowGroupsWithBloomExclusions(file,
+  // columns' chunks (none for an empty `count(*)` projection: footer row
+  // counts give the positions); CSV projects post-parse. Only planned in
+  // scan roles without overrides or metadata columns (the builder's
+  // gate), so the pruned path never meets the merge/rowid logic below.
+  private val rows: TableRows = {
+    val all = TableLayout.Digest().fileCols(Nil)
+    val cols = p.req.filter(r => !p.emitMeta && p.overrides.isEmpty &&
+        p.verbFiles.isEmpty)
+      .fold(all)(_.fieldNames.toSeq.map(n => all.find(_.name == n).get))
+    new TableRows(p.path, p.file, cols, p.zm,
       if (p.pts.isEmpty) Map.empty else Map("doc_id" -> p.pts))
-    // stats (range) layer, then the row-group BLOOM layer for point sets
-    val statKept = ParquetData.survivingGroups(groups, p.zm)
-    val kept = statKept.filterNot(g => ex.contains(g.index))
-    rgPlanned = kept.size.toLong
-    rgPruned = (groups.size - kept.size).toLong
-    DigestSink.rowGroupReadEvents.addAndGet(rgPlanned)
-    DigestSink.rowGroupSkipEvents.addAndGet(rgPruned)
-    kept
   }
-
-  /** Pruned-projection rows as (file-global position, projected row).
-    * An EMPTY projection (`SELECT count(*)` past the agg gate) is served
-    * from METADATA alone on the parquet plane — footer row counts give
-    * the positions, zero data bytes are decoded (the DV mask still
-    * applies per position).
-    */
-  private val prows: Iterator[(Long, InternalRow)] =
-    prunedTo match {
-      case None => null
-      case Some(req) if ParquetData.isParquet(p.file) =>
-        val file = Paths.get(p.path, p.file)
-        val kept = keptGroups(file)
-        if (req.fields.isEmpty)
-          kept.iterator.flatMap(g =>
-            (g.rowStart until g.rowStart + g.rows).iterator
-              .map(pos => (pos, InternalRow.empty)))
-        else {
-          batches = new ParquetData.BatchIterator(file, req, kept)
-          val extract: Array[(InternalRow, Int) => Any] =
-            req.fields.map { f => f.name match {
-              case "lang" => (r: InternalRow, i: Int) => r.getUTF8String(i).copy()
-              case _ => (r: InternalRow, i: Int) => r.getLong(i)
-            }}
-          batches.flatMap { case (batch, startPos) =>
-            val rit = scala.jdk.CollectionConverters
-              .IteratorHasAsScala(batch.rowIterator()).asScala
-            rit.zipWithIndex.map { case (r, i) =>
-              (startPos + i, InternalRow.fromSeq(
-                extract.zipWithIndex.map { case (e, j) => e(r, j) }.toSeq))
-            }
-          }
-        }
-      case Some(req) =>
-        val idx = req.fieldNames.map {
-          case "doc_id" => 0
-          case "lang" => 1
-          case "n_chars" => 2
-        }
-        val lines = Files.readAllLines(Paths.get(p.path, p.file)).iterator()
-        new Iterator[(Long, InternalRow)] {
-          private var pos = -1L
-          override def hasNext: Boolean = lines.hasNext
-          override def next(): (Long, InternalRow) = {
-            val a = lines.next().split(",")
-            pos += 1
-            (pos, InternalRow.fromSeq(idx.toSeq.map {
-              case 0 => a(0).toLong
-              case 1 => UTF8String.fromString(a(1))
-              case 2 => a(2).toLong
-            }))
-          }
-        }
-    }
-
-  /** (file-global position, doc_id, lang, n_chars) rows, dispatched on
-    * the FILE's byte format. The parquet path prunes ROW GROUPS against
-    * the pushed ranges off the footer's per-group stats — the in-file
-    * layer under the manifest's per-file zones — and still reports exact
-    * global positions (group offsets come from the same footer), so DV
-    * masks stay position-true under pruning.
-    */
-  private val rows: Iterator[(Long, Long, UTF8String, Long)] =
-    if (prunedTo.isDefined) null
-    else if (ParquetData.isParquet(p.file)) {
-      val file = Paths.get(p.path, p.file)
-      val kept = keptGroups(file)
-      batches = new ParquetData.BatchIterator(file, DigestSink.rowSchema, kept)
-      batches.flatMap { case (batch, startPos) =>
-        val rit = scala.jdk.CollectionConverters
-          .IteratorHasAsScala(batch.rowIterator()).asScala
-        rit.zipWithIndex.map { case (r, i) =>
-          (startPos + i, r.getLong(0), r.getUTF8String(1).copy(), r.getLong(2))
-        }
-      }
-    } else {
-      val lines = Files.readAllLines(Paths.get(p.path, p.file)).iterator()
-      new Iterator[(Long, Long, UTF8String, Long)] {
-        private var pos = -1L
-        override def hasNext: Boolean = lines.hasNext
-        override def next(): (Long, Long, UTF8String, Long) = {
-          val a = lines.next().split(",")
-          pos += 1
-          (pos, a(0).toLong, UTF8String.fromString(a(1)), a(2).toLong)
-        }
-      }
-    }
+  private val groups = Option(rows.groups)
 
   override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
     Array(DigestMetricValue("graft_rows_served", served),
-      DigestMetricValue("graft_rowgroups_planned", rgPlanned),
-      DigestMetricValue("graft_rowgroups_pruned", rgPruned),
-      DigestMetricValue("graft_bloom_probe_skips", rgBloomSkips))
-
-  private def emit(id: Long, lang: UTF8String, n: Long, pos: Long): Boolean = {
-    // the row-level-operation scan (q252) asks for each row's physical
-    // coordinates — (_file, _pos) is the rowId a deletion-vector commit
-    // is keyed by, the Iceberg position-delete shape
-    current =
-      if (p.emitMeta)
-        InternalRow(id, lang, n, UTF8String.fromString(p.file), pos)
-      else InternalRow(id, lang, n)
-    served += 1
-    true
-  }
+      DigestMetricValue("graft_rowgroups_planned",
+        groups.fold(0L)(_.kept.size.toLong)),
+      DigestMetricValue("graft_rowgroups_pruned", groups.fold(0L)(_.pruned)),
+      DigestMetricValue("graft_bloom_probe_skips",
+        groups.fold(0L)(_.bloomSkips)))
 
   override def next(): Boolean = {
-    if (prows != null) {
-      while (prows.hasNext) {
-        val (pos, row) = prows.next()
-        if (!DvCodec.contains(dv, pos)) {
-          current = row
+    while (rows.hasNext) {
+      val (pos, cells) = rows.next()
+      if (!DvCodec.contains(dv, pos)) {
+        val row: Array[Any] =
+          if (overrides.isEmpty) cells
+          else overrides.get(cells(0).asInstanceOf[Long]) match {
+            case None => cells // no delta intent: base row as written
+            case Some(Some((rid, rlang, rn))) => // replaced in place
+              Array[Any](rid, UTF8String.fromString(rlang), rn)
+            case Some(None) => null // deleted: skip and keep scanning
+          }
+        if (row != null) {
+          // the row-level-operation scan (q252) asks for each row's
+          // physical coordinates — (_file, _pos) is the rowId a
+          // deletion-vector commit is keyed by, the Iceberg
+          // position-delete shape
+          current =
+            if (p.emitMeta)
+              new GenericInternalRow(row :+ UTF8String.fromString(p.file) :+ pos)
+            else new GenericInternalRow(row)
           served += 1
           return true
-        }
-      }
-      return false
-    }
-    while (rows.hasNext) {
-      val (pos, id, lang, n) = rows.next()
-      if (!DvCodec.contains(dv, pos)) {
-        overrides.get(id) match {
-          case None => // no delta intent: base row as written
-            return emit(id, lang, n, pos)
-          case Some(Some((rid, rlang, rn))) => // replaced in place
-            return emit(rid, UTF8String.fromString(rlang), rn, pos)
-          case Some(None) => // deleted: skip and keep scanning
         }
       }
     }
     false
   }
   override def get(): InternalRow = current
-  override def close(): Unit = if (batches != null) batches.close()
+  override def close(): Unit = rows.close()
 }
 
 /** COLUMNAR serve (the clean-scan fast path of the parquet plane): the
   * selected row groups' `ColumnarBatch`es flow straight into whole-stage
   * codegen with no per-row materialization. Planned only when NOTHING
   * row-level stands between the file and the query — no DV mask, no
-  * merge-on-read overrides, no metadata columns.
+  * merge-on-read overrides, no metadata columns. Same row-group selection
+  * as [[TableRows]].
   */
 class DigestColumnarFileReader(p: DigestFilePartition)
     extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
   DigestSink.fileReadEvents.incrementAndGet()
   private val file = Paths.get(p.path, p.file)
-  private val (groups, bloomEx) = ParquetData.rowGroupsWithBloomExclusions(
-    file, if (p.pts.isEmpty) Map.empty else Map("doc_id" -> p.pts))
-  private val kept = ParquetData.survivingGroups(groups, p.zm)
-    .filterNot(g => bloomEx.contains(g.index))
-  DigestSink.rowGroupReadEvents.addAndGet(kept.size.toLong)
-  DigestSink.rowGroupSkipEvents.addAndGet((groups.size - kept.size).toLong)
+  private val groups = TableRows.select(file, p.zm,
+    if (p.pts.isEmpty) Map.empty else Map("doc_id" -> p.pts))
   private val batches = new ParquetData.BatchIterator(file,
-    p.req.getOrElse(DigestSink.rowSchema), kept)
+    p.req.getOrElse(DigestSink.rowSchema), groups.kept)
   private var current: org.apache.spark.sql.vectorized.ColumnarBatch = _
   private var served = 0L
 
   override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
     Array(DigestMetricValue("graft_rows_served", served),
-      DigestMetricValue("graft_rowgroups_planned", kept.size.toLong),
-      DigestMetricValue("graft_rowgroups_pruned", (groups.size - kept.size).toLong))
+      DigestMetricValue("graft_rowgroups_planned", groups.kept.size.toLong),
+      DigestMetricValue("graft_rowgroups_pruned", groups.pruned))
 
   override def next(): Boolean =
     if (batches.hasNext) {
@@ -3532,7 +3425,7 @@ private[sources] object RowsOut {
       val out = Files.newBufferedWriter(staged, StandardCharsets.UTF_8)
       new RowsOut {
         override def write(id: Long, lang: String, n: Long): Unit =
-          out.write(s"$id,$lang,$n\n")
+          out.write(s"$id,${CsvCell.string("graft_digest", lang)},$n\n")
         override def close(): Unit = out.close()
       }
     }

@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 import java.util
 
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableChange}
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
 import org.apache.spark.sql.connector.read.streaming.MicroBatchStream
@@ -546,15 +547,8 @@ class EvolveDataWriter(path: String, fields: Seq[EvolveField], jobTag: String,
     else {
       val cells = fields.indices.map { i =>
         vals(i) match {
-          case null => "\\N"
-          case v: String =>
-            require(!v.exists(c => c == ',' || c == '\n'),
-              s"graft_evolve: string cell contains a delimiter: '$v'")
-            // a REAL value equal to the null sentinel would silently
-            // round-trip back as NULL through the reader — refuse it
-            require(v != "\\N",
-              "graft_evolve: string cell equals the null sentinel \\N")
-            v
+          case null => CsvCell.Null
+          case v: String => CsvCell.string("graft_evolve", v)
           case v => v.toString
         }
       }
@@ -666,128 +660,28 @@ class EvolveScan(path: String, fields: Seq[EvolveField],
       streamMaxVersions)
 }
 
-/** Shared (position, cells) iterator over one evolve data file under the
-  * requested `fields` — cells align with `fields`; [[EvolveRows.Missing]]
-  * marks a column the file predates (callers substitute the existence
-  * default). Dispatches on the FILE's byte format; the parquet path
-  * prunes row groups against `zm` (keyed by field id) and reports
-  * file-global positions off the footer, so DV masks stay exact under
-  * pruning.
+/** The declared-schema row reader: [[TableRows]] under the current
+  * schema's field ids (the existence default where the file predates a
+  * column) and the file's deletion vector, plus `(_file, _pos)` for the
+  * row-level-operation scan.
   */
-private[sources] object EvolveRows {
-  case object Missing
-
-  final class It(path: String, file: String, fileIds: Seq[Int],
-      fields: Seq[EvolveField], zm: Map[Int, (Long, Long)] = Map.empty,
-      pts: Map[Int, Set[Long]] = Map.empty,
-      posRange: Option[(Long, Long)] = None)
-      extends Iterator[(Long, Array[Any])] with AutoCloseable {
-    // same data-file-open observability as the digest reader — the
-    // q274/q279 pruning locks count what was actually opened
-    DigestSink.fileReadEvents.incrementAndGet()
-    private var batches: ParquetData.BatchIterator = _
-    private val rows: Iterator[(Long, Array[Any])] =
-      if (ParquetData.isParquet(file)) {
-        val f = Paths.get(path, file)
-        // one footer open serves the group listing AND the bloom probes
-        val (groups0, ex) = ParquetData.rowGroupsWithBloomExclusions(f,
-          if (pts.isEmpty) Map.empty
-          else pts.map { case (id, s) => s"c$id" -> s })
-        // a position-range shard reads only its overlapping row groups
-        val groups = posRange.fold(groups0) { case (lo, hi) =>
-          groups0.filter(g => g.rowStart < hi && g.rowStart + g.rows > lo)
-        }
-        // stats (range) layer, then the row-group BLOOM layer (round-19)
-        val kept = ParquetData.survivingGroups(groups,
-          zm.map { case (id, r) => s"c$id" -> r })
-          .filterNot(g => ex.contains(g.index))
-        // same row-group observability as the digest plane (q266/q282)
-        DigestSink.rowGroupReadEvents.addAndGet(kept.size.toLong)
-        DigestSink.rowGroupSkipEvents.addAndGet((groups.size - kept.size).toLong)
-        val present = fields.filter(fd => fileIds.contains(fd.id))
-        val req = StructType(present.map(fd =>
-          StructField(s"c${fd.id}", fd.dataType, nullable = true)))
-        val slot: Array[Int] =
-          fields.map(fd => present.indexWhere(_.id == fd.id)).toArray
-        batches = new ParquetData.BatchIterator(f, req, kept)
-        batches.flatMap { case (batch, start) =>
-          scala.jdk.CollectionConverters.IteratorHasAsScala(batch.rowIterator())
-            .asScala.zipWithIndex.map { case (r, i) =>
-              val vals: Array[Any] = fields.indices.map { k =>
-                val j = slot(k)
-                if (j < 0) Missing
-                else if (r.isNullAt(j)) null
-                else fields(k).dataType match {
-                  case LongType => r.getLong(j)
-                  case DoubleType => r.getDouble(j)
-                  case StringType => r.getUTF8String(j).copy()
-                }
-              }.toArray
-              (start + i, vals)
-            }
-        }
-      } else {
-        val slot: Array[Int] = fields.map(f => fileIds.indexOf(f.id)).toArray
-        val lines = Files.readAllLines(Paths.get(path, file)).iterator()
-        new Iterator[(Long, Array[Any])] {
-          private var pos = -1L
-          override def hasNext: Boolean = lines.hasNext
-          override def next(): (Long, Array[Any]) = {
-            val cells = lines.next().split(",", -1)
-            pos += 1
-            val vals: Array[Any] = fields.indices.map { i =>
-              val j = slot(i)
-              if (j < 0) Missing
-              else if (cells(j) == "\\N") null
-              else fields(i).dataType match {
-                case LongType => cells(j).toLong
-                case DoubleType => cells(j).toDouble
-                case StringType => UTF8String.fromString(cells(j))
-              }
-            }.toArray
-            (pos, vals)
-          }
-        }
-      }
-    override def hasNext: Boolean = rows.hasNext
-    override def next(): (Long, Array[Any]) = rows.next()
-    override def close(): Unit = if (batches != null) batches.close()
-  }
-}
-
 class EvolveFileReader(p: EvolveFilePartition, fields: Seq[EvolveField])
     extends PartitionReader[InternalRow] {
-  // the EXISTENCE default per field, pre-parsed once: what a row written
-  // before the column existed serves instead of NULL (an explicit null in
-  // a file that HAS the column stays NULL — the writer recorded it)
-  private val existsDefault: Array[Any] = fields.map { f =>
-    f.default.map { t =>
-      EvolveSchema.parseDefault(f.dataType, t, f.name) match {
-        case s: String => UTF8String.fromString(s)
-        case v => v
-      }
-    }.orNull
-  }.toArray
   private val dv = DvCodec.decode(p.dv)
-  private val rows =
-    new EvolveRows.It(p.path, p.file, p.fileIds, fields, p.zm, p.pts)
+  private val rows = new TableRows(p.path, p.file,
+    TableLayout.Evolve(fields).fileCols(p.fileIds),
+    p.zm.map { case (id, r) => s"c$id" -> r },
+    p.pts.map { case (id, s) => s"c$id" -> s })
   private var current: InternalRow = _
 
   override def next(): Boolean = {
     while (rows.hasNext) {
       val (pos, cells) = rows.next()
       if (!DvCodec.contains(dv, pos)) {
-        val vals: Array[Any] = fields.indices.map { i =>
-          cells(i) match {
-            case EvolveRows.Missing => existsDefault(i)
-            case v => v
-          }
-        }.toArray
         current =
           if (p.emitMeta)
-            InternalRow((vals.toSeq ++
-              Seq(UTF8String.fromString(p.file), pos)): _*)
-          else InternalRow(vals: _*)
+            new GenericInternalRow(cells :+ UTF8String.fromString(p.file) :+ pos)
+          else new GenericInternalRow(cells)
         return true
       }
     }
@@ -835,7 +729,7 @@ class EvolveChangesScan(path: String, fields: Seq[EvolveField],
   override def planInputPartitions(): Array[InputPartition] =
     DigestChanges.plan(path, from, to, ref).toArray
   override def createReaderFactory(): PartitionReaderFactory =
-    new EvolveChangesReaderFactory(fields)
+    new ChangesReaderFactory(TableLayout.Evolve(fields))
 
   // STREAMING CDC on the declared schema (round-20): the q244 shape —
   // offsets are manifest versions, each micro-batch carries its range's
@@ -843,80 +737,7 @@ class EvolveChangesScan(path: String, fields: Seq[EvolveField],
   // by field id
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
     new ChangesMicroBatchStream(path, from, ref,
-      new EvolveChangesReaderFactory(fields))
-}
-
-class EvolveChangesReaderFactory(fields: Seq[EvolveField])
-    extends PartitionReaderFactory {
-  private def reader(path: String, file: String, ids: Seq[Int],
-      dv: String, keepPos: Long => Boolean, changeType: Long => String,
-      version: Int, posRange: Option[(Long, Long)] = None)
-      : PartitionReader[InternalRow] =
-    new PartitionReader[InternalRow] {
-      private val mask = DvCodec.decode(dv)
-      private val existsDefault: Array[Any] = fields.map { f =>
-        f.default.map { t =>
-          EvolveSchema.parseDefault(f.dataType, t, f.name) match {
-            case s: String => UTF8String.fromString(s)
-            case v => v
-          }
-        }.orNull
-      }.toArray
-      private val rows =
-        new EvolveRows.It(path, file, ids, fields, posRange = posRange)
-      private var current: InternalRow = _
-      override def next(): Boolean = {
-        while (rows.hasNext) {
-          val (pos, cells) = rows.next()
-          if (!DvCodec.contains(mask, pos) && keepPos(pos)) {
-            val vals = fields.indices.map { i =>
-              cells(i) match {
-                case EvolveRows.Missing => existsDefault(i)
-                case v => v
-              }
-            }
-            current = InternalRow((vals ++ Seq(
-              UTF8String.fromString(changeType(pos)), version.toLong)): _*)
-            return true
-          }
-        }
-        false
-      }
-      override def get(): InternalRow = current
-      override def close(): Unit = rows.close()
-    }
-
-  private def parseIds(ids: String): Seq[Int] =
-    ids.split(";").filter(_.nonEmpty).map(_.toInt).toSeq
-
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-    p match {
-      case fp: ChangesFilePartition if fp.nShards > 1 =>
-        // a position-range shard of a large parquet file (round-19):
-        // bounds derive from this task's own footer read; the iterator
-        // prunes to the overlapping row groups
-        val groups = ParquetData.rowGroups(
-          java.nio.file.Paths.get(fp.path, fp.file))
-        val phys = groups.map(_.rows).sum
-        val lo = fp.shard * phys / fp.nShards
-        val hi = (fp.shard + 1) * phys / fp.nShards
-        reader(fp.path, fp.file, parseIds(fp.ids),
-          fp.dv, pos => pos >= lo && pos < hi, _ => fp.changeType,
-          fp.version, Some((lo, hi)))
-      case fp: ChangesFilePartition =>
-        reader(fp.path, fp.file, parseIds(fp.ids),
-          fp.dv, _ => true, _ => fp.changeType, fp.version)
-      case vp: ChangesDvPartition =>
-        // changeType: "delete" for DV growth, "insert" for a rollback's
-        // pure shrink (the resurrected positions) — same contract as the
-        // digest reader
-        val want = vp.positions.toSet
-        reader(vp.path, vp.file, parseIds(vp.ids),
-          "", want.contains, _ => vp.changeType, vp.version)
-      case other => throw new IllegalStateException(
-        s"graft_evolve changes: unexpected partition $other " +
-          "(the evolve flavor has no delta verb logs)")
-    }
+      new ChangesReaderFactory(TableLayout.Evolve(fields)))
 }
 
 /** Provider-options view of an evolve table (q270): `path` +

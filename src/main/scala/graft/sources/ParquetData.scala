@@ -12,7 +12,7 @@ import org.apache.hadoop.mapreduce.TaskAttemptID
 import org.apache.hadoop.mapred.FileSplit
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, PrimitiveType, Types}
@@ -110,12 +110,6 @@ object ParquetData {
       startPos: Long, bytes: Long, mins: Map[String, Long],
       maxs: Map[String, Long])
 
-  def rowGroups(file: Path): Seq[RowGroup] = {
-    val r = ParquetFileReader.open(
-      HadoopInputFile.fromPath(new HPath(file.toUri), hconf()))
-    try groupsOf(r) finally r.close()
-  }
-
   private def groupsOf(r: ParquetFileReader): Seq[RowGroup] = {
     var rowStart = 0L
     r.getFooter.getBlocks.asScala.toSeq.zipWithIndex.map { case (b, i) =>
@@ -162,18 +156,21 @@ object ParquetData {
     try (groupsOf(r), bloomExclusions(r, points)) finally r.close()
   }
 
+  /** Row-group indexes whose stored BLOOM FILTER excludes EVERY probed
+    * point of some column (round-19): the in-file layer of the q278
+    * point-lookup rule, for large files where the manifest-attr filter
+    * is saturation-gated off and shuffled ingest leaves the row-group
+    * (min,max) stats wide. A group without a filter for a probed column
+    * is never excluded — absent metadata never drops data; a column
+    * probed with more than [[BloomProbeMaxPoints]] ids is not probed at
+    * all (the exclusion would almost never fire and the probing is
+    * O(groups × ids); [[TableRows.select]] counts the bow-out).
+    */
   private def bloomExclusions(r: ParquetFileReader,
       points: Map[String, Set[Long]]): Set[Int] = {
-    // the bow-out must be OBSERVABLE: a pruning regression from an
-    // oversized In-set otherwise surfaces only as a slow scan (ADVICE
-    // r20); counted in the same partitioning pass (ADVICE r21), and also
-    // reported per task as the graft_bloom_probe_skips custom metric
-    var oversized = 0L
     val probed = points.filter { case (_, ids) =>
-      if (ids.size > BloomProbeMaxPoints) { oversized += 1; false }
-      else ids.nonEmpty
+      ids.nonEmpty && ids.size <= BloomProbeMaxPoints
     }
-    if (oversized > 0) DigestSink.bloomProbeSkippedEvents.addAndGet(oversized)
     if (probed.isEmpty) return Set.empty
     r.getFooter.getBlocks.asScala.toSeq.zipWithIndex.flatMap { case (b, i) =>
       val bfr = r.getBloomFilterDataReader(b)
@@ -203,27 +200,6 @@ object ParquetData {
         }
       }
     }
-
-  /** Row-group indexes whose stored BLOOM FILTER excludes EVERY probed
-    * point of some column (round-19): the in-file layer of the q278
-    * point-lookup rule, for large files where the manifest-attr filter
-    * is saturation-gated off and shuffled ingest leaves the row-group
-    * (min,max) stats wide. A group without a filter for a probed column
-    * is never excluded — absent metadata never drops data; a column
-    * probed with more than [[BloomProbeMaxPoints]] ids is not probed at
-    * all (the exclusion would almost never fire and the probing is
-    * O(groups × ids)). Cost is one footer-adjacent bloom read per
-    * (group, probed column) at plan time, repaid by the column chunks
-    * never decoded. Callers that also need the group listing should use
-    * [[rowGroupsWithBloomExclusions]] — one footer open, not two.
-    */
-  def groupsExcludedByBloom(file: Path,
-      points: Map[String, Set[Long]]): Set[Int] = {
-    if (points.isEmpty || points.forall(_._2.isEmpty)) return Set.empty
-    val r = ParquetFileReader.open(
-      HadoopInputFile.fromPath(new HPath(file.toUri), hconf()))
-    try bloomExclusions(r, points) finally r.close()
-  }
 
   /** Open Spark's vectorized reader over one CONTIGUOUS byte range of
     * row groups (parquet's split semantics pick every group whose
@@ -331,38 +307,6 @@ object ParquetData {
     override def close(): Unit =
       if (reader != null) { reader.close(); reader = null }
   }
-
-  /** Plain row iterator over a whole digest parquet file — the
-    * non-vectorized consumers' path (CDF row materialization, procedure
-    * audits). Row-group order, so the i-th row is position i.
-    */
-  /** Row iterator over a parquet data file PLUS an explicit close — the
-    * exhaustion-close alone leaks the file handle when a consumer stops
-    * early (LIMIT, per-partition abort); PartitionReaders must call
-    * close() from their own close().
-    */
-  final class RowsReader(file: Path) extends Iterator[(Long, String, Long)]
-      with AutoCloseable {
-    private val r = org.apache.parquet.hadoop.ParquetReader
-      .builder(new GroupReadSupport(), new HPath(file.toUri))
-      .withConf(hconf()).build()
-    private var closed = false
-    private var g = r.read()
-    override def close(): Unit = if (!closed) { closed = true; r.close() }
-    override def hasNext: Boolean = {
-      if (g == null) close()
-      g != null
-    }
-    override def next(): (Long, String, Long) = {
-      val out = (g.getLong("doc_id", 0), g.getString("lang", 0),
-        g.getLong("n_chars", 0))
-      g = r.read()
-      out
-    }
-  }
-
-  def readRows(file: Path): Iterator[(Long, String, Long)] =
-    new RowsReader(file)
 
   // ---- DECLARED-SCHEMA (evolve) plane: id-addressed generic rows ----------
 

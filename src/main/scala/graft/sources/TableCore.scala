@@ -1,6 +1,7 @@
 package graft.sources
 
-import java.nio.file.{Files, Paths}
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Path, Paths}
 
 import scala.collection.mutable
 
@@ -10,15 +11,18 @@ import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFacto
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxFiles, SupportsAdmissionControl, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.connector.write.{DataWriter, DataWriterFactory, DeltaBatchWrite, DeltaWrite, DeltaWriteBuilder, DeltaWriter, DeltaWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RowLevelOperation, SupportsDelta, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
+import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.unsafe.types.UTF8String
 
 // ---------------------------------------------------------------------------
-// THE TABLE CORE: the row-level (DV) write, the epoch streaming write, the
-// append table stream and the change stream shared by `graft_digest` and
-// `graft_evolve`. Both flavors commit through one manifest protocol
-// ([[DigestManifest]]); what differs between them — the manifest-line
-// codec, the insert writer, the row-level scan, the stream's partitions —
-// is one [[TableLayout]] value, so every guard below holds for both.
+// THE TABLE CORE: the data-file row reader, the row-level (DV) write, the
+// epoch streaming write, the append table stream and the change stream
+// shared by `graft_digest` and `graft_evolve`. Both flavors commit through
+// one manifest protocol ([[DigestManifest]]); what differs between them —
+// the manifest-line codec, the column addressing, the insert writer, the
+// row-level scan, the stream's partitions — is one [[TableLayout]] value,
+// so every guard below holds for both.
 // ---------------------------------------------------------------------------
 
 /** The per-flavor half of the table core: everything the shared write and
@@ -40,6 +44,12 @@ private[graft] sealed abstract class TableLayout extends Serializable {
 
   /** `line` with deletion vector `dv` and `deleted` fewer live rows. */
   def withDv(line: String, dv: String, deleted: Long): String
+
+  /** Where each of the layout's columns sits in a data file written
+    * under the field ids `fileIds` (the evolve entry's `ids`; digest
+    * files all share one fixed shape).
+    */
+  def fileCols(fileIds: Seq[Int]): Seq[FileCol]
 
   /** The column names an insert's incoming rows resolve by. */
   def insertCols: Seq[String]
@@ -84,6 +94,11 @@ private[graft] object TableLayout {
       val e = ManifestEntry.parse(line)
       ManifestEntry(e.file, e.rows - deleted, e.attrs + ("dv" -> dv)).line
     }
+    // CSV positions 0-2, parquet columns by name
+    override def fileCols(fileIds: Seq[Int]): Seq[FileCol] =
+      DigestSink.rowSchema.fields.toSeq.zipWithIndex.map { case (f, i) =>
+        FileCol(f.name, f.dataType, i, f.name)
+      }
     override def insertCols: Seq[String] = Seq("doc_id", "lang", "n_chars")
     override def insertWriter(path: String, partitionId: Int, taskId: Long,
         jobTag: String, cols: Array[Int]): DataWriter[InternalRow] =
@@ -132,6 +147,18 @@ private[graft] object TableLayout {
       EvolveEntry.render(file, rows - deleted, ids,
         (attrs - "ids") + ("dv" -> dv))
     }
+    // by FIELD ID: the id's position in the file's list, parquet column
+    // `c<id>`. A column the file predates serves the EXISTENCE default
+    // (an explicit null in a file that has the column stays NULL)
+    override def fileCols(fileIds: Seq[Int]): Seq[FileCol] = fields.map { f =>
+      FileCol(f.name, f.dataType, fileIds.indexOf(f.id), s"c${f.id}",
+        f.default.map { t =>
+          EvolveSchema.parseDefault(f.dataType, t, f.name) match {
+            case s: String => UTF8String.fromString(s)
+            case v => v
+          }
+        }.orNull)
+    }
     override def insertCols: Seq[String] = fields.map(_.name)
     override def insertWriter(path: String, partitionId: Int, taskId: Long,
         jobTag: String, cols: Array[Int]): DataWriter[InternalRow] =
@@ -150,6 +177,183 @@ private[graft] object TableLayout {
         new EvolveFileReader(p.asInstanceOf[EvolveFilePartition], fs)
     }
     override def epochMarker(epochId: Long): String = s"ev-je$epochId-"
+  }
+}
+
+/** Where one requested column sits in one committed data file: its CSV
+  * cell position and parquet column name — or, when the file predates the
+  * column (`csvPos < 0`), the existence `default` every row serves.
+  */
+private[graft] final case class FileCol(name: String, dataType: DataType,
+    csvPos: Int, parquetName: String, default: Any = null) {
+  def present: Boolean = csvPos >= 0
+}
+
+/** The CSV plane's cell rules, shared by both flavors' writers and by
+  * [[TableRows]]: cells are comma-separated, rows newline-terminated, and
+  * `\N` is NULL.
+  */
+private[sources] object CsvCell {
+  val Null = "\\N"
+
+  /** A string cell as written — refused when it would not read back as
+    * itself: a delimiter would shift every later column of the row, and a
+    * real value equal to the sentinel would round-trip as NULL.
+    */
+  def string(label: String, v: String): String = {
+    require(!v.exists(c => c == ',' || c == '\n' || c == '\r'),
+      s"$label: string cell contains a delimiter: '$v'")
+    require(v != Null, s"$label: string cell equals the null sentinel \\N")
+    v
+  }
+}
+
+/** THE row reader for one committed data file of either flavor: yields
+  * `(file position, cells)`, cells aligned with `cols` in Spark's internal
+  * form (Long / Double / UTF8String / null), dispatched on the FILE's byte
+  * format. CSV lines parse positionally; parquet decodes only the present
+  * columns of only the row groups [[TableRows.select]] keeps, with
+  * file-global positions off the footer, so DV masks stay exact under
+  * pruning. A request with no present column (`count(*)`, or a file that
+  * predates every requested column) decodes no data at all: the footer's
+  * row counts give the positions. `shard = (i, n)` reads only the i-th of
+  * n equal position ranges of a parquet file. Close it when stopping
+  * early (LIMIT): exhaustion alone releases the handle.
+  */
+private[graft] final class TableRows(path: String, file: String,
+    cols: Seq[FileCol], zm: Map[String, (Long, Long)] = Map.empty,
+    pts: Map[String, Set[Long]] = Map.empty, shard: (Int, Int) = (0, 1))
+    extends Iterator[(Long, Array[Any])] with AutoCloseable {
+  // the data-file-open observability the pruning locks count (q274/q279)
+  DigestSink.fileReadEvents.incrementAndGet()
+  private val f = Paths.get(path, file)
+  /** The parquet row-group selection; null for a CSV file. */
+  val groups: TableRows.Selection =
+    if (ParquetData.isParquet(file)) TableRows.select(f, zm, pts, shard)
+    else {
+      require(shard._2 == 1,
+        s"graft table: CSV file $file is not position-shardable")
+      null
+    }
+  private var batches: ParquetData.BatchIterator = _
+  private var lines: java.io.BufferedReader = _
+  private val cs = cols.toArray
+
+  private val rows: Iterator[(Long, Array[Any])] =
+    if (groups == null) csvRows
+    else if (!cols.exists(_.present))
+      groups.kept.iterator.flatMap(g =>
+        (math.max(g.rowStart, groups.lo) until
+          math.min(g.rowStart + g.rows, groups.hi)).iterator
+          .map(pos => (pos, cols.map(_.default).toArray[Any])))
+    else parquetRows
+
+  /** One row's cells, `cell(k)` giving the k-th present column's value. */
+  private def cells(cell: Int => Any): Array[Any] = {
+    val out = new Array[Any](cs.length)
+    var k = 0
+    while (k < cs.length) {
+      out(k) = if (cs(k).present) cell(k) else cs(k).default
+      k += 1
+    }
+    out
+  }
+
+  private def csvRows: Iterator[(Long, Array[Any])] = {
+    lines = Files.newBufferedReader(f, StandardCharsets.UTF_8)
+    new Iterator[(Long, Array[Any])] {
+      private var pos = -1L
+      private var line = lines.readLine()
+      override def hasNext: Boolean = {
+        if (line == null) close()
+        line != null
+      }
+      override def next(): (Long, Array[Any]) = {
+        val a = line.split(",", -1)
+        line = lines.readLine()
+        pos += 1
+        (pos, cells { k =>
+          val t = a(cs(k).csvPos)
+          if (t == CsvCell.Null) null
+          else cs(k).dataType match {
+            case LongType => t.toLong
+            case DoubleType => t.toDouble
+            case StringType => UTF8String.fromString(t)
+          }
+        })
+      }
+    }
+  }
+
+  private def parquetRows: Iterator[(Long, Array[Any])] = {
+    val present = cs.filter(_.present)
+    val slot = cs.map(c => present.indexWhere(_ eq c))
+    batches = new ParquetData.BatchIterator(f,
+      StructType(present.map(c =>
+        StructField(c.parquetName, c.dataType, nullable = true))),
+      groups.kept)
+    batches.flatMap { case (b, start) =>
+      (0 until b.numRows()).iterator
+        .filter(i => start + i >= groups.lo && start + i < groups.hi)
+        .map { i =>
+          (start + i, cells { k =>
+            val v = b.column(slot(k))
+            if (v.isNullAt(i)) null
+            else cs(k).dataType match {
+              case LongType => v.getLong(i)
+              case DoubleType => v.getDouble(i)
+              // the batch's buffers are reused by the next batch
+              case StringType => v.getUTF8String(i).copy()
+            }
+          })
+        }
+    }
+  }
+
+  override def hasNext: Boolean = rows.hasNext
+  override def next(): (Long, Array[Any]) = rows.next()
+  override def close(): Unit = {
+    if (batches != null) batches.close()
+    if (lines != null) { lines.close(); lines = null }
+  }
+}
+
+private[graft] object TableRows {
+  /** One parquet file's row groups for one read: `all` within the
+    * position range `[lo, hi)`, `kept` after the stats and bloom layers,
+    * and how many probed columns' bloom layers bowed out.
+    */
+  final case class Selection(all: Seq[ParquetData.RowGroup],
+      kept: Seq[ParquetData.RowGroup], lo: Long, hi: Long, bloomSkips: Long) {
+    def pruned: Long = (all.size - kept.size).toLong
+  }
+
+  /** Row-group selection with ONE footer open (the listing and the bloom
+    * probes come from the same reader): the `shard`'s position range,
+    * then the pushed closed ranges `zm` against the per-group stats, then
+    * the per-group blooms against the points `pts` (columns by parquet
+    * name). Updates the row-group and bloom-bow-out counters — the one
+    * place every parquet read of a committed file does.
+    */
+  def select(file: Path, zm: Map[String, (Long, Long)],
+      pts: Map[String, Set[Long]], shard: (Int, Int) = (0, 1)): Selection = {
+    // the bloom layer's bow-out must be OBSERVABLE: a pruning regression
+    // from an oversized In-set otherwise surfaces only as a slow scan
+    val bloomSkips =
+      pts.count(_._2.size > ParquetData.BloomProbeMaxPoints).toLong
+    if (bloomSkips > 0) DigestSink.bloomProbeSkippedEvents.addAndGet(bloomSkips)
+    val (all, ex) = ParquetData.rowGroupsWithBloomExclusions(file, pts)
+    // physical row count from the footer, not the entry's DV-netted one
+    val (i, n) = shard
+    val phys = all.map(_.rows).sum
+    val (lo, hi) =
+      if (n <= 1) (0L, Long.MaxValue) else (i * phys / n, (i + 1) * phys / n)
+    val groups = all.filter(g => g.rowStart < hi && g.rowStart + g.rows > lo)
+    val kept = ParquetData.survivingGroups(groups, zm)
+      .filterNot(g => ex.contains(g.index))
+    DigestSink.rowGroupReadEvents.addAndGet(kept.size.toLong)
+    DigestSink.rowGroupSkipEvents.addAndGet((groups.size - kept.size).toLong)
+    Selection(groups, kept, lo, hi, bloomSkips)
   }
 }
 

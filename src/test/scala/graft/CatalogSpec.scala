@@ -414,24 +414,42 @@ class CatalogSpec extends SparkSpec {
   test("q232: existence default serves pre-column rows; explicit NULL after " +
       "the column stays NULL; bad default literals refused at DDL time") {
     withCatalog {
-      val dir = tmp("graft_default_spec_")
-      val tbl = s"graft.ns.defspec_${System.nanoTime()}"
-      spark.sql(s"""CREATE TABLE $tbl (id BIGINT)
-                   |USING graft_evolve TBLPROPERTIES ('path'='$dir')""".stripMargin)
-      spark.sql(s"INSERT INTO $tbl VALUES (1)")
-      spark.sql(s"ALTER TABLE $tbl ADD COLUMN tag STRING DEFAULT 'web'")
-      spark.sql(s"INSERT INTO $tbl VALUES (2, NULL), (3, 'cur''ated')")
-      val got = spark.table(tbl).collect()
-        .map(r => (r.getLong(0), if (r.isNullAt(1)) "<null>" else r.getString(1)))
-        .sorted.toSeq
-      assert(got == Seq((1L, "web"), (2L, "<null>"), (3L, "cur'ated")),
-        s"default semantics wrong: $got")
-      // a non-literal default must be refused, not silently mis-served
-      val e = intercept[Exception] {
-        spark.sql(s"ALTER TABLE $tbl ADD COLUMN bad BIGINT DEFAULT 'seven'")
+      // the table scan and the change feed (changesFrom=0) serve the same
+      // rows, on both data planes
+      Seq("csv", "parquet").foreach { format =>
+        val dir = tmp("graft_default_spec_")
+        val tbl = s"graft.ns.defspec_${System.nanoTime()}"
+        spark.sql(s"""CREATE TABLE $tbl (id BIGINT)
+                     |USING graft_evolve TBLPROPERTIES ('path'='$dir',
+                     |  'format'='$format')""".stripMargin)
+        spark.sql(s"INSERT INTO $tbl VALUES (1)")
+        spark.sql(s"ALTER TABLE $tbl ADD COLUMN tag STRING DEFAULT 'web'")
+        spark.sql(s"INSERT INTO $tbl VALUES (2, NULL), (3, 'cur''ated')")
+        def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, String)] =
+          df.collect().map(r =>
+            (r.getLong(0), if (r.isNullAt(1)) "<null>" else r.getString(1)))
+            .sorted.toSeq
+        val want = Seq((1L, "web"), (2L, "<null>"), (3L, "cur'ated"))
+        val got = rows(spark.table(tbl))
+        assert(got == want, s"$format: default semantics wrong: $got")
+        val evSchema = graft.sources.GraftCatalog.regKeyProps("graft",
+          Seq("ns", tbl.stripPrefix("graft.ns."))).get("evolveSchema")
+        val feed = spark.read.format("graft.sources.EvolveSource")
+          .option("path", dir.toString).option("evolveSchema", evSchema)
+          .option("changesFrom", "0").load()
+        assert(feed.filter("_change_type <> 'insert'").isEmpty)
+        val fed = rows(feed.select("id", "tag"))
+        assert(fed == want, s"$format change feed: default semantics wrong: $fed")
+        if (format == "parquet") spark.sql(s"DROP TABLE $tbl")
+        else {
+          // a non-literal default must be refused, not silently mis-served
+          val e = intercept[Exception] {
+            spark.sql(s"ALTER TABLE $tbl ADD COLUMN bad BIGINT DEFAULT 'seven'")
+          }
+          assert(e.getMessage.toLowerCase.contains("default"), e.getMessage)
+          spark.sql(s"DROP TABLE $tbl")
+        }
       }
-      assert(e.getMessage.toLowerCase.contains("default"), e.getMessage)
-      spark.sql(s"DROP TABLE $tbl")
     }
   }
 
@@ -746,7 +764,7 @@ class CatalogSpec extends SparkSpec {
     Seq("fr", "es").foreach(l => java.nio.file.Files.writeString(
       java.nio.file.Paths.get(dir, s"lang_$l-part-00000.csv"), s"1,$l,1\n"))
     val cs = new ChangesMicroBatchStream(dir, 2, DigestManifest.MainRef,
-      new ChangesReaderFactory)
+      new ChangesReaderFactory(TableLayout.Digest()))
     assert(cs.initialOffset().asInstanceOf[DigestVersionOffset].v == 2)
     val ch = cs.planInputPartitions(DigestVersionOffset(3), DigestVersionOffset(5))
       .map(_.asInstanceOf[ChangesFilePartition])
@@ -1061,6 +1079,31 @@ class CatalogSpec extends SparkSpec {
       val got = spark.table(tbl).collect().map(r => (r.getLong(0), r.isNullAt(1)))
       assert(got.toSeq == Seq((2L, true)), got.toSeq.toString)
       spark.sql(s"DROP TABLE $tbl")
+    }
+  }
+
+  test("a plain graft_digest CSV write refuses a lang cell that would not " +
+      "read back as itself, and commits nothing") {
+    import scala.jdk.CollectionConverters._
+    import spark.implicits._
+    Seq("x,5", "\\N").foreach { lang =>
+      val dir = tmp("graft_digest_cell_spec_")
+      // the delimiter would shift the row to (1, "x", 5); the sentinel
+      // would read back as NULL
+      val e = intercept[Exception] {
+        Seq((1L, lang, 7L)).toDF("doc_id", "lang", "n_chars")
+          .write.format("graft.sources.DigestSink")
+          .option("path", dir.toString).mode("append").save()
+      }
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).toSeq
+      assert(msgs.exists(m => m.contains("graft_digest: string cell")),
+        msgs.mkString(" | "))
+      assert(graft.sources.DigestManifest.currentVersion(dir.toString) == 0)
+      val left = java.nio.file.Files.list(dir).iterator()
+        .asScala.map(_.getFileName.toString).toSeq
+      assert(left.forall(n => !n.endsWith(".csv") && !n.endsWith(".staged")),
+        left.toString)
     }
   }
 

@@ -108,4 +108,37 @@ class LintSpec extends AnyFunSuite {
         "publishReplace (everything else); only single-writer maintenance " +
         "may use the last-writer-wins form, then update the audited map")
   }
+
+  /** Every row read of a committed data file goes through the one table
+    * row reader (`TableRows` in sources/TableCore.scala), which owns the
+    * row-group selection, the DV-exact positions and the read counters;
+    * the columnar fast path of the digest scan is the only other site
+    * that opens parquet row batches. This lint pins the
+    * `new ParquetData.BatchIterator(` sites in main sources to those two.
+    */
+  test("parquet row batches are opened only at audited sites") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala/graft")
+    val sites: Map[String, Int] = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap { p =>
+        java.nio.file.Files.readAllLines(p).asScala
+          .filter { l =>
+            val t = l.trim
+            l.contains("new ParquetData.BatchIterator(") &&
+              !t.startsWith("//") && !t.startsWith("*")
+          }
+          .map(_ => root.relativize(p).toString.replace('\\', '/'))
+      }
+      .toSeq.groupBy(identity).view.mapValues(_.size).toMap
+    val audited = Map(
+      // TableRows: every row reader of either flavor
+      "sources/TableCore.scala" -> 1,
+      // DigestColumnarFileReader: the clean-scan ColumnarBatch serve
+      "sources/DigestSink.scala" -> 1,
+    )
+    assert(sites == audited,
+      s"un-audited ParquetData.BatchIterator sites: $sites vs audited " +
+        s"$audited — read committed data files through TableRows")
+  }
 }

@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
-import graft.sources.ParquetData
+import graft.sources.{ParquetData, TableLayout, TableRows}
 
 /** Mechanics of the parquet data plane in isolation (no SparkSession):
   * multi-row-group writes, footer stats, row-group selection by pushed
@@ -26,7 +26,7 @@ class ParquetDataSpec extends AnyFunSuite {
   test("multi-row-group file: footer exposes cumulative row offsets and " +
       "per-group (min, max) stats for the zone-mappable columns") {
     val f = writeFile(20000, 16 * 1024)
-    val gs = ParquetData.rowGroups(f)
+    val gs = ParquetData.rowGroupsWithBloomExclusions(f, Map.empty)._1
     assert(gs.size >= 3, s"expected several row groups, got ${gs.size}")
     assert(gs.map(_.rows).sum == 20000)
     assert(gs.head.rowStart == 0)
@@ -45,7 +45,7 @@ class ParquetDataSpec extends AnyFunSuite {
       "groups, and the vectorized range read serves exactly their rows " +
       "with exact global positions") {
     val f = writeFile(20000, 16 * 1024)
-    val gs = ParquetData.rowGroups(f)
+    val gs = ParquetData.rowGroupsWithBloomExclusions(f, Map.empty)._1
     val lo = gs(1).rowStart
     val hi = gs(1).rowStart + gs(1).rows - 1
     val kept = ParquetData.survivingGroups(gs, Map("doc_id" -> (lo, hi)))
@@ -76,7 +76,7 @@ class ParquetDataSpec extends AnyFunSuite {
   test("non-contiguous group selection reads each contiguous run with one " +
       "reader and keeps positions exact across the gap") {
     val f = writeFile(30000, 16 * 1024)
-    val gs = ParquetData.rowGroups(f)
+    val gs = ParquetData.rowGroupsWithBloomExclusions(f, Map.empty)._1
     assert(gs.size >= 4)
     val picked = Seq(gs(0), gs(2), gs(3))
     assert(ParquetData.contiguousRuns(picked).map(_.map(_.index))
@@ -98,7 +98,7 @@ class ParquetDataSpec extends AnyFunSuite {
     val f = writeFile(5000, 1 << 20)
     val schema = StructType(Seq(StructField("n_chars", LongType, false)))
     val it = new ParquetData.BatchIterator(f, schema,
-      ParquetData.rowGroups(f))
+      ParquetData.rowGroupsWithBloomExclusions(f, Map.empty)._1)
     var sum = 0L
     var rows = 0L
     it.foreach { case (batch, _) =>
@@ -107,7 +107,11 @@ class ParquetDataSpec extends AnyFunSuite {
       while (rit.hasNext) { sum += rit.next().getLong(0); rows += 1 }
     }
     assert(rows == 5000 && sum == (0 until 5000).map(_ * 7L).sum)
-    val all = ParquetData.readRows(f).toVector
+    val reader = new TableRows(f.getParent.toString, f.getFileName.toString,
+      TableLayout.Digest().fileCols(Nil))
+    val all = try reader.map { case (_, c) =>
+      (c(0).asInstanceOf[Long], c(1).toString, c(2).asInstanceOf[Long])
+    }.toVector finally reader.close()
     assert(all.size == 5000)
     assert(all(4999) == ((4999L, "l" + (4999 % 3), 4999L * 7)))
   }
