@@ -10,7 +10,7 @@ import org.apache.spark.sql.connector.catalog.{SupportsDelete, SupportsRead, Sup
 import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
 import org.apache.spark.sql.connector.expressions.{Expressions, SortDirection, SortOrder, Transform}
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
-import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RequiresDistributionAndOrdering, SupportsOverwrite, Write, WriteBuilder, WriterCommitMessage}
+import org.apache.spark.sql.connector.write.{BatchWrite, LogicalWriteInfo, PhysicalWriteInfo, RequiresDistributionAndOrdering, SupportsOverwrite, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.sources.{AlwaysTrue, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual}
 import org.apache.spark.sql.types.{LongType, StringType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -33,7 +33,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *   - `BatchWrite.abort()` removes staged leftovers.
   *
   * Rows serialize as one CSV line per row in partition-iteration order.
-  * q168 drives a deterministic frame through the sink, reads the files
+  * The task writer and the job commit are the table core's
+  * ([[TableDataWriter]], [[TableBatchWrite]]); this file supplies the
+  * digest flavor's write surface around them. q168 drives a deterministic frame through the sink, reads the files
   * back, and the DuckDB oracle checks the round-trip digest against the
   * source table — writer, commit protocol, and serialization all sit on
   * the hash-checked path. The task/job commit sequencing and the abort
@@ -138,38 +140,24 @@ object DigestSink {
     if (fileName.startsWith("lang_")) Some(fileName.drop(5).takeWhile(_ != '-'))
     else None
 
+  /** The file names a lang-aligned predicate (`AlwaysTrue`, lang `=`/`IN`)
+    * covers on the lang-split layout: what a metadata DELETE drops and an
+    * overwrite-by-filter retires.
+    */
+  private[sources] def langFiles(filters: Array[Filter]): String => Boolean = {
+    val all = filters.exists(_.isInstanceOf[AlwaysTrue])
+    val langs: Set[String] = filters.collect {
+      case EqualTo("lang", v: String) => Seq(v)
+      case In("lang", vs) => vs.toSeq.map(String.valueOf)
+    }.flatten.toSet
+    f => all || langOf(f).exists(langs.contains)
+  }
+
   /** Counts engine-armed runtime-filter deliveries (q236's loud proof
     * that the join actually pruned the scan, not just that it could).
     */
   private[graft] val runtimeFilterEvents =
     new java.util.concurrent.atomic.AtomicLong(0L)
-
-  /** Serialize a committed file as its manifest entry line, folding the
-    * writer-observed zone maps (q253 doc_id, q257 n_chars) into the
-    * entry's attributes — but only for the table's DECLARED zone-map
-    * columns (q263, TBLPROPERTIES `'zonemap.columns'`; default both):
-    * the scan prunes off recorded attributes, so the declaration is
-    * enforced at the one place entries are minted.
-    */
-  private[sources] def entryLine(f: CommittedFile,
-      zonemapCols: Set[String] = zmCols.keySet,
-      bloomCols: Set[String] = Set.empty): String =
-    ManifestEntry(f.fileName, f.rows,
-      (if (zonemapCols("doc_id"))
-        f.zm.fold(Map.empty[String, String]) { case (lo, hi) =>
-          Map("zmin" -> lo.toString, "zmax" -> hi.toString)
-        }
-      else Map.empty[String, String]) ++
-      (if (zonemapCols("n_chars"))
-        f.nm.fold(Map.empty[String, String]) { case (lo, hi) =>
-          Map("nmin" -> lo.toString, "nmax" -> hi.toString)
-        }
-      else Map.empty[String, String]) ++
-      // q278: the per-file doc_id bloom rides the entry ONLY on declared
-      // opt-in ('bloom.columns') — observed always, minted here, like zones
-      (if (bloomCols("doc_id"))
-        f.bf.fold(Map.empty[String, String])(b => Map("bf" -> b))
-      else Map.empty[String, String])).line
 
   /** Parse + validate a `'zonemap.columns'` table property. */
   private[sources] def parseZonemapCols(prop: String): Set[String] = {
@@ -1872,6 +1860,9 @@ class DigestSinkTable(path: String, langSplit: Boolean = false,
     * per FILE off its extension, so this only steers writes.
     */
   protected def dataPlane: DataPlane = DataPlane.Csv
+  /** What this table's writes put in each data file and manifest line. */
+  protected def layout: TableLayout.Digest =
+    TableLayout.Digest(dataPlane, zonemapCols, bloomCols, langSplit)
   override def name(): String = s"graft_digest_sink($path)"
   override def schema(): StructType = DigestSink.rowSchema
   override def capabilities(): util.Set[TableCapability] =
@@ -1885,8 +1876,7 @@ class DigestSinkTable(path: String, langSplit: Boolean = false,
         TableCapability.BATCH_WRITE, TableCapability.TRUNCATE)
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
-    new DigestWriteBuilder(path, langSplit, requireDist, retainHistory, ref,
-      zonemapCols, dataPlane, bloomCols)
+    new DigestWriteBuilder(path, layout, requireDist, retainHistory, ref)
 
   // MANIFEST-GATED read-back: partitions are exactly the job-committed
   // manifest entries — a reader can never observe a staged attempt or a
@@ -1895,7 +1885,8 @@ class DigestSinkTable(path: String, langSplit: Boolean = false,
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new DigestScanBuilder(path, mergeDeltas = false,
       manifestName = DigestManifest.mName(ref),
-      streamMaxVersions = Option(options.get("maxVersionsPerTrigger")).map(_.toInt))
+      streamMaxVersions = Option(options.get("maxVersionsPerTrigger")).map(_.toInt),
+      ref = ref)
 
   // ---- q192: metadata-only DELETE (SupportsDelete) ------------------------
   // `DELETE FROM t WHERE <lang predicate>` executes WITHOUT a rewrite job:
@@ -1917,15 +1908,8 @@ class DigestSinkTable(path: String, langSplit: Boolean = false,
   override def deleteWhere(filters: Array[Filter]): Unit = {
     require(canDeleteWhere(filters), s"undeletable filters: ${filters.mkString(",")}")
     val (baseVersion, old) = DigestManifest.head(path, ref)
-    val all = filters.exists(_.isInstanceOf[AlwaysTrue])
-    val langs: Set[String] = filters.collect {
-      case EqualTo("lang", v: String) => Seq(v)
-      case In("lang", vs) => vs.toSeq.map(String.valueOf)
-    }.flatten.toSet
-    val (dead, keep) = old.partition { line =>
-      val f = line.split(",")(0)
-      all || DigestSink.langOf(f).exists(langs.contains)
-    }
+    val covered = DigestSink.langFiles(filters)
+    val (dead, keep) = old.partition(line => covered(line.split(",")(0)))
     // publish the shrunk manifest FIRST (atomic temp+rename), THEN delete
     // the dropped files: the published listing never names a file that is
     // already gone, so a reader planning at any instant sees a complete
@@ -1951,11 +1935,9 @@ class DigestSinkTable(path: String, langSplit: Boolean = false,
   }
 }
 
-class DigestWriteBuilder(path: String, langSplit: Boolean, requireDist: Boolean,
-    retainHistory: Boolean = false, ref: String = DigestManifest.MainRef,
-    zonemapCols: Set[String] = DigestSink.zmCols.keySet,
-    plane: DataPlane = DataPlane.Csv,
-    bloomCols: Set[String] = Set.empty)
+class DigestWriteBuilder(path: String, layout: TableLayout.Digest,
+    requireDist: Boolean, retainHistory: Boolean = false,
+    ref: String = DigestManifest.MainRef)
     extends WriteBuilder with SupportsOverwrite {
   // None = append; Some(filters) = overwrite the matching region
   private var overwriteFilters: Option[Array[Filter]] = None
@@ -1975,19 +1957,20 @@ class DigestWriteBuilder(path: String, langSplit: Boolean, requireDist: Boolean,
   }
 
   override def build(): Write =
-    new DigestWrite(path, langSplit, requireDist, overwriteFilters,
-      retainHistory = retainHistory, ref = ref, zonemapCols = zonemapCols,
-      plane = plane, bloomCols = bloomCols)
+    new DigestWrite(path, layout, requireDist, overwriteFilters,
+      retainHistory = retainHistory, ref = ref)
 }
 
-class DigestWrite(path: String, langSplit: Boolean, requireDist: Boolean,
-    overwriteFilters: Option[Array[Filter]],
-    cols: Array[Int] = Array(0, 1, 2),
-    retainHistory: Boolean = false, ref: String = DigestManifest.MainRef,
-    zonemapCols: Set[String] = DigestSink.zmCols.keySet,
-    plane: DataPlane = DataPlane.Csv,
-    bloomCols: Set[String] = Set.empty)
+/** `overwriteFilters`: None appends; Some(filters) replaces the files the
+  * lang-aligned filters cover ([[DigestSink.langFiles]]). `cols` resolves
+  * the incoming rows' columns ([[TableLayout.rowIdx]]).
+  */
+class DigestWrite(path: String, layout: TableLayout.Digest,
+    requireDist: Boolean, overwriteFilters: Option[Array[Filter]],
+    cols: Array[Int] = Array.empty,
+    retainHistory: Boolean = false, ref: String = DigestManifest.MainRef)
     extends Write with RequiresDistributionAndOrdering {
+  private val clusteredByLang = requireDist || layout.langSplit
 
   // q263: a pending `rewrite_sorted` layout overrides the default
   // contract — the Write declares an ORDERED (range) distribution on the
@@ -2011,7 +1994,7 @@ class DigestWrite(path: String, langSplit: Boolean, requireDist: Boolean,
       case Some((sortCols, _)) =>
         Distributions.ordered(sortCols.toArray.map(c =>
           Expressions.sort(Expressions.column(c), SortDirection.ASCENDING)))
-      case None if requireDist || langSplit =>
+      case None if clusteredByLang =>
         Distributions.clustered(Array(Expressions.column("lang")))
       case None => Distributions.unspecified()
     }
@@ -2022,7 +2005,7 @@ class DigestWrite(path: String, langSplit: Boolean, requireDist: Boolean,
       case Some((sortCols, _)) =>
         sortCols.toArray.map(c =>
           Expressions.sort(Expressions.column(c), SortDirection.ASCENDING))
-      case None if requireDist || langSplit =>
+      case None if clusteredByLang =>
         Array(
           Expressions.sort(Expressions.column("lang"), SortDirection.ASCENDING),
           Expressions.sort(Expressions.column("doc_id"), SortDirection.ASCENDING))
@@ -2033,119 +2016,22 @@ class DigestWrite(path: String, langSplit: Boolean, requireDist: Boolean,
     rangeLayout match {
       case _ if preservedLayout => 0
       case Some((_, buckets)) => buckets
-      case None if requireDist || langSplit => 4
+      case None if clusteredByLang => 4
       case None => 0
     }
 
   override def toBatch: BatchWrite =
-    new DigestBatchWrite(path, langSplit, overwriteFilters, cols, retainHistory,
-      ref, zonemapCols, plane, bloomCols)
+    new TableBatchWrite(path, layout, ref,
+      overwriteFilters.map(DigestSink.langFiles), retainHistory, cols)
 
   // q234: `writeStream.toTable(...)` — the MANIFEST-GATED table as an
   // epoch-idempotent streaming sink into its own commit log
   // ([[TableStreamingWrite]])
   override def toStreaming: org.apache.spark.sql.connector.write.streaming.StreamingWrite = {
-    require(langSplit && overwriteFilters.isEmpty,
+    require(layout.langSplit && overwriteFilters.isEmpty,
       "graft_digest streaming writes are append-mode on the lang-split flavor")
-    new TableStreamingWrite(path,
-      TableLayout.Digest(plane, zonemapCols, bloomCols), ref)
+    new TableStreamingWrite(path, layout, ref)
   }
-}
-
-class DigestBatchWrite(path: String, langSplit: Boolean = false,
-    overwriteFilters: Option[Array[Filter]] = None,
-    cols: Array[Int] = Array(0, 1, 2),
-    retainHistory: Boolean = false,
-    ref: String = DigestManifest.MainRef,
-    zonemapCols: Set[String] = DigestSink.zmCols.keySet,
-    plane: DataPlane = DataPlane.Csv,
-    bloomCols: Set[String] = Set.empty) extends BatchWrite {
-  def this(path: String, langSplit: Boolean, overwriteFilters: Option[Array[Filter]]) =
-    this(path, langSplit, overwriteFilters, Array(0, 1, 2))
-  def this(path: String) = this(path, false, None)
-
-  // No batch job may REUSE a committed file name. For history-retaining
-  // tables an in-place rewrite would silently corrupt every older
-  // `_MANIFEST.v<N>` that names it; for plain tables a SECOND APPEND
-  // whose task partition ids repeat would rename over a committed file
-  // while the manifest keeps both entries — double-counted metadata over
-  // clobbered data (caught live by q242's second commit re-using a lang).
-  // So each JOB gets a unique tag woven into its final file names, chosen
-  // once at BatchWrite construction (one tag per job however many
-  // tasks/attempts run); commit() below additionally REFUSES a fresh name
-  // that is already committed, so the bug class stays loud, not silent.
-  private val jobTag: String =
-    java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    new DigestWriterFactory(path, langSplit, cols, jobTag, plane)
-
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val fresh = messages.collect { case m: DigestCommitMessage => m.files }.flatten
-    // plan against the REGISTERED head, remembering its version: the
-    // append path below rebases onto any commit that lands between this
-    // read and the publish (cross-process CAS), the overwrite path aborts
-    val (baseVersion, old) = DigestManifest.head(path, ref)
-
-    // the overwritten region: retire ONLY its entries; everything else
-    // survives untouched (file and manifest entry alike)
-    val (surviving: Seq[String], dead: Seq[String]) = overwriteFilters match {
-      case None => (old, Nil) // append: keep all previously committed entries
-      case Some(filters) =>
-        val all = filters.exists(_.isInstanceOf[AlwaysTrue])
-        val langs: Set[String] = filters.collect {
-          case EqualTo("lang", v: String) => Seq(v)
-          case In("lang", vs) => vs.toSeq.map(String.valueOf)
-        }.flatten.toSet
-        def replaced(fileName: String): Boolean =
-          all || DigestSink.langOf(fileName).exists(langs.contains)
-        val (d, keep) = old.partition(l => replaced(l.split(",")(0)))
-        (keep, d.map(_.split(",")(0)))
-    }
-
-    // the loud guard for the name-reuse bug class: a fresh file may share
-    // a name only with an entry this very commit RETIRES (the legacy
-    // rename-in-place overwrite), never with one that survives
-    val survivingNames = surviving.map(_.split(",")(0)).toSet
-    val clashes = fresh.map(_.fileName).filter(survivingNames.contains)
-    require(clashes.isEmpty,
-      s"graft_digest: job would commit file names already in the manifest " +
-        s"(${clashes.mkString(",")}) — jobs must write job-unique names")
-
-    // job-level commit point: publish the merged manifest atomically
-    // FIRST, so the listing never names an already-deleted file; physical
-    // deletion of the retired region follows (and is skipped entirely by
-    // the history-retaining flavor — old versions stay resolvable).
-    // ORDER CONTRACT: `surviving` keeps its committed order untouched and
-    // `fresh` appends after it — merge-on-read replays delta entries in
-    // manifest order, and job-unique `delta-j<tag>-` names do NOT sort
-    // chronologically, so sorting the whole listing here would shuffle
-    // older commits' verbs behind newer ones
-    val freshLines = fresh.map(DigestSink.entryLine(_, zonemapCols, bloomCols))
-      .sorted
-    overwriteFilters match {
-      case None =>
-        // plain append commutes with interleaved commits: rebase-commit
-        DigestManifest.publishAppend(path, freshLines, baseVersion, ref)
-      case Some(_) =>
-        // an overwrite's surviving set was computed from baseVersion —
-        // abort loudly if another commit landed since (no lost updates)
-        DigestManifest.publishReplace(path, surviving ++ freshLines,
-          baseVersion, ref)
-    }
-    if (!retainHistory) {
-      // a fresh file may land on the SAME final name as the dead entry
-      // it replaces (same lang, same partition id — rename-in-place):
-      // deleting by old name would destroy the just-committed file, so
-      // the fresh names are carved out of the deletion set
-      val freshNames = fresh.map(_.fileName).toSet
-      dead.filterNot(freshNames.contains)
-        .foreach(f => Files.deleteIfExists(Paths.get(path, f)))
-    }
-  }
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit =
-    StagedFiles.sweep(path)
 }
 
 /** The ROW-LEVEL-OPERATIONS flavor of the digest table (q203/q204,
@@ -2198,8 +2084,8 @@ class DigestRowLevelOperation(path: String,
     val cols = Array("doc_id", "lang", "n_chars").map(sch.fieldIndex)
     new WriteBuilder {
       override def build(): Write =
-        new DigestWrite(path, langSplit = true, requireDist = true,
-          Some(Array(new AlwaysTrue)), cols, plane = dataPlane)
+        new DigestWrite(path, TableLayout.Digest(dataPlane), requireDist = true,
+          Some(Array(new AlwaysTrue)), cols)
     }
   }
 }
@@ -2295,19 +2181,18 @@ class DigestDeltaBatchWrite(path: String, cols: Array[Int])
   // fold replays verbs in manifest order — append order IS commit order);
   // base entries survive untouched by construction
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val fresh = messages.collect { case m: DigestCommitMessage => m.files }.flatten
+    val fresh = messages.toSeq.flatMap(TableLayout.Digest().lines).sorted
     val (baseVersion, old) = DigestManifest.head(path)
     // job-unique naming makes a duplicate structurally impossible; keep
     // the check as the loud backstop (a duplicate entry would be read
     // twice by DigestScan, corrupting the merge-on-read view)
     val oldNames = old.map(_.split(",")(0)).toSet
-    val dup = fresh.map(_.fileName).filter(oldNames.contains)
+    val dup = fresh.map(_.split(",")(0)).filter(oldNames.contains)
     require(dup.isEmpty,
       s"graft_digest: delta commit would duplicate manifest entries: $dup")
     // a delta log commit is an APPEND in manifest terms — it commutes
     // with interleaved commits, so the CAS path rebases instead of aborts
-    DigestManifest.publishAppend(path,
-      fresh.map(DigestSink.entryLine(_)).sorted, baseVersion)
+    DigestManifest.publishAppend(path, fresh, baseVersion)
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
@@ -2407,9 +2292,7 @@ class DigestDvTable(path: String,
   override def newRowLevelOperationBuilder(
       info: org.apache.spark.sql.connector.write.RowLevelOperationInfo)
       : org.apache.spark.sql.connector.write.RowLevelOperationBuilder =
-    () => new DvOperation(path,
-      TableLayout.Digest(dataPlane, zonemapCols, bloomCols), info.command(),
-      dvRef)
+    () => new DvOperation(path, layout, info.command(), dvRef)
 }
 
 case class DigestDeltaWriterFactory(path: String, cols: Array[Int],
@@ -2436,14 +2319,17 @@ class DigestDeltaWriter(path: String, partitionId: Int, taskId: Long,
   override def delete(meta: InternalRow, id: InternalRow): Unit = {
     out.write(s"D,${id.getLong(0)}\n"); rows += 1
   }
-  override def update(meta: InternalRow, id: InternalRow, row: InternalRow): Unit = {
-    out.write(s"U,${row.getLong(cols(0))},${row.getUTF8String(cols(1))},${row.getLong(cols(2))}\n")
+  // `U,id,lang,n_chars` / `I,...`: the fold splits verb lines on `,`, so
+  // the lang cell goes through the CSV plane's string-cell rule
+  private def verb(v: Char, row: InternalRow): Unit = {
+    out.write(s"$v,${row.getLong(cols(0))}," +
+      s"${CsvCell.string("graft_digest", row.getUTF8String(cols(1)).toString)}," +
+      s"${row.getLong(cols(2))}\n")
     rows += 1
   }
-  override def insert(row: InternalRow): Unit = {
-    out.write(s"I,${row.getLong(cols(0))},${row.getUTF8String(cols(1))},${row.getLong(cols(2))}\n")
-    rows += 1
-  }
+  override def update(meta: InternalRow, id: InternalRow, row: InternalRow): Unit =
+    verb('U', row)
+  override def insert(row: InternalRow): Unit = verb('I', row)
   override def commit(): WriterCommitMessage = {
     out.close()
     // a task that saw no verbs commits NOTHING: a zero-row verb file
@@ -2451,11 +2337,11 @@ class DigestDeltaWriter(path: String, partitionId: Int, taskId: Long,
     // merge-on-read serve — an empty inserts shard must stay invisible)
     if (rows == 0L) {
       Files.deleteIfExists(staged)
-      DigestCommitMessage(Seq.empty)
+      TableCommitMessage(Seq.empty)
     } else {
       val fin = Paths.get(path, f"delta-j$jobTag-part-$partitionId%05d.csv")
       Files.move(staged, fin, StandardCopyOption.REPLACE_EXISTING)
-      DigestCommitMessage(Seq(CommittedFile(fin.getFileName.toString, rows)))
+      TableCommitMessage(Seq(CommittedFile(fin.getFileName.toString, rows)))
     }
   }
   override def abort(): Unit = { out.close(); Files.deleteIfExists(staged) }
@@ -2478,7 +2364,8 @@ class DigestDeltaWriter(path: String, partitionId: Int, taskId: Long,
   */
 class DigestScanBuilder(path: String, mergeDeltas: Boolean = false,
     manifestName: String = "_MANIFEST", allowPruning: Boolean = true,
-    streamMaxVersions: Option[Int] = None, emitMeta: Boolean = false)
+    streamMaxVersions: Option[Int] = None, emitMeta: Boolean = false,
+    ref: String = DigestManifest.MainRef)
     extends ScanBuilder
     with org.apache.spark.sql.connector.read.SupportsPushDownFilters
     with org.apache.spark.sql.connector.read.SupportsPushDownAggregates
@@ -2654,7 +2541,7 @@ class DigestScanBuilder(path: String, mergeDeltas: Boolean = false,
       new DigestAggScan(path, manifestName, groupByLang, nAggs)
     case None =>
       new DigestScan(path, mergeDeltas, manifestName, langs, allowPruning,
-        streamMaxVersions, zmRanges, emitMeta, required, bloomPoints)
+        streamMaxVersions, zmRanges, emitMeta, required, bloomPoints, ref)
   }
 }
 
@@ -2772,7 +2659,8 @@ class DigestScan(path: String, mergeDeltas: Boolean = false,
     zmRanges: Map[String, (Long, Long)] = Map.empty,
     emitMeta: Boolean = false,
     required: Option[StructType] = None,
-    bloomPoints: Option[Set[Long]] = None)
+    bloomPoints: Option[Set[Long]] = None,
+    ref: String = DigestManifest.MainRef)
     extends Scan with Batch
     with org.apache.spark.sql.connector.read.SupportsReportStatistics
     with org.apache.spark.sql.connector.read.SupportsRuntimeFiltering
@@ -2791,8 +2679,7 @@ class DigestScan(path: String, mergeDeltas: Boolean = false,
     require(!mergeDeltas,
       "graft_digest: streaming read of the delta flavor is not supported — " +
         "compact first, or consume the changes feed")
-    new TableMicroBatchStream(path, TableLayout.Digest(),
-      DigestManifest.MainRef, streamMaxVersions)
+    new TableMicroBatchStream(path, TableLayout.Digest(), ref, streamMaxVersions)
   }
   override def description(): String =
     s"graft_digest manifest-read $path/$manifestName" +
@@ -3360,21 +3247,6 @@ case class DigestMetricValue(metricName: String, metricValue: Long)
   override def value(): Long = metricValue
 }
 
-/** One committed file's identity in a task's commit message. `zm` / `nm`
-  * are the writer-observed (min, max) of doc_id / n_chars over the
-  * file's rows — the zone maps the commit records in the manifest entry
-  * (q253/q257) so range scans can skip the file without opening it.
-  * `bf` is the writer-built doc_id bloom filter (q278, [[BloomCodec]]):
-  * always OBSERVED (a fixed-size streaming fold, like the zones), minted
-  * into the entry only when the table declares `'bloom.columns'`.
-  */
-case class CommittedFile(fileName: String, rows: Long,
-    zm: Option[(Long, Long)] = None, nm: Option[(Long, Long)] = None,
-    bf: Option[String] = None)
-
-case class DigestCommitMessage(files: Seq[CommittedFile])
-    extends WriterCommitMessage
-
 /** The table's DATA-FILE byte format (TBLPROPERTIES `'format'`):
   * row-CSV (the legacy default) or the Parquet columnar plane
   * ([[ParquetData]]). Metadata (manifest, DVs, CDF, zones) is
@@ -3400,167 +3272,4 @@ object DataPlane {
     DataPlane(get("format").getOrElse("csv"),
       get("parquet.rowgroup.bytes").map(_.toLong).getOrElse(128L << 20),
       get("parquet.rowgroup.rows").map(_.toInt).getOrElse(Int.MaxValue))
-}
-
-/** The per-format row sink behind both data writers: rows in, a closed
-  * staged file out. CSV writes lines; parquet feeds [[ParquetData
-  * .RowsWriter]] (encoding is columnar inside the file).
-  */
-private[sources] trait RowsOut {
-  def write(id: Long, lang: String, n: Long): Unit
-  def close(): Unit
-}
-
-private[sources] object RowsOut {
-  def open(staged: Path, plane: DataPlane): RowsOut =
-    if (plane.parquet) {
-      val w = new ParquetData.RowsWriter(staged, plane.rowGroupBytes,
-        plane.rowGroupRows)
-      new RowsOut {
-        override def write(id: Long, lang: String, n: Long): Unit =
-          w.write(id, lang, n)
-        override def close(): Unit = w.close()
-      }
-    } else {
-      val out = Files.newBufferedWriter(staged, StandardCharsets.UTF_8)
-      new RowsOut {
-        override def write(id: Long, lang: String, n: Long): Unit =
-          out.write(s"$id,${CsvCell.string("graft_digest", lang)},$n\n")
-        override def close(): Unit = out.close()
-      }
-    }
-}
-
-class DigestWriterFactory(path: String, langSplit: Boolean = false,
-    cols: Array[Int] = Array(0, 1, 2), jobTag: String = "",
-    plane: DataPlane = DataPlane.Csv)
-    extends DataWriterFactory {
-  def this(path: String) = this(path, false, Array(0, 1, 2), "")
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    if (langSplit) new LangSplitDataWriter(path, partitionId, taskId, cols,
-      jobTag, plane)
-    else new DigestDataWriter(path, partitionId, taskId, cols, jobTag, plane)
-}
-
-/** One task attempt's writer: staged file keyed by the ATTEMPT (taskId),
-  * final name keyed by the PARTITION — rename-on-commit makes exactly one
-  * attempt's output visible however many attempts ran.
-  */
-class DigestDataWriter(path: String, partitionId: Int, taskId: Long,
-    cols: Array[Int] = Array(0, 1, 2), jobTag: String = "",
-    plane: DataPlane = DataPlane.Csv)
-    extends DataWriter[InternalRow] {
-  // "" keeps the legacy names (spec-pinned protocol shape); a real job's
-  // tag makes its final names globally unique — see DigestBatchWrite
-  private val tagPart = if (jobTag.isEmpty) "" else s"j$jobTag-"
-  private val staged: Path =
-    Paths.get(path, f"${tagPart}part-$partitionId%05d-attempt-$taskId.staged")
-  Files.createDirectories(staged.getParent)
-  private val out = RowsOut.open(staged, plane)
-  private var rows = 0L
-  private var idLo = Long.MaxValue
-  private var idHi = Long.MinValue
-  private var ncLo = Long.MaxValue
-  private var ncHi = Long.MinValue
-  private val bloom = BloomCodec.newBuild()
-
-  override def write(r: InternalRow): Unit = {
-    val base = r.numFields - 3 // see LangSplitDataWriter.write
-    val id = r.getLong(base + cols(0))
-    val nc = r.getLong(base + cols(2))
-    out.write(id, r.getUTF8String(base + cols(1)).toString, nc)
-    idLo = math.min(idLo, id); idHi = math.max(idHi, id)
-    ncLo = math.min(ncLo, nc); ncHi = math.max(ncHi, nc)
-    BloomCodec.add(bloom, id)
-    rows += 1
-  }
-
-  override def commit(): WriterCommitMessage = {
-    out.close()
-    val fin = Paths.get(path, f"${tagPart}part-$partitionId%05d${plane.ext}")
-    Files.move(staged, fin, StandardCopyOption.REPLACE_EXISTING)
-    DigestCommitMessage(Seq(CommittedFile(fin.getFileName.toString, rows,
-      if (rows > 0) Some((idLo, idHi)) else None,
-      if (rows > 0) Some((ncLo, ncHi)) else None,
-      BloomCodec.encodeIfUseful(bloom, rows))))
-  }
-
-  override def abort(): Unit = {
-    out.close()
-    Files.deleteIfExists(staged)
-  }
-
-  override def close(): Unit = ()
-}
-
-/** Lang-split writer (q186): one staged file PER LANG seen by this task —
-  * with the clustered-by-lang distribution the Write declares, that is one
-  * file per lang in the whole job, which is exactly the granularity the
-  * overwrite-by-filter commit replaces. Same attempt-staging + rename-on-
-  * commit protocol per file.
-  */
-class LangSplitDataWriter(path: String, partitionId: Int, taskId: Long,
-    cols: Array[Int] = Array(0, 1, 2), jobTag: String = "",
-    plane: DataPlane = DataPlane.Csv)
-    extends DataWriter[InternalRow] {
-  Files.createDirectories(Paths.get(path))
-  // "" (the default, non-history flavors) keeps the legacy rename-in-place
-  // names; a history-retaining job's tag makes its names globally unique
-  private val tagPart = if (jobTag.isEmpty) "" else s"j$jobTag-"
-  private final class OpenFile(val w: RowsOut, val staged: Path) {
-    var rows = 0L
-    var idLo = Long.MaxValue
-    var idHi = Long.MinValue
-    var ncLo = Long.MaxValue
-    var ncHi = Long.MinValue
-    val bloom: Array[Long] = BloomCodec.newBuild()
-  }
-  private val open = scala.collection.mutable.LinkedHashMap.empty[String, OpenFile]
-
-  private def safe(lang: String): String = {
-    require(lang.nonEmpty && lang.forall(c => c.isLetterOrDigit || c == '_' || c == '-'),
-      s"lang value not filesystem-safe: '$lang'")
-    lang
-  }
-
-  override def write(r: InternalRow): Unit = {
-    // ReplaceData (q203/q204) prepends engine-side columns (e.g.
-    // __row_operation) that are NOT in LogicalWriteInfo.schema(); the
-    // data columns sit at the END, so index them from the right
-    val base = r.numFields - 3
-    val lang = safe(r.getUTF8String(base + cols(1)).toString)
-    val f = open.getOrElseUpdate(lang, {
-      val staged = Paths.get(path,
-        f"lang_$lang-${tagPart}part-$partitionId%05d-attempt-$taskId.staged")
-      new OpenFile(RowsOut.open(staged, plane), staged)
-    })
-    val id = r.getLong(base + cols(0))
-    val nc = r.getLong(base + cols(2))
-    f.w.write(id, lang, nc)
-    f.idLo = math.min(f.idLo, id); f.idHi = math.max(f.idHi, id)
-    f.ncLo = math.min(f.ncLo, nc); f.ncHi = math.max(f.ncHi, nc)
-    BloomCodec.add(f.bloom, id)
-    f.rows += 1
-  }
-
-  override def commit(): WriterCommitMessage = {
-    val files = open.toSeq.map { case (lang, f) =>
-      f.w.close()
-      val fin = Paths.get(path,
-        f"lang_$lang-${tagPart}part-$partitionId%05d${plane.ext}")
-      Files.move(f.staged, fin, StandardCopyOption.REPLACE_EXISTING)
-      CommittedFile(fin.getFileName.toString, f.rows,
-        if (f.rows > 0) Some((f.idLo, f.idHi)) else None,
-        if (f.rows > 0) Some((f.ncLo, f.ncHi)) else None,
-        BloomCodec.encodeIfUseful(f.bloom, f.rows))
-    }
-    DigestCommitMessage(files)
-  }
-
-  override def abort(): Unit = open.values.foreach { f =>
-    f.w.close()
-    Files.deleteIfExists(f.staged)
-  }
-
-  override def close(): Unit = ()
 }

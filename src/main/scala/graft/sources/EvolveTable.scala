@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths}
 import java.util
 
 import org.apache.spark.sql.catalyst.InternalRow
@@ -9,7 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableChange}
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
 import org.apache.spark.sql.connector.read.streaming.MicroBatchStream
-import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, Write, WriteBuilder, WriterCommitMessage}
+import org.apache.spark.sql.connector.write.{BatchWrite, LogicalWriteInfo, Write, WriteBuilder}
 import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -334,8 +332,13 @@ class EvolveTable(path: String, fields: Seq[EvolveField],
       private var replaceAll = false
       override def truncate(): WriteBuilder = { replaceAll = true; this }
       override def build(): Write = new Write {
+        // the truncate publishes ONLY the fresh listing through the
+        // optimistic replace (which consumes a pending content-preserving
+        // tag — the clustering rewrites' path); retired files stay on
+        // disk, so history keeps time-traveling
         override def toBatch: BatchWrite =
-          new EvolveBatchWrite(path, layout, ref, replaceAll)
+          new TableBatchWrite(path, layout, ref,
+            if (replaceAll) Some(_ => true) else None, retainHistory = true)
         // STREAMING WRITE (round-20): epoch-idempotent commits into the
         // table's own log — the digest q234 contract on the declared
         // schema, so evolve-to-evolve replication is exactly-once
@@ -443,142 +446,6 @@ class EvolveScanBuilder(path: String, fields: Seq[EvolveField],
 
   override def build(): Scan = new EvolveScan(path, current, ref, ranges,
     emitMeta, bloomPoints, streamMaxVersions)
-}
-
-/** One committed evolve file: name, rows, and the writer-observed
-  * per-zone-field (min, max) — keyed by FIELD ID.
-  */
-case class EvolveCommittedFile(fileName: String, rows: Long,
-    zones: Map[Int, (Long, Long)] = Map.empty,
-    blooms: Map[Int, String] = Map.empty)
-case class EvolveCommitMessage(files: Seq[EvolveCommittedFile])
-    extends WriterCommitMessage
-
-class EvolveBatchWrite(path: String, layout: TableLayout.Evolve,
-    ref: String = DigestManifest.MainRef,
-    replaceAll: Boolean = false) extends BatchWrite {
-  private val jobTag: String =
-    java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    LayoutWriterFactory(path, layout, jobTag)
-
-  // manifest entries carry the writing schema's field-id list
-  // (`ids=1;2;3` — the per-file evolution metadata readers resolve
-  // against, same role as parquet footers under mergeSchema) plus the
-  // writer-observed zone attrs (`zmin.c<id>`/`zmax.c<id>`, round-18)
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val freshLines = messages.toSeq.flatMap(layout.lines).sorted
-    val baseVersion = DigestManifest.currentVersion(path, ref)
-    if (replaceAll)
-      // one visibility event: the truncate-overwrite publishes ONLY the
-      // fresh listing through the optimistic replace (which consumes a
-      // pending content-preserving tag — the clustering rewrites' path);
-      // retired files stay on disk, so history keeps time-traveling
-      DigestManifest.publishReplace(path, freshLines, baseVersion, ref)
-    else
-      // a plain append commutes with interleaved commits: the rebasing
-      // commit appends onto whatever head registered since baseVersion
-      DigestManifest.publishAppend(path, freshLines, baseVersion, ref)
-  }
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit =
-    StagedFiles.sweep(path)
-}
-
-/** Same staged-attempt/rename-on-commit protocol as [[DigestDataWriter]].
-  * CSV plane: positional text over the WRITE-TIME schema, `\N` for null
-  * (append-only text keeps evolution file-inspectable). Parquet plane
-  * (round-18): columns are named `c<fieldId>` so bytes stay id-addressed
-  * — a later RENAME is invisible to the data layer. `colIdx` maps each
-  * schema field to its position in incoming rows (identity for table
-  * writes; the DV insert half arrives in the rewritten query's order).
-  */
-class EvolveDataWriter(path: String, fields: Seq[EvolveField], jobTag: String,
-    partitionId: Int, taskId: Long, plane: DataPlane = DataPlane.Csv,
-    zoneIds: Seq[Int] = Nil, bloomIds: Seq[Int] = Nil,
-    colIdx: Array[Int] = Array.empty)
-    extends DataWriter[InternalRow] {
-  private val idx: Array[Int] =
-    if (colIdx.nonEmpty) colIdx else fields.indices.toArray
-  private val staged = Paths.get(path,
-    f"ev-j$jobTag-part-$partitionId%05d-attempt-$taskId.staged")
-  Files.createDirectories(staged.getParent)
-  private val out =
-    if (plane.parquet) null
-    else Files.newBufferedWriter(staged, StandardCharsets.UTF_8)
-  private val pq =
-    if (!plane.parquet) null
-    else new ParquetData.GenericRowsWriter(staged,
-      ParquetData.messageType("graft_evolve",
-        fields.map(f => s"c${f.id}" -> f.dataType)),
-      plane.rowGroupBytes, plane.rowGroupRows,
-      // declared bloom fields carry per-ROW-GROUP in-file filters too
-      // (round-19): the needle layer for files past the manifest-attr
-      // filter's saturation gate
-      bloomIds.map(i => s"c$i"))
-  private var rows = 0L
-  // writer-observed zone (min, max) per declared zone field id
-  private val zMin = scala.collection.mutable.Map(zoneIds.map(_ -> Long.MaxValue): _*)
-  private val zMax = scala.collection.mutable.Map(zoneIds.map(_ -> Long.MinValue): _*)
-  // streaming bloom build per declared bloom field id (q279); NULL cells
-  // are skipped — a null never equals a probed point
-  private val blooms: Map[Int, Array[Long]] =
-    bloomIds.map(_ -> BloomCodec.newBuild()).toMap
-
-  override def write(r: InternalRow): Unit = {
-    val vals: Seq[Any] = fields.indices.map { i =>
-      val j = idx(i)
-      if (r.isNullAt(j)) null
-      else fields(i).dataType match {
-        case LongType =>
-          val v = r.getLong(j)
-          if (zMin.contains(fields(i).id)) {
-            zMin(fields(i).id) = math.min(zMin(fields(i).id), v)
-            zMax(fields(i).id) = math.max(zMax(fields(i).id), v)
-          }
-          blooms.get(fields(i).id).foreach(BloomCodec.add(_, v))
-          v
-        case DoubleType => r.getDouble(j)
-        case StringType => r.getUTF8String(j).toString
-      }
-    }
-    if (pq != null) pq.write(vals)
-    else {
-      val cells = fields.indices.map { i =>
-        vals(i) match {
-          case null => CsvCell.Null
-          case v: String => CsvCell.string("graft_evolve", v)
-          case v => v.toString
-        }
-      }
-      out.write(cells.mkString(",")); out.write("\n")
-    }
-    rows += 1
-  }
-
-  private def zones: Map[Int, (Long, Long)] =
-    zoneIds.filter(id => zMin(id) != Long.MaxValue)
-      .map(id => id -> (zMin(id), zMax(id))).toMap
-
-  override def commit(): WriterCommitMessage = {
-    if (pq != null) pq.close() else out.close()
-    val fin = Paths.get(path,
-      f"ev-j$jobTag-part-$partitionId%05d${plane.ext}")
-    Files.move(staged, fin, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    EvolveCommitMessage(Seq(
-      EvolveCommittedFile(fin.getFileName.toString, rows, zones,
-        // saturation-gated like the digest writers: an over-full filter
-        // excludes nothing, so it is omitted (absent = always kept)
-        blooms.flatMap { case (id, b) =>
-          BloomCodec.encodeIfUseful(b, rows).map(id -> _)
-        })))
-  }
-  override def abort(): Unit = {
-    if (pq != null) pq.close() else out.close()
-    Files.deleteIfExists(staged)
-  }
-  override def close(): Unit = ()
 }
 
 /** One partition per committed file; each resolves the CURRENT schema

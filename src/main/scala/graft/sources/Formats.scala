@@ -3161,7 +3161,7 @@ object Formats {
   // ---- q251: CONCURRENT COMMITTERS — optimistic CAS on the commit log -----
   // Two INSERT INTO jobs race through the FULL SQL write path on separate
   // threads. Each plans its commit against the head it read
-  // (DigestBatchWrite.commit captures `baseVersion`), CAS-claims the next
+  // (TableBatchWrite.commit captures `baseVersion`), CAS-claims the next
   // `_MANIFEST.v<N>` with CREATE_NEW (atomic across processes), and the
   // loser REBASES — appends commute — so BOTH commits survive as
   // consecutive versions, nothing lost, whatever the interleaving. The

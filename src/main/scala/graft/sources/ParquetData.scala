@@ -15,10 +15,12 @@ import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
-import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, PrimitiveType, Types}
+import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Types}
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+import org.apache.parquet.schema.Type.Repetition
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.datasources.parquet.VectorizedParquetRecordReader
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.vectorized.ColumnarBatch
 
 /** The COLUMNAR data plane of the graft digest table
@@ -51,54 +53,6 @@ object ParquetData {
     c.set("fs.file.impl", "org.apache.hadoop.fs.RawLocalFileSystem")
     c.setBoolean("fs.file.impl.disable.cache", true)
     c
-  }
-
-  /** The digest row schema in Parquet terms (doc_id, lang, n_chars). */
-  val Schema: MessageType = Types.buildMessage()
-    .required(PrimitiveType.PrimitiveTypeName.INT64).named("doc_id")
-    .required(PrimitiveType.PrimitiveTypeName.BINARY)
-    .as(LogicalTypeAnnotation.stringType()).named("lang")
-    .required(PrimitiveType.PrimitiveTypeName.INT64).named("n_chars")
-    .named("graft_digest")
-
-  /** Row-at-a-time writer onto a staged path; encoding is columnar
-    * inside the writer (that is Parquet's job — the write side of a
-    * columnar plane is always row-fed by the engine's `DataWriter`
-    * contract). `rowGroupBytes` bounds each row group, so files carry
-    * MULTIPLE independently-prunable groups (the in-file twin of the
-    * manifest's file zones).
-    */
-  final class RowsWriter(staged: Path, rowGroupBytes: Long,
-      rowGroupRows: Int = Int.MaxValue) {
-    private val factory =
-      new org.apache.parquet.example.data.simple.SimpleGroupFactory(Schema)
-    private val w = ExampleParquetWriter.builder(
-        HadoopOutputFile.fromPath(new HPath(staged.toUri), hconf()))
-      .withType(Schema)
-      .withCompressionCodec(CompressionCodecName.SNAPPY)
-      .withRowGroupSize(rowGroupBytes)
-      // the byte bound's size check only starts at ~100 buffered records,
-      // so tiny-fixture tables additionally bound by ROW COUNT to get
-      // multi-group files ('parquet.rowgroup.rows'); production tables
-      // leave it unbounded and split by bytes
-      .withRowGroupRowCountLimit(rowGroupRows)
-      .withPageSize(math.max(1024L, math.min(rowGroupBytes / 4, 1L << 20)).toInt)
-      .withDictionaryEncoding(true)
-      // per-ROW-GROUP bloom on the point-lookup key (round-19): the
-      // in-file needle layer for LARGE files, where the manifest-attr
-      // bloom is saturation-gated off (>~2048 rows) and shuffled ingest
-      // leaves row-group (min,max) stats wide — parquet's own adaptive
-      // filter, read back through BloomFilterReader at plan time
-      .withBloomFilterEnabled("doc_id", true)
-      .build()
-    def write(id: Long, lang: String, n: Long): Unit = {
-      val g = factory.newGroup()
-      g.append("doc_id", id)
-      g.append("lang", lang)
-      g.append("n_chars", n)
-      w.write(g)
-    }
-    def close(): Unit = w.close()
   }
 
   /** One row group's footer view: its global row offset (DV positions are
@@ -308,35 +262,39 @@ object ParquetData {
       if (reader != null) { reader.close(); reader = null }
   }
 
-  // ---- DECLARED-SCHEMA (evolve) plane: id-addressed generic rows ----------
+  // ---- the write side: one row writer for every table's data files -------
 
-  /** Build an all-OPTIONAL parquet message for a declared schema. Column
-    * names are the caller's (the evolve plane passes `c<fieldId>` so
-    * RENAME stays a metadata op — bytes are addressed by id, never by
-    * the mutable name).
+  /** The parquet message of a table's data-file columns: a column is
+    * `required` exactly when its field is non-nullable (the digest
+    * schema), `optional` otherwise. Column names are the caller's (the
+    * evolve plane passes `c<fieldId>` so RENAME stays a metadata op —
+    * bytes are addressed by id, never by the mutable name).
     */
-  def messageType(name: String,
-      cols: Seq[(String, org.apache.spark.sql.types.DataType)]): MessageType = {
+  def messageType(name: String, cols: Seq[StructField]): MessageType = {
     val b = Types.buildMessage()
-    cols.foreach { case (n, dt) =>
-      dt match {
-        case org.apache.spark.sql.types.LongType =>
-          b.optional(PrimitiveType.PrimitiveTypeName.INT64).named(n)
-        case org.apache.spark.sql.types.DoubleType =>
-          b.optional(PrimitiveType.PrimitiveTypeName.DOUBLE).named(n)
-        case org.apache.spark.sql.types.StringType =>
-          b.optional(PrimitiveType.PrimitiveTypeName.BINARY)
-            .as(LogicalTypeAnnotation.stringType()).named(n)
+    cols.foreach { f =>
+      val rep = if (f.nullable) Repetition.OPTIONAL else Repetition.REQUIRED
+      f.dataType match {
+        case LongType => b.primitive(PrimitiveTypeName.INT64, rep).named(f.name)
+        case DoubleType => b.primitive(PrimitiveTypeName.DOUBLE, rep).named(f.name)
+        case StringType => b.primitive(PrimitiveTypeName.BINARY, rep)
+          .as(LogicalTypeAnnotation.stringType()).named(f.name)
         case other => throw new IllegalArgumentException(
-          s"graft parquet plane: unsupported column type ${other.sql} for '$n'")
+          s"graft parquet plane: unsupported column type ${other.sql} for '${f.name}'")
       }
     }
     b.named(name)
   }
 
-  /** Row-at-a-time generic writer (the evolve plane's twin of
-    * [[RowsWriter]]): `values` align positionally with `cols`; null
-    * cells are parquet nulls.
+  /** Row-at-a-time writer onto a staged path; encoding is columnar inside
+    * the writer (that is Parquet's job — the write side of a columnar
+    * plane is always row-fed by the engine's `DataWriter` contract).
+    * `values` align positionally with the schema's columns; null cells are
+    * parquet nulls. `rowGroupBytes` bounds each row group, so files carry
+    * MULTIPLE independently-prunable groups (the in-file twin of the
+    * manifest's file zones); `bloomCols` carry a per-ROW-GROUP bloom
+    * filter, parquet's own adaptive filter, read back through
+    * BloomFilterReader at plan time.
     */
   final class GenericRowsWriter(staged: Path, schema: MessageType,
       rowGroupBytes: Long, rowGroupRows: Int = Int.MaxValue,
@@ -349,23 +307,29 @@ object ParquetData {
         .withType(schema)
         .withCompressionCodec(CompressionCodecName.SNAPPY)
         .withRowGroupSize(rowGroupBytes)
+        // the byte bound's size check only starts at ~100 buffered
+        // records, so tiny-fixture tables additionally bound by ROW COUNT
+        // to get multi-group files ('parquet.rowgroup.rows'); production
+        // tables leave it unbounded and split by bytes
         .withRowGroupRowCountLimit(rowGroupRows)
         .withPageSize(math.max(1024L, math.min(rowGroupBytes / 4, 1L << 20)).toInt)
         .withDictionaryEncoding(true)
-      // the declared bloom columns carry per-ROW-GROUP filters in-file
-      // too (id-addressed `c<fieldId>` physical names, like the zones)
       bloomCols.foldLeft(b)((bb, c) => bb.withBloomFilterEnabled(c, true))
         .build()
     }
-    def write(values: Seq[Any]): Unit = {
+    def write(values: Array[Any]): Unit = {
       val g = factory.newGroup()
-      values.zipWithIndex.foreach {
-        case (null, _) => ()
-        case (v: Long, i) => g.add(i, v)
-        case (v: Double, i) => g.add(i, v)
-        case (v: String, i) => g.add(i, v)
-        case (v, i) => throw new IllegalArgumentException(
-          s"graft parquet plane: unsupported cell $v at $i")
+      var i = 0
+      while (i < values.length) {
+        values(i) match {
+          case null => ()
+          case v: Long => g.add(i, v)
+          case v: Double => g.add(i, v)
+          case v: String => g.add(i, v)
+          case v => throw new IllegalArgumentException(
+            s"graft parquet plane: unsupported cell $v at $i")
+        }
+        i += 1
       }
       w.write(g)
     }

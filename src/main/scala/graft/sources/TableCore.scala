@@ -1,7 +1,7 @@
 package graft.sources
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import scala.collection.mutable
 
@@ -9,18 +9,19 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory, ScanBuilder}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxFiles, SupportsAdmissionControl, SupportsTriggerAvailableNow}
-import org.apache.spark.sql.connector.write.{DataWriter, DataWriterFactory, DeltaBatchWrite, DeltaWrite, DeltaWriteBuilder, DeltaWriter, DeltaWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RowLevelOperation, SupportsDelta, WriterCommitMessage}
+import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, DeltaBatchWrite, DeltaWrite, DeltaWriteBuilder, DeltaWriter, DeltaWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RowLevelOperation, SupportsDelta, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
 import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 // ---------------------------------------------------------------------------
-// THE TABLE CORE: the data-file row reader, the row-level (DV) write, the
-// epoch streaming write, the append table stream and the change stream
-// shared by `graft_digest` and `graft_evolve`. Both flavors commit through
-// one manifest protocol ([[DigestManifest]]); what differs between them —
-// the manifest-line codec, the column addressing, the insert writer, the
+// THE TABLE CORE: the task writer, the batch job commit, the data-file row
+// reader, the row-level (DV) write, the epoch streaming write, the append
+// table stream and the change stream shared by `graft_digest` and
+// `graft_evolve`. Both flavors commit through one manifest protocol
+// ([[DigestManifest]]); what differs between them — the manifest-line
+// codec, the file columns and their row addressing, the file stems, the
 // row-level scan, the stream's partitions — is one [[TableLayout]] value,
 // so every guard below holds for both.
 // ---------------------------------------------------------------------------
@@ -37,7 +38,15 @@ private[graft] sealed abstract class TableLayout extends Serializable {
   /** The manifest lines of one task's committed files; other messages
     * carry none.
     */
-  def lines(m: WriterCommitMessage): Seq[String]
+  def lines(m: WriterCommitMessage): Seq[String] = m match {
+    case TableCommitMessage(files) => files.map(line)
+    case _ => Nil
+  }
+
+  /** The manifest line of one committed file, with the zone and bloom
+    * attrs the table declares.
+    */
+  protected def line(f: CommittedFile): String
 
   /** `(file, dv)` of one manifest line. */
   def fileAndDv(line: String): (String, String)
@@ -54,11 +63,38 @@ private[graft] sealed abstract class TableLayout extends Serializable {
   /** The column names an insert's incoming rows resolve by. */
   def insertCols: Seq[String]
 
-  /** The task writer for inserts; empty `cols` means the rows arrive in
-    * the table's own column order.
+  /** The data plane files are written in. */
+  def plane: DataPlane
+
+  /** A data file's columns in file order: a CSV row's cells, a parquet
+    * file's message (a column is `required` exactly when non-nullable).
     */
-  def insertWriter(path: String, partitionId: Int, taskId: Long,
-      jobTag: String, cols: Array[Int]): DataWriter[InternalRow]
+  def fileSchema: StructType
+
+  /** Where each file column sits in an incoming row of `numFields`
+    * fields; empty `cols` means the table's own column order.
+    */
+  def rowIdx(numFields: Int, cols: Array[Int]): Array[Int]
+
+  /** The stem of the file a row's cells land in: a task writer keeps one
+    * open file per stem.
+    */
+  def stemOf(cells: Array[Any]): String
+
+  /** The stem every row lands in when it does not depend on the row. That
+    * file opens with the task writer, so a task that sees no row still
+    * commits its empty file.
+    */
+  def fixedStem: Option[String]
+
+  /** The file columns whose (min, max) zone and bloom the writer observes
+    * for the manifest line.
+    */
+  def observedZones: Seq[String]
+  def observedBlooms: Seq[String]
+
+  /** The file columns that carry an in-file parquet bloom per row group. */
+  def parquetBlooms: Seq[String]
 
   /** The row-level-operation scan: full rows plus each row's physical
     * `(_file, _pos)` coordinates.
@@ -74,18 +110,27 @@ private[graft] sealed abstract class TableLayout extends Serializable {
 }
 
 private[graft] object TableLayout {
-  /** The fixed `(doc_id, lang, n_chars)` schema: lang-split files,
-    * [[ManifestEntry]] lines carrying the declared zone/bloom attrs.
+  /** The fixed `(doc_id, lang, n_chars)` schema: one file per task, or
+    * per lang per task with `langSplit` (q186 — the granularity the
+    * overwrite-by-filter commit replaces), and [[ManifestEntry]] lines
+    * carrying the declared zone/bloom attrs.
     */
   final case class Digest(plane: DataPlane = DataPlane.Csv,
       zonemapCols: Set[String] = DigestSink.zmCols.keySet,
-      bloomCols: Set[String] = Set.empty) extends TableLayout {
+      bloomCols: Set[String] = Set.empty,
+      langSplit: Boolean = true) extends TableLayout {
     override def label: String = "graft_digest"
-    override def lines(m: WriterCommitMessage): Seq[String] = m match {
-      case DigestCommitMessage(files) =>
-        files.map(DigestSink.entryLine(_, zonemapCols, bloomCols))
-      case _ => Nil
-    }
+    // only the DECLARED zone/bloom columns are recorded (q263/q278): the
+    // scan prunes off recorded attributes, so the declaration is enforced
+    // at the one place entries are minted
+    override protected def line(f: CommittedFile): String =
+      ManifestEntry(f.fileName, f.rows,
+        f.zones.filter(z => zonemapCols(z._1)).flatMap { case (c, (lo, hi)) =>
+          val (mn, mx) = DigestSink.zmCols(c)
+          Seq(mn -> lo.toString, mx -> hi.toString)
+        } ++ f.blooms.filter(b => bloomCols(b._1)).map { case (_, enc) =>
+          "bf" -> enc
+        }).line
     override def fileAndDv(line: String): (String, String) = {
       val e = ManifestEntry.parse(line)
       (e.file, e.attrs.getOrElse("dv", ""))
@@ -100,10 +145,30 @@ private[graft] object TableLayout {
         FileCol(f.name, f.dataType, i, f.name)
       }
     override def insertCols: Seq[String] = Seq("doc_id", "lang", "n_chars")
-    override def insertWriter(path: String, partitionId: Int, taskId: Long,
-        jobTag: String, cols: Array[Int]): DataWriter[InternalRow] =
-      new LangSplitDataWriter(path, partitionId, taskId,
-        if (cols.isEmpty) Array(0, 1, 2) else cols, jobTag, plane)
+    override def fileSchema: StructType = DigestSink.rowSchema
+    // ReplaceData (q203/q204) prepends engine-side columns (e.g.
+    // __row_operation) that are NOT in LogicalWriteInfo.schema(); the
+    // data columns sit at the END, so index them from the right
+    override def rowIdx(numFields: Int, cols: Array[Int]): Array[Int] =
+      (if (cols.isEmpty) Array(0, 1, 2) else cols).map(numFields - 3 + _)
+    override def stemOf(cells: Array[Any]): String =
+      if (!langSplit) ""
+      else {
+        val lang = cells(1).asInstanceOf[String]
+        require(lang.nonEmpty &&
+          lang.forall(c => c.isLetterOrDigit || c == '_' || c == '-'),
+          s"lang value not filesystem-safe: '$lang'")
+        s"lang_$lang-"
+      }
+    override def fixedStem: Option[String] = if (langSplit) None else Some("")
+    override def observedZones: Seq[String] =
+      DigestSink.zmCols.keys.filter(zonemapCols).toSeq
+    override def observedBlooms: Seq[String] = bloomCols.toSeq
+    // per-ROW-GROUP bloom on the point-lookup key (round-19), declared or
+    // not: the in-file needle layer for LARGE files, where the manifest
+    // bloom is saturation-gated off and shuffled ingest leaves row-group
+    // (min, max) stats wide
+    override def parquetBlooms: Seq[String] = Seq("doc_id")
     // pruning stays ON — unlike the group-based rewrite (which must scan
     // every group it will re-emit), a DELETE's unmatched files simply get
     // no deletion vector, so lang/zone-map file skips are correct AND the
@@ -129,15 +194,14 @@ private[graft] object TableLayout {
       plane: DataPlane = DataPlane.Csv,
       zoneIds: Seq[Int] = Nil, bloomIds: Seq[Int] = Nil) extends TableLayout {
     override def label: String = "graft_evolve"
-    override def lines(m: WriterCommitMessage): Seq[String] = m match {
-      case EvolveCommitMessage(files) =>
-        val ids = fields.map(_.id)
-        files.map(f => EvolveEntry.render(f.fileName, f.rows, ids,
-          f.zones.flatMap { case (id, (lo, hi)) =>
-            Seq(s"zmin.c$id" -> lo.toString, s"zmax.c$id" -> hi.toString)
-          } ++ f.blooms.map { case (id, enc) => s"bf.c$id" -> enc }))
-      case _ => Nil
-    }
+    // the entry records the writing schema's field ids (`ids=1;2;3`) —
+    // the per-file evolution metadata readers resolve against — and the
+    // zone/bloom attrs keyed by field id, so RENAME stays a metadata op
+    override protected def line(f: CommittedFile): String =
+      EvolveEntry.render(f.fileName, f.rows, fields.map(_.id),
+        f.zones.flatMap { case (c, (lo, hi)) =>
+          Seq(s"zmin.$c" -> lo.toString, s"zmax.$c" -> hi.toString)
+        } ++ f.blooms.map { case (c, enc) => s"bf.$c" -> enc })
     override def fileAndDv(line: String): (String, String) = {
       val (file, _, _, attrs) = EvolveEntry.parse(line)
       (file, attrs.getOrElse("dv", ""))
@@ -160,10 +224,17 @@ private[graft] object TableLayout {
         }.orNull)
     }
     override def insertCols: Seq[String] = fields.map(_.name)
-    override def insertWriter(path: String, partitionId: Int, taskId: Long,
-        jobTag: String, cols: Array[Int]): DataWriter[InternalRow] =
-      new EvolveDataWriter(path, fields, jobTag, partitionId, taskId, plane,
-        zoneIds, bloomIds, cols)
+    // files are addressed by FIELD ID (`c<id>`), never by the mutable
+    // name; every cell may be NULL
+    override def fileSchema: StructType =
+      StructType(fields.map(f => StructField(s"c${f.id}", f.dataType)))
+    override def rowIdx(numFields: Int, cols: Array[Int]): Array[Int] =
+      if (cols.nonEmpty) cols else fields.indices.toArray
+    override def stemOf(cells: Array[Any]): String = "ev-"
+    override def fixedStem: Option[String] = Some("ev-")
+    override def observedZones: Seq[String] = zoneIds.map(id => s"c$id")
+    override def observedBlooms: Seq[String] = bloomIds.map(id => s"c$id")
+    override def parquetBlooms: Seq[String] = observedBlooms
     override def dvScan(path: String, ref: String): ScanBuilder =
       new EvolveScanBuilder(path, fields, ref, zoneIds, emitMeta = true)
     // legacy positional-id lines resolve the same as attr-form ones
@@ -373,20 +444,230 @@ private[sources] object StagedFiles {
   }
 }
 
+/** One committed data file in a task's commit message: its name, its row
+  * count, and the writer-observed (min, max) zones and encoded blooms
+  * ([[BloomCodec]]) keyed by FILE column name (`doc_id`/`n_chars` on
+  * digest, `c<id>` on evolve). The layout's [[TableLayout.lines]] decides
+  * how the manifest entry records them, so range and point scans can skip
+  * the file without opening it (q253/q257/q278).
+  */
+case class CommittedFile(fileName: String, rows: Long,
+    zones: Map[String, (Long, Long)] = Map.empty,
+    blooms: Map[String, String] = Map.empty)
+
+/** What every table task writer commits: its files, in the order opened. */
+case class TableCommitMessage(files: Seq[CommittedFile])
+    extends WriterCommitMessage
+
+/** THE task writer of every table insert — batch INSERT/overwrite, the
+  * group-based rewrite, the insert halves of DV DELETE/UPDATE/MERGE and
+  * the epoch streaming write — for both flavors. One open file per stem
+  * ([[TableLayout.stemOf]]): staged as
+  * `<stem>[j<tag>-]part-<partition>-attempt-<task>.staged`, keyed by the
+  * ATTEMPT, and renamed on commit to `<stem>[j<tag>-]part-<partition><ext>`,
+  * keyed by the PARTITION — rename-on-commit makes exactly one attempt's
+  * output visible however many attempts ran, and the job tag makes the
+  * final names unique per job. CSV cells are comma-separated with `\N`
+  * for NULL ([[CsvCell]]); parquet columns are the layout's file schema.
+  * `cols` addresses the incoming rows ([[TableLayout.rowIdx]]).
+  */
+private[graft] final class TableDataWriter(path: String, layout: TableLayout,
+    partitionId: Int, taskId: Long, jobTag: String,
+    cols: Array[Int] = Array.empty) extends DataWriter[InternalRow] {
+  private val tagPart = if (jobTag.isEmpty) "" else s"j$jobTag-"
+  private val schema = layout.fileSchema
+  private val types = schema.fields.map(_.dataType)
+  private val nullable = schema.fields.map(_.nullable)
+  private val zoneAt = layout.observedZones.map(schema.fieldIndex).toArray
+  private val bloomAt = layout.observedBlooms.map(schema.fieldIndex).toArray
+  private lazy val message =
+    ParquetData.messageType(layout.label, schema.fields.toSeq)
+  private var idx: Array[Int] = _
+  Files.createDirectories(Paths.get(path))
+
+  private final class OpenFile(stem: String) {
+    private val name = f"$stem${tagPart}part-$partitionId%05d"
+    private val staged = Paths.get(path, s"$name-attempt-$taskId.staged")
+    private val csv =
+      if (layout.plane.parquet) null
+      else Files.newBufferedWriter(staged, StandardCharsets.UTF_8)
+    private val pq =
+      if (!layout.plane.parquet) null
+      else new ParquetData.GenericRowsWriter(staged, message,
+        layout.plane.rowGroupBytes, layout.plane.rowGroupRows,
+        layout.parquetBlooms)
+    private var rows = 0L
+    private val lo = Array.fill(zoneAt.length)(Long.MaxValue)
+    private val hi = Array.fill(zoneAt.length)(Long.MinValue)
+    // NULL cells are skipped: a null neither widens a zone nor equals a
+    // probed point
+    private val blooms = Array.fill(bloomAt.length)(BloomCodec.newBuild())
+
+    def write(cells: Array[Any]): Unit = {
+      if (pq != null) pq.write(cells)
+      else {
+        var i = 0
+        while (i < cells.length) {
+          if (i > 0) csv.write(',')
+          csv.write(cells(i) match {
+            case null => CsvCell.Null
+            case v: String => CsvCell.string(layout.label, v)
+            case v => v.toString
+          })
+          i += 1
+        }
+        csv.write('\n')
+      }
+      var k = 0
+      while (k < zoneAt.length) {
+        cells(zoneAt(k)) match {
+          case v: Long => lo(k) = math.min(lo(k), v); hi(k) = math.max(hi(k), v)
+          case _ => ()
+        }
+        k += 1
+      }
+      k = 0
+      while (k < bloomAt.length) {
+        cells(bloomAt(k)) match {
+          case v: Long => BloomCodec.add(blooms(k), v)
+          case _ => ()
+        }
+        k += 1
+      }
+      rows += 1
+    }
+
+    private def close(): Unit = if (pq != null) pq.close() else csv.close()
+
+    def commit(): CommittedFile = {
+      close()
+      val fin = name + layout.plane.ext
+      Files.move(staged, Paths.get(path, fin), StandardCopyOption.REPLACE_EXISTING)
+      CommittedFile(fin, rows,
+        zoneAt.indices.filter(k => lo(k) <= hi(k))
+          .map(k => schema(zoneAt(k)).name -> (lo(k), hi(k))).toMap,
+        // saturation-gated: an over-full filter excludes nothing, so it is
+        // omitted (absent = always kept)
+        bloomAt.indices.flatMap(k => BloomCodec.encodeIfUseful(blooms(k), rows)
+          .map(schema(bloomAt(k)).name -> _)).toMap)
+    }
+
+    def abort(): Unit = { close(); Files.deleteIfExists(staged) }
+  }
+
+  private val open = mutable.LinkedHashMap.empty[String, OpenFile]
+  layout.fixedStem.foreach(s => open(s) = new OpenFile(s))
+
+  override def write(r: InternalRow): Unit = {
+    if (idx == null) idx = layout.rowIdx(r.numFields, cols)
+    val cells = new Array[Any](types.length)
+    var i = 0
+    while (i < cells.length) {
+      val j = idx(i)
+      cells(i) =
+        if (nullable(i) && r.isNullAt(j)) null
+        else types(i) match {
+          case LongType => r.getLong(j)
+          case DoubleType => r.getDouble(j)
+          case StringType => r.getUTF8String(j).toString
+        }
+      i += 1
+    }
+    val stem = layout.stemOf(cells)
+    open.getOrElseUpdate(stem, new OpenFile(stem)).write(cells)
+  }
+
+  override def commit(): TableCommitMessage =
+    TableCommitMessage(open.values.map(_.commit()).toSeq)
+
+  override def abort(): Unit = open.values.foreach(_.abort())
+
+  override def close(): Unit = ()
+}
+
 /** Insert task writers of a layout, for batch jobs (one job tag) and for
   * streaming epochs (the EPOCH is the tag, so a replayed epoch rewrites
   * its own byte-identical final names). A top-level case class: it ships
   * to tasks, and an inner class would drag its non-serializable outer
   * write along.
   */
-private[sources] case class LayoutWriterFactory(path: String,
-    layout: TableLayout, jobTag: String = "")
+private[graft] case class LayoutWriterFactory(path: String,
+    layout: TableLayout, jobTag: String = "", cols: Array[Int] = Array.empty)
     extends DataWriterFactory with StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    layout.insertWriter(path, partitionId, taskId, jobTag, Array.empty)
+    new TableDataWriter(path, layout, partitionId, taskId, jobTag, cols)
   override def createWriter(partitionId: Int, taskId: Long,
       epochId: Long): DataWriter[InternalRow] =
-    layout.insertWriter(path, partitionId, taskId, s"e$epochId", Array.empty)
+    new TableDataWriter(path, layout, partitionId, taskId, s"e$epochId", cols)
+}
+
+/** THE job commit of a batch table write, for both flavors: an append
+  * (`retired` empty) or a replace that retires every listed entry whose
+  * file name `retired` accepts — the whole listing for an evolve truncate,
+  * the matched langs for a digest overwrite-by-filter (q186), everything
+  * for the group-based rewrite (q203/q204).
+  *
+  * No batch job may REUSE a committed file name. For history-retaining
+  * tables an in-place rewrite would silently corrupt every older
+  * `_MANIFEST.v<N>` that names it; for plain tables a SECOND APPEND whose
+  * task partition ids repeat would rename over a committed file while the
+  * manifest keeps both entries — double-counted metadata over clobbered
+  * data (caught live by q242's second commit re-using a lang). So each JOB
+  * gets a unique tag woven into its final file names, chosen once at
+  * construction (one tag per job however many tasks/attempts run), and
+  * the commit REFUSES a fresh name that survives in the listing, so the
+  * bug class stays loud, not silent.
+  */
+class TableBatchWrite(path: String, layout: TableLayout,
+    ref: String = DigestManifest.MainRef,
+    retired: Option[String => Boolean] = None,
+    retainHistory: Boolean = false,
+    cols: Array[Int] = Array.empty) extends BatchWrite {
+  private val jobTag: String =
+    java.util.UUID.randomUUID().toString.replace("-", "").take(12)
+
+  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
+    LayoutWriterFactory(path, layout, jobTag, cols)
+
+  override def commit(messages: Array[WriterCommitMessage]): Unit = {
+    def name(line: String): String = line.takeWhile(_ != ',')
+    val fresh = messages.toSeq.flatMap(layout.lines).sorted
+    // plan against the REGISTERED head, remembering its version: an
+    // append rebases onto any commit that lands between this read and the
+    // publish (cross-process CAS), a replace aborts
+    val (baseVersion, old) = DigestManifest.head(path, ref)
+    val (dead, surviving) =
+      retired.fold((Seq.empty[String], old))(r => old.partition(l => r(name(l))))
+    // a fresh file may share a name only with an entry this very commit
+    // RETIRES (the legacy rename-in-place overwrite), never with one that
+    // survives
+    val survivingNames = surviving.map(name).toSet
+    val clashes = fresh.map(name).filter(survivingNames.contains)
+    require(clashes.isEmpty,
+      s"${layout.label}: job would commit file names already in the manifest " +
+        s"(${clashes.mkString(",")}) — jobs must write job-unique names")
+    // job-level commit point: publish the listing atomically FIRST, so it
+    // never names an already-deleted file. ORDER CONTRACT: `surviving`
+    // keeps its committed order untouched and `fresh` appends after it —
+    // merge-on-read replays delta entries in manifest order, and
+    // job-unique `delta-j<tag>-` names do NOT sort chronologically
+    if (retired.isEmpty) DigestManifest.publishAppend(path, fresh, baseVersion, ref)
+    else DigestManifest.publishReplace(path, surviving ++ fresh, baseVersion, ref)
+    // physical deletion of the retired files follows, skipped entirely
+    // when the table retains history (old versions stay resolvable). A
+    // fresh file may land on the SAME final name as the dead entry it
+    // replaces (same lang, same partition id — rename-in-place): deleting
+    // by old name would destroy the just-committed file, so the fresh
+    // names are carved out of the deletion set
+    if (!retainHistory) {
+      val freshNames = fresh.map(name).toSet
+      dead.map(name).filterNot(freshNames.contains)
+        .foreach(f => Files.deleteIfExists(Paths.get(path, f)))
+    }
+  }
+
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    StagedFiles.sweep(path)
 }
 
 // ---------------------------------------------------------------------------
@@ -447,7 +728,7 @@ class DvOperation(path: String, layout: TableLayout,
 }
 
 case class DvCommitMessage(deletes: Map[String, Array[Long]],
-    inserts: Option[WriterCommitMessage] = None)
+    inserts: Option[TableCommitMessage] = None)
     extends WriterCommitMessage
 
 /** DV task writer: position deletes accumulate in memory (they are pure
@@ -461,7 +742,7 @@ case class DvWriterFactory(path: String, layout: TableLayout,
   override def createWriter(partitionId: Int, taskId: Long): DeltaWriter[InternalRow] =
     new DeltaWriter[InternalRow] {
       private val dels = mutable.LinkedHashMap.empty[String, mutable.ArrayBuffer[Long]]
-      private var ins: DataWriter[InternalRow] = _
+      private var ins: TableDataWriter = _
       override def delete(meta: InternalRow, id: InternalRow): Unit =
         dels.getOrElseUpdate(id.getUTF8String(fileIdx).toString,
           mutable.ArrayBuffer.empty) += id.getLong(posIdx)
@@ -472,7 +753,7 @@ case class DvWriterFactory(path: String, layout: TableLayout,
         require(cols.nonEmpty,
           s"${layout.label} dv: insert arrived without resolvable data columns")
         if (ins == null)
-          ins = layout.insertWriter(path, partitionId, taskId, jobTag, cols)
+          ins = new TableDataWriter(path, layout, partitionId, taskId, jobTag, cols)
         ins.write(row)
       }
       override def reinsert(meta: InternalRow, row: InternalRow): Unit = insert(row)
@@ -488,7 +769,7 @@ class DvBatchWrite(path: String, layout: TableLayout, baseVersion: Int,
     fileIdx: Int, posIdx: Int, cols: Array[Int],
     ref: String = DigestManifest.MainRef) extends DeltaBatchWrite {
 
-  // one unique tag per job (same contract as DigestBatchWrite): insert
+  // one unique tag per job (same contract as TableBatchWrite): insert
   // halves land as globally-unique final file names
   private val jobTag: String =
     java.util.UUID.randomUUID().toString.replace("-", "").take(12)

@@ -209,8 +209,11 @@ class CasProcessSpec extends AnyFunSuite {
       "byte-identical and the mask reads position-exact") {
     val dir = tmp("graft_2jvm_pqdv_")
     def writePq(name: String, rows: Seq[(Long, String, Long)]): Unit = {
-      val w = new graft.sources.ParquetData.RowsWriter(dir.resolve(name), 1L << 20)
-      rows.foreach { case (id, l, n) => w.write(id, l, n) }
+      val w = new graft.sources.ParquetData.GenericRowsWriter(dir.resolve(name),
+        graft.sources.ParquetData.messageType("graft_digest",
+          graft.sources.DigestSink.rowSchema.fields.toSeq), 1L << 20,
+        bloomCols = Seq("doc_id"))
+      rows.foreach { case (id, l, n) => w.write(Array(id, l, n)) }
       w.close()
     }
     writePq("lang_aa-dvfile.parquet", Seq((1L, "aa", 10L), (2L, "aa", 20L),

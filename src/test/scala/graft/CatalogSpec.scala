@@ -485,15 +485,15 @@ class CatalogSpec extends SparkSpec {
   }
 
   test("q234: streaming epoch commit is replay-idempotent against the manifest") {
-    import graft.sources.{CommittedFile, DigestCommitMessage, EvolveCommitMessage, EvolveCommittedFile, TableLayout, TableStreamingWrite}
+    import graft.sources.{CommittedFile, TableCommitMessage, TableLayout, TableStreamingWrite}
     import org.apache.spark.sql.connector.write.WriterCommitMessage
     // (layout, epoch's commit message for (epoch, rows)) per table flavor
     val flavors: Seq[(TableLayout, (Long, Long) => WriterCommitMessage)] = Seq(
-      (TableLayout.Digest(), (e, rows) => DigestCommitMessage(
+      (TableLayout.Digest(), (e, rows) => TableCommitMessage(
         Seq(CommittedFile(s"lang_en-je$e-part-00000.csv", rows)))),
       (TableLayout.Evolve(Seq(EvolveField(1, "id", LongType))),
-        (e, rows) => EvolveCommitMessage(
-          Seq(EvolveCommittedFile(s"ev-je$e-part-00000.csv", rows)))))
+        (e, rows) => TableCommitMessage(
+          Seq(CommittedFile(s"ev-je$e-part-00000.csv", rows)))))
     flavors.foreach { case (layout, msg) =>
       val dir = tmp("graft_stream_commit_spec_").toString
       val w = new TableStreamingWrite(dir, layout)
@@ -1104,6 +1104,61 @@ class CatalogSpec extends SparkSpec {
         .asScala.map(_.getFileName.toString).toSeq
       assert(left.forall(n => !n.endsWith(".csv") && !n.endsWith(".staged")),
         left.toString)
+    }
+  }
+
+  test("a delta-flavor UPDATE refuses a lang cell that would not read back " +
+      "as itself, and commits nothing") {
+    withCatalog {
+      val dir = tmp("graft_delta_cell_spec_")
+      val tbl = s"graft.ns.dcell_${System.nanoTime()}"
+      spark.sql(s"""CREATE TABLE $tbl (doc_id BIGINT, lang STRING, n_chars BIGINT)
+                   |USING graft_digest TBLPROPERTIES ('path'='$dir', 'delta'='true')""".stripMargin)
+      spark.sql(s"INSERT INTO $tbl VALUES (1, 'en', 10)")
+      val v = DigestManifest.currentVersion(dir.toString)
+      // the verb line `U,1,x,5,10` would fold back as (1, 'x', 5)
+      val e = intercept[Exception] {
+        spark.sql(s"UPDATE $tbl SET lang = 'x,5' WHERE doc_id = 1").collect()
+      }
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).toSeq
+      assert(msgs.exists(_.contains("graft_digest: string cell")),
+        msgs.mkString(" | "))
+      assert(DigestManifest.currentVersion(dir.toString) == v)
+      val rows = spark.table(tbl).collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq
+      assert(rows == Seq((1L, "en", 10L)), rows.toString)
+      spark.sql(s"DROP TABLE $tbl")
+    }
+  }
+
+  test("a branch table's stream serves the branch's commits, not main's") {
+    import org.apache.spark.sql.streaming.Trigger
+    withCatalog {
+      val dir = tmp("graft_branch_stream_spec_")
+      val tbl = s"graft.ns.bstream_${System.nanoTime()}"
+      val short = tbl.stripPrefix("graft.")
+      spark.sql(s"""CREATE TABLE $tbl (doc_id BIGINT, lang STRING, n_chars BIGINT)
+                   |USING graft_digest TBLPROPERTIES ('path'='$dir', 'delta'='true')""".stripMargin)
+      spark.sql(s"INSERT INTO $tbl VALUES (1, 'en', 10)")
+      spark.sql(s"CALL graft.system.create_branch(table => '$short', branch => 'wip')").collect()
+      val tblB = s"${tbl}_wip"
+      spark.sql(s"""CREATE TABLE $tblB (doc_id BIGINT, lang STRING, n_chars BIGINT)
+                   |USING graft_digest TBLPROPERTIES ('path'='$dir', 'branch'='wip')""".stripMargin)
+      // a commit on the branch only
+      spark.sql(s"INSERT INTO $tblB VALUES (2, 'de', 20)")
+      val sink = s"bstream_${System.nanoTime()}"
+      val q = spark.readStream.table(tblB).writeStream.format("memory")
+        .queryName(sink)
+        .option("checkpointLocation", tmp("graft_branch_stream_ckpt_").toString)
+        .trigger(Trigger.AvailableNow()).start()
+      q.awaitTermination()
+      def rows(t: String) = spark.table(t).collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq.sorted
+      assert(rows(sink) == rows(tblB), s"${rows(sink)} vs ${rows(tblB)}")
+      assert(rows(sink) == Seq((1L, "en", 10L), (2L, "de", 20L)).sorted)
+      spark.sql(s"DROP TABLE $tblB")
+      spark.sql(s"DROP TABLE $tbl")
     }
   }
 

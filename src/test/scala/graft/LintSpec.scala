@@ -141,4 +141,45 @@ class LintSpec extends AnyFunSuite {
       s"un-audited ParquetData.BatchIterator sites: $sites vs audited " +
         s"$audited — read committed data files through TableRows")
   }
+
+  /** Every table task file is staged and renamed by one writer
+    * (`TableDataWriter` in sources/TableCore.scala); only the delta-flavor
+    * verb log and the epoch sink, whose files are not table data rows,
+    * stage their own. Every parquet data file is written by one row writer
+    * (`ParquetData.GenericRowsWriter`). This lint pins the
+    * `-attempt-$taskId.staged` and `ExampleParquetWriter.builder(` sites in
+    * main sources to those.
+    */
+  test("table task files are staged and parquet files built only at " +
+      "audited sites") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala/graft")
+    def sites(token: String): Map[String, Int] =
+      java.nio.file.Files.walk(root).iterator().asScala
+        .filter(_.toString.endsWith(".scala"))
+        .flatMap { p =>
+          java.nio.file.Files.readAllLines(p).asScala
+            .filter { l =>
+              val t = l.trim
+              l.contains(token) && !t.startsWith("//") && !t.startsWith("*")
+            }
+            .map(_ => root.relativize(p).toString.replace('\\', '/'))
+        }
+        .toSeq.groupBy(identity).view.mapValues(_.size).toMap
+    val staged = Map(
+      // TableDataWriter: every insert of either flavor
+      "sources/TableCore.scala" -> 1,
+      // DigestDeltaWriter: the merge-on-read verb log
+      "sources/DigestSink.scala" -> 1,
+      // EpochDataWriter: the epoch sink's files
+      "sources/EpochSink.scala" -> 1,
+    )
+    assert(sites("-attempt-$taskId.staged") == staged,
+      s"un-audited task staging sites: ${sites("-attempt-$taskId.staged")} vs " +
+        s"audited $staged — write table data files through TableDataWriter")
+    val builders = Map("sources/ParquetData.scala" -> 1)
+    assert(sites("ExampleParquetWriter.builder(") == builders,
+      s"un-audited parquet writer sites: ${sites("ExampleParquetWriter.builder(")} " +
+        s"vs audited $builders — write parquet rows through GenericRowsWriter")
+  }
 }

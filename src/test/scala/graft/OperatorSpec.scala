@@ -490,7 +490,7 @@ class OperatorSpec extends SparkSpec {
 
   test("q168: sink two-phase commit — staged attempts, rename, abort cleanup") {
     import scala.jdk.CollectionConverters._
-    import graft.sources.{DigestBatchWrite, DigestCommitMessage, DigestDataWriter}
+    import graft.sources.{LayoutWriterFactory, TableBatchWrite, TableCommitMessage, TableLayout}
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.unsafe.types.UTF8String
     val dir = java.nio.file.Files.createTempDirectory("graft_sink_spec_")
@@ -500,18 +500,19 @@ class OperatorSpec extends SparkSpec {
       finally l.close()
     }
     // an aborted attempt leaves NO output at all
-    val w1 = new DigestDataWriter(dir.toString, 0, 101L)
+    val flat = TableLayout.Digest(langSplit = false)
+    val w1 = LayoutWriterFactory(dir.toString, flat).createWriter(0, 101L)
     w1.write(InternalRow(1L, UTF8String.fromString("en"), 10L))
     w1.abort()
     assert(files().isEmpty, s"abort left ${files()}")
     // a committed attempt renames its staged file to the final name
-    val w2 = new DigestDataWriter(dir.toString, 0, 102L)
+    val w2 = LayoutWriterFactory(dir.toString, flat).createWriter(0, 102L)
     w2.write(InternalRow(1L, UTF8String.fromString("en"), 10L))
     w2.write(InternalRow(2L, UTF8String.fromString("fr"), 20L))
-    val msg = w2.commit().asInstanceOf[DigestCommitMessage]
+    val msg = w2.commit().asInstanceOf[TableCommitMessage]
     assert(msg.files.map(_.rows).sum == 2L && files() == Vector("part-00000.csv"))
     // the job-level commit publishes the manifest over the messages
-    new DigestBatchWrite(dir.toString).commit(Array(msg))
+    new TableBatchWrite(dir.toString, flat).commit(Array(msg))
     // the entry carries the frozen (file, rows) positions plus the
     // writer-observed doc_id zone map (q253) as attributes
     val entry = sources.ManifestEntry.parse(
@@ -535,7 +536,7 @@ class OperatorSpec extends SparkSpec {
   test("q186: overwrite-by-filter commit — only matched langs' files replaced, " +
       "rename-in-place survives") {
     import scala.jdk.CollectionConverters._
-    import graft.sources.{DigestBatchWrite, DigestCommitMessage, LangSplitDataWriter}
+    import graft.sources.{DigestWrite, LayoutWriterFactory, TableBatchWrite, TableCommitMessage, TableLayout}
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.sql.sources.EqualTo
     import org.apache.spark.unsafe.types.UTF8String
@@ -545,21 +546,21 @@ class OperatorSpec extends SparkSpec {
     def lines(f: String) =
       java.nio.file.Files.readAllLines(dir.resolve(f)).asScala.toSeq
     // baseline: one task carrying two langs → two files, one manifest
-    val w0 = new LangSplitDataWriter(dir.toString, 0, 1L)
+    val w0 = LayoutWriterFactory(dir.toString, TableLayout.Digest()).createWriter(0, 1L)
     w0.write(row(1L, "en", 10L)); w0.write(row(2L, "de", 20L))
-    val m0 = w0.commit().asInstanceOf[DigestCommitMessage]
+    val m0 = w0.commit().asInstanceOf[TableCommitMessage]
     assert(m0.files.map(_.fileName).sorted ==
       Seq("lang_de-part-00000.csv", "lang_en-part-00000.csv"))
-    new DigestBatchWrite(dir.toString, langSplit = true, None).commit(Array(m0))
+    new TableBatchWrite(dir.toString, TableLayout.Digest()).commit(Array(m0))
     val enBefore = lines("lang_en-part-00000.csv")
     // overwrite lang='de' with updated content; the fresh de file lands on
     // the SAME partition id → same final name (rename-in-place) — the
     // commit must not delete what it just renamed
-    val w1 = new LangSplitDataWriter(dir.toString, 0, 2L)
+    val w1 = LayoutWriterFactory(dir.toString, TableLayout.Digest()).createWriter(0, 2L)
     w1.write(row(2L, "de", 999L))
-    val m1 = w1.commit().asInstanceOf[DigestCommitMessage]
-    new DigestBatchWrite(dir.toString, langSplit = true,
-      Some(Array(EqualTo("lang", "de")))).commit(Array(m1))
+    val m1 = w1.commit().asInstanceOf[TableCommitMessage]
+    new DigestWrite(dir.toString, TableLayout.Digest(), requireDist = false,
+      Some(Array(EqualTo("lang", "de")))).toBatch.commit(Array(m1))
     assert(lines("lang_de-part-00000.csv") == Seq("2,de,999"),
       "overwrite did not replace the matched lang's file content")
     assert(lines("lang_en-part-00000.csv") == enBefore,
@@ -573,20 +574,20 @@ class OperatorSpec extends SparkSpec {
 
   test("q242 guard: an append commit refuses a fresh file name that is " +
       "already committed (the clobbered-append bug class stays loud)") {
-    import graft.sources.{CommittedFile, DigestBatchWrite, DigestCommitMessage, DigestManifest}
+    import graft.sources.{CommittedFile, DigestManifest, DigestWrite, TableBatchWrite, TableCommitMessage, TableLayout}
     val dir = java.nio.file.Files.createTempDirectory("graft_dupname_spec_")
     DigestManifest.publish(dir.toString, Seq("lang_de-part-00000.csv,2"))
-    val clash = DigestCommitMessage(Seq(CommittedFile("lang_de-part-00000.csv", 3)))
+    val clash = TableCommitMessage(Seq(CommittedFile("lang_de-part-00000.csv", 3)))
     val e = intercept[IllegalArgumentException] {
-      new DigestBatchWrite(dir.toString, langSplit = true, None)
+      new TableBatchWrite(dir.toString, TableLayout.Digest())
         .commit(Array(clash))
     }
     assert(e.getMessage.contains("job-unique names"))
     // ...while the legacy rename-in-place OVERWRITE of that same name
     // (which retires the old entry in the same commit) stays legal
-    new DigestBatchWrite(dir.toString, langSplit = true,
+    new DigestWrite(dir.toString, TableLayout.Digest(), requireDist = false,
       Some(Array(org.apache.spark.sql.sources.EqualTo("lang", "de"))))
-      .commit(Array(clash))
+      .toBatch.commit(Array(clash))
     assert(DigestManifest.listingFor(dir.toString, "_MANIFEST")
       .head == "lang_de-part-00000.csv,3")
   }

@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
-import graft.sources.{ParquetData, TableLayout, TableRows}
+import graft.sources.{DigestSink, ParquetData, TableLayout, TableRows}
 
 /** Mechanics of the parquet data plane in isolation (no SparkSession):
   * multi-row-group writes, footer stats, row-group selection by pushed
@@ -17,8 +17,10 @@ class ParquetDataSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft_pq_")
     dir.toFile.deleteOnExit()
     val f = dir.resolve("part-00000.parquet")
-    val w = new ParquetData.RowsWriter(f, rowGroupBytes)
-    (0 until n).foreach(i => w.write(i.toLong, s"l${i % 3}", (i * 7).toLong))
+    val w = new ParquetData.GenericRowsWriter(f,
+      ParquetData.messageType("graft_digest", DigestSink.rowSchema.fields.toSeq),
+      rowGroupBytes, bloomCols = Seq("doc_id"))
+    (0 until n).foreach(i => w.write(Array(i.toLong, s"l${i % 3}", (i * 7).toLong)))
     w.close()
     f
   }
