@@ -1,11 +1,11 @@
 package graft.actuarial
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.Tables.t
-import graft.functions.ReserveTrial.reserve_trial
+import graft.functions.ReserveTrial.{reserve_mean, reserve_trial}
 import graft.ops.Num._
 
 /** A policy row — canonical input schema of the reference system
@@ -49,8 +49,8 @@ case class PolicyTypeStats(
   * two exact distribution identities collapse the draws. The sum of n
   * i.i.d. Normal(100,10) severities is Normal(100·n, 10·√n) (SURVEY.md
   * §7.3 M5), and the claim counts of the policies sharing a term sum to
-  * one negative-binomial draw. One row per (type, trial) remains, drawn
-  * by a codegen'd native expression.
+  * one negative-binomial draw. One codegen'd native call per policy type
+  * then draws and averages all of its trials.
   */
 object Actuarial {
 
@@ -78,15 +78,16 @@ object Actuarial {
     StructField("term", DoubleType),
     StructField("premium", DoubleType)))
 
+  /** Derived once: a product encoder walks the case class by reflection. */
+  private lazy val policyEncoder: Encoder[Policy] = Encoders.product[Policy]
+
   /** CSV scan with the reference's fail-on-malformed stance (main.rs:51
     * panics on a bad row; FAILFAST is the Spark equivalent).
     */
-  def readPolicies(spark: SparkSession, path: String): Dataset[Policy] = {
-    import spark.implicits._
+  def readPolicies(spark: SparkSession, path: String): Dataset[Policy] =
     spark.read.schema(policySchema)
       .option("header", "true").option("mode", "FAILFAST")
-      .csv(path).as[Policy]
-  }
+      .csv(path).as(policyEncoder)
 
   /** Deterministic policy-shaped view over the driver testdata (FIXTURES.md
     * §B): each order is a policy with a 1–10 year term derived from its key.
@@ -138,65 +139,50 @@ object Actuarial {
     * NegativeBinomial(c, 1−q) variate — the sum of its c per-policy
     * Geometric(1−q) = ⌊Exp(365/term)⌋ draws (see
     * [[graft.functions.ReserveTrial]]). Plan:
-    *   1. one `groupBy(policy_type)` collects the terms into a sorted
-    *      `strata` array of (term, n, theta);
-    *   2. each type row explodes into `simChunks` of the session's
-    *      shuffle parallelism, spread by [[graft.Tables.barrier]], and
-    *      each chunk into its trials — one row per (type, sim);
-    *   3. `reserve_trial` draws that trial, keyed on
+    *   1. one hash exchange on policy_type (the plan's one shuffle) and
+    *      a `groupBy(policy_type)` over it collect each type's valid
+    *      terms — pinned to the session's shuffle parallelism by
+    *      [[graft.Tables.barrier]], since AQE would otherwise coalesce the
+    *      handful of type rows, and so every type's kernel, into one task;
+    *   2. `reserve_mean` builds that type's strata once and runs all
+    *      `nSims` trials in one codegen'd call, trial `sim` keyed on
     *      seed ⊕ xxhash64(policy_type, sim).
     * Work scales with strata × trials, not policies × trials, and every
-    * draw is a function of its row, so the result is bit-identical at any
-    * partition count (the average is an exact `dsum6` sum).
+    * draw is a function of its type and trial, so the result is
+    * bit-identical at any partition count: it equals the exact `dsum6`
+    * average of the row-level [[trials]].
     */
-  def simulateReserves(policies: DataFrame, nSims: Int, seed: Long): DataFrame =
-    trials(policies, nSims, seed)
-      .groupBy("policy_type")
-      .agg((dsum6(col("trial_reserves")) / nSims).as("mc_reserves"))
+  def simulateReserves(policies: DataFrame, nSims: Int, seed: Long): DataFrame = {
+    require(nSims > 0, "nSims must be positive")
+    terms(policies).select(col("policy_type"),
+      reserve_mean(col("terms"), xxhash64(col("policy_type")), nSims, seed).as("mc_reserves"))
+  }
 
   /** The (policy_type, sim, trial_reserves) rows [[simulateReserves]]
-    * averages: exactly trials 1..nSims per type with a valid policy.
+    * averages, one per trial: exactly trials 1..nSims per type with a
+    * valid policy, each drawn by the same per-trial function.
     */
   def trials(policies: DataFrame, nSims: Int, seed: Long): DataFrame = {
     require(nSims > 0, "nSims must be positive")
-    // term ≤ 0 panics the reference worker (main.rs:67, Exp::new of a
-    // non-positive rate); here such rows are excluded up front — an
-    // analysis-level guard instead of a runtime crash (SURVEY.md §7.5).
-    val terms = policies.filter(col("term") > 0)
-      .groupBy("policy_type")
-      .agg(array_sort(collect_list(col("term"))).as("terms"))
-    // run-length encode the sorted terms in one pass: a stratum starts at
-    // each (1-based) position whose term differs from its predecessor
-    val starts = terms.select(col("policy_type"), col("terms"),
-      filter(sequence(lit(1), size(col("terms"))), i =>
-        i === 1 || element_at(col("terms"), i) =!= element_at(col("terms"), i - 1)).as("starts"))
-    val strata = starts.select(col("policy_type"), zip_with(
-      col("starts"),
-      concat(slice(col("starts"), lit(2), size(col("starts"))), array(size(col("terms")) + 1)),
-      (from, until) => {
-        val term = element_at(col("terms"), from)
-        struct(term.as("term"), (until - from).cast("long").as("n"),
-          (lit(1.0) / expm1(lit(365.0) / term)).as("theta"))
-      }).as("strata"))
-    val chunks = array(simChunks(nSims, policies.sparkSession.sessionState.conf.numShufflePartitions)
-      .map { case (lo, hi) => struct(lit(lo).as("lo"), lit(hi).as("hi")) }: _*)
-    // the 1→nSims generator multiplies rows past what split planning sees:
-    // spread the (type, chunk) rows over the shuffle parallelism first
-    graft.Tables.barrier(strata.withColumn("chunk", explode(chunks)))
-      .select(col("policy_type"), col("strata"),
-        explode(sequence(col("chunk.lo"), col("chunk.hi"))).as("sim"))
+    terms(policies)
+      .select(col("policy_type"), col("terms"), explode(sequence(lit(1), lit(nSims))).as("sim"))
       .select(col("policy_type"), col("sim"),
-        reserve_trial(col("strata"),
+        reserve_trial(col("terms"),
           xxhash64(col("policy_type"), col("sim")).bitwiseXOR(lit(seed))).as("trial_reserves"))
   }
 
-  /** Trials 1..nSims split into min(parts, nSims) contiguous, non-empty
-    * (first, last) chunks of near-equal size.
+  /** Per policy type, the `terms` of its valid policies. term ≤ 0 and a
+    * non-finite term panic the reference worker (main.rs:67, Exp::new of
+    * a non-positive or non-finite rate); here such rows are excluded up
+    * front — an analysis-level guard instead of a runtime crash (SURVEY.md
+    * §7.5). Spark orders NaN above +∞, so `< ∞` drops both.
     */
-  private def simChunks(nSims: Int, parts: Int): Seq[(Int, Int)] = {
-    val k = math.min(nSims, parts)
-    (0 until k).map(c => ((c.toLong * nSims / k).toInt + 1, ((c + 1L) * nSims / k).toInt))
-  }
+  private def terms(policies: DataFrame): DataFrame =
+    graft.Tables.barrier(
+        policies.filter(col("term") > 0 && col("term") < Double.PositiveInfinity),
+        col("policy_type"))
+      .groupBy("policy_type")
+      .agg(collect_list(col("term")).as("terms"))
 
   // ---- q21: Monte Carlo vs closed form by policy type (rows-only) ---------
   def q21McReserves(s: SparkSession, dir: String): DataFrame = {
@@ -218,11 +204,11 @@ object Actuarial {
 
   // ---- q36: Monte Carlo at the REFERENCE trial count (rows-only) ----------
   // Identical pipeline to q21 but at the reference's 10,000 trials — the
-  // configuration the original system actually ran. The trials dimension
-  // is a narrow explode(sequence) generator, so 50× more trials is 50×
-  // more codegen'd (type, trial) rows through the same partial/final agg:
-  // no new shuffle, no driver involvement, which is why the reference
-  // scale is just a parameter here and not a different plan.
+  // configuration the original system actually ran. The trials loop lives
+  // inside each type's one `reserve_mean` call, so 50× more trials is 50×
+  // more draws in the same per-type kernel: no new rows, no new shuffle,
+  // no driver involvement, which is why the reference scale is just a
+  // parameter here and not a different plan.
   def q36McReferenceScale(s: SparkSession, dir: String): DataFrame = {
     val p = policiesFromOrders(s, dir)
     val mc = simulateReserves(p, nSims = referenceNumSimulations, seed = 42L)

@@ -214,6 +214,18 @@ object Similarity {
       coalesce(graft.functions.ArrayMath.cell_argmin(col("qv"), cents),
         lit(cents.map(_._1).min)))
 
+  /** Per-dimension sums `s0..s{dim-1}` of the group's `qv` vectors. A
+    * vector without exactly `dim` elements is a named error: a longer one
+    * would drop its extra elements from the centroid and a shorter one
+    * would fail inside `element_at`.
+    */
+  private def dimSums(dim: Int): Seq[Column] = {
+    val qv = when(size(col("qv")) === dim, col("qv")).otherwise(raise_error(concat(
+      lit("ragged embedding: vec_id "), col("vec_id").cast("string"), lit(" has "),
+      size(col("qv")).cast("string"), lit(s" elements, expected $dim"))))
+    (0 until dim).map(i => sum(element_at(qv, i + 1)).as(s"s$i"))
+  }
+
   // The build is deterministic, so its result is memoized per (session,
   // dir, k, iters) — q54 and q55 share one build instead of each paying
   // the Lloyd loop.
@@ -254,8 +266,9 @@ object Similarity {
       // values are integers; f64 integer sums are order-independent), so
       // centroids — and the oracle hash — are bit-identical.
       val dim = cents.head._2.length
-      val sumCols = (0 until dim).map(i =>
-        sum(element_at(col("qv"), i + 1)).as(s"s$i"))
+      require(cents.forall(_._2.length == dim),
+        s"ragged embedding: k-means seeds of ${cents.map(_._2.length).distinct.mkString(" and ")} elements")
+      val sumCols = dimSums(dim)
       var it = 1
       var converged = false
       while (it < iters && !converged) {
@@ -297,11 +310,9 @@ object Similarity {
     // kmeans). Sums are exact-integer f64, so centroid = s_i / n and
     // n_vectors are bit-identical to the per-(cell, pos) aggregation.
     val dim = cents.head._2.length
-    val sumCols = (0 until dim).map(i =>
-      sum(element_at(col("qv"), i + 1)).as(s"s$i"))
     assigned
       .groupBy("cell")
-      .agg(count(lit(1)).as("n"), sumCols: _*)
+      .agg(count(lit(1)).as("n"), dimSums(dim): _*)
       .select(col("cell"), col("n"),
         posexplode(array((0 until dim).map(i => col(s"s$i")): _*))
           .as(Seq("pos", "v")))

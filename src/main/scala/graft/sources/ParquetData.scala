@@ -286,6 +286,13 @@ object ParquetData {
     b.named(name)
   }
 
+  /** Candidate sizes of the adaptive bloom filter: they halve from
+    * parquet's 1 MB maximum down to 32 bytes, and each row group keeps
+    * the smallest candidate that holds its distinct values at the default
+    * false-positive rate — a 1-row group no longer writes 1 MB.
+    */
+  val BloomCandidates: Int = 16
+
   /** Row-at-a-time writer onto a staged path; encoding is columnar inside
     * the writer (that is Parquet's job — the write side of a columnar
     * plane is always row-fed by the engine's `DataWriter` contract).
@@ -314,7 +321,8 @@ object ParquetData {
         .withRowGroupRowCountLimit(rowGroupRows)
         .withPageSize(math.max(1024L, math.min(rowGroupBytes / 4, 1L << 20)).toInt)
         .withDictionaryEncoding(true)
-      bloomCols.foldLeft(b)((bb, c) => bb.withBloomFilterEnabled(c, true))
+      bloomCols.foldLeft(b.withAdaptiveBloomFilterEnabled(bloomCols.nonEmpty))((bb, c) =>
+        bb.withBloomFilterEnabled(c, true).withBloomFilterCandidateNumber(c, BloomCandidates))
         .build()
     }
     def write(values: Array[Any]): Unit = {

@@ -114,6 +114,27 @@ class ActuarialSpec extends SparkSpec {
     assert(out(0).getDouble(1) >= 0.0)
   }
 
+  test("non-finite terms are excluded like term <= 0, not a failed or null type total") {
+    // Spark's CSV reader parses NaN and Inf; the reference panics on both
+    // (Exp::new of a non-finite rate)
+    val dir = Files.createTempDirectory("graft_policies_nonfinite_")
+    Files.writeString(dir.resolve("policy_1.csv"),
+      """id,age,gender,smoking_status,occupation,policy_type,effective_date,term,premium
+        |P-1,34.0,F,non-smoker,engineer,t,2020-01-15,3650.0,1.0
+        |P-2,34.0,F,non-smoker,engineer,t,2020-01-15,NaN,1.0
+        |P-3,34.0,F,non-smoker,engineer,t,2020-01-15,Inf,1.0
+        |P-4,51.0,M,smoker,teacher,u,2018-06-01,730.0,1.0
+        |""".stripMargin)
+    val all = Actuarial.readPolicies(spark, dir.toString).toDF()
+    assert(all.filter(isnan(col("term")) || col("term") === Double.PositiveInfinity).count() == 2)
+    def run(p: org.apache.spark.sql.DataFrame) =
+      Actuarial.simulateReserves(p, nSims = 10, seed = 1L).collect()
+        .map(r => r.getString(0) -> r.get(1)).toMap
+    val got = run(all)
+    assert(got == run(all.filter(col("id").isin("P-1", "P-4"))))
+    assert(got("t") != null && java.lang.Double.isFinite(got("t").asInstanceOf[Double]), got)
+  }
+
   private def withShufflePartitions[T](n: Int)(body: => T): T = {
     val key = "spark.sql.shuffle.partitions"
     val prev = spark.conf.get(key)
@@ -150,6 +171,23 @@ class ActuarialSpec extends SparkSpec {
     val four = run(4)
     assert(four.nonEmpty)
     assert(run(1) == four && run(3) == four)
+  }
+
+  test("simulateReserves is the exact dsum6 average of the row-level trials") {
+    val p = Actuarial.policiesFromOrders(spark, sf)
+    def bits(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getString(0), java.lang.Double.doubleToRawLongBits(r.getDouble(1))))
+      .sortBy(_._1).toSeq
+    Seq(1, 3, 4).foreach { parts =>
+      withShufflePartitions(parts) {
+        Seq(1, 3, 500, 10001).foreach { nSims =>
+          val kernel = bits(Actuarial.simulateReserves(p, nSims, seed = 5L))
+          val rows = bits(Actuarial.trials(p, nSims, seed = 5L).groupBy("policy_type")
+            .agg((graft.ops.Num.dsum6(col("trial_reserves")) / nSims).as("mc_reserves")))
+          assert(kernel.nonEmpty && kernel == rows, s"nSims=$nSims partitions=$parts")
+        }
+      }
+    }
   }
 
   test("N < W leaves trailing workers empty (entrypoint.sh edge)") {

@@ -264,6 +264,71 @@ class FunctionsSpec extends SparkSpec {
     }
   }
 
+  test("reserve_trial's table sampler draws the exact NB(c, 1-q) pmf; big strata fall back") {
+    import graft.functions.ReserveTrial
+    import org.apache.commons.math3.special.Gamma
+    val draws = 100000
+    val cases = for (c <- Seq(1L, 3L, 9L); years <- Seq(1, 10, 30)) yield (c, 365.0 * years)
+    (cases :+ ((3000L, 3650.0))).zipWithIndex.foreach { case ((c, term), i) =>
+      val theta = 1.0 / math.expm1(365.0 / term) // q/(1-q), q = e^{-365/term}
+      val q = theta / (1.0 + theta)
+      val tag = s"c=$c term=$term"
+      val draw = ReserveTrial.stratum(c, theta)
+      // (1-q)^3000 underflows at a 10-year term: the Gamma-Poisson draw
+      if (c == 3000L) assert(draw.isInstanceOf[ReserveTrial.GammaPoisson], tag)
+      else assert(draw.isInstanceOf[ReserveTrial.Guided], tag)
+      val rng = new ReserveTrial.Stream(2000L + i)
+      val xs = Array.fill(draws)(draw.next(rng).toDouble)
+      val mean = xs.sum / draws
+      val m2 = xs.map(x => (x - mean) * (x - mean)).sum / draws
+      val m4 = xs.map(x => math.pow(x - mean, 4)).sum / draws
+      val (mu, vr) = (c * theta, c * theta * (1.0 + theta))
+      assert(math.abs(mean - mu) < 5.0 * math.sqrt(vr / draws), s"$tag mean=$mean vs $mu")
+      assert(math.abs(m2 - vr) < 5.0 * math.sqrt((m4 - m2 * m2) / draws), s"$tag var=$m2 vs $vr")
+      (0 to 3).foreach { k =>
+        // NB pmf: C(k+c-1, k) (1-q)^c q^k
+        val p = math.exp(Gamma.logGamma(k + c.toDouble) - Gamma.logGamma(c.toDouble) -
+          Gamma.logGamma(k + 1.0) + c * math.log1p(-q) + k * math.log(q))
+        val f = xs.count(_ == k).toDouble / draws
+        assert(math.abs(f - p) < 5.0 * math.sqrt(p * (1.0 - p) / draws) + 1e-12,
+          s"$tag P(N=$k)=$f vs $p")
+      }
+    }
+  }
+
+  test("reserve micro-units equal Spark's round(v, 6) cast to DECIMAL(28, 6)") {
+    import graft.functions.ReserveTrial
+    val rnd = new scala.util.Random(17L)
+    // reserve-like values, exact half-micro ties and their neighbours
+    val ties = Seq.fill(5000)((math.floor(rnd.nextDouble() * math.pow(10, 3 + rnd.nextInt(13))) + 0.5) / 1e6)
+    val vs = Seq.fill(20000)(rnd.nextDouble() * math.pow(10, rnd.nextInt(12) - 2)) ++
+      ties.flatMap(t => Seq(t, math.nextUp(t), math.nextDown(t))) ++
+      Seq(0.0, 1e9, 2.5e-7, 5e-7, 1e12 + 0.5e-6, 123456.0000005)
+    val spark6 = vs.toDF("v")
+      .select(round(col("v"), 6).cast(org.apache.spark.sql.types.DecimalType(28, 6)))
+      .collect().map(_.getDecimal(0).unscaledValue.longValueExact)
+    vs.zip(spark6).foreach { case (v, want) =>
+      assert(ReserveTrial.micros(v) == want, s"v=$v micros=${ReserveTrial.micros(v)} spark=$want")
+    }
+  }
+
+  test("q54 rejects a ragged embedding by name, as a k-means seed or not") {
+    def md5(id: Long) = java.security.MessageDigest.getInstance("MD5")
+      .digest(id.toString.getBytes("UTF-8")).map(b => f"$b%02x").mkString
+    val ids = (1L to 20L).sortBy(md5)
+    // the first id by md5 seeds k-means; the last is never a seed
+    Seq(ids.head, ids.last).foreach { ragged =>
+      val dir = java.nio.file.Files.createTempDirectory("graft_ragged_").toString
+      ids.map { id =>
+        val n = if (id == ragged) 3 else 4
+        (id, Array.tabulate(n)(j => ((id * 7 + j) % 5).toFloat), 0)
+      }.toDF("vec_id", "embedding", "label").write.parquet(s"$dir/embeddings.parquet")
+      val e = intercept[Exception](graft.ops.Similarity.q54IvfCentroids(spark, dir).collect())
+      assert(Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage).contains("ragged embedding")), e)
+    }
+  }
+
   test("sketch aggregates reject mistyped input at analysis time, " +
       "not as an executor-side ClassCastException") {
     import graft.functions.{BitmapAgg, CountMinAgg, HllAgg, MinHashAgg, MisraGriesAgg, SimHashAgg}

@@ -1045,4 +1045,28 @@ class PlanSpec extends SparkSpec {
     assert(enc.split(";")(0).toInt == 1024)
     (0L until 64L).foreach(v => assert(BloomCodec.mayContain(enc, v)))
   }
+
+  test("reserve MC: one hash exchange below the per-type kernel, no chunk shuffle") {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.GenerateExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val plan = graft.actuarial.Actuarial
+      .simulateReserves(graft.actuarial.Actuarial.policiesFromOrders(spark, sf), 500, 7L)
+      .queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case p => p
+      }
+    // no round-robin spread of trial chunks and no trial explode
+    assert(!plan.toString.contains("RoundRobinPartitioning"), plan)
+    assert(plan.collect { case g: GenerateExec => g }.isEmpty, plan)
+    val kernel = plan.collect {
+      case n if n.expressions.exists(_.exists(_.isInstanceOf[graft.functions.ReserveMean])) => n
+    }
+    assert(kernel.size == 1, plan)
+    // the only exchange is the hash exchange on policy_type below the kernel
+    val below = kernel.head.collect { case e: ShuffleExchangeExec => e }
+    assert(below.size == 1 && below.head.outputPartitioning.isInstanceOf[HashPartitioning] &&
+      plan.collect { case e: ShuffleExchangeExec => e }.size == 1, plan)
+  }
 }
