@@ -45,10 +45,14 @@ object SessionCache {
 
   private def register(c: SessionCache[_]): Unit = all.add(c)
 
-  /** Drop every memoized entry bound to `s`, across all caches. The builds
-    * are deterministic, so results are unchanged — only who pays for the
+  /** Drop every memoized entry bound to `s`, across all caches, and every
+    * staged index build ([[TempDirs.stagedBuild]]). The builds are
+    * deterministic, so results are unchanged — only who pays for the
     * build. Dropped localCheckpoint blocks are reclaimed by the
     * ContextCleaner once the DataFrames become unreachable.
     */
-  def invalidate(s: SparkSession): Unit = all.forEach(_.drop(s))
+  def invalidate(s: SparkSession): Unit = {
+    all.forEach(_.drop(s))
+    TempDirs.dropBuilds()
+  }
 }

@@ -13,15 +13,16 @@ import java.util.concurrent.ConcurrentHashMap
   */
 object TempDirs {
   private val cache = new ConcurrentHashMap[String, Path]()
+  private val builds = ConcurrentHashMap.newKeySet[String]()
+
+  private def delete(p: Path): Unit =
+    try
+      Files.walk(p).sorted(Comparator.reverseOrder[Path]())
+        .forEach(f => { val _ = Files.deleteIfExists(f) })
+    catch { case _: Throwable => () } // best-effort cleanup
 
   private lazy val hookInstalled: Unit = {
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      cache.values.forEach { p =>
-        try
-          Files.walk(p).sorted(Comparator.reverseOrder[Path]())
-            .forEach(f => { val _ = Files.deleteIfExists(f) })
-        catch { case _: Throwable => () } // best-effort cleanup
-      }))
+    Runtime.getRuntime.addShutdownHook(new Thread(() => cache.values.forEach(delete)))
   }
 
   /** The staged directory for `key`, created (and populated via `init`)
@@ -35,4 +36,19 @@ object TempDirs {
       p
     })
   }
+
+  /** A staged directory that holds a BUILD a query consumes (an index),
+    * not a copy of its input: staged like [[staged]], but dropped with
+    * its files by [[dropBuilds]], so the next use builds it again.
+    */
+  def stagedBuild(key: String)(init: Path => Unit): Path = {
+    builds.add(key)
+    staged(key)(init)
+  }
+
+  /** Deletes every [[stagedBuild]] directory; run by
+    * [[SessionCache.invalidate]] with the memo drops.
+    */
+  private[graft] def dropBuilds(): Unit =
+    builds.forEach(k => Option(cache.remove(k)).foreach(delete))
 }

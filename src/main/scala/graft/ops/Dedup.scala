@@ -114,21 +114,23 @@ object Dedup {
   }
 
   /** Memoized, MATERIALIZED [[pairCounts]] — one checkpointed build per
-    * (session, dir), consumed by every metric/threshold pass (q135, and
-    * via [[q41Pairs]] by q44/q107). q41 itself stays on the RAW plan so
-    * the PlanSpec locks (stop-shingle partial agg, broadcast anti-join,
-    * no cartesian) keep testing the real build, and the bench keeps
-    * paying it honestly once.
+    * (session, dir), consumed by every metric/threshold pass: q41, q135,
+    * q149, and via [[q41Pairs]] q44/q107. Whichever of them runs first
+    * after an invalidation pays the one build inside its own call; the
+    * rest read the leaf. No query runs [[pairCounts]] itself, so a
+    * curation pass never builds the inverted-index join twice (LintSpec
+    * pins the one call site; PlanSpec locks the build's own plan).
     *
     * The checkpointed leaf is PRE-FILTERED to `9·n_common ≥ 8·min(n_a,
     * n_b)` (containment ≥ 8/9), which every consumer implies, so the
     * materialized relation is near-dup-sized, never the full weak-
     * co-occurrence pair set (near-quadratic on real corpora):
     *   * q135 keeps containment ≥ 0.9 ⟹ n_common ≥ 0.9·min > (8/9)·min;
-    *   * q41Pairs keeps jaccard ≥ 0.8 ⟺ 9·n_common ≥ 4·(n_a+n_b)
+    *   * q41 and q149 keep jaccard ≥ 0.8 ⟺ 9·n_common ≥ 4·(n_a+n_b)
     *     ≥ 8·min(n_a, n_b).
-    * Both thresholds re-apply downstream, so results are bit-identical
-    * to filtering the unfiltered relation.
+    * Every threshold re-applies downstream, so results are bit-identical
+    * to filtering the unfiltered relation (OperatorSpec pins q41 against
+    * the raw relation, with a pair exactly on the prefilter's boundary).
     */
   private val pairCountsCache = new graft.SessionCache[DataFrame]()
   private[graft] def pairCountsMemo(s: SparkSession, dir: String): DataFrame =
@@ -137,7 +139,7 @@ object Dedup {
         .filter(col("n_common") * 9 >= least(col("n_a"), col("n_b")) * 8)
         .localCheckpoint(true))
 
-  private def jaccardPairs(base: DataFrame): DataFrame =
+  private[graft] def jaccardPairs(base: DataFrame): DataFrame =
     base
       .withColumn("jaccard",
         col("n_common").cast("double") / (col("n_a") + col("n_b") - col("n_common")))
@@ -146,7 +148,7 @@ object Dedup {
       .orderBy("id_a", "id_b")
 
   def q41NgramJaccard(s: SparkSession, dir: String): DataFrame =
-    jaccardPairs(pairCounts(s, dir))
+    jaccardPairs(pairCountsMemo(s, dir))
 
   /** Shared CTE chain producing the deterministic jaccard pair list —
     * reused by the q41 oracle and (as the edge list) by the q44 cluster
@@ -183,9 +185,9 @@ object Dedup {
   // machinery. Reported: pairs with containment ≥ 0.9, with their
   // Jaccard attached so the "Jaccard-blind" ones are visible. Fixed-point
   // ppm (q81 discipline). The metric, not the join, changes — so q135
-  // serves from the SHARED memoized pair build ([[pairCountsMemo]], whose
-  // raw plan q41 keeps locked) instead of paying its own inverted-index
-  // join: steady-state cost is one threshold pass over the checkpointed
+  // serves from the SHARED memoized pair build ([[pairCountsMemo]], the
+  // one q41 reads too) instead of paying its own inverted-index join:
+  // steady-state cost is one threshold pass over the checkpointed
   // (id_a, id_b, counts) leaf.
   def q135Containment(s: SparkSession, dir: String): DataFrame = {
     pairCountsMemo(s, dir)
@@ -276,9 +278,8 @@ object Dedup {
   /** Memoized, MATERIALIZED q41 pair list — the near-dup edge set is the
     * input of cluster formation (q44) and graph motif counting (q107);
     * derived from the shared [[pairCountsMemo]] build (one inverted-index
-    * join per session funds q44/q107/q135 alike), checkpointed once more
-    * as the small post-threshold edge list. The public q41 query stays on
-    * the raw plan so its plan locks keep testing the real build.
+    * join per session funds q41/q44/q107/q135/q149 alike), checkpointed
+    * once more as the small post-threshold edge list.
     */
   private[graft] def q41Pairs(s: SparkSession, dir: String): DataFrame =
     pairsCache.getOrCompute(s, dir)(
@@ -715,7 +716,10 @@ object Dedup {
       .filter(col("fp").isNotNull)
   }
 
-  def q127Winnowing(s: SparkSession, dir: String): DataFrame = {
+  /** q127's reported pairs, unsorted and unmaterialized — the fingerprint
+    * index build whose plan PlanSpec locks.
+    */
+  private[graft] def winnowPairs(s: SparkSession, dir: String): DataFrame = {
     val fps = winnowFingerprints(t(s, dir, "documents"))
     val hot = fps.groupBy("fp").agg(count(lit(1)).as("df"))
       .filter(col("df") > 100)
@@ -727,8 +731,14 @@ object Dedup {
       .groupBy("id_a", "id_b")
       .agg(count(lit(1)).as("n_shared"))
       .filter(col("n_shared") >= 2)
-      .orderBy("id_a", "id_b")
   }
+
+  // The pairs are materialized before the sort: the range partitioner
+  // samples its input in a job of its own, and without a materialized
+  // leaf that job re-runs the winnowing, the anti-join and the self-join
+  // before the sort's shuffle runs them again.
+  def q127Winnowing(s: SparkSession, dir: String): DataFrame =
+    winnowPairs(s, dir).localCheckpoint(true).orderBy("id_a", "id_b")
 
   val q127Sql: String = {
     val span = winK + winW - 2 // inclusive window-start bound is len - span

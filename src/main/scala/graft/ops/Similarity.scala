@@ -720,7 +720,7 @@ object Similarity {
   // index BUILD (q54's IVF k-means, q121's PQ encode) runs ONCE and writes
   // its artifacts to parquet; every search afterwards reads the artifacts
   // and never rescans the embeddings corpus. Four artifacts are staged
-  // (one write per JVM — [[graft.TempDirs]]):
+  // (one write per build — [[graft.TempDirs.stagedBuild]]):
   //   ivf_centroids  (cell, pos, cv)            — k·dim rows
   //   ivf_postings   (cell, vec_id, qv, qnorm)  — the inverted file,
   //                                               partitioned BY CELL so a
@@ -750,7 +750,7 @@ object Similarity {
   }
 
   private[graft] def annIndexDir(s: SparkSession, dir: String): java.nio.file.Path =
-    graft.TempDirs.staged(s"ann_index:$dir") { p =>
+    graft.TempDirs.stagedBuild(s"ann_index:$dir") { p =>
       val (cents, assigned) = kmeans(s, dir)
       writeCentroids(s, cents, p.resolve("ivf_centroids").toString)
       assigned.select(col("cell"), col("vec_id"), col("qv"), col("qnorm"))
@@ -925,7 +925,7 @@ object Similarity {
       .select("vec_id", "sub", "code")
 
   private[graft] def annIndexIncrDir(s: SparkSession, dir: String): java.nio.file.Path =
-    graft.TempDirs.staged(s"ann_index_incr:$dir") { p =>
+    graft.TempDirs.stagedBuild(s"ann_index_incr:$dir") { p =>
       val baseCol = col("vec_id") % 10 =!= 9
       // base build: q137's artifacts over the base slice only
       val (cents, assigned) = kmeans(s, dir, base = Some((baseCol, "mod10base")))

@@ -182,4 +182,37 @@ class LintSpec extends AnyFunSuite {
       s"un-audited parquet writer sites: ${sites("ExampleParquetWriter.builder(")} " +
         s"vs audited $builders — write parquet rows through GenericRowsWriter")
   }
+
+  /** The near-dup pair index (`Dedup.pairCounts`, the inverted-index
+    * self-join) is built once per session through `Dedup.pairCountsMemo`,
+    * and every pair query reads that memo. A second call site would let a
+    * query quietly pay its own copy of the build again, and a curation
+    * pass would build the join twice. This lint pins the call sites in
+    * main sources to the one inside `pairCountsMemo`.
+    */
+  test("the near-dup pair index is built only inside its memo") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala/graft")
+    val call = "\\bpairCounts\\(".r
+    val sites = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap { p =>
+        val file = root.relativize(p).toString.replace('\\', '/')
+        val lines = java.nio.file.Files.readAllLines(p).asScala.toIndexedSeq
+        lines.indices.collect {
+          case i if call.findFirstIn(lines(i)).isDefined && {
+              val t = lines(i).trim
+              !t.startsWith("//") && !t.startsWith("*") && !t.contains("def pairCounts(")
+            } =>
+            // the def enclosing the call: the nearest one above it
+            val owner = lines.take(i).reverse.find(_.contains(" def "))
+              .flatMap("def (\\w+)".r.findFirstMatchIn(_)).map(_.group(1))
+            s"$file:${owner.getOrElse("?")}"
+        }
+      }
+      .toSeq
+    assert(sites == Seq("ops/Dedup.scala:pairCountsMemo"),
+      s"pairCounts( called outside pairCountsMemo: $sites — read the shared " +
+        "memo (Dedup.pairCountsMemo) instead of building the pair index again")
+  }
 }

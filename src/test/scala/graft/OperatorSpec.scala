@@ -55,6 +55,60 @@ class OperatorSpec extends SparkSpec {
     }
   }
 
+  test("q41 from the shared pair memo equals the raw pair relation, cold and warm") {
+    // planted corpus: every doc its own vocabulary, so only the planted
+    // overlaps pair up
+    def words(p: String, r: Range) = r.map(i => s"$p$i").mkString(" ")
+    val planted = java.nio.file.Files.createTempDirectory("graft_q41_memo_").toString
+    spark.createDataFrame(Seq(
+      // 9 shingles each, 8 in common: jaccard 8/10 = 0.8 and containment
+      // 8/9 exactly, ON the memo's 9·n_common ≥ 8·min(n_a, n_b) prefilter
+      1L -> words("a", 1 to 11), 2L -> (words("a", 1 to 10) + " b11"),
+      3L -> words("a", 1 to 11), // exact copy of doc 1
+      // 7 of 9 shingles in common: under both thresholds
+      4L -> words("e", 1 to 11), 5L -> (words("e", 1 to 9) + " f10 f11"),
+      // doc 6 inside doc 7: in the memo (containment 1), jaccard 9/29
+      6L -> words("g", 1 to 11), 7L -> (words("g", 1 to 11) + " " + words("h", 1 to 20)),
+      8L -> "", 9L -> "x y"))
+      .toDF("doc_id", "text").write.parquet(s"$planted/documents.parquet")
+    val raw = (d: String) =>
+      ops.Dedup.jaccardPairs(ops.Dedup.pairCounts(spark, d)).collect().toSeq
+    Seq(sf, planted).foreach { d =>
+      val want = raw(d)
+      assert(want.nonEmpty, s"expected near-dup pairs in $d")
+      SessionCache.invalidate(spark)
+      assert(ops.Dedup.q41NgramJaccard(spark, d).collect().toSeq == want,
+        s"cold memo: q41 differs from the raw pair relation on $d")
+      assert(ops.Dedup.q41NgramJaccard(spark, d).collect().toSeq == want,
+        s"warm memo: q41 differs from the raw pair relation on $d")
+    }
+    val pairs = raw(planted).map(r => (r.getLong(0), r.getLong(1), r.getDouble(5)))
+    assert(pairs == Seq((1L, 2L, 0.8), (1L, 3L, 1.0), (2L, 3L, 0.8)),
+      s"planted pairs: $pairs")
+  }
+
+  test("an invalidated staged index build is rebuilt on next use") {
+    import java.nio.file.Files
+    var builds = 0
+    def stage() = TempDirs.stagedBuild("staged_build_spec") { p =>
+      builds += 1
+      Files.writeString(p.resolve("artifact"), builds.toString)
+    }
+    val first = stage()
+    assert(stage() == first && builds == 1, "a live build must be reused")
+    SessionCache.invalidate(spark)
+    assert(!Files.exists(first), "invalidation must delete the build")
+    val second = stage()
+    assert(builds == 2 && Files.readString(second.resolve("artifact")) == "2",
+      "the next use must build again")
+    // the persisted ANN index follows the same rule
+    val idx = ops.Similarity.annIndexDir(spark, sf)
+    SessionCache.invalidate(spark)
+    assert(!Files.exists(idx), "invalidation must delete the ANN index")
+    val rebuilt = ops.Similarity.annIndexDir(spark, sf)
+    assert(Files.exists(rebuilt.resolve("pq_codes")), "the ANN index must be rebuilt")
+  }
+
   test("minhash-LSH candidates recover the high-jaccard exact pairs") {
     val exact = ops.Dedup.q41NgramJaccard(spark, sf)
       .filter(col("jaccard") >= 0.9)

@@ -9,6 +9,12 @@ class PlanSpec extends SparkSpec {
   private def planOf(name: String): String =
     SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan.toString
 
+  /** The inverted-index pair build q41 (and q135/q149) read through the
+    * shared memo — its locks read the plan that runs the build.
+    */
+  private def pairBuildPlan: String =
+    ops.Dedup.pairCounts(spark, sf).queryExecution.executedPlan.toString
+
   /** Slice of the plan strictly below a Window EXEC node (its children).
     * Anchors on the operator line `Window [` — a bare "Window" substring
     * also matches WindowGroupLimit and window-spec text, which would start
@@ -47,20 +53,44 @@ class PlanSpec extends SparkSpec {
 
   test("no dedup/similarity query degenerates to a cartesian product") {
     // q55 is excluded from the NLJ check: its query→centroid routing is an
-    // intentional broadcast cross against ~|cells| rows.
-    Seq("q41_ngram_jaccard", "q42_minhash_lsh", "q43_simhash",
-      "q52_ann_lsh", "q53_embed_dedup", "q127_winnowing").foreach { q =>
-      val p = planOf(q)
+    // intentional broadcast cross against ~|cells| rows. q41 and q127 read
+    // materialized pair relations, so theirs are the plans of the builds.
+    val plans = Seq(
+      "q41_ngram_jaccard" -> pairBuildPlan,
+      "q127_winnowing" ->
+        ops.Dedup.winnowPairs(spark, sf).queryExecution.executedPlan.toString) ++
+      Seq("q42_minhash_lsh", "q43_simhash", "q52_ann_lsh", "q53_embed_dedup")
+        .map(q => q -> planOf(q))
+    plans.foreach { case (q, p) =>
       assert(!p.contains("CartesianProduct"), s"$q has a cartesian product")
       assert(!p.contains("BroadcastNestedLoopJoin"), s"$q has a nested-loop join")
     }
     assert(!planOf("q55_ivf_ann").contains("CartesianProduct"))
   }
 
+  test("q41: serves from the shared checkpointed pair memo, not its own join") {
+    // q41 runs first in a curation pass, so it pays the one memo build
+    // inside its call; the plan it returns reads the checkpointed leaf
+    val p = planOf("q41_ngram_jaccard")
+    assert(p.contains("Scan ExistingRDD"),
+      "q41 must read the checkpointed pair memo, not rebuild the join")
+    assert(!p.contains("Join"), "q41 must be join-free")
+  }
+
+  test("q127: the output sort reads the materialized pair relation") {
+    // a range sort straight over the join → aggregate pipeline runs the
+    // whole fingerprint self-join twice: once in the range partitioner's
+    // sampling job, once in the sort's shuffle
+    val p = planOf("q127_winnowing")
+    assert(p.contains("Scan ExistingRDD"),
+      "q127's sort must read a materialized leaf")
+    assert(!p.contains("Join"), "q127's sort must not re-run the self-join")
+  }
+
   test("q135: serves from the shared checkpointed pair memo, not its own join") {
     // the actual invariant after the shared-memo refactor: q135's plan is
     // a checkpoint-leaf scan (the one expensive inverted-index build is
-    // paid once, by the memo; q41's raw plan keeps that join locked)
+    // paid once, by the memo; the build's own plan keeps that join locked)
     val p = planOf("q135_containment")
     assert(p.contains("Scan ExistingRDD"),
       "q135 must read the checkpointed pair memo, not rebuild the join")
@@ -118,7 +148,7 @@ class PlanSpec extends SparkSpec {
     // hot shingle to one task before the df filter can drop it — the exact
     // skew the filter defends against. The de-skewed plan computes df with
     // a (map-side partial) HashAggregate and anti-joins the tiny hot list.
-    val p = planOf("q41_ngram_jaccard")
+    val p = pairBuildPlan
     assert(!p.contains("Window"), "df must not be computed as a window")
     assert(p.contains("HashAggregate"), "df needs a partial hash aggregate")
     assert(p.contains("BroadcastHashJoin") && p.contains("LeftAnti"),
@@ -983,7 +1013,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q41: the lambda-built shingle expression stays out of scan filters") {
-    val p = planOf("q41_ngram_jaccard")
+    val p = pairBuildPlan
     val scanSection = p.split("Scan parquet").drop(1).mkString
     assert(!p.contains("lambdafunction") ||
       !p.split("\\+- (?:\\*\\(\\d+\\) )?Filter").exists(s =>
