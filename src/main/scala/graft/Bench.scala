@@ -277,5 +277,8 @@ object Bench {
       .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // the DSv2 catalog of sources/: `graft.ns.<table>` resolves in every
+      // session built here and in every newSession() of it
+      .config("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
       .getOrCreate()
 }

@@ -33,6 +33,26 @@ object Tables {
   def barrier(df: DataFrame, cols: org.apache.spark.sql.Column*): DataFrame =
     df.repartition(df.sparkSession.sessionState.conf.numShufflePartitions, cols: _*)
 
+  /** Runs `f` with each `key -> value` set on the session conf, then, on
+    * return or throw, puts back each key's previous session value, or
+    * unsets a key the session had not set. A query function must not leave
+    * process-visible conf changes behind, so every query-scoped conf goes
+    * through here. "Previous" is what the session set, not the default
+    * `conf.getOption` reports: restoring a default would pin it.
+    */
+  def withConf[T](s: SparkSession, kvs: (String, String)*)(f: => T): T = {
+    val prior = s.conf.getAll
+    try {
+      kvs.foreach { case (k, v) => s.conf.set(k, v) }
+      f
+    } finally kvs.foreach { case (k, _) =>
+      prior.get(k) match {
+        case Some(v) => s.conf.set(k, v)
+        case None => s.conf.unset(k)
+      }
+    }
+  }
+
   /** `events.parquet` has shipped with `ts` as either TIMESTAMP(NANOS) or
     * TIMESTAMP(MICROS) across testdata generations, so the loader adapts to
     * the unit actually on disk instead of assuming one:

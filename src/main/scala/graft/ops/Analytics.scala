@@ -1415,7 +1415,7 @@ object Analytics {
     val orders = cboTableFor(s, dir, "orders",
       "o_orderkey, o_orderpriority, o_orderstatus")
     val lineitem = cboTableFor(s, dir, "lineitem", "l_orderkey")
-    val confs = Seq(
+    graft.Tables.withConf(s,
       "spark.sql.cbo.enabled" -> cbo.toString,
       // 4 KB sits between the no-CBO estimate of the filtered dim (the
       // projected scan size — 7.3 KB at spec scale; Project scales the
@@ -1423,10 +1423,7 @@ object Analytics {
       // 16 KB would broadcast on both sides) and the CBO estimate
       // (rowCount through two equality selectivities — 1.6 KB)
       "spark.sql.autoBroadcastJoinThreshold" -> "4096",
-      "spark.sql.adaptive.enabled" -> "false")
-    val prev = confs.map { case (k, _) => k -> s.conf.getOption(k) }
-    confs.foreach { case (k, v) => s.conf.set(k, v) }
-    try {
+      "spark.sql.adaptive.enabled" -> "false") {
       val dim = s.table(orders)
         .filter(col("o_orderpriority") === "1-URGENT" && col("o_orderstatus") === "F")
       val joined = s.table(lineitem)
@@ -1437,9 +1434,6 @@ object Analytics {
           countDistinct(col("l_orderkey")).as("n_orders"))
       val rows = if (execute) joined.collect().toSeq else Seq.empty
       (rows, joined.queryExecution.executedPlan.toString)
-    } finally prev.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
     }
   }
 

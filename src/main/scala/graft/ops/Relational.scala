@@ -891,17 +891,14 @@ object Relational {
   //     ones — at this scale the byte ratio is < 2× even though the row
   //     ratio is 7×, so the factor is 1 with a positive byte floor rather
   //     than the default 5.
-  def q177AqeSkewJoin(s: SparkSession, dir: String): DataFrame = {
-    val confs = Seq(
+  def q177AqeSkewJoin(s: SparkSession, dir: String): DataFrame =
+    graft.Tables.withConf(s,
       "spark.sql.adaptive.enabled" -> "true",
       "spark.sql.adaptive.skewJoin.enabled" -> "true",
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "1",
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "2KB",
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "4KB",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val prev = confs.map { case (k, _) => k -> s.conf.getOption(k) }
-    confs.foreach { case (k, v) => s.conf.set(k, v) }
-    try {
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val fact = t(s, dir, "lineitem")
         .repartition(8) // mapper granularity for the skew split (see above)
         .select(expr("CASE WHEN l_orderkey % 10 < 6 THEN 7 ELSE l_orderkey END")
@@ -917,11 +914,7 @@ object Relational {
       lastSkewJoinPlan = joined.queryExecution.executedPlan.toString
       s.createDataFrame(s.sparkContext.parallelize(rows.toIndexedSeq, 1), joined.schema)
         .orderBy("o_orderpriority")
-    } finally prev.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
     }
-  }
 
   /** Final adaptive plan of the last q177 run, for the PlanSpec skew lock. */
   @volatile private[graft] var lastSkewJoinPlan: String = ""
@@ -941,15 +934,12 @@ object Relational {
   // restored conf scope; broadcast is disabled because a broadcast join
   // needs no runtime filter (the closure q177 forces SMJ for the same
   // reason). Materialized inside the scope; plan kept for the spec lock.
-  def q179RuntimeBloomJoin(s: SparkSession, dir: String): DataFrame = {
-    val confs = Seq(
+  def q179RuntimeBloomJoin(s: SparkSession, dir: String): DataFrame =
+    graft.Tables.withConf(s,
       "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
       "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
       "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "100MB",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val prev = confs.map { case (k, _) => k -> s.conf.getOption(k) }
-    confs.foreach { case (k, v) => s.conf.set(k, v) }
-    try {
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val fact = t(s, dir, "lineitem").select(col("l_partkey"), col("l_extendedprice"))
       val dim = t(s, dir, "part")
         .filter(col("p_size") <= 10)
@@ -964,11 +954,7 @@ object Relational {
       lastBloomJoinPlan = joined.queryExecution.executedPlan.toString
       s.createDataFrame(s.sparkContext.parallelize(rows.toIndexedSeq, 1), joined.schema)
         .orderBy("p_brand")
-    } finally prev.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
     }
-  }
 
   /** Final plan of the last q179 run, for the PlanSpec bloom lock. */
   @volatile private[graft] var lastBloomJoinPlan: String = ""

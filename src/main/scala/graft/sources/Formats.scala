@@ -28,6 +28,28 @@ object Formats {
     StructField("source", StringType),
     StructField("n_chars", LongType)))
 
+  /** The digest table's columns as every fixture declares them. */
+  private[graft] val digestCols = "doc_id BIGINT, lang STRING, n_chars BIGINT"
+
+  /** `graft.ns.<stem>_<hex of dir's hash>`: a fixture's table in the
+    * `graft` catalog, one per testdata dir (the registry is JVM-global).
+    */
+  private def tableName(stem: String, dir: String): String =
+    s"graft.ns.${stem}_${Integer.toHexString(dir.hashCode)}"
+
+  /** `CREATE TABLE IF NOT EXISTS name (cols) USING provider TBLPROPERTIES
+    * (props)`; `provider` may carry a trailing PARTITIONED BY clause.
+    */
+  private[graft] def createTable(s: SparkSession, name: String, provider: String, cols: String,
+      props: (String, Any)*): Unit =
+    s.sql(s"CREATE TABLE IF NOT EXISTS $name ($cols) USING $provider TBLPROPERTIES (" +
+      props.map { case (k, v) => s"'$k'='$v'" }.mkString(", ") + ")")
+
+  /** q185's catalog table over the q163 sequence, shared by q189/q193/q231. */
+  private def createSeq100k(s: SparkSession): Unit =
+    createTable(s, "graft.ns.seq100k", "graft_seq", "id BIGINT, h STRING, v BIGINT",
+      "rows" -> seqRows, "slices" -> seqSlices)
+
   // ---- q87: JSON-lines source round-trip ----------------------------------
   // JSON string escaping must preserve the document text byte-for-byte —
   // proven by md5 against the oracle's read of the original parquet.
@@ -381,18 +403,17 @@ object Formats {
 
   // ---- q185: V2 TableCatalog — catalog-qualified identifier resolution ----
   // The q163 connector behind a NAME instead of a path: [[GraftCatalog]] is
-  // registered as `spark.sql.catalog.graft`, DDL creates the table entry
+  // registered as `spark.sql.catalog.graft` by `Bench.session` (every
+  // session built there, and its `newSession()`s, resolves it; no query
+  // sets it), DDL creates the table entry
   // (`CREATE TABLE graft.ns.seq100k ... TBLPROPERTIES('rows'=...)` routes
   // to TableCatalog.createTable), and the read resolves `graft.ns.seq100k`
   // through CatalogManager → loadTable → SeqTable — the full V2 identifier
   // chain, with every pushdown the path-based load proves (PlanSpec locks
   // the narrowed range on the catalog-resolved scan AND the DDL lifecycle:
-  // create → list → rename → drop). Catalog configs are resolved lazily,
-  // so the runtime conf.set works on an already-built session.
+  // create → list → rename → drop).
   def q185CatalogTable(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    s.sql(s"""CREATE TABLE IF NOT EXISTS graft.ns.seq100k (id BIGINT, h STRING, v BIGINT)
-             |USING graft_seq TBLPROPERTIES ('rows'='$seqRows', 'slices'='$seqSlices')""".stripMargin)
+    createSeq100k(s)
     s.sql(s"""SELECT substr(h, 1, 1) AS bucket, COUNT(*) AS n,
              |  CAST(SUM(v) AS BIGINT) AS sum_v
              |FROM graft.ns.seq100k
@@ -472,13 +493,11 @@ object Formats {
   // the de-update applied — any row lost, duplicated, or double-applied
   // breaks the hash.
   def q186OverwriteByFilter(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    val tbl = s"graft.ns.docsink_${Integer.toHexString(dir.hashCode)}"
+    val tbl = tableName("docsink", dir)
     val staged = graft.TempDirs.staged(s"dsv2_overwrite:$dir") { p =>
       import scala.jdk.CollectionConverters._
       val sink = p.resolve("sink")
-      s.sql(s"""CREATE TABLE IF NOT EXISTS $tbl (doc_id BIGINT, lang STRING, n_chars BIGINT)
-               |USING graft_digest TBLPROPERTIES ('path'='$sink')""".stripMargin)
+      createTable(s, tbl, "graft_digest", digestCols, "path" -> sink)
       val docs = t(s, dir, "documents")
         .select(col("doc_id"), col("lang"), col("n_chars"))
       docs.writeTo(tbl).append()
@@ -537,12 +556,10 @@ object Formats {
   // fails to carry an unmatched row breaks the hash — exactly the
   // carry-through bug class group-based engines must guard.
   def q203SqlUpdate(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    val tbl = s"graft.ns.docupd_${Integer.toHexString(dir.hashCode)}"
+    val tbl = tableName("docupd", dir)
     graft.TempDirs.staged(s"dsv2_sql_update:$dir") { p =>
       val sink = p.resolve("sink")
-      s.sql(s"""CREATE TABLE IF NOT EXISTS $tbl (doc_id BIGINT, lang STRING, n_chars BIGINT)
-               |USING graft_digest TBLPROPERTIES ('path'='$sink', 'rowlevel'='true')""".stripMargin)
+      createTable(s, tbl, "graft_digest", digestCols, "path" -> sink, "rowlevel" -> "true")
       t(s, dir, "documents").createOrReplaceTempView("docs_q203")
       s.sql(s"INSERT INTO $tbl SELECT doc_id, lang, n_chars FROM docs_q203")
       s.sql(s"UPDATE $tbl SET n_chars = n_chars + 1000 WHERE lang = 'de'")
@@ -575,12 +592,10 @@ object Formats {
   // pinning clause routing, the not-matched-by-source predicate, and
   // unmatched-row carry-through in a single hash.
   def q204SqlMerge(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    val tbl = s"graft.ns.docmrg_${Integer.toHexString(dir.hashCode)}"
+    val tbl = tableName("docmrg", dir)
     graft.TempDirs.staged(s"dsv2_sql_merge:$dir") { p =>
       val sink = p.resolve("sink")
-      s.sql(s"""CREATE TABLE IF NOT EXISTS $tbl (doc_id BIGINT, lang STRING, n_chars BIGINT)
-               |USING graft_digest TBLPROPERTIES ('path'='$sink', 'rowlevel'='true')""".stripMargin)
+      createTable(s, tbl, "graft_digest", digestCols, "path" -> sink, "rowlevel" -> "true")
       t(s, dir, "documents").createOrReplaceTempView("docs_q204")
       s.sql(s"INSERT INTO $tbl SELECT doc_id, lang, n_chars FROM docs_q204")
       s.sql(s"""MERGE INTO $tbl t
@@ -639,13 +654,11 @@ object Formats {
   // on the oracle path. PlanSpec locks the WriteDelta plan (vs q203's
   // ReplaceData).
   def q207DeltaMerge(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    val tbl = s"graft.ns.docdelta_${Integer.toHexString(dir.hashCode)}"
+    val tbl = tableName("docdelta", dir)
     graft.TempDirs.staged(s"dsv2_delta_merge:$dir") { p =>
       import scala.jdk.CollectionConverters._
       val sink = p.resolve("sink")
-      s.sql(s"""CREATE TABLE IF NOT EXISTS $tbl (doc_id BIGINT, lang STRING, n_chars BIGINT)
-               |USING graft_digest TBLPROPERTIES ('path'='$sink', 'delta'='true')""".stripMargin)
+      createTable(s, tbl, "graft_digest", digestCols, "path" -> sink, "delta" -> "true")
       t(s, dir, "documents").createOrReplaceTempView("docs_q207")
       s.sql(s"INSERT INTO $tbl SELECT doc_id, lang, n_chars FROM docs_q207")
       def manifest(): Seq[String] =
@@ -769,13 +782,11 @@ object Formats {
   // runs at 100 TB: cheap O(changes) commits absorb writes, periodic
   // compaction restores O(1)-apply reads.
   def q211DeltaCompaction(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    val tbl = s"graft.ns.doccmp_${Integer.toHexString(dir.hashCode)}"
+    val tbl = tableName("doccmp", dir)
     graft.TempDirs.staged(s"dsv2_delta_compact:$dir") { p =>
       import scala.jdk.CollectionConverters._
       val sink = p.resolve("sink")
-      s.sql(s"""CREATE TABLE IF NOT EXISTS $tbl (doc_id BIGINT, lang STRING, n_chars BIGINT)
-               |USING graft_digest TBLPROPERTIES ('path'='$sink', 'delta'='true')""".stripMargin)
+      createTable(s, tbl, "graft_digest", digestCols, "path" -> sink, "delta" -> "true")
       t(s, dir, "documents").createOrReplaceTempView("docs_q211")
       s.sql(s"INSERT INTO $tbl SELECT doc_id, lang, n_chars FROM docs_q211")
       s.sql(s"""MERGE INTO $tbl t
@@ -836,13 +847,11 @@ object Formats {
   // (overwrite-by-filter), q192 (DELETE) this completes the SQL verb set
   // a warehouse user touches on a connector table.
   def q202SqlInsert(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    val tbl = s"graft.ns.docins_${Integer.toHexString(dir.hashCode)}"
+    val tbl = tableName("docins", dir)
     graft.TempDirs.staged(s"dsv2_sql_insert:$dir") { p =>
       import scala.jdk.CollectionConverters._
       val sink = p.resolve("sink")
-      s.sql(s"""CREATE TABLE IF NOT EXISTS $tbl (doc_id BIGINT, lang STRING, n_chars BIGINT)
-               |USING graft_digest TBLPROPERTIES ('path'='$sink')""".stripMargin)
+      createTable(s, tbl, "graft_digest", digestCols, "path" -> sink)
       t(s, dir, "documents").createOrReplaceTempView("docs_q202")
       s.sql(s"INSERT INTO $tbl SELECT doc_id, lang, n_chars FROM docs_q202")
       def langs(): Set[String] =
@@ -1004,9 +1013,7 @@ object Formats {
   // slice start, hash-fails. PlanSpec locks that requesting provenance
   // keeps the pushdown and the columnar read path intact.
   def q193MetadataColumns(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    s.sql(s"""CREATE TABLE IF NOT EXISTS graft.ns.seq100k (id BIGINT, h STRING, v BIGINT)
-             |USING graft_seq TBLPROPERTIES ('rows'='$seqRows', 'slices'='$seqSlices')""".stripMargin)
+    createSeq100k(s)
     s.sql("""SELECT _slice, COUNT(*) AS n, MIN(id) AS min_id, MAX(id) AS max_id,
             |  MAX(_pos) AS max_pos, CAST(SUM(v) AS BIGINT) AS sum_v
             |FROM graft.ns.seq100k
@@ -1041,13 +1048,11 @@ object Formats {
   // all survive exactly once. OperatorSpec additionally pins the honesty
   // gate: a row-level predicate (n_chars) is REFUSED, not approximated.
   def q192DeleteWhere(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    val tbl = s"graft.ns.docdel_${Integer.toHexString(dir.hashCode)}"
+    val tbl = tableName("docdel", dir)
     val staged = graft.TempDirs.staged(s"dsv2_delete:$dir") { p =>
       import scala.jdk.CollectionConverters._
       val sink = p.resolve("sink")
-      s.sql(s"""CREATE TABLE IF NOT EXISTS $tbl (doc_id BIGINT, lang STRING, n_chars BIGINT)
-               |USING graft_digest TBLPROPERTIES ('path'='$sink')""".stripMargin)
+      createTable(s, tbl, "graft_digest", digestCols, "path" -> sink)
       t(s, dir, "documents")
         .select(col("doc_id"), col("lang"), col("n_chars"))
         .writeTo(tbl).append()
@@ -1202,9 +1207,7 @@ object Formats {
   // PlanSpec locks the magic-Invoke path and the partial/final V2
   // aggregate split.
   def q189FunctionCatalog(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    s.sql(s"""CREATE TABLE IF NOT EXISTS graft.ns.seq100k (id BIGINT, h STRING, v BIGINT)
-             |USING graft_seq TBLPROPERTIES ('rows'='$seqRows', 'slices'='$seqSlices')""".stripMargin)
+    createSeq100k(s)
     s.sql("""SELECT graft.ns.poly_mix(id, 97) AS bucket, COUNT(*) AS n,
             |  graft.ns.lsum(v) AS sum_v
             |FROM graft.ns.seq100k
@@ -1241,13 +1244,11 @@ object Formats {
   // The final read mixes pre- and post-evolution files in one scan, and
   // the digest puts every row of both generations on the hash path.
   def q223AlterTable(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    val tbl = s"graft.ns.docev_${Integer.toHexString(dir.hashCode)}"
+    val tbl = tableName("docev", dir)
     graft.TempDirs.staged(s"dsv2_alter_table:$dir") { p =>
       import scala.jdk.CollectionConverters._
       val sink = p.resolve("sink")
-      s.sql(s"""CREATE TABLE IF NOT EXISTS $tbl (doc_id BIGINT, lang STRING)
-               |USING graft_evolve TBLPROPERTIES ('path'='$sink')""".stripMargin)
+      createTable(s, tbl, "graft_evolve", "doc_id BIGINT, lang STRING", "path" -> sink)
       t(s, dir, "documents").createOrReplaceTempView("docs_q223")
       s.sql(s"INSERT INTO $tbl SELECT doc_id, lang FROM docs_q223 WHERE lang IN ('en','de')")
       def fileBytes(): Map[String, Long] =
@@ -1309,13 +1310,11 @@ object Formats {
   //   one oracled result; writing to a snapshot is refused (spec-pinned,
   //   with TIMESTAMP AS OF resolution against `_VERSIONS`).
   def q224TimeTravel(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    val tbl = s"graft.ns.doctt_${Integer.toHexString(dir.hashCode)}"
+    val tbl = tableName("doctt", dir)
     graft.TempDirs.staged(s"dsv2_time_travel:$dir") { p =>
       import scala.jdk.CollectionConverters._
       val sink = p.resolve("sink")
-      s.sql(s"""CREATE TABLE IF NOT EXISTS $tbl (doc_id BIGINT, lang STRING, n_chars BIGINT)
-               |USING graft_digest TBLPROPERTIES ('path'='$sink', 'delta'='true')""".stripMargin)
+      createTable(s, tbl, "graft_digest", digestCols, "path" -> sink, "delta" -> "true")
       t(s, dir, "documents").createOrReplaceTempView("docs_q224")
       s.sql(s"INSERT INTO $tbl SELECT doc_id, lang, n_chars FROM docs_q224")
       s.sql(s"""MERGE INTO $tbl t
@@ -1399,14 +1398,12 @@ object Formats {
   // path) and the read-back digest is q207's — compaction through the
   // procedure must be as content-preserving as compaction by hand.
   def q225CallCompact(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    val short = s"ns.docproc_${Integer.toHexString(dir.hashCode)}"
-    val tbl = s"graft.$short"
+    val tbl = tableName("docproc", dir)
+    val short = tbl.stripPrefix("graft.")
     graft.TempDirs.staged(s"dsv2_call_compact:$dir") { p =>
       import scala.jdk.CollectionConverters._
       val sink = p.resolve("sink")
-      s.sql(s"""CREATE TABLE IF NOT EXISTS $tbl (doc_id BIGINT, lang STRING, n_chars BIGINT)
-               |USING graft_digest TBLPROPERTIES ('path'='$sink', 'delta'='true')""".stripMargin)
+      createTable(s, tbl, "graft_digest", digestCols, "path" -> sink, "delta" -> "true")
       t(s, dir, "documents").createOrReplaceTempView("docs_q225")
       s.sql(s"INSERT INTO $tbl SELECT doc_id, lang, n_chars FROM docs_q225")
       s.sql(s"""MERGE INTO $tbl t
@@ -1457,14 +1454,11 @@ object Formats {
   // contract extended to partition DDL). The read-back digest then
   // covers exactly the surviving partitions.
   def q226PartitionMgmt(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    val tbl = s"graft.ns.docpart_${Integer.toHexString(dir.hashCode)}"
+    val tbl = tableName("docpart", dir)
     graft.TempDirs.staged(s"dsv2_partition_mgmt:$dir") { p =>
       import scala.jdk.CollectionConverters._
       val sink = p.resolve("sink")
-      s.sql(s"""CREATE TABLE IF NOT EXISTS $tbl (doc_id BIGINT, lang STRING, n_chars BIGINT)
-               |USING graft_digest PARTITIONED BY (lang)
-               |TBLPROPERTIES ('path'='$sink')""".stripMargin)
+      createTable(s, tbl, "graft_digest PARTITIONED BY (lang)", digestCols, "path" -> sink)
       t(s, dir, "documents").createOrReplaceTempView("docs_q226")
       s.sql(s"INSERT INTO $tbl SELECT doc_id, lang, n_chars FROM docs_q226")
       def parts(): Seq[String] =
@@ -1546,13 +1540,11 @@ object Formats {
   // lifecycle under audit: v1 = base INSERT, v2 = MERGE's delta commit,
   // v3 = compaction.
   def q228HistoryProcedure(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    val short = s"ns.dochist_${Integer.toHexString(dir.hashCode)}"
-    val tbl = s"graft.$short"
+    val tbl = tableName("dochist", dir)
+    val short = tbl.stripPrefix("graft.")
     graft.TempDirs.staged(s"dsv2_history:$dir") { p =>
       val sink = p.resolve("sink")
-      s.sql(s"""CREATE TABLE IF NOT EXISTS $tbl (doc_id BIGINT, lang STRING, n_chars BIGINT)
-               |USING graft_digest TBLPROPERTIES ('path'='$sink', 'delta'='true')""".stripMargin)
+      createTable(s, tbl, "graft_digest", digestCols, "path" -> sink, "delta" -> "true")
       t(s, dir, "documents").createOrReplaceTempView("docs_q228")
       s.sql(s"INSERT INTO $tbl SELECT doc_id, lang, n_chars FROM docs_q228")
       s.sql(deltaMergeSql(tbl, "docs_q228"))
@@ -1591,13 +1583,11 @@ object Formats {
   // gone; physical files actually reclaimed; and the CURRENT table's
   // digest — the oracled output — byte-for-byte unaffected by expiry.
   def q229ExpireSnapshots(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    val short = s"ns.docexp_${Integer.toHexString(dir.hashCode)}"
-    val tbl = s"graft.$short"
+    val tbl = tableName("docexp", dir)
+    val short = tbl.stripPrefix("graft.")
     graft.TempDirs.staged(s"dsv2_expire:$dir") { p =>
       val sink = p.resolve("sink")
-      s.sql(s"""CREATE TABLE IF NOT EXISTS $tbl (doc_id BIGINT, lang STRING, n_chars BIGINT)
-               |USING graft_digest TBLPROPERTIES ('path'='$sink', 'delta'='true')""".stripMargin)
+      createTable(s, tbl, "graft_digest", digestCols, "path" -> sink, "delta" -> "true")
       t(s, dir, "documents").createOrReplaceTempView("docs_q229")
       s.sql(s"INSERT INTO $tbl SELECT doc_id, lang, n_chars FROM docs_q229")
       s.sql(deltaMergeSql(tbl, "docs_q229"))
@@ -1635,13 +1625,11 @@ object Formats {
   // machine (populated → empty → selectively repopulated) and the
   // read-back digest covers the post-truncate content.
   def q230Truncate(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    val tbl = s"graft.ns.doctrunc_${Integer.toHexString(dir.hashCode)}"
+    val tbl = tableName("doctrunc", dir)
     graft.TempDirs.staged(s"dsv2_truncate:$dir") { p =>
       import scala.jdk.CollectionConverters._
       val sink = p.resolve("sink")
-      s.sql(s"""CREATE TABLE IF NOT EXISTS $tbl (doc_id BIGINT, lang STRING, n_chars BIGINT)
-               |USING graft_digest TBLPROPERTIES ('path'='$sink')""".stripMargin)
+      createTable(s, tbl, "graft_digest", digestCols, "path" -> sink)
       t(s, dir, "documents").createOrReplaceTempView("docs_q230")
       s.sql(s"INSERT INTO $tbl SELECT doc_id, lang, n_chars FROM docs_q230")
       def manifest(): Seq[String] =
@@ -1683,9 +1671,7 @@ object Formats {
   // any inline subquery; the lifecycle requires pin create/list/drop.
   def q231ViewCatalog(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.connector.catalog.{Identifier, ViewInfo}
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    s.sql(s"""CREATE TABLE IF NOT EXISTS graft.ns.seq100k (id BIGINT, h STRING, v BIGINT)
-             |USING graft_seq TBLPROPERTIES ('rows'='$seqRows', 'slices'='$seqSlices')""".stripMargin)
+    createSeq100k(s)
     val catalog = s.sessionState.catalogManager.catalog("graft")
       .asInstanceOf[GraftCatalog]
     val ident = Identifier.of(Array("ns"), "seq_buckets")
@@ -1752,12 +1738,10 @@ object Formats {
   // explicit NULL — all land in one digest; a reader serving NULL where
   // a default belongs (or vice versa) breaks n_with/sum.
   def q232ColumnDefaults(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    val tbl = s"graft.ns.docdef_${Integer.toHexString(dir.hashCode)}"
+    val tbl = tableName("docdef", dir)
     graft.TempDirs.staged(s"dsv2_column_defaults:$dir") { p =>
       val sink = p.resolve("sink")
-      s.sql(s"""CREATE TABLE IF NOT EXISTS $tbl (doc_id BIGINT, lang STRING)
-               |USING graft_evolve TBLPROPERTIES ('path'='$sink')""".stripMargin)
+      createTable(s, tbl, "graft_evolve", "doc_id BIGINT, lang STRING", "path" -> sink)
       t(s, dir, "documents").createOrReplaceTempView("docs_q232")
       // generation 0: written before the column exists
       s.sql(s"INSERT INTO $tbl SELECT doc_id, lang FROM docs_q232 WHERE lang IN ('en','de')")
@@ -1807,12 +1791,10 @@ object Formats {
   // The requires pin both refusals plus DROP CONSTRAINT re-opening the
   // gate; the digest covers what actually landed.
   def q233CheckConstraints(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    val tbl = s"graft.ns.docchk_${Integer.toHexString(dir.hashCode)}"
+    val tbl = tableName("docchk", dir)
     graft.TempDirs.staged(s"dsv2_check_constraints:$dir") { p =>
       val sink = p.resolve("sink")
-      s.sql(s"""CREATE TABLE IF NOT EXISTS $tbl (doc_id BIGINT, lang STRING, n_chars BIGINT)
-               |USING graft_evolve TBLPROPERTIES ('path'='$sink')""".stripMargin)
+      createTable(s, tbl, "graft_evolve", digestCols, "path" -> sink)
       t(s, dir, "documents").createOrReplaceTempView("docs_q233")
       s.sql(s"INSERT INTO $tbl SELECT doc_id, lang, n_chars FROM docs_q233 WHERE lang = 'en'")
       // a constraint the existing rows VIOLATE must be refused at ADD time
@@ -1865,13 +1847,11 @@ object Formats {
   // read-back digest — through the table's own batch scan — must match
   // the oracle's view of the full streamed range.
   def q234StreamToTable(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    val tbl = s"graft.ns.docstream_${Integer.toHexString(dir.hashCode)}"
+    val tbl = tableName("docstream", dir)
     graft.TempDirs.staged(s"dsv2_stream_table:$dir") { p =>
       import scala.jdk.CollectionConverters._
       val sink = p.resolve("sink")
-      s.sql(s"""CREATE TABLE IF NOT EXISTS $tbl (doc_id BIGINT, lang STRING, n_chars BIGINT)
-               |USING graft_digest TBLPROPERTIES ('path'='$sink')""".stripMargin)
+      createTable(s, tbl, "graft_digest", digestCols, "path" -> sink)
       val q = s.readStream.format("graft.sources.SeqSource")
         .option("rows", streamRows.toString)
         .option("slices", "4")
@@ -1922,12 +1902,10 @@ object Formats {
   // stays a residual row filter, so pruning can never change results —
   // only work. The digest covers the surviving langs.
   def q235DigestFilePruning(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    val tbl = s"graft.ns.docprune_${Integer.toHexString(dir.hashCode)}"
+    val tbl = tableName("docprune", dir)
     graft.TempDirs.staged(s"dsv2_file_pruning:$dir") { p =>
       val sink = p.resolve("sink")
-      s.sql(s"""CREATE TABLE IF NOT EXISTS $tbl (doc_id BIGINT, lang STRING, n_chars BIGINT)
-               |USING graft_digest TBLPROPERTIES ('path'='$sink')""".stripMargin)
+      createTable(s, tbl, "graft_digest", digestCols, "path" -> sink)
       t(s, dir, "documents").createOrReplaceTempView("docs_q235")
       s.sql(s"INSERT INTO $tbl SELECT doc_id, lang, n_chars FROM docs_q235")
     }
@@ -1972,12 +1950,10 @@ object Formats {
   // equality, not a bare boolean — DPP's isLikelySelective does not arm
   // on a lone boolean attribute (the q182 probe).
   def q236RuntimeFilePruning(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    val tbl = s"graft.ns.docrt_${Integer.toHexString(dir.hashCode)}"
+    val tbl = tableName("docrt", dir)
     val staged = graft.TempDirs.staged(s"dsv2_runtime_pruning:$dir") { p =>
       val sink = p.resolve("sink")
-      s.sql(s"""CREATE TABLE IF NOT EXISTS $tbl (doc_id BIGINT, lang STRING, n_chars BIGINT)
-               |USING graft_digest TBLPROPERTIES ('path'='$sink')""".stripMargin)
+      createTable(s, tbl, "graft_digest", digestCols, "path" -> sink)
       t(s, dir, "documents").createOrReplaceTempView("docs_q236")
       s.sql(s"INSERT INTO $tbl SELECT doc_id, lang, n_chars FROM docs_q236")
       // the dim must be a SCANNED relation with a live selective
@@ -2023,8 +1999,7 @@ object Formats {
   // byte-identical AND clean up its staged directory — then a successful
   // RTAS swaps the pointer and the digest covers the new generation.
   def q237AtomicCtas(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    val tbl = s"graft.ns.docctas_${Integer.toHexString(dir.hashCode)}"
+    val tbl = tableName("docctas", dir)
     graft.TempDirs.staged(s"dsv2_atomic_ctas:$dir") { p =>
       val root = p.resolve("root")
       t(s, dir, "documents").createOrReplaceTempView("docs_q237")
@@ -2090,26 +2065,19 @@ object Formats {
   // subtree must contain ZERO shuffles (broadcast disabled so the lock is
   // meaningful at this scale; at 100 TB neither side broadcasts anyway).
   def q238StoragePartitionedJoin(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    val h = Integer.toHexString(dir.hashCode)
-    val tA = s"graft.ns.docspj_a_$h"
-    val tB = s"graft.ns.docspj_b_$h"
+    val tA = tableName("docspj_a", dir)
+    val tB = tableName("docspj_b", dir)
     graft.TempDirs.staged(s"dsv2_spj:$dir") { p =>
       t(s, dir, "documents").createOrReplaceTempView("docs_q238")
-      s.sql(s"""CREATE TABLE $tA (doc_id BIGINT, lang STRING, n_chars BIGINT)
-               |USING graft_digest TBLPROPERTIES ('path'='${p.resolve("a")}')""".stripMargin)
+      createTable(s, tA, "graft_digest", digestCols, "path" -> p.resolve("a"))
       s.sql(s"INSERT INTO $tA SELECT doc_id, lang, n_chars FROM docs_q238")
-      s.sql(s"""CREATE TABLE $tB (doc_id BIGINT, lang STRING, n_chars BIGINT)
-               |USING graft_digest TBLPROPERTIES ('path'='${p.resolve("b")}')""".stripMargin)
+      createTable(s, tB, "graft_digest", digestCols, "path" -> p.resolve("b"))
       s.sql(s"INSERT INTO $tB SELECT MIN(doc_id), lang, COUNT(*) FROM docs_q238 GROUP BY lang")
     }
-    val confs = Seq(
+    graft.Tables.withConf(s,
       "spark.sql.sources.v2.bucketing.enabled" -> "true",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-      "spark.sql.adaptive.enabled" -> "false")
-    val prev = confs.map { case (k, _) => k -> s.conf.getOption(k) }
-    confs.foreach { case (k, v) => s.conf.set(k, v) }
-    try {
+      "spark.sql.adaptive.enabled" -> "false") {
       val a = s.table(tA).select(col("lang"), col("n_chars").as("a_chars"))
       val b = s.table(tB).select(col("lang"), col("n_chars").as("lang_cnt"))
       val out = a.join(b, Seq("lang"))
@@ -2137,9 +2105,6 @@ object Formats {
       require(kgScans.size == 2,
         s"q238: both scans must report key-grouped partitioning:\n$plan")
       out
-    } finally prev.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
     }
   }
 
@@ -2161,26 +2126,19 @@ object Formats {
   // layout. Same two tables as q238 (shared staging key); the lock
   // tightens q238's: one SMJ, zero shuffles AND zero sorts in its subtree.
   def q239OrderedSpjJoin(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    val h = Integer.toHexString(dir.hashCode)
-    val tA = s"graft.ns.docspj_a_$h"
-    val tB = s"graft.ns.docspj_b_$h"
+    val tA = tableName("docspj_a", dir)
+    val tB = tableName("docspj_b", dir)
     graft.TempDirs.staged(s"dsv2_spj:$dir") { p =>
       t(s, dir, "documents").createOrReplaceTempView("docs_q238")
-      s.sql(s"""CREATE TABLE $tA (doc_id BIGINT, lang STRING, n_chars BIGINT)
-               |USING graft_digest TBLPROPERTIES ('path'='${p.resolve("a")}')""".stripMargin)
+      createTable(s, tA, "graft_digest", digestCols, "path" -> p.resolve("a"))
       s.sql(s"INSERT INTO $tA SELECT doc_id, lang, n_chars FROM docs_q238")
-      s.sql(s"""CREATE TABLE $tB (doc_id BIGINT, lang STRING, n_chars BIGINT)
-               |USING graft_digest TBLPROPERTIES ('path'='${p.resolve("b")}')""".stripMargin)
+      createTable(s, tB, "graft_digest", digestCols, "path" -> p.resolve("b"))
       s.sql(s"INSERT INTO $tB SELECT MIN(doc_id), lang, COUNT(*) FROM docs_q238 GROUP BY lang")
     }
-    val confs = Seq(
+    graft.Tables.withConf(s,
       "spark.sql.sources.v2.bucketing.enabled" -> "true",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-      "spark.sql.adaptive.enabled" -> "false")
-    val prev = confs.map { case (k, _) => k -> s.conf.getOption(k) }
-    confs.foreach { case (k, v) => s.conf.set(k, v) }
-    try {
+      "spark.sql.adaptive.enabled" -> "false") {
       val a = s.table(tA).select(col("lang"), col("n_chars").as("a_chars"))
       val b = s.table(tB).select(col("lang"), col("n_chars").as("lang_cnt"))
       val out = a.join(b, Seq("lang"))
@@ -2203,9 +2161,6 @@ object Formats {
         s"q239: the declared layout must delete every shuffle AND sort " +
           s"under the join, got ${bad.map(_.nodeName)}:\n$plan")
       out
-    } finally prev.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
     }
   }
 
@@ -2227,12 +2182,10 @@ object Formats {
   // in-query), while a decoy row-reading query ticks it — the counter
   // works, the aggregate path genuinely bypasses it.
   def q240MetadataCount(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    val tbl = s"graft.ns.doccnt_${Integer.toHexString(dir.hashCode)}"
+    val tbl = tableName("doccnt", dir)
     graft.TempDirs.staged(s"dsv2_meta_count:$dir") { p =>
       val sink = p.resolve("sink")
-      s.sql(s"""CREATE TABLE IF NOT EXISTS $tbl (doc_id BIGINT, lang STRING, n_chars BIGINT)
-               |USING graft_digest TBLPROPERTIES ('path'='$sink')""".stripMargin)
+      createTable(s, tbl, "graft_digest", digestCols, "path" -> sink)
       t(s, dir, "documents").createOrReplaceTempView("docs_q240")
       s.sql(s"INSERT INTO $tbl SELECT doc_id, lang, n_chars FROM docs_q240")
     }
@@ -2273,13 +2226,11 @@ object Formats {
     * two INSERT commits, a three-verb MERGE, a compaction (4 versions).
     */
   private def stageChangesTable(s: SparkSession, dir: String): java.nio.file.Path = {
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    val short = s"ns.docchf_${Integer.toHexString(dir.hashCode)}"
-    val tbl = s"graft.$short"
+    val tbl = tableName("docchf", dir)
+    val short = tbl.stripPrefix("graft.")
     graft.TempDirs.staged(s"dsv2_changes_feed:$dir") { p =>
       val sink = p.resolve("sink")
-      s.sql(s"""CREATE TABLE IF NOT EXISTS $tbl (doc_id BIGINT, lang STRING, n_chars BIGINT)
-               |USING graft_digest TBLPROPERTIES ('path'='$sink', 'delta'='true')""".stripMargin)
+      createTable(s, tbl, "graft_digest", digestCols, "path" -> sink, "delta" -> "true")
       t(s, dir, "documents").createOrReplaceTempView("docs_q241")
       s.sql(s"INSERT INTO $tbl SELECT doc_id, lang, n_chars FROM docs_q241 WHERE lang IN ('de', 'fr')")
       s.sql(s"INSERT INTO $tbl SELECT doc_id, lang, n_chars FROM docs_q241 WHERE lang = 'en'")
@@ -2460,13 +2411,11 @@ object Formats {
   // keep-last policy. `drop_tag` releases the pin and the next expiry
   // reclaims both the snapshot and its now-unreferenced data files.
   def q269Tags(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    val tbl = s"graft.ns.tags_${Integer.toHexString(dir.hashCode)}"
+    val tbl = tableName("tags", dir)
     graft.TempDirs.staged(s"dsv2_tags:$dir") { p =>
       val sink = p.resolve("sink")
       val short = tbl.stripPrefix("graft.")
-      s.sql(s"""CREATE TABLE IF NOT EXISTS $tbl (doc_id BIGINT, lang STRING, n_chars BIGINT)
-               |USING graft_digest TBLPROPERTIES ('path'='$sink', 'delta'='true')""".stripMargin)
+      createTable(s, tbl, "graft_digest", digestCols, "path" -> sink, "delta" -> "true")
       t(s, dir, "documents").createOrReplaceTempView("docs_q269")
       s.sql(s"INSERT INTO $tbl SELECT doc_id, lang, n_chars FROM docs_q269 WHERE lang IN ('de','fr')")
       s.sql(s"INSERT INTO $tbl SELECT doc_id, lang, n_chars FROM docs_q269 WHERE lang = 'en'")
@@ -2555,22 +2504,19 @@ object Formats {
   //     would silently lose branch-written data — fast_forward refuses
   //     loudly and main stays untouched.
   def q270EvolveBranch(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    val h = Integer.toHexString(dir.hashCode)
-    val tbl = s"graft.ns.evbr_$h"
+    val tbl = tableName("evbr", dir)
     graft.TempDirs.staged(s"dsv2_evolve_branch:$dir") { p =>
       val sink = p.resolve("sink")
       val short = tbl.stripPrefix("graft.")
-      s.sql(s"""CREATE TABLE IF NOT EXISTS $tbl (doc_id BIGINT, lang STRING)
-               |USING graft_evolve TBLPROPERTIES ('path'='$sink')""".stripMargin)
+      createTable(s, tbl, "graft_evolve", "doc_id BIGINT, lang STRING", "path" -> sink)
       t(s, dir, "documents").createOrReplaceTempView("docs_q270")
       s.sql(s"INSERT INTO $tbl SELECT doc_id, lang FROM docs_q270 WHERE lang = 'en'")
       s.sql(s"CALL graft.system.create_branch(table => '$short', branch => 'dev')").collect()
       // the branch WRITER binds to the FORK-TIME schema (same columns,
       // same field ids) — exactly the stale-schema writer the gate audits
       val tblB = s"${tbl}_dev"
-      s.sql(s"""CREATE TABLE IF NOT EXISTS $tblB (doc_id BIGINT, lang STRING)
-               |USING graft_evolve TBLPROPERTIES ('path'='$sink', 'branch'='dev')""".stripMargin)
+      createTable(s, tblB, "graft_evolve", "doc_id BIGINT, lang STRING", "path" -> sink,
+        "branch" -> "dev")
       s.sql(s"INSERT INTO $tblB SELECT doc_id, lang FROM docs_q270 WHERE lang = 'fr'")
       // main evolves UNDER the live branch: ADD is metadata-only and
       // COMPATIBLE — the publish below must succeed and serve the
@@ -2588,8 +2534,7 @@ object Formats {
       // column its files carry → divergent, must refuse loudly
       s.sql(s"CALL graft.system.create_branch(table => '$short', branch => 'dev2')").collect()
       val tblB2 = s"${tbl}_dev2"
-      s.sql(s"""CREATE TABLE IF NOT EXISTS $tblB2 (doc_id BIGINT, lang STRING, n_chars BIGINT)
-               |USING graft_evolve TBLPROPERTIES ('path'='$sink', 'branch'='dev2')""".stripMargin)
+      createTable(s, tblB2, "graft_evolve", digestCols, "path" -> sink, "branch" -> "dev2")
       s.sql(s"INSERT INTO $tblB2 SELECT doc_id, lang, n_chars FROM docs_q270 WHERE lang = 'zh'")
       s.sql(s"ALTER TABLE $tbl DROP COLUMN n_chars")
       val headBefore = DigestManifest.currentVersion(sink.toString)
@@ -2632,15 +2577,11 @@ object Formats {
   // new commit's files are consumed (proved by exactly-once: replicated
   // row count equals source row count — a re-read would duplicate).
   def q242StreamTableRead(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    val h = Integer.toHexString(dir.hashCode)
-    val src = s"graft.ns.docq_src_$h"
-    val dst = s"graft.ns.docq_dst_$h"
+    val src = tableName("docq_src", dir)
+    val dst = tableName("docq_dst", dir)
     graft.TempDirs.staged(s"dsv2_stream_read:$dir") { p =>
-      s.sql(s"""CREATE TABLE IF NOT EXISTS $src (doc_id BIGINT, lang STRING, n_chars BIGINT)
-               |USING graft_digest TBLPROPERTIES ('path'='${p.resolve("src")}')""".stripMargin)
-      s.sql(s"""CREATE TABLE IF NOT EXISTS $dst (doc_id BIGINT, lang STRING, n_chars BIGINT)
-               |USING graft_digest TBLPROPERTIES ('path'='${p.resolve("dst")}')""".stripMargin)
+      createTable(s, src, "graft_digest", digestCols, "path" -> p.resolve("src"))
+      createTable(s, dst, "graft_digest", digestCols, "path" -> p.resolve("dst"))
       t(s, dir, "documents").createOrReplaceTempView("docs_q242")
       s.sql(s"INSERT INTO $src SELECT doc_id, lang, n_chars FROM docs_q242 WHERE lang IN ('de', 'fr')")
       s.sql(s"INSERT INTO $src SELECT doc_id, lang, n_chars FROM docs_q242 WHERE lang = 'en'")
@@ -2698,15 +2639,11 @@ object Formats {
   // and the cap at 1, the run must report ≥3 data-bearing progress
   // entries, and the replicated digest must still be exactly the source.
   def q243BoundedStreamRead(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    val h = Integer.toHexString(dir.hashCode)
-    val src = s"graft.ns.docbnd_src_$h"
-    val dst = s"graft.ns.docbnd_dst_$h"
+    val src = tableName("docbnd_src", dir)
+    val dst = tableName("docbnd_dst", dir)
     graft.TempDirs.staged(s"dsv2_bounded_stream:$dir") { p =>
-      s.sql(s"""CREATE TABLE IF NOT EXISTS $src (doc_id BIGINT, lang STRING, n_chars BIGINT)
-               |USING graft_digest TBLPROPERTIES ('path'='${p.resolve("src")}')""".stripMargin)
-      s.sql(s"""CREATE TABLE IF NOT EXISTS $dst (doc_id BIGINT, lang STRING, n_chars BIGINT)
-               |USING graft_digest TBLPROPERTIES ('path'='${p.resolve("dst")}')""".stripMargin)
+      createTable(s, src, "graft_digest", digestCols, "path" -> p.resolve("src"))
+      createTable(s, dst, "graft_digest", digestCols, "path" -> p.resolve("dst"))
       t(s, dir, "documents").createOrReplaceTempView("docs_q243")
       s.sql(s"INSERT INTO $src SELECT doc_id, lang, n_chars FROM docs_q243 WHERE lang IN ('de', 'fr')")
       s.sql(s"INSERT INTO $src SELECT doc_id, lang, n_chars FROM docs_q243 WHERE lang = 'en'")
@@ -2798,16 +2735,12 @@ object Formats {
   // planned=2 / pruned=3, and rows_served must equal the digest's own
   // row count — the metrics agree with the data they describe.
   def q245ScanMetrics(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    val tbl = s"graft.ns.docmet_${Integer.toHexString(dir.hashCode)}"
+    val tbl = tableName("docmet", dir)
     graft.TempDirs.staged(s"dsv2_scan_metrics:$dir") { p =>
-      s.sql(s"""CREATE TABLE IF NOT EXISTS $tbl (doc_id BIGINT, lang STRING, n_chars BIGINT)
-               |USING graft_digest TBLPROPERTIES ('path'='${p.resolve("sink")}')""".stripMargin)
+      createTable(s, tbl, "graft_digest", digestCols, "path" -> p.resolve("sink"))
       t(s, dir, "documents").createOrReplaceTempView("docs_q245")
       s.sql(s"INSERT INTO $tbl SELECT doc_id, lang, n_chars FROM docs_q245")
     }
-    val prev = s.conf.getOption("spark.sql.adaptive.enabled")
-    s.conf.set("spark.sql.adaptive.enabled", "false")
     // capture this query's SQL-execution id so the DRIVER-aggregated metric
     // (SQLAppStatusListener re-instantiates each CustomMetric by reflection
     // and folds task values through aggregateTaskMetrics) can be read back
@@ -2822,7 +2755,7 @@ object Formats {
         }
     }
     s.sparkContext.addSparkListener(execListener)
-    try {
+    try graft.Tables.withConf(s, "spark.sql.adaptive.enabled" -> "false") {
       // no ORDER BY here: a global sort's range-partitioner SAMPLING pass
       // executes the scan a second time, double-counting every task-side
       // metric (probed: rows_served read exactly 2×) — the returned frame
@@ -2871,13 +2804,7 @@ object Formats {
           s"zero-arg reflection contract is broken")
       s.createDataFrame(s.sparkContext.parallelize(rows.toIndexedSeq, 1), out.schema)
         .orderBy("lang")
-    } finally {
-      s.sparkContext.removeSparkListener(execListener)
-      prev match {
-        case Some(x) => s.conf.set("spark.sql.adaptive.enabled", x)
-        case None => s.conf.unset("spark.sql.adaptive.enabled")
-      }
-    }
+    } finally s.sparkContext.removeSparkListener(execListener)
   }
 
   val q245Sql: String =
@@ -2979,11 +2906,8 @@ object Formats {
   // description carries the pushed join mapping. The oracle covers the
   // joined values (both sides' closed forms of the shared id), so a wrong
   // intersection or a mis-aliased column fails the hash, not just the lock.
-  def q248JoinPushdown(s: SparkSession, dir: String): DataFrame = {
-    val key = "spark.sql.optimizer.datasourceV2JoinPushdown"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, "true")
-    try {
+  def q248JoinPushdown(s: SparkSession, dir: String): DataFrame =
+    graft.Tables.withConf(s, "spark.sql.optimizer.datasourceV2JoinPushdown" -> "true") {
       def src() = s.read.format("graft.sources.SeqSource")
         .option("rows", seqRows.toString)
         .option("slices", seqSlices.toString)
@@ -3001,11 +2925,7 @@ object Formats {
         case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j
       }.isEmpty, s"q248: no join node may survive the push:\n$plan")
       out
-    } finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
     }
-  }
 
   val q248Sql: String =
     s"""WITH src AS (
@@ -3025,11 +2945,8 @@ object Formats {
   // (probed: `j._0 AS a / j._1 AS b / j._2 AS d` over the shredded scan).
   // At 100 TB of semi-structured documents this is the difference between
   // re-parsing every row's variant and reading three typed columns.
-  def q249VariantShredding(s: SparkSession, dir: String): DataFrame = {
-    val key = "spark.sql.variant.pushVariantIntoScan"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, "true")
-    try {
+  def q249VariantShredding(s: SparkSession, dir: String): DataFrame =
+    graft.Tables.withConf(s, "spark.sql.variant.pushVariantIntoScan" -> "true") {
       s.read.format("graft.sources.VariantSource")
         .option("rows", seqRows.toString)
         .option("slices", seqSlices.toString)
@@ -3050,11 +2967,7 @@ object Formats {
       require(!plan.toString.contains("variant_get"),
         s"q249: no variant_get may survive the shred:\n$plan")
       out
-    } finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
     }
-  }
 
   val q249Sql: String =
     s"""SELECT range AS a,
@@ -3078,12 +2991,11 @@ object Formats {
   def q250CdcApply(s: SparkSession, dir: String): DataFrame = {
     val table = stageChangesTable(s, dir)
     val sink = table.resolve("sink").toString
-    val h = Integer.toHexString(dir.hashCode)
-    val srcTbl = s"graft.ns.docchf_$h"
-    val state = s"graft.ns.doccdc_$h"
+    val srcTbl = tableName("docchf", dir)
+    val state = tableName("doccdc", dir)
     graft.TempDirs.staged(s"dsv2_cdc_apply:$dir") { p =>
-      s.sql(s"""CREATE TABLE IF NOT EXISTS $state (doc_id BIGINT, lang STRING, n_chars BIGINT)
-               |USING graft_digest TBLPROPERTIES ('path'='${p.resolve("state")}', 'delta'='true')""".stripMargin)
+      createTable(s, state, "graft_digest", digestCols, "path" -> p.resolve("state"),
+        "delta" -> "true")
       val apply = (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
           batchId: Long) => {
         batch.createOrReplaceTempView("cdc_batch_q250")
@@ -3171,12 +3083,10 @@ object Formats {
   // optimistic-concurrency contract every production table format ships;
   // a JVM lock alone cannot give it to a second process.
   def q251ConcurrentCommit(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    val tbl = s"graft.ns.conc_${Integer.toHexString(dir.hashCode)}"
+    val tbl = tableName("conc", dir)
     graft.TempDirs.staged(s"dsv2_concurrent_commit:$dir") { p =>
       val sink = p.resolve("sink")
-      s.sql(s"""CREATE TABLE IF NOT EXISTS $tbl (doc_id BIGINT, lang STRING, n_chars BIGINT)
-               |USING graft_digest TBLPROPERTIES ('path'='$sink')""".stripMargin)
+      createTable(s, tbl, "graft_digest", digestCols, "path" -> sink)
       t(s, dir, "documents").createOrReplaceTempView("docs_q251")
       s.sql(s"INSERT INTO $tbl SELECT doc_id, lang, n_chars FROM docs_q251 WHERE lang = 'de'")
       // the race: both committers in flight at once, each planning from
@@ -3243,13 +3153,11 @@ object Formats {
   // folds the DVs away — at 100 TB this is what makes a 1%-of-a-file
   // DELETE a metadata operation instead of a rewrite of that file.
   def q252DeletionVectors(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    val tbl = s"graft.ns.docdv_${Integer.toHexString(dir.hashCode)}"
+    val tbl = tableName("docdv", dir)
     graft.TempDirs.staged(s"dsv2_deletion_vectors:$dir") { p =>
       import scala.jdk.CollectionConverters._
       val sink = p.resolve("sink")
-      s.sql(s"""CREATE TABLE IF NOT EXISTS $tbl (doc_id BIGINT, lang STRING, n_chars BIGINT)
-               |USING graft_digest TBLPROPERTIES ('path'='$sink', 'dv'='true')""".stripMargin)
+      createTable(s, tbl, "graft_digest", digestCols, "path" -> sink, "dv" -> "true")
       t(s, dir, "documents").createOrReplaceTempView("docs_q252")
       s.sql(s"INSERT INTO $tbl SELECT doc_id, lang, n_chars FROM docs_q252")
       def baseDigests: Map[String, String] = {
@@ -3331,13 +3239,11 @@ object Formats {
   // O(touched files) — on a 100 TB table an UPDATE touching 0.1% of rows
   // commits bitmap bits + one small file instead of rewriting terabytes.
   def q256DvUpdateMerge(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    val tbl = s"graft.ns.dvdml_${Integer.toHexString(dir.hashCode)}"
+    val tbl = tableName("dvdml", dir)
     graft.TempDirs.staged(s"dsv2_dv_update_merge:$dir") { p =>
       import scala.jdk.CollectionConverters._
       val sink = p.resolve("sink")
-      s.sql(s"""CREATE TABLE IF NOT EXISTS $tbl (doc_id BIGINT, lang STRING, n_chars BIGINT)
-               |USING graft_digest TBLPROPERTIES ('path'='$sink', 'dv'='true')""".stripMargin)
+      createTable(s, tbl, "graft_digest", digestCols, "path" -> sink, "dv" -> "true")
       t(s, dir, "documents").createOrReplaceTempView("docs_q256")
       s.sql(s"INSERT INTO $tbl SELECT doc_id, lang, n_chars FROM docs_q256")
       val originals = {
@@ -3425,13 +3331,11 @@ object Formats {
   // files while the unbounded decoy opened all of them; the hash-checked
   // result reads the middle band through the pruned scan.
   def q253ZoneMaps(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    val tbl = s"graft.ns.doczm_${Integer.toHexString(dir.hashCode)}"
+    val tbl = tableName("doczm", dir)
     graft.TempDirs.staged(s"dsv2_zone_maps:$dir") { p =>
       import scala.jdk.CollectionConverters._
       val sink = p.resolve("sink")
-      s.sql(s"""CREATE TABLE IF NOT EXISTS $tbl (doc_id BIGINT, lang STRING, n_chars BIGINT)
-               |USING graft_digest TBLPROPERTIES ('path'='$sink')""".stripMargin)
+      createTable(s, tbl, "graft_digest", digestCols, "path" -> sink)
       t(s, dir, "documents").createOrReplaceTempView("docs_q253")
       // three commits over disjoint doc_id bands → every file's zone map
       // covers exactly one band (doc_ids are dense from 0 at every SF)
@@ -3492,21 +3396,18 @@ object Formats {
   // untouched, and after publish the change feed shows the branch's net
   // changes landing at exactly the published version.
   def q255BranchWap(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    val tbl = s"graft.ns.wap_${Integer.toHexString(dir.hashCode)}"
+    val tbl = tableName("wap", dir)
     val tblB = s"${tbl}_branch"
     graft.TempDirs.staged(s"dsv2_branch_wap:$dir") { p =>
       val sink = p.resolve("sink")
       val short = tbl.stripPrefix("graft.")
-      s.sql(s"""CREATE TABLE IF NOT EXISTS $tbl (doc_id BIGINT, lang STRING, n_chars BIGINT)
-               |USING graft_digest TBLPROPERTIES ('path'='$sink', 'delta'='true')""".stripMargin)
+      createTable(s, tbl, "graft_digest", digestCols, "path" -> sink, "delta" -> "true")
       t(s, dir, "documents").createOrReplaceTempView("docs_q255")
       s.sql(s"INSERT INTO $tbl SELECT doc_id, lang, n_chars FROM docs_q255 WHERE lang = 'en'")
       s.sql(s"INSERT INTO $tbl SELECT doc_id, lang, n_chars FROM docs_q255 WHERE lang = 'de'")
       s.sql(s"CALL graft.system.create_branch(table => '$short', branch => 'wap')").collect()
       val fork = DigestManifest.currentVersion(sink.toString)
-      s.sql(s"""CREATE TABLE IF NOT EXISTS $tblB (doc_id BIGINT, lang STRING, n_chars BIGINT)
-               |USING graft_digest TBLPROPERTIES ('path'='$sink', 'branch'='wap')""".stripMargin)
+      createTable(s, tblB, "graft_digest", digestCols, "path" -> sink, "branch" -> "wap")
       s.sql(s"INSERT INTO $tblB SELECT doc_id, lang, n_chars FROM docs_q255 WHERE lang = 'fr'")
       s.sql(s"INSERT INTO $tblB SELECT doc_id, lang, n_chars FROM docs_q255 WHERE lang = 'zh'")
       // WRITE: branch commits moved only the branch ref — main's head
@@ -3586,8 +3487,7 @@ object Formats {
   // fresh ones intact, every snapshot-referenced file still present, and
   // the table's content byte-identical (the hash-checked result).
   def q254RemoveOrphans(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    val tbl = s"graft.ns.orph_${Integer.toHexString(dir.hashCode)}"
+    val tbl = tableName("orph", dir)
     graft.TempDirs.staged(s"dsv2_remove_orphans:$dir") { p =>
       import scala.jdk.CollectionConverters._
       val root = p.resolve("root")
@@ -3674,13 +3574,11 @@ object Formats {
   // an n_chars band query opens exactly that band's files, the decoy
   // opens all, and the hash-checked result reads the middle band.
   def q257ZoneMapsNChars(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    val tbl = s"graft.ns.doczn_${Integer.toHexString(dir.hashCode)}"
+    val tbl = tableName("doczn", dir)
     graft.TempDirs.staged(s"dsv2_zone_maps_nchars:$dir") { p =>
       import scala.jdk.CollectionConverters._
       val sink = p.resolve("sink")
-      s.sql(s"""CREATE TABLE IF NOT EXISTS $tbl (doc_id BIGINT, lang STRING, n_chars BIGINT)
-               |USING graft_digest TBLPROPERTIES ('path'='$sink')""".stripMargin)
+      createTable(s, tbl, "graft_digest", digestCols, "path" -> sink)
       t(s, dir, "documents").createOrReplaceTempView("docs_q257")
       s.sql(s"INSERT INTO $tbl SELECT doc_id, lang, n_chars FROM docs_q257 WHERE n_chars < 200")
       s.sql(s"INSERT INTO $tbl SELECT doc_id, lang, n_chars FROM docs_q257 WHERE n_chars >= 200 AND n_chars < 400")
@@ -3734,28 +3632,23 @@ object Formats {
   // "filter on the clustered key" into "broadcast the survivors",
   // replacing a full shuffle with a map-side join automatically.
   def q258ZoneBroadcast(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    val tbl = s"graft.ns.doczb_${Integer.toHexString(dir.hashCode)}"
+    val tbl = tableName("doczb", dir)
     graft.TempDirs.staged(s"dsv2_zone_broadcast:$dir") { p =>
       val sink = p.resolve("sink")
-      s.sql(s"""CREATE TABLE IF NOT EXISTS $tbl (doc_id BIGINT, lang STRING, n_chars BIGINT)
-               |USING graft_digest TBLPROPERTIES ('path'='$sink')""".stripMargin)
+      createTable(s, tbl, "graft_digest", digestCols, "path" -> sink)
       t(s, dir, "documents").createOrReplaceTempView("docs_q258")
       // banded commits → per-band files with tight doc_id zones (q253)
       s.sql(s"INSERT INTO $tbl SELECT doc_id, lang, n_chars FROM docs_q258 WHERE doc_id < 150")
       s.sql(s"INSERT INTO $tbl SELECT doc_id, lang, n_chars FROM docs_q258 WHERE doc_id >= 150 AND doc_id < 300")
       s.sql(s"INSERT INTO $tbl SELECT doc_id, lang, n_chars FROM docs_q258 WHERE doc_id >= 300")
     }
-    val confs = Seq(
+    graft.Tables.withConf(s,
       // the probe side is column-pruned to doc_id, so its estimate is
       // fileBytes × width-ratio (8/36): zone-pruned band ≈ 150 absolute
       // docs ≈ 0.37 KB at every SF; the unpruned full table ≥ 1.2 KB at
       // sf0.01 and grows with SF — 700 B sits between them
       "spark.sql.autoBroadcastJoinThreshold" -> "700",
-      "spark.sql.adaptive.enabled" -> "false")
-    val prev = confs.map { case (k, _) => k -> s.conf.getOption(k) }
-    confs.foreach { case (k, v) => s.conf.set(k, v) }
-    try {
+      "spark.sql.adaptive.enabled" -> "false") {
       def joined(band: Boolean) = {
         val small0 = s.table(tbl)
         // both sides get column-pruned to doc_id by the optimizer (probed
@@ -3784,9 +3677,6 @@ object Formats {
           s"sort-merge:\n$decoyPlan")
       val rows = probe.collect().toSeq
       s.createDataFrame(s.sparkContext.parallelize(rows, 1), probe.schema)
-    } finally prev.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
     }
   }
 
@@ -3809,23 +3699,20 @@ object Formats {
   // the publish, the poisoned first audit blocks, and the replica —
   // maintained ONLY from changes — ends row-for-row equal to main.
   def q259CorpusRefresh(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    val tbl = s"graft.ns.crefresh_${Integer.toHexString(dir.hashCode)}"
+    val tbl = tableName("crefresh", dir)
     val tblB = s"${tbl}_ingest"
     val tblR = s"${tbl}_replica"
     graft.TempDirs.staged(s"dsv2_corpus_refresh:$dir") { p =>
       val sink = p.resolve("sink")
       val short = tbl.stripPrefix("graft.")
-      s.sql(s"""CREATE TABLE IF NOT EXISTS $tbl (doc_id BIGINT, lang STRING, n_chars BIGINT)
-               |USING graft_digest TBLPROPERTIES ('path'='$sink', 'delta'='true')""".stripMargin)
+      createTable(s, tbl, "graft_digest", digestCols, "path" -> sink, "delta" -> "true")
       t(s, dir, "documents").createOrReplaceTempView("docs_q259")
       // production corpus: en, de, fr
       s.sql(s"INSERT INTO $tbl SELECT doc_id, lang, n_chars FROM docs_q259 WHERE lang IN ('en','de','fr')")
       val fork = DigestManifest.currentVersion(sink.toString)
       // the crawl lands on a branch: fresh langs (zh, es) plus fr DUPES
       s.sql(s"CALL graft.system.create_branch(table => '$short', branch => 'ingest')").collect()
-      s.sql(s"""CREATE TABLE IF NOT EXISTS $tblB (doc_id BIGINT, lang STRING, n_chars BIGINT)
-               |USING graft_digest TBLPROPERTIES ('path'='$sink', 'branch'='ingest')""".stripMargin)
+      createTable(s, tblB, "graft_digest", digestCols, "path" -> sink, "branch" -> "ingest")
       s.sql(s"INSERT INTO $tblB SELECT doc_id, lang, n_chars FROM docs_q259 WHERE lang IN ('zh','es')")
       s.sql(s"INSERT INTO $tblB SELECT doc_id + 2000000, lang, n_chars FROM docs_q259 WHERE lang = 'fr'")
       // the dupes poison the audit: every branch doc_id must be NEW to
@@ -3851,8 +3738,8 @@ object Formats {
       s.sql(s"""CALL graft.system.fast_forward(table => '$short',
                |  branch => 'ingest', audit => 'doc_id < 2000000')""".stripMargin).collect()
       // downstream replica: maintained ONLY from the change feed
-      s.sql(s"""CREATE TABLE IF NOT EXISTS $tblR (doc_id BIGINT, lang STRING, n_chars BIGINT)
-               |USING graft_digest TBLPROPERTIES ('path'='${p.resolve("replica")}', 'delta'='true')""".stripMargin)
+      createTable(s, tblR, "graft_digest", digestCols, "path" -> p.resolve("replica"),
+        "delta" -> "true")
       val fold = (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) => {
         b.createOrReplaceTempView("q259_batch")
         b.sparkSession.sql(
@@ -3910,21 +3797,18 @@ object Formats {
   // written branch dropped, its file proven GONE after GC while main and
   // the surviving branch stay byte-identical (the hash-checked result).
   def q260BranchLifecycle(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    val tbl = s"graft.ns.brlife_${Integer.toHexString(dir.hashCode)}"
+    val tbl = tableName("brlife", dir)
     graft.TempDirs.staged(s"dsv2_branch_lifecycle:$dir") { p =>
       import scala.jdk.CollectionConverters._
       val sink = p.resolve("sink")
       val short = tbl.stripPrefix("graft.")
-      s.sql(s"""CREATE TABLE IF NOT EXISTS $tbl (doc_id BIGINT, lang STRING, n_chars BIGINT)
-               |USING graft_digest TBLPROPERTIES ('path'='$sink', 'delta'='true')""".stripMargin)
+      createTable(s, tbl, "graft_digest", digestCols, "path" -> sink, "delta" -> "true")
       t(s, dir, "documents").createOrReplaceTempView("docs_q260")
       s.sql(s"INSERT INTO $tbl SELECT doc_id, lang, n_chars FROM docs_q260 WHERE lang IN ('en','de')")
       s.sql(s"CALL graft.system.create_branch(table => '$short', branch => 'b1')").collect()
       s.sql(s"CALL graft.system.create_branch(table => '$short', branch => 'b2')").collect()
       val tblB = s"${tbl}_b2"
-      s.sql(s"""CREATE TABLE IF NOT EXISTS $tblB (doc_id BIGINT, lang STRING, n_chars BIGINT)
-               |USING graft_digest TBLPROPERTIES ('path'='$sink', 'branch'='b2')""".stripMargin)
+      createTable(s, tblB, "graft_digest", digestCols, "path" -> sink, "branch" -> "b2")
       s.sql(s"INSERT INTO $tblB SELECT doc_id, lang, n_chars FROM docs_q260 WHERE lang = 'zh'")
       def branches() = s.sql(s"CALL graft.system.branches(table => '$short')")
         .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
@@ -4076,21 +3960,18 @@ object Formats {
   //   - main's feed over the same span stays EMPTY until fast_forward,
   //     then shows exactly ONE publish commit carrying the net changes.
   def q262BranchCdf(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    val tbl = s"graft.ns.brcdf_${Integer.toHexString(dir.hashCode)}"
+    val tbl = tableName("brcdf", dir)
     val tblB = s"${tbl}_branch"
     graft.TempDirs.staged(s"dsv2_branch_cdf:$dir") { p =>
       val sink = p.resolve("sink")
       val short = tbl.stripPrefix("graft.")
-      s.sql(s"""CREATE TABLE IF NOT EXISTS $tbl (doc_id BIGINT, lang STRING, n_chars BIGINT)
-               |USING graft_digest TBLPROPERTIES ('path'='$sink', 'delta'='true')""".stripMargin)
+      createTable(s, tbl, "graft_digest", digestCols, "path" -> sink, "delta" -> "true")
       t(s, dir, "documents").createOrReplaceTempView("docs_q262")
       s.sql(s"INSERT INTO $tbl SELECT doc_id, lang, n_chars FROM docs_q262 WHERE lang = 'en'")
       s.sql(s"CALL graft.system.create_branch(table => '$short', branch => 'audit')").collect()
       val fork = DigestManifest.currentVersion(sink.toString)
       val forkB = DigestManifest.currentVersion(sink.toString, "audit")
-      s.sql(s"""CREATE TABLE IF NOT EXISTS $tblB (doc_id BIGINT, lang STRING, n_chars BIGINT)
-               |USING graft_digest TBLPROPERTIES ('path'='$sink', 'branch'='audit')""".stripMargin)
+      createTable(s, tblB, "graft_digest", digestCols, "path" -> sink, "branch" -> "audit")
       s.sql(s"INSERT INTO $tblB SELECT doc_id, lang, n_chars FROM docs_q262 WHERE lang = 'fr'")
       s.sql(s"INSERT INTO $tblB SELECT doc_id, lang, n_chars FROM docs_q262 WHERE lang = 'zh'")
       s.sql(s"DELETE FROM $tblB WHERE lang = 'zh'") // cure before publish
@@ -4169,14 +4050,12 @@ object Formats {
   // and the same band query then opens only its band's files. The tag
   // makes the rewrite content-preserving to the change feed.
   def q263RewriteSorted(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    val tbl = s"graft.ns.doczs_${Integer.toHexString(dir.hashCode)}"
+    val tbl = tableName("doczs", dir)
     graft.TempDirs.staged(s"dsv2_rewrite_sorted:$dir") { p =>
       val sink = p.resolve("sink")
       val short = tbl.stripPrefix("graft.")
-      s.sql(s"""CREATE TABLE IF NOT EXISTS $tbl (doc_id BIGINT, lang STRING, n_chars BIGINT)
-               |USING graft_digest
-               |TBLPROPERTIES ('path'='$sink', 'zonemap.columns'='n_chars')""".stripMargin)
+      createTable(s, tbl, "graft_digest", digestCols, "path" -> sink,
+        "zonemap.columns" -> "n_chars")
       t(s, dir, "documents").createOrReplaceTempView("docs_q263")
       // UNSORTED ingest: the default write clusters by lang only, so each
       // lang's one file spans that lang's ENTIRE n_chars range — zones
@@ -4258,21 +4137,18 @@ object Formats {
   // write-audit-publish: stage a surgical cleanup, audit it, publish it
   // atomically — no file rewritten anywhere in the pipeline.
   def q264DvBranch(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    val tbl = s"graft.ns.dvbr_${Integer.toHexString(dir.hashCode)}"
+    val tbl = tableName("dvbr", dir)
     val tblB = s"${tbl}_branch"
     graft.TempDirs.staged(s"dsv2_dv_branch:$dir") { p =>
       val sink = p.resolve("sink")
       val short = tbl.stripPrefix("graft.")
-      s.sql(s"""CREATE TABLE IF NOT EXISTS $tbl (doc_id BIGINT, lang STRING, n_chars BIGINT)
-               |USING graft_digest TBLPROPERTIES ('path'='$sink', 'dv'='true')""".stripMargin)
+      createTable(s, tbl, "graft_digest", digestCols, "path" -> sink, "dv" -> "true")
       t(s, dir, "documents").createOrReplaceTempView("docs_q264")
       s.sql(s"INSERT INTO $tbl SELECT doc_id, lang, n_chars FROM docs_q264 WHERE lang IN ('en','fr')")
       val total = s.table(tbl).count()
       s.sql(s"CALL graft.system.create_branch(table => '$short', branch => 'fix')").collect()
-      s.sql(s"""CREATE TABLE IF NOT EXISTS $tblB (doc_id BIGINT, lang STRING, n_chars BIGINT)
-               |USING graft_digest
-               |TBLPROPERTIES ('path'='$sink', 'dv'='true', 'branch'='fix')""".stripMargin)
+      createTable(s, tblB, "graft_digest", digestCols, "path" -> sink, "dv" -> "true",
+        "branch" -> "fix")
       val headBefore = DigestManifest.head(sink.toString)
       val fork = headBefore._1
       // the staged row-level cleanup: an arbitrary-predicate DV DELETE,
@@ -4349,18 +4225,15 @@ object Formats {
   // columnar; (4) `rewrite_sorted` composes — write-time range
   // clustering tightens both pruning layers on the parquet plane.
   def q266ParquetPlane(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    val tbl = s"graft.ns.pqpl_${Integer.toHexString(dir.hashCode)}"
+    val tbl = tableName("pqpl", dir)
     graft.TempDirs.staged(s"dsv2_parquet_plane:$dir") { p =>
       import scala.jdk.CollectionConverters._
       val sink = p.resolve("sink")
       val short = tbl.stripPrefix("graft.")
       // small row groups so fixture-scale files carry SEVERAL groups —
       // the in-file pruning layer must have something to skip
-      s.sql(s"""CREATE TABLE IF NOT EXISTS $tbl (doc_id BIGINT, lang STRING, n_chars BIGINT)
-               |USING graft_digest
-               |TBLPROPERTIES ('path'='$sink', 'format'='parquet',
-               |  'parquet.rowgroup.rows'='24')""".stripMargin)
+      createTable(s, tbl, "graft_digest", digestCols, "path" -> sink, "format" -> "parquet",
+        "parquet.rowgroup.rows" -> "24")
       t(s, dir, "documents").createOrReplaceTempView("docs_q266")
       s.sql(s"INSERT INTO $tbl SELECT doc_id, lang, n_chars FROM docs_q266")
       val entries = DigestManifest.listingFor(sink.toString, "_MANIFEST")
@@ -4456,15 +4329,12 @@ object Formats {
   // materializes its per-row images from parquet bytes. The q256 DML
   // cycle, re-run on the columnar plane.
   def q267ParquetDv(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    val tbl = s"graft.ns.pqdv_${Integer.toHexString(dir.hashCode)}"
+    val tbl = tableName("pqdv", dir)
     graft.TempDirs.staged(s"dsv2_parquet_dv:$dir") { p =>
       import scala.jdk.CollectionConverters._
       val sink = p.resolve("sink")
-      s.sql(s"""CREATE TABLE IF NOT EXISTS $tbl (doc_id BIGINT, lang STRING, n_chars BIGINT)
-               |USING graft_digest
-               |TBLPROPERTIES ('path'='$sink', 'dv'='true', 'format'='parquet',
-               |  'parquet.rowgroup.rows'='24')""".stripMargin)
+      createTable(s, tbl, "graft_digest", digestCols, "path" -> sink, "dv" -> "true",
+        "format" -> "parquet", "parquet.rowgroup.rows" -> "24")
       t(s, dir, "documents").createOrReplaceTempView("docs_q267")
       s.sql(s"INSERT INTO $tbl SELECT doc_id, lang, n_chars FROM docs_q267")
       val originals = {
@@ -4572,16 +4442,13 @@ object Formats {
   // retired by compact, pre/post-compact answers identical, and the
   // pre-compact version still time-travels (the flavor retains history).
   def q271ParquetDelta(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    val tbl = s"graft.ns.pqdelta_${Integer.toHexString(dir.hashCode)}"
+    val tbl = tableName("pqdelta", dir)
     graft.TempDirs.staged(s"dsv2_parquet_delta:$dir") { p =>
       import scala.jdk.CollectionConverters._
       val sink = p.resolve("sink")
       val short = tbl.stripPrefix("graft.")
-      s.sql(s"""CREATE TABLE IF NOT EXISTS $tbl (doc_id BIGINT, lang STRING, n_chars BIGINT)
-               |USING graft_digest
-               |TBLPROPERTIES ('path'='$sink', 'delta'='true', 'format'='parquet',
-               |  'parquet.rowgroup.rows'='24')""".stripMargin)
+      createTable(s, tbl, "graft_digest", digestCols, "path" -> sink, "delta" -> "true",
+        "format" -> "parquet", "parquet.rowgroup.rows" -> "24")
       t(s, dir, "documents").createOrReplaceTempView("docs_q271")
       s.sql(s"INSERT INTO $tbl SELECT doc_id, lang, n_chars FROM docs_q271")
       def files(): Seq[String] = {
@@ -4680,10 +4547,9 @@ object Formats {
   // 100 TB on a wide table this is the single largest scan saving there
   // is: a 2-of-100-column projection reads 2% of the data bytes.
   def q272ColumnPrune(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    val tblA = s"graft.ns.cp_a_${Integer.toHexString(dir.hashCode)}"
-    val tblB = s"graft.ns.cp_b_${Integer.toHexString(dir.hashCode)}"
-    val tblC = s"graft.ns.cp_c_${Integer.toHexString(dir.hashCode)}"
+    val tblA = tableName("cp_a", dir)
+    val tblB = tableName("cp_b", dir)
+    val tblC = tableName("cp_c", dir)
     graft.TempDirs.staged(s"dsv2_column_prune:$dir") { p =>
       def counters(q: String): (Long, Long, Long) = {
         val c0 = DigestSink.columnChunkReadEvents.get()
@@ -4698,10 +4564,8 @@ object Formats {
       val nDocs = s.table("docs_q272").count()
 
       // -- clean parquet table: chunk-exact pruning, still columnar ------
-      s.sql(s"""CREATE TABLE IF NOT EXISTS $tblA (doc_id BIGINT, lang STRING, n_chars BIGINT)
-               |USING graft_digest
-               |TBLPROPERTIES ('path'='${p.resolve("a")}', 'format'='parquet',
-               |  'parquet.rowgroup.rows'='24')""".stripMargin)
+      createTable(s, tblA, "graft_digest", digestCols, "path" -> p.resolve("a"),
+        "format" -> "parquet", "parquet.rowgroup.rows" -> "24")
       s.sql(s"INSERT INTO $tblA SELECT doc_id, lang, n_chars FROM docs_q272")
       val (c1, r1, _) = counters(s"SELECT SUM(doc_id) AS x FROM $tblA")
       require(r1 > 0 && c1 == r1,
@@ -4734,10 +4598,8 @@ object Formats {
         s"q272: footer-served count $metaCount != $nDocs")
 
       // -- DV parquet table: pruned reads stay position-exact ------------
-      s.sql(s"""CREATE TABLE IF NOT EXISTS $tblB (doc_id BIGINT, lang STRING, n_chars BIGINT)
-               |USING graft_digest
-               |TBLPROPERTIES ('path'='${p.resolve("b")}', 'dv'='true',
-               |  'format'='parquet', 'parquet.rowgroup.rows'='24')""".stripMargin)
+      createTable(s, tblB, "graft_digest", digestCols, "path" -> p.resolve("b"), "dv" -> "true",
+        "format" -> "parquet", "parquet.rowgroup.rows" -> "24")
       s.sql(s"INSERT INTO $tblB SELECT doc_id, lang, n_chars FROM docs_q272")
       s.sql(s"DELETE FROM $tblB WHERE doc_id % 7 = 3")
       val (cdv, rdv, _) = counters(s"SELECT SUM(n_chars) AS x FROM $tblB")
@@ -4754,9 +4616,7 @@ object Formats {
           s"decode 2 chunks per surviving group (decoded $cband over $rband)")
 
       // -- CSV plane: the projection applies post-parse ------------------
-      s.sql(s"""CREATE TABLE IF NOT EXISTS $tblC (doc_id BIGINT, lang STRING, n_chars BIGINT)
-               |USING graft_digest
-               |TBLPROPERTIES ('path'='${p.resolve("c")}')""".stripMargin)
+      createTable(s, tblC, "graft_digest", digestCols, "path" -> p.resolve("c"))
       s.sql(s"INSERT INTO $tblC SELECT doc_id, lang, n_chars FROM docs_q272")
       val sumPq = s.sql(s"SELECT SUM(n_chars) AS x FROM $tblA")
         .collect()(0).getLong(0)
@@ -4796,19 +4656,16 @@ object Formats {
   // reuse until the pin is released (a new incarnation would reuse the
   // pinned chain's version numbers).
   def q273BranchTag(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    val tbl = s"graft.ns.brtag_${Integer.toHexString(dir.hashCode)}"
+    val tbl = tableName("brtag", dir)
     graft.TempDirs.staged(s"dsv2_branch_tag:$dir") { p =>
       val sink = p.resolve("sink")
       val short = tbl.stripPrefix("graft.")
-      s.sql(s"""CREATE TABLE IF NOT EXISTS $tbl (doc_id BIGINT, lang STRING, n_chars BIGINT)
-               |USING graft_digest TBLPROPERTIES ('path'='$sink', 'delta'='true')""".stripMargin)
+      createTable(s, tbl, "graft_digest", digestCols, "path" -> sink, "delta" -> "true")
       t(s, dir, "documents").createOrReplaceTempView("docs_q273")
       s.sql(s"INSERT INTO $tbl SELECT doc_id, lang, n_chars FROM docs_q273 WHERE lang IN ('de','fr')")
       s.sql(s"CALL graft.system.create_branch(table => '$short', branch => 'wap')").collect()
       val tblW = s"${tbl}_wap"
-      s.sql(s"""CREATE TABLE IF NOT EXISTS $tblW (doc_id BIGINT, lang STRING, n_chars BIGINT)
-               |USING graft_digest TBLPROPERTIES ('path'='$sink', 'branch'='wap')""".stripMargin)
+      createTable(s, tblW, "graft_digest", digestCols, "path" -> sink, "branch" -> "wap")
       s.sql(s"INSERT INTO $tblW SELECT doc_id, lang, n_chars FROM docs_q273 WHERE lang = 'en'")
       // the audit pin: name the EXACT candidate before publish
       val made = s.sql(s"CALL graft.system.create_tag(table => '$short', " +
@@ -4890,18 +4747,14 @@ object Formats {
   // resolution).
   def q274EvolveLakehouse(s: SparkSession, dir: String): DataFrame = {
     import scala.jdk.CollectionConverters._
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    val tbl = s"graft.ns.evlake_${Integer.toHexString(dir.hashCode)}"
+    val tbl = tableName("evlake", dir)
     graft.TempDirs.staged(s"dsv2_evolve_lakehouse:$dir") { p =>
       val sink = p.resolve("sink")
-      s.sql(s"""CREATE TABLE IF NOT EXISTS $tbl (
-               |  doc_id BIGINT, lang STRING, n_chars BIGINT, tokens BIGINT,
-               |  quality DOUBLE, source STRING, year BIGINT, score DOUBLE,
-               |  title STRING, bucket BIGINT)
-               |USING graft_evolve
-               |TBLPROPERTIES ('path'='$sink', 'format'='parquet',
-               |  'parquet.rowgroup.rows'='24',
-               |  'zonemap.columns'='doc_id,bucket')""".stripMargin)
+      createTable(s, tbl, "graft_evolve",
+        s"$digestCols, tokens BIGINT, quality DOUBLE, source STRING, year BIGINT, " +
+          "score DOUBLE, title STRING, bucket BIGINT",
+        "path" -> sink, "format" -> "parquet", "parquet.rowgroup.rows" -> "24",
+        "zonemap.columns" -> "doc_id,bucket")
       t(s, dir, "documents").createOrReplaceTempView("docs_q274")
       val proj = """SELECT doc_id, lang, n_chars, n_chars div 5 AS tokens,
                    |  CAST(doc_id % 100 AS DOUBLE) / 100 AS quality, source,
@@ -5037,13 +4890,11 @@ object Formats {
   // rollback can be rolled back. Locks below pin all three, plus the
   // refusals (current head, expired version).
   def q275Rollback(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    val tbl = s"graft.ns.rollb_${Integer.toHexString(dir.hashCode)}"
+    val tbl = tableName("rollb", dir)
     graft.TempDirs.staged(s"dsv2_rollback:$dir") { p =>
       val sink = p.resolve("sink").toString
       val short = tbl.stripPrefix("graft.")
-      s.sql(s"""CREATE TABLE IF NOT EXISTS $tbl (doc_id BIGINT, lang STRING, n_chars BIGINT)
-               |USING graft_digest TBLPROPERTIES ('path'='$sink', 'delta'='true')""".stripMargin)
+      createTable(s, tbl, "graft_digest", digestCols, "path" -> sink, "delta" -> "true")
       t(s, dir, "documents").createOrReplaceTempView("docs_q275")
       s.sql(s"INSERT INTO $tbl SELECT doc_id, lang, n_chars FROM docs_q275 WHERE lang IN ('de','fr')")
       s.sql(s"INSERT INTO $tbl SELECT doc_id, lang, n_chars FROM docs_q275 WHERE lang = 'en'")
@@ -5120,8 +4971,7 @@ object Formats {
   def q276IncrementalMv(s: SparkSession, dir: String): DataFrame = {
     val staged = stageChangesTable(s, dir)
     val sink = staged.resolve("sink").toString
-    val h = Integer.toHexString(dir.hashCode)
-    val tbl = s"graft.ns.docchf_$h"
+    val tbl = tableName("docchf", dir)
     def batch(v: Int): DataFrame = s.read
       .format("graft.sources.DigestSink")
       .option("path", sink)
@@ -5182,13 +5032,11 @@ object Formats {
   // the rewrite is change-feed-invisible (content-preserving tag), and
   // the digest read through the pruned scan stays hash-exact.
   def q277Zorder(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    val tbl = s"graft.ns.zord_${Integer.toHexString(dir.hashCode)}"
+    val tbl = tableName("zord", dir)
     graft.TempDirs.staged(s"dsv2_zorder:$dir") { p =>
       val sink = p.resolve("sink").toString
       val short = tbl.stripPrefix("graft.")
-      s.sql(s"""CREATE TABLE IF NOT EXISTS $tbl (doc_id BIGINT, lang STRING, n_chars BIGINT)
-               |USING graft_digest TBLPROPERTIES ('path'='$sink')""".stripMargin)
+      createTable(s, tbl, "graft_digest", digestCols, "path" -> sink)
       t(s, dir, "documents").createOrReplaceTempView("docs_q277")
       s.sql(s"INSERT INTO $tbl SELECT doc_id, lang, n_chars FROM docs_q277")
       // band cuts at lo + span/8 per column: in min/max-scaled bit space
@@ -5275,13 +5123,10 @@ object Formats {
   // opens ≤ 2 and returns nothing, the unbounded decoy opens everything,
   // and the IN-probe digest is hash-checked against the oracle.
   def q278BloomSkipping(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    val tbl = s"graft.ns.bloom_${Integer.toHexString(dir.hashCode)}"
+    val tbl = tableName("bloom", dir)
     graft.TempDirs.staged(s"dsv2_bloom:$dir") { p =>
       val sink = p.resolve("sink").toString
-      s.sql(s"""CREATE TABLE IF NOT EXISTS $tbl (doc_id BIGINT, lang STRING, n_chars BIGINT)
-               |USING graft_digest
-               |TBLPROPERTIES ('path'='$sink', 'bloom.columns'='doc_id')""".stripMargin)
+      createTable(s, tbl, "graft_digest", digestCols, "path" -> sink, "bloom.columns" -> "doc_id")
       // CAPPED ingest (round-19): per-file blooms are saturation-gated
       // past ~2048 rows (BloomCodec.encodeIfUseful), so the fixture
       // bounds its file sizes to stay in the bloom-served regime at
@@ -5358,15 +5203,11 @@ object Formats {
   // decoy opens all — and the filter SURVIVES deletion-vector growth
   // (the DV mutation rewrites the entry's attrs around it).
   def q279EvolveBloom(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    val tbl = s"graft.ns.evbloom_${Integer.toHexString(dir.hashCode)}"
+    val tbl = tableName("evbloom", dir)
     graft.TempDirs.staged(s"dsv2_evolve_bloom:$dir") { p =>
       val sink = p.resolve("sink").toString
-      s.sql(s"""CREATE TABLE IF NOT EXISTS $tbl
-               |(doc_id BIGINT, lang STRING, n_chars BIGINT, bucket BIGINT)
-               |USING graft_evolve
-               |TBLPROPERTIES ('path'='$sink', 'format'='parquet',
-               |  'bloom.columns'='bucket')""".stripMargin)
+      createTable(s, tbl, "graft_evolve", s"$digestCols, bucket BIGINT", "path" -> sink,
+        "format" -> "parquet", "bloom.columns" -> "bucket")
       // capped like q278/q280: stay inside the saturation-gated bloom
       // regime at every scale factor (round-19)
       t(s, dir, "documents").createOrReplaceTempView("docs_q279_all")
@@ -5453,13 +5294,10 @@ object Formats {
   // bloom may hold the touched ids (here: the one `en` file out of 5 —
   // ≤2 tolerated for the codified false-positive allowance).
   def q280RuntimeIdSkipping(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    val tbl = s"graft.ns.docrtid_${Integer.toHexString(dir.hashCode)}"
+    val tbl = tableName("docrtid", dir)
     val staged = graft.TempDirs.staged(s"dsv2_runtime_id_skip:$dir") { p =>
       val sink = p.resolve("sink")
-      s.sql(s"""CREATE TABLE IF NOT EXISTS $tbl (doc_id BIGINT, lang STRING, n_chars BIGINT)
-               |USING graft_digest TBLPROPERTIES ('path'='$sink',
-               |  'bloom.columns'='doc_id')""".stripMargin)
+      createTable(s, tbl, "graft_digest", digestCols, "path" -> sink, "bloom.columns" -> "doc_id")
       // CAPPED ingest (the q245 protocol-fixture shape): per-file blooms
       // are saturation-gated past ~2048 rows (BloomCodec.encodeIfUseful,
       // found by the round-19 sf1 rung), so the fixture bounds its file
@@ -5537,17 +5375,12 @@ object Formats {
   // change feed never sees data churn. Locks mirror q277 on BOTH
   // dimensions, plus CDF invisibility and a hash-exact digest.
   def q281EvolveZorder(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    val short = s"ns.evz_${Integer.toHexString(dir.hashCode)}"
-    val tbl = s"graft.$short"
+    val tbl = tableName("evz", dir)
+    val short = tbl.stripPrefix("graft.")
     graft.TempDirs.staged(s"dsv2_evolve_zorder:$dir") { p =>
       val sink = p.resolve("sink").toString
-      s.sql(s"""CREATE TABLE IF NOT EXISTS $tbl
-               |(doc_id BIGINT, lang STRING, n_chars BIGINT,
-               | bucket BIGINT, score BIGINT)
-               |USING graft_evolve
-               |TBLPROPERTIES ('path'='$sink', 'format'='parquet',
-               |  'zonemap.columns'='doc_id,n_chars')""".stripMargin)
+      createTable(s, tbl, "graft_evolve", s"$digestCols, bucket BIGINT, score BIGINT",
+        "path" -> sink, "format" -> "parquet", "zonemap.columns" -> "doc_id,n_chars")
       t(s, dir, "documents").createOrReplaceTempView("docs_q281")
       // SHUFFLED ingest: four interleaved slices (doc_id % 4) — every
       // committed file's doc_id AND n_chars zones are near-full-width
@@ -5654,19 +5487,15 @@ object Formats {
   // (rowGroupReadEvents), an absent probe decodes ~none, the decoy
   // decodes all, and the digest stays hash-exact.
   def q282RowGroupBloom(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    val tbl = s"graft.ns.rgbloom_${Integer.toHexString(dir.hashCode)}"
+    val tbl = tableName("rgbloom", dir)
     graft.TempDirs.staged(s"dsv2_rowgroup_bloom:$dir") { p =>
       val sink = p.resolve("sink").toString
       // the evolve table, because its write declares NO ordering: the
       // fixture controls row order, and a hash-scrambled sort leaves
       // every row group's (min, max) near-full-width — the regime where
       // stats prune nothing and only the bloom can
-      s.sql(s"""CREATE TABLE IF NOT EXISTS $tbl (doc_id BIGINT, lang STRING, n_chars BIGINT)
-               |USING graft_evolve
-               |TBLPROPERTIES ('path'='$sink', 'format'='parquet',
-               |  'parquet.rowgroup.rows'='512',
-               |  'bloom.columns'='doc_id')""".stripMargin)
+      createTable(s, tbl, "graft_evolve", digestCols, "path" -> sink, "format" -> "parquet",
+        "parquet.rowgroup.rows" -> "512", "bloom.columns" -> "doc_id")
       t(s, dir, "documents").createOrReplaceTempView("docs_q282")
       // ×32 key-amplified rows push each committed file PAST the
       // manifest filter's ~2048-row saturation gate — this query lives
@@ -5743,13 +5572,11 @@ object Formats {
   // batch itself, aggregated per change type (fully deterministic from
   // `documents`, so DuckDB recomputes every count, sum, and id digest).
   def q283RollbackInverse(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    val tbl = s"graft.ns.rbinv_${Integer.toHexString(dir.hashCode)}"
+    val tbl = tableName("rbinv", dir)
     val short = tbl.stripPrefix("graft.")
     val staged = graft.TempDirs.staged(s"dsv2_rollback_inverse:$dir") { p =>
       val sink = p.resolve("sink").toString
-      s.sql(s"""CREATE TABLE IF NOT EXISTS $tbl (doc_id BIGINT, lang STRING, n_chars BIGINT)
-               |USING graft_digest TBLPROPERTIES ('path'='$sink', 'delta'='true')""".stripMargin)
+      createTable(s, tbl, "graft_digest", digestCols, "path" -> sink, "delta" -> "true")
       t(s, dir, "documents").createOrReplaceTempView("docs_q283")
       // v1: the good load
       s.sql(s"INSERT INTO $tbl SELECT doc_id, lang, n_chars FROM docs_q283 WHERE lang = 'en'")
@@ -5846,17 +5673,12 @@ object Formats {
   // at audit with main byte-identical; the clean one publishes as one
   // commit, restores pruning on main, and leaves the CDF unchanged.
   def q284EvolveWapRewrite(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    val h = Integer.toHexString(dir.hashCode)
-    val short = s"ns.evwap_$h"
-    val tbl = s"graft.$short"
+    val tbl = tableName("evwap", dir)
+    val short = tbl.stripPrefix("graft.")
     graft.TempDirs.staged(s"dsv2_evolve_wap:$dir") { p =>
       val sink = p.resolve("sink").toString
-      s.sql(s"""CREATE TABLE IF NOT EXISTS $tbl
-               |(doc_id BIGINT, lang STRING, n_chars BIGINT)
-               |USING graft_evolve
-               |TBLPROPERTIES ('path'='$sink', 'format'='parquet',
-               |  'zonemap.columns'='doc_id')""".stripMargin)
+      createTable(s, tbl, "graft_evolve", digestCols, "path" -> sink, "format" -> "parquet",
+        "zonemap.columns" -> "doc_id")
       t(s, dir, "documents").createOrReplaceTempView("docs_q284")
       // shuffled ingest: interleaved slices leave every file's zone wide
       (0 until 2).foreach(k => s.sql(
@@ -5887,11 +5709,8 @@ object Formats {
       s.sql(s"CALL graft.system.create_branch(table => '$short', " +
         "branch => 'maint')").collect()
       val tblM = s"${tbl}_maint"
-      s.sql(s"""CREATE TABLE IF NOT EXISTS $tblM
-               |(doc_id BIGINT, lang STRING, n_chars BIGINT)
-               |USING graft_evolve
-               |TBLPROPERTIES ('path'='$sink', 'branch'='maint',
-               |  'format'='parquet', 'zonemap.columns'='doc_id')""".stripMargin)
+      createTable(s, tblM, "graft_evolve", digestCols, "path" -> sink, "branch" -> "maint",
+        "format" -> "parquet", "zonemap.columns" -> "doc_id")
       s.sql(s"CALL graft.system.rewrite_sorted(table => '${short}_maint', " +
         "cols => 'doc_id', buckets => 4)").collect()
       // the poison: a doubled row — per-row audits cannot see it
@@ -5918,11 +5737,8 @@ object Formats {
       s.sql(s"CALL graft.system.create_branch(table => '$short', " +
         "branch => 'maint2')").collect()
       val tblM2 = s"${tbl}_maint2"
-      s.sql(s"""CREATE TABLE IF NOT EXISTS $tblM2
-               |(doc_id BIGINT, lang STRING, n_chars BIGINT)
-               |USING graft_evolve
-               |TBLPROPERTIES ('path'='$sink', 'branch'='maint2',
-               |  'format'='parquet', 'zonemap.columns'='doc_id')""".stripMargin)
+      createTable(s, tblM2, "graft_evolve", digestCols, "path" -> sink, "branch" -> "maint2",
+        "format" -> "parquet", "zonemap.columns" -> "doc_id")
       s.sql(s"CALL graft.system.rewrite_sorted(table => '${short}_maint2', " +
         "cols => 'doc_id', buckets => 4)").collect()
       require(opened(s"doc_id < $band") == files(),
@@ -5972,10 +5788,8 @@ object Formats {
   // orphan them). The oracle recomputes the full 10-column replica from
   // `documents`, renamed column included.
   def q285EvolveStream(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    val h = Integer.toHexString(dir.hashCode)
-    val src = s"graft.ns.evstr_src_$h"
-    val dst = s"graft.ns.evstr_dst_$h"
+    val src = tableName("evstr_src", dir)
+    val dst = tableName("evstr_dst", dir)
     val widths = "w0 BIGINT, w1 BIGINT, w2 BIGINT, w3 BIGINT, " +
       "w4 BIGINT, w5 BIGINT, w6 BIGINT"
     val wSelect = """(doc_id * 3) % 1009 AS w0, (doc_id * 5) % 1013 AS w1,
@@ -5983,14 +5797,10 @@ object Formats {
                     |(doc_id * 13) % 1031 AS w4, (doc_id * 17) % 1033 AS w5,
                     |(doc_id * 19) % 1039 AS w6""".stripMargin
     graft.TempDirs.staged(s"dsv2_evolve_stream:$dir") { p =>
-      s.sql(s"""CREATE TABLE IF NOT EXISTS $src
-               |(doc_id BIGINT, lang STRING, n_chars BIGINT, $widths)
-               |USING graft_evolve
-               |TBLPROPERTIES ('path'='${p.resolve("src")}', 'format'='parquet')""".stripMargin)
-      s.sql(s"""CREATE TABLE IF NOT EXISTS $dst
-               |(doc_id BIGINT, lang STRING, n_chars BIGINT, $widths)
-               |USING graft_evolve
-               |TBLPROPERTIES ('path'='${p.resolve("dst")}', 'format'='parquet')""".stripMargin)
+      createTable(s, src, "graft_evolve", s"$digestCols, $widths", "path" -> p.resolve("src"),
+        "format" -> "parquet")
+      createTable(s, dst, "graft_evolve", s"$digestCols, $widths", "path" -> p.resolve("dst"),
+        "format" -> "parquet")
       t(s, dir, "documents").createOrReplaceTempView("docs_q285")
       def ingest(langPred: String): Unit = s.sql(
         s"""INSERT INTO $src SELECT doc_id, lang, n_chars, $wSelect
@@ -6077,20 +5887,16 @@ object Formats {
   // version still serves its CSV rows; a post-migration insert lands
   // parquet; the digest stays hash-exact.
   def q286RewritePlane(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    val h = Integer.toHexString(dir.hashCode)
-    val short = s"ns.plmig_$h"
-    val tbl = s"graft.$short"
+    val tbl = tableName("plmig", dir)
+    val short = tbl.stripPrefix("graft.")
     graft.TempDirs.staged(s"dsv2_rewrite_plane:$dir") { p =>
       val sink = p.resolve("sink").toString
       // dv flavor: history-retaining (pre-conversion snapshots stay
       // time-travelable after the migration's truncate-overwrite) AND on
       // the direct scan path, so the row-group needle layer serves the
       // post-migration point probes
-      s.sql(s"""CREATE TABLE IF NOT EXISTS $tbl (doc_id BIGINT, lang STRING, n_chars BIGINT)
-               |USING graft_digest
-               |TBLPROPERTIES ('path'='$sink', 'dv'='true',
-               |  'parquet.rowgroup.rows'='512')""".stripMargin)
+      createTable(s, tbl, "graft_digest", digestCols, "path" -> sink, "dv" -> "true",
+        "parquet.rowgroup.rows" -> "512")
       t(s, dir, "documents").createOrReplaceTempView("docs_q286")
       // ×32 key-amplified, hash-shuffled rows: files far past the
       // manifest bloom's saturation gate, zones wide — the regime where
@@ -6187,10 +5993,8 @@ object Formats {
   // feed; the oracled output is the per-(version, change-type) digest,
   // fully deterministic from `documents`.
   def q287EvolveChangesStream(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    val h = Integer.toHexString(dir.hashCode)
-    val short = s"ns.evcdc_$h"
-    val tbl = s"graft.$short"
+    val tbl = tableName("evcdc", dir)
+    val short = tbl.stripPrefix("graft.")
     def digest(df: DataFrame): DataFrame = df
       .groupBy(col("_commit_version").as("commit_v"),
         col("_change_type").as("change_type"))
@@ -6201,9 +6005,7 @@ object Formats {
       .orderBy("commit_v", "change_type")
     val staged = graft.TempDirs.staged(s"dsv2_evolve_cdc:$dir") { p =>
       val sink = p.resolve("sink").toString
-      s.sql(s"""CREATE TABLE IF NOT EXISTS $tbl (doc_id BIGINT, lang STRING, n_chars BIGINT)
-               |USING graft_evolve
-               |TBLPROPERTIES ('path'='$sink', 'format'='parquet')""".stripMargin)
+      createTable(s, tbl, "graft_evolve", digestCols, "path" -> sink, "format" -> "parquet")
       t(s, dir, "documents").createOrReplaceTempView("docs_q287")
       s.sql(s"INSERT INTO $tbl SELECT doc_id, lang, n_chars FROM docs_q287 WHERE lang = 'en'")
       s.sql(s"INSERT INTO $tbl SELECT doc_id, lang, n_chars FROM docs_q287 WHERE lang = 'de'")
@@ -6261,17 +6063,13 @@ object Formats {
   // each slice as one manifest version — a months-deep declared-schema
   // table backfills in bounded checkpointed slices, exactly once.
   def q288EvolveBoundedStream(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    val h = Integer.toHexString(dir.hashCode)
-    val src = s"graft.ns.evbnd_src_$h"
-    val dst = s"graft.ns.evbnd_dst_$h"
+    val src = tableName("evbnd_src", dir)
+    val dst = tableName("evbnd_dst", dir)
     graft.TempDirs.staged(s"dsv2_evolve_bounded:$dir") { p =>
-      s.sql(s"""CREATE TABLE IF NOT EXISTS $src (doc_id BIGINT, lang STRING, n_chars BIGINT)
-               |USING graft_evolve
-               |TBLPROPERTIES ('path'='${p.resolve("src")}', 'format'='parquet')""".stripMargin)
-      s.sql(s"""CREATE TABLE IF NOT EXISTS $dst (doc_id BIGINT, lang STRING, n_chars BIGINT)
-               |USING graft_evolve
-               |TBLPROPERTIES ('path'='${p.resolve("dst")}', 'format'='parquet')""".stripMargin)
+      createTable(s, src, "graft_evolve", digestCols, "path" -> p.resolve("src"),
+        "format" -> "parquet")
+      createTable(s, dst, "graft_evolve", digestCols, "path" -> p.resolve("dst"),
+        "format" -> "parquet")
       t(s, dir, "documents").createOrReplaceTempView("docs_q288")
       s.sql(s"INSERT INTO $src SELECT doc_id, lang, n_chars FROM docs_q288 WHERE lang IN ('de', 'fr')")
       s.sql(s"INSERT INTO $src SELECT doc_id, lang, n_chars FROM docs_q288 WHERE lang = 'en'")

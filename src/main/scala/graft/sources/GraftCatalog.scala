@@ -12,8 +12,9 @@ import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** A DataSource V2 `TableCatalog` plugin — the IDENTIFIER-RESOLUTION layer
-  * of the connector stack, on top of the q163 read path. Registered as
-  * `spark.sql.catalog.graft = graft.sources.GraftCatalog`, it routes
+  * of the connector stack, on top of the q163 read path. Registered once,
+  * by `Bench.session`, as `spark.sql.catalog.graft =
+  * graft.sources.GraftCatalog` (queries never set it), it routes
   * catalog-qualified SQL (`graft.ns.t`) through the full V2 resolution
   * chain: CatalogManager → this catalog → `loadTable` → [[SeqTable]] →
   * ScanBuilder with every pushdown the path-based load already proves.

@@ -917,17 +917,9 @@ object EventStream {
     * and a query function must not leave process-visible conf changes
     * behind. Shared by q132/q138/q142 and the StreamingSpec restarts.
     */
-  private[graft] def withRocksDBProvider[T](s: SparkSession)(f: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try f
-    finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
-    }
-  }
+  private[graft] def withRocksDBProvider[T](s: SparkSession)(f: => T): T =
+    graft.Tables.withConf(s, "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")(f)
 
   /** TIME-ORDERED 4-batch replay of the events table, shared by the
     * event-time stateful queries (q138, q142): event time floored to the

@@ -1,5 +1,7 @@
 package graft.tools
 
+import graft.sources.Formats
+
 /** Dev-only: measure the DML WRITE paths themselves at scale (PLANS.md
   * "soak part 3"). The sf1 soak parts 1–2 deliberately excluded
   * q202/q203/q204/q207/q211/q214 because their TempDirs staging is
@@ -25,7 +27,6 @@ object SoakDml {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = graft.Bench.session(cpus)
     spark.sparkContext.setLogLevel("WARN")
-    spark.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
     graft.Tables.t(spark, sfDir, "documents").createOrReplaceTempView("soak_docs")
     // one scan to warm the docs cacheless-read path so rep 1 of the first
     // verb isn't charged the session's first-parquet-touch costs
@@ -63,8 +64,8 @@ object SoakDml {
       // ---- group-based flavor (rowlevel): insert → update → merge ----
       val rloDir = java.nio.file.Files.createTempDirectory(s"soak_rlo_$rep-")
       val rlo = s"graft.ns.soakrlo_$tag"
-      spark.sql(s"""CREATE TABLE $rlo (doc_id BIGINT, lang STRING, n_chars BIGINT)
-                   |USING graft_digest TBLPROPERTIES ('path'='$rloDir', 'rowlevel'='true')""".stripMargin)
+      Formats.createTable(spark, rlo, "graft_digest", Formats.digestCols, "path" -> rloDir,
+        "rowlevel" -> "true")
       timed("insert") {
         spark.sql(s"INSERT INTO $rlo SELECT doc_id, lang, n_chars FROM soak_docs")
       }
@@ -77,8 +78,8 @@ object SoakDml {
       // ---- delta flavor: insert (untimed) → delta merge → compact ----
       val dDir = java.nio.file.Files.createTempDirectory(s"soak_delta_$rep-")
       val dlt = s"graft.ns.soakdelta_$tag"
-      spark.sql(s"""CREATE TABLE $dlt (doc_id BIGINT, lang STRING, n_chars BIGINT)
-                   |USING graft_digest TBLPROPERTIES ('path'='$dDir', 'delta'='true')""".stripMargin)
+      Formats.createTable(spark, dlt, "graft_digest", Formats.digestCols, "path" -> dDir,
+        "delta" -> "true")
       spark.sql(s"INSERT INTO $dlt SELECT doc_id, lang, n_chars FROM soak_docs")
       timed("merge_delta") { spark.sql(mergeSql(dlt)) }
       // the UNCOMPACTED merge-on-read serve (round-18 item 4): verb logs
@@ -114,8 +115,8 @@ object SoakDml {
       // ---- dv flavor (q252/q256): position-delete DELETE, dv MERGE ----
       val vDir = java.nio.file.Files.createTempDirectory(s"soak_dv_$rep-")
       val dv = s"graft.ns.soakdv_$tag"
-      spark.sql(s"""CREATE TABLE $dv (doc_id BIGINT, lang STRING, n_chars BIGINT)
-                   |USING graft_digest TBLPROPERTIES ('path'='$vDir', 'dv'='true')""".stripMargin)
+      Formats.createTable(spark, dv, "graft_digest", Formats.digestCols, "path" -> vDir,
+        "dv" -> "true")
       spark.sql(s"INSERT INTO $dv SELECT doc_id, lang, n_chars FROM soak_docs")
       timed("dv_delete") {
         spark.sql(s"DELETE FROM $dv WHERE doc_id % 17 = 3")
@@ -129,9 +130,8 @@ object SoakDml {
       // with zero parquet bytes rewritten, and the scan reads vectorized
       val pqDir = java.nio.file.Files.createTempDirectory(s"soak_pq_$rep-")
       val pq = s"graft.ns.soakpq_$tag"
-      spark.sql(s"""CREATE TABLE $pq (doc_id BIGINT, lang STRING, n_chars BIGINT)
-                   |USING graft_digest TBLPROPERTIES ('path'='$pqDir', 'dv'='true',
-                   |  'format'='parquet')""".stripMargin)
+      Formats.createTable(spark, pq, "graft_digest", Formats.digestCols, "path" -> pqDir,
+        "dv" -> "true", "format" -> "parquet")
       timed("pq_insert") {
         spark.sql(s"INSERT INTO $pq SELECT doc_id, lang, n_chars FROM soak_docs")
       }

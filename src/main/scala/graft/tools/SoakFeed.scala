@@ -1,5 +1,7 @@
 package graft.tools
 
+import graft.sources.Formats
+
 /** Dev-only: measure the ROUND-14 connector paths at scale (PLANS.md
   * "round 14 part 8"). Same protocol as [[SoakDml]]: a FRESH table +
   * staging dir per rep (nothing memoized), each verb's committed job
@@ -24,7 +26,6 @@ object SoakFeed {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = graft.Bench.session(cpus)
     spark.sparkContext.setLogLevel("WARN")
-    spark.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
     graft.Tables.t(spark, sfDir, "documents").createOrReplaceTempView("soak_docs")
     spark.table("soak_docs").count()
 
@@ -56,29 +57,26 @@ object SoakFeed {
       }
       // ---- spj_join (q238/q239) + meta_count (q240) ----------------------
       val (t2, p2) = freshIds()
-      spark.sql(s"""CREATE TABLE $t2 (doc_id BIGINT, lang STRING, n_chars BIGINT)
-                   |USING graft_digest TBLPROPERTIES ('path'='${p2.resolve("b")}')""".stripMargin)
+      Formats.createTable(spark, t2, "graft_digest", Formats.digestCols, "path" -> p2.resolve("b"))
       spark.sql(s"INSERT INTO $t2 SELECT MIN(doc_id), lang, COUNT(*) FROM soak_docs GROUP BY lang")
-      val confs = Seq(
-        "spark.sql.sources.v2.bucketing.enabled" -> "true",
-        "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-        "spark.sql.adaptive.enabled" -> "false")
-      confs.foreach { case (k, v) => spark.conf.set(k, v) }
-      timed("spj_join") {
-        spark.table(t1).join(spark.table(t2).select(
-            org.apache.spark.sql.functions.col("lang")), "lang")
-          .groupBy("lang").count().collect()
+      graft.Tables.withConf(spark,
+          "spark.sql.sources.v2.bucketing.enabled" -> "true",
+          "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+          "spark.sql.adaptive.enabled" -> "false") {
+        timed("spj_join") {
+          spark.table(t1).join(spark.table(t2).select(
+              org.apache.spark.sql.functions.col("lang")), "lang")
+            .groupBy("lang").count().collect()
+        }
       }
-      confs.foreach { case (k, _) => spark.conf.unset(k) }
-      spark.conf.set("spark.sql.adaptive.enabled", "true")
       timed("meta_count") {
         spark.sql(s"SELECT lang, COUNT(*) FROM $t1 GROUP BY lang").collect()
       }
       // ---- changes_feed (q241) over real history --------------------------
       val (t3, p3) = freshIds()
       val sink3 = p3.resolve("sink")
-      spark.sql(s"""CREATE TABLE $t3 (doc_id BIGINT, lang STRING, n_chars BIGINT)
-                   |USING graft_digest TBLPROPERTIES ('path'='$sink3', 'delta'='true')""".stripMargin)
+      Formats.createTable(spark, t3, "graft_digest", Formats.digestCols, "path" -> sink3,
+        "delta" -> "true")
       spark.sql(s"INSERT INTO $t3 SELECT doc_id, lang, n_chars FROM soak_docs WHERE lang <> 'zh'")
       spark.sql(s"INSERT INTO $t3 SELECT doc_id, lang, n_chars FROM soak_docs WHERE lang = 'zh'")
       spark.sql(s"""MERGE INTO $t3 t
@@ -94,8 +92,8 @@ object SoakFeed {
       }
       // ---- cdc_apply (q250): change stream → latest-wins fold → MERGE -----
       val (t5, p5) = freshIds()
-      spark.sql(s"""CREATE TABLE $t5 (doc_id BIGINT, lang STRING, n_chars BIGINT)
-                   |USING graft_digest TBLPROPERTIES ('path'='${p5.resolve("state")}', 'delta'='true')""".stripMargin)
+      Formats.createTable(spark, t5, "graft_digest", Formats.digestCols,
+        "path" -> p5.resolve("state"), "delta" -> "true")
       timed("cdc_apply") {
         val fold = (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) => {
           b.createOrReplaceTempView("soak_cdc_batch")
@@ -123,8 +121,8 @@ object SoakFeed {
       }
       // ---- stream_read (q242): replicate 2 commits ------------------------
       val (t4, p4) = freshIds()
-      spark.sql(s"""CREATE TABLE $t4 (doc_id BIGINT, lang STRING, n_chars BIGINT)
-                   |USING graft_digest TBLPROPERTIES ('path'='${p4.resolve("dst")}')""".stripMargin)
+      Formats.createTable(spark, t4, "graft_digest", Formats.digestCols,
+        "path" -> p4.resolve("dst"))
       timed("stream_read") {
         val q = spark.readStream.table(t1)
           .writeStream.outputMode("append")

@@ -215,4 +215,42 @@ class LintSpec extends AnyFunSuite {
       s"pairCounts( called outside pairCountsMemo: $sites — read the shared " +
         "memo (Dedup.pairCountsMemo) instead of building the pair index again")
   }
+
+  /** Session conf has one owner per decision. `Bench.session` registers
+    * the `graft` catalog for every session of the JVM (and its
+    * `newSession()`s); `Tables.withConf` is the one scope that sets a
+    * query's conf and puts it back. A query that registers the catalog
+    * again, or restores a conf by hand, leaves process-visible conf
+    * behind. This lint pins the catalog class string and every
+    * `conf.unset(` in main sources to those two owners, by enclosing def.
+    */
+  test("session conf is set only by Bench.session and Tables.withConf") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala/graft")
+    def sites(token: String): Seq[String] =
+      java.nio.file.Files.walk(root).iterator().asScala
+        .filter(_.toString.endsWith(".scala"))
+        .flatMap { p =>
+          val file = root.relativize(p).toString.replace('\\', '/')
+          val lines = java.nio.file.Files.readAllLines(p).asScala.toIndexedSeq
+          lines.indices.collect {
+            case i if lines(i).contains(token) && {
+                val t = lines(i).trim
+                !t.startsWith("//") && !t.startsWith("*")
+              } =>
+              val owner = lines.take(i).reverse.find(_.contains(" def "))
+                .flatMap("def (\\w+)".r.findFirstMatchIn(_)).map(_.group(1))
+              s"$file:${owner.getOrElse("?")}"
+          }
+        }
+        .toSeq.sorted
+    assert(sites("conf.set(\"spark.sql.catalog.graft\"").isEmpty,
+      "a query registers the graft catalog again — Bench.session already does")
+    assert(sites("\"graft.sources.GraftCatalog\"") == Seq("Bench.scala:session"),
+      s"the catalog class is named outside Bench.session: " +
+        sites("\"graft.sources.GraftCatalog\""))
+    assert(sites("conf.unset(") == Seq("Tables.scala:withConf"),
+      s"conf restored outside Tables.withConf: ${sites("conf.unset(")} — " +
+        "scope query conf with Tables.withConf")
+  }
 }
