@@ -35,19 +35,22 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * This is the standard lakehouse CDF shape (file-diff + delta-log
   * replay), and at 100 TB it is what makes incremental downstream
-  * consumption O(changes) instead of O(table-snapshot-diff).
+  * consumption O(changes) instead of O(table-snapshot-diff). Both table
+  * flavors publish through the same manifest protocol, so one feed serves
+  * both; the layout resolves each data file's cells (by field id on the
+  * declared schema).
   */
-class DigestChangesTable(path: String, from: Int, to: Option[Int],
-    ref: String = DigestManifest.MainRef)
+class ChangesTable(path: String, layout: TableLayout, from: Int,
+    to: Option[Int], ref: String = DigestManifest.MainRef)
     extends Table with SupportsRead {
-  require(from >= 0, s"graft_digest changes: changesFrom must be >= 0, got $from")
+  require(from >= 0, s"${layout.label} changes: changesFrom must be >= 0, got $from")
   override def name(): String =
-    s"graft_digest_changes($path@$ref @($from,${to.getOrElse("latest")}])"
-  override def schema(): StructType = DigestChanges.schema
+    s"${layout.label}_changes($path@$ref @($from,${to.getOrElse("latest")}])"
+  override def schema(): StructType = layout.changesSchema
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    () => new DigestChangesScan(path, from,
+    () => new ChangesScan(path, layout, from,
       to.getOrElse(DigestManifest.currentVersion(path, ref)), ref)
 }
 
@@ -73,12 +76,18 @@ object DigestChanges {
       try f finally fileShardRows = old
     }
 
+  /** The columns every change row carries after the table's own. */
+  val changeFields: Seq[StructField] = Seq(
+    StructField("_change_type", StringType, nullable = false),
+    StructField("_commit_version", LongType, nullable = false))
+
+  /** The digest feed's rows: a delete verb's payload may be unknown, so
+    * only the row id is non-null.
+    */
   val schema: StructType = StructType(Seq(
     StructField("doc_id", LongType, nullable = false),
     StructField("lang", StringType, nullable = true),
-    StructField("n_chars", LongType, nullable = true),
-    StructField("_change_type", StringType, nullable = false),
-    StructField("_commit_version", LongType, nullable = false)))
+    StructField("n_chars", LongType, nullable = true)) ++ changeFields)
 
   private[sources] def manifestFiles(path: String, v: Int): Seq[String] =
     manifestEntries(path, v).map(_.file)
@@ -294,8 +303,10 @@ object DigestChanges {
     // catch-all shard, `beforeFile` included), a skipped base entry
     // cannot hold a needed id (zones/blooms only ever exclude), and DV
     // mutations never move an id across its entry's recorded zone.
+    val (zLo, zHi) = TableLayout.Digest.zones("doc_id")
+    val bfAttr = TableLayout.Digest.bloomAttr
     val listing = DigestManifest.listingAtPruned(path, ref, v, None,
-      Map("doc_id" -> (ids.min, ids.max)), Map("bf" -> ids))
+      Map("doc_id" -> (ids.min, ids.max)), Map(bfAttr -> ids))
       .map(ManifestEntry.parse)
     val prefix = listing.takeWhile(_.file != beforeFile)
     val (over, ins) = DeltaFold.fold(
@@ -322,9 +333,9 @@ object DigestChanges {
       .reverseIterator
     while (remaining.nonEmpty && bases.hasNext) {
       val e = bases.next()
-      val zlo = e.attrs.get("zmin").map(_.toLong)
-      val zhi = e.attrs.get("zmax").map(_.toLong)
-      val bf = e.attrs.get("bf")
+      val zlo = e.attrs.get(zLo).map(_.toLong)
+      val zhi = e.attrs.get(zHi).map(_.toLong)
+      val bf = e.attrs.get(bfAttr)
       val mayHold = remaining.exists(id =>
         zlo.forall(_ <= id) && zhi.forall(_ >= id) &&
           bf.forall(enc => BloomCodec.mayContain(enc, id)))
@@ -376,25 +387,25 @@ object DigestChanges {
     }.toSet
 }
 
-class DigestChangesScan(path: String, from: Int, to: Int,
+class ChangesScan(path: String, layout: TableLayout, from: Int, to: Int,
     ref: String = DigestManifest.MainRef)
     extends Scan with Batch {
-  override def readSchema(): StructType = DigestChanges.schema
+  override def readSchema(): StructType = layout.changesSchema
   override def toBatch: Batch = this
   override def description(): String =
-    s"graft_digest_changes($path@$ref) ($from,$to]"
+    s"${layout.label}_changes($path@$ref) ($from,$to]"
   override def planInputPartitions(): Array[InputPartition] =
     DigestChanges.plan(path, from, to, ref).toArray
   override def createReaderFactory(): PartitionReaderFactory =
-    new ChangesReaderFactory(TableLayout.Digest())
+    new ChangesReaderFactory(layout)
 
   // q244: the feed STREAMS — `changesFrom` is the initial offset, every
   // later commit is a micro-batch of change rows (the Delta
   // readChangeFeed shape). Downstream CDC consumers tail the table's
-  // commit log directly instead of re-diffing snapshots.
+  // commit log directly instead of re-diffing snapshots; on the declared
+  // schema each change row's cells resolve by field id.
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-    new ChangesMicroBatchStream(path, from, ref,
-      new ChangesReaderFactory(TableLayout.Digest()))
+    new ChangesMicroBatchStream(path, from, ref, new ChangesReaderFactory(layout))
 }
 
 /** One whole base file entering (`insert`) or leaving (`delete`) the

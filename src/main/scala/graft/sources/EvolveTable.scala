@@ -2,15 +2,11 @@ package graft.sources
 
 import java.util
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableChange}
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
-import org.apache.spark.sql.connector.read.streaming.MicroBatchStream
+import org.apache.spark.sql.connector.read.ScanBuilder
 import org.apache.spark.sql.connector.write.{BatchWrite, LogicalWriteInfo, Write, WriteBuilder}
 import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
 
 /** SCHEMA EVOLUTION for the catalog's writable table (q223): columns are
   * identified by a STABLE FIELD ID assigned once at CREATE/ADD time, never
@@ -228,18 +224,12 @@ object EvolveCheck {
     }
 }
 
-/** Evolve manifest-entry codec. New entries are ManifestEntry-shaped —
-  * `file,rows,ids=1;2;3[,key=value]*` — so the whole metadata layer
-  * (change records, DV mutations, zone attrs) composes; legacy
-  * positional `file,rows,1;2;3` lines still parse. Zone attrs are keyed
-  * by FIELD ID (`zmin.c<id>`), never by name, so RENAME stays a pure
-  * metadata op for the data-skipping layer too.
+/** Evolve manifest-entry parser. Entries are ManifestEntry-shaped —
+  * `file,rows,ids=1;2;3[,key=value]*` ([[TableLayout.Evolve]] writes them)
+  * — so the whole metadata layer (change records, DV mutations, zone
+  * attrs) composes; legacy positional `file,rows,1;2;3` lines still parse.
   */
 private[sources] object EvolveEntry {
-  def render(file: String, rows: Long, ids: Seq[Int],
-      attrs: Map[String, String] = Map.empty): String =
-    ManifestEntry(file, rows, attrs + ("ids" -> ids.mkString(";"))).line
-
   def parse(line: String): (String, Long, Seq[Int], Map[String, String]) = {
     val a = line.split(",")
     if (a.length > 2 && !a(2).contains('='))
@@ -251,8 +241,6 @@ private[sources] object EvolveEntry {
         .filter(_.nonEmpty).map(_.toInt).toSeq, e.attrs)
     }
   }
-
-  def idsOf(line: String): Seq[Int] = parse(line)._3
 }
 
 class EvolveTable(path: String, fields: Seq[EvolveField],
@@ -265,29 +253,24 @@ class EvolveTable(path: String, fields: Seq[EvolveField],
     with org.apache.spark.sql.connector.catalog.SupportsRowLevelOperations
     with org.apache.spark.sql.connector.catalog.SupportsMetadataColumns {
   require(path != null && path.nonEmpty, "graft_evolve requires a path property")
-  // declared zone columns resolve BY NAME against the current schema to
-  // stable field ids; a rename must update 'zonemap.columns' with it
-  private val zoneIds: Seq[Int] = zoneCols.map { c =>
-    val f = fields.find(_.name == c).getOrElse(throw new IllegalArgumentException(
-      s"graft_evolve: 'zonemap.columns' names unknown column '$c' " +
-        s"(schema: ${fields.map(_.name).mkString(", ")}) — renamed zone " +
-        "columns must update the property"))
-    require(f.dataType == LongType,
-      s"graft_evolve: zone-map column '$c' must be BIGINT, is ${f.dataType.sql}")
-    f.id
+  // declared zone columns and bloom columns (q279 — the q278 point-lookup
+  // layer on the declared schema) resolve BY NAME against the current
+  // schema to stable field ids; a rename must update the property with it
+  private def declaredIds(prop: String, cols: Seq[String]): Seq[Int] = {
+    val (what, kind) =
+      if (prop == "zonemap.columns") ("zone", "zone-map") else ("bloom", "bloom")
+    cols.map { c =>
+      val f = fields.find(_.name == c).getOrElse(throw new IllegalArgumentException(
+        s"graft_evolve: '$prop' names unknown column '$c' " +
+          s"(schema: ${fields.map(_.name).mkString(", ")}) — renamed $what " +
+          "columns must update the property"))
+      require(f.dataType == LongType,
+        s"graft_evolve: $kind column '$c' must be BIGINT, is ${f.dataType.sql}")
+      f.id
+    }
   }
-  // declared bloom columns (q279 — the q278 point-lookup layer on the
-  // declared schema): same name->id resolution contract as zones
-  private val bloomIds: Seq[Int] = bloomCols.map { c =>
-    val f = fields.find(_.name == c).getOrElse(throw new IllegalArgumentException(
-      s"graft_evolve: 'bloom.columns' names unknown column '$c' " +
-        s"(schema: ${fields.map(_.name).mkString(", ")}) — renamed bloom " +
-        "columns must update the property"))
-    require(f.dataType == LongType,
-      s"graft_evolve: bloom column '$c' must be BIGINT, is ${f.dataType.sql}")
-    f.id
-  }
-  private val layout = TableLayout.Evolve(fields, plane, zoneIds, bloomIds)
+  private val layout = TableLayout.Evolve(fields, plane,
+    declaredIds("zonemap.columns", zoneCols), declaredIds("bloom.columns", bloomCols))
   override def name(): String =
     s"graft_evolve($path${if (ref == DigestManifest.MainRef) "" else s"@$ref"})"
   override def schema(): StructType = EvolveSchema.struct(fields)
@@ -351,260 +334,15 @@ class EvolveTable(path: String, fields: Seq[EvolveField],
       }
     }
 
-  // column pruning reaches the reader: an evolved table accretes columns
-  // over its life, and a projection must not parse cells it never serves
+  // the one manifest scan ([[TableScanBuilder]]) under this schema's
+  // field ids: column pruning, zone/bloom file skipping over the declared
+  // columns, and `maxVersionsPerTrigger` — the streaming-read admission
+  // option (q243's contract on the declared schema, round-20)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new EvolveScanBuilder(path, fields, ref, zoneIds, bloomIds,
-      // `maxVersionsPerTrigger` — the streaming-read admission option
-      // (q243's contract on the declared schema, round-20)
-      streamMaxVersions =
-        Option(options.get("maxVersionsPerTrigger")).map(_.toInt))
-}
-
-/** Scan builder: column pruning (q223) + zone-range file skipping over
-  * the declared zone columns (round-18: the digest q253 layer on the
-  * declared schema — all filters stay residual, pruning only shrinks
-  * the file list). `emitMeta` is the row-level-operation role: full
-  * rows + (_file, _pos), pruning of columns disabled (the op must see
-  * every column), file skipping still ON (an unmatched file simply gets
-  * no deletion vector).
-  */
-class EvolveScanBuilder(path: String, fields: Seq[EvolveField],
-    ref: String, zoneIds: Seq[Int], bloomIds: Seq[Int] = Nil,
-    emitMeta: Boolean = false,
-    streamMaxVersions: Option[Int] = None)
-    extends ScanBuilder
-    with org.apache.spark.sql.connector.read.SupportsPushDownRequiredColumns
-    with org.apache.spark.sql.connector.read.SupportsPushDownFilters {
-  import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual}
-
-  private var current: Seq[EvolveField] = fields
-  private val zoneName: Map[String, Int] =
-    zoneIds.flatMap(id => fields.find(_.id == id).map(_.name -> id)).toMap
-  private val zLo = scala.collection.mutable.Map(
-    zoneIds.map(_ -> Long.MinValue): _*)
-  private val zHi = scala.collection.mutable.Map(
-    zoneIds.map(_ -> Long.MaxValue): _*)
-  private val bloomName: Map[String, Int] =
-    bloomIds.flatMap(id => fields.find(_.id == id).map(_.name -> id)).toMap
-  // per bloom field id, the intersection of pushed point sets (q279)
-  private var bloomPoints: Map[Int, Set[Long]] = Map.empty
-  private var accepted: Array[Filter] = Array.empty
-
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    if (!emitMeta)
-      current = requiredSchema.fieldNames.toSeq
-        .flatMap(n => fields.find(_.name == n))
-
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    def longOf(v: Any): Option[Long] = v match {
-      case n: java.lang.Number => Some(n.longValue())
-      case _ => None
-    }
-    filters.foreach {
-      case EqualTo(c, v) if zoneName.contains(c) => longOf(v).foreach { x =>
-        val id = zoneName(c)
-        zLo(id) = math.max(zLo(id), x); zHi(id) = math.min(zHi(id), x)
-      }
-      case GreaterThan(c, v) if zoneName.contains(c) =>
-        longOf(v).foreach(x => zLo(zoneName(c)) = math.max(zLo(zoneName(c)), x + 1))
-      case GreaterThanOrEqual(c, v) if zoneName.contains(c) =>
-        longOf(v).foreach(x => zLo(zoneName(c)) = math.max(zLo(zoneName(c)), x))
-      case LessThan(c, v) if zoneName.contains(c) =>
-        longOf(v).foreach(x => zHi(zoneName(c)) = math.min(zHi(zoneName(c)), x - 1))
-      case LessThanOrEqual(c, v) if zoneName.contains(c) =>
-        longOf(v).foreach(x => zHi(zoneName(c)) = math.min(zHi(zoneName(c)), x))
-      case _ => ()
-    }
-    val pointSets: Seq[(Int, Set[Long])] = filters.collect {
-      case EqualTo(c, v) if bloomName.contains(c) && longOf(v).isDefined =>
-        bloomName(c) -> Set(longOf(v).get)
-      case In(c, vs) if bloomName.contains(c) &&
-          vs.nonEmpty && vs.forall(longOf(_).isDefined) =>
-        bloomName(c) -> vs.flatMap(longOf(_)).toSet
-    }
-    bloomPoints = pointSets.groupBy(_._1).view
-      .mapValues(_.map(_._2).reduce(_ intersect _)).toMap
-    def tightened(id: Int): Boolean =
-      zLo(id) != Long.MinValue || zHi(id) != Long.MaxValue
-    accepted = filters.filter {
-      case EqualTo(c, _) if zoneName.contains(c) => tightened(zoneName(c))
-      case GreaterThan(c, _) if zoneName.contains(c) => tightened(zoneName(c))
-      case GreaterThanOrEqual(c, _) if zoneName.contains(c) => tightened(zoneName(c))
-      case LessThan(c, _) if zoneName.contains(c) => tightened(zoneName(c))
-      case LessThanOrEqual(c, _) if zoneName.contains(c) => tightened(zoneName(c))
-      case In(c, _) if bloomName.contains(c) => bloomPoints.contains(bloomName(c))
-      case _ => false
-    }
-    filters // all residual: pruning shrinks the file list, never row checks
-  }
-  override def pushedFilters(): Array[Filter] = accepted
-
-  private def ranges: Map[Int, (Long, Long)] =
-    zoneIds.filter(id => zLo(id) != Long.MinValue || zHi(id) != Long.MaxValue)
-      .map(id => id -> (zLo(id), zHi(id))).toMap
-
-  override def build(): Scan = new EvolveScan(path, current, ref, ranges,
-    emitMeta, bloomPoints, streamMaxVersions)
-}
-
-/** One partition per committed file; each resolves the CURRENT schema
-  * against the file's recorded id list — position of each current id in
-  * the file, or the existence default where the file predates the
-  * column. `dv` masks deleted positions; `zm` (by field id) drives
-  * parquet row-group pruning inside surviving files.
-  */
-case class EvolveFilePartition(path: String, file: String,
-    fileIds: Seq[Int], dv: String = "",
-    zm: Map[Int, (Long, Long)] = Map.empty,
-    emitMeta: Boolean = false,
-    pts: Map[Int, Set[Long]] = Map.empty) extends InputPartition
-
-class EvolveScan(path: String, fields: Seq[EvolveField],
-    ref: String = DigestManifest.MainRef,
-    ranges: Map[Int, (Long, Long)] = Map.empty,
-    emitMeta: Boolean = false,
-    bloomPoints: Map[Int, Set[Long]] = Map.empty,
-    streamMaxVersions: Option[Int] = None) extends Scan with Batch {
-  override def readSchema(): StructType =
-    if (emitMeta) StructType(EvolveSchema.struct(fields).fields ++
-      DigestDv.metaFields)
-    else EvolveSchema.struct(fields)
-  override def toBatch: Batch = this
-  override def description(): String =
-    s"graft_evolve manifest-read $path@$ref" +
-      (if (ranges.nonEmpty) s" zones=${ranges.keys.toSeq.sorted.mkString("|")}"
-       else "")
-
-  override def planInputPartitions(): Array[InputPartition] = {
-    // PRUNED metadata resolution (round-19): pushed zone ranges and
-    // bloom points feed the shard-summary skip under their id-addressed
-    // keys (`c<id>` / `bf.c<id>`), so a banded or needle plan on a
-    // shard-summarized declared-schema table reads O(matching shards)
-    // driver metadata — the same contract the digest scan has; the
-    // returned superset is re-filtered per entry below
-    val listing =
-      if (ranges.nonEmpty || bloomPoints.exists(_._2.nonEmpty))
-        DigestManifest.listingForPruned(path, DigestManifest.mName(ref),
-          None,
-          ranges.map { case (id, r) => s"c$id" -> r },
-          bloomPoints.map { case (id, s) => s"bf.c$id" -> s })
-      else DigestManifest.listingFor(path, DigestManifest.mName(ref))
-    listing.flatMap { line =>
-      val (file, _, fileIds, attrs) = EvolveEntry.parse(line)
-      // zone file skipping: the entry's recorded per-id (min, max) must
-      // overlap every pushed range; a file without the attr is kept
-      val keep = ranges.forall { case (id, (lo, hi)) =>
-        (attrs.get(s"zmin.c$id"), attrs.get(s"zmax.c$id")) match {
-          case (Some(mn), Some(mx)) => mx.toLong >= lo && mn.toLong <= hi
-          case _ => true
-        }
-      } &&
-        // bloom file skipping (q279): a point lookup keeps the file only
-        // if its recorded filter may contain SOME probed point;
-        // filterless entries are always kept
-        bloomPoints.forall { case (id, pts) =>
-          attrs.get(s"bf.c$id").forall(enc =>
-            pts.exists(x => BloomCodec.mayContain(enc, x)))
-        }
-      if (keep)
-        Some(EvolveFilePartition(path, file, fileIds,
-          attrs.getOrElse("dv", ""), ranges, emitMeta,
-          bloomPoints): InputPartition)
-      else None
-    }.toArray
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val fs = fields
-    (p: InputPartition) => new EvolveFileReader(p.asInstanceOf[EvolveFilePartition], fs)
-  }
-
-  // STREAMING READ of the evolve table (round-20): the q242 "table as
-  // queue" capability on the declared schema
-  override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-    new TableMicroBatchStream(path, TableLayout.Evolve(fields), ref,
-      streamMaxVersions)
-}
-
-/** The declared-schema row reader: [[TableRows]] under the current
-  * schema's field ids (the existence default where the file predates a
-  * column) and the file's deletion vector, plus `(_file, _pos)` for the
-  * row-level-operation scan.
-  */
-class EvolveFileReader(p: EvolveFilePartition, fields: Seq[EvolveField])
-    extends PartitionReader[InternalRow] {
-  private val dv = DvCodec.decode(p.dv)
-  private val rows = new TableRows(p.path, p.file,
-    TableLayout.Evolve(fields).fileCols(p.fileIds),
-    p.zm.map { case (id, r) => s"c$id" -> r },
-    p.pts.map { case (id, s) => s"c$id" -> s })
-  private var current: InternalRow = _
-
-  override def next(): Boolean = {
-    while (rows.hasNext) {
-      val (pos, cells) = rows.next()
-      if (!DvCodec.contains(dv, pos)) {
-        current =
-          if (p.emitMeta)
-            new GenericInternalRow(cells :+ UTF8String.fromString(p.file) :+ pos)
-          else new GenericInternalRow(cells)
-        return true
-      }
-    }
-    false
-  }
-  override def get(): InternalRow = current
-  override def close(): Unit = rows.close()
-}
-
-// ---------------------------------------------------------------------------
-// CHANGE DATA FEED on the declared schema (round-18 item 3): evolve
-// commits publish through the same manifest protocol, so per-version
-// `_CHANGES.v<N>` records exist and [[DigestChanges.plan]] is reused
-// verbatim — only row MATERIALIZATION is schema-aware (field-id
-// resolution per file, change columns appended).
-// ---------------------------------------------------------------------------
-class EvolveChangesTable(path: String, fields: Seq[EvolveField],
-    from: Int, to: Option[Int], ref: String = DigestManifest.MainRef)
-    extends Table with SupportsRead {
-  require(from >= 0, s"graft_evolve changes: changesFrom must be >= 0, got $from")
-  override def name(): String =
-    s"graft_evolve_changes($path@$ref @($from,${to.getOrElse("latest")}])"
-  override def schema(): StructType = EvolveChanges.schema(fields)
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ,
-      TableCapability.MICRO_BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    () => new EvolveChangesScan(path, fields, from,
-      to.getOrElse(DigestManifest.currentVersion(path, ref)), ref)
-}
-
-object EvolveChanges {
-  def schema(fields: Seq[EvolveField]): StructType =
-    StructType(EvolveSchema.struct(fields).fields ++ Seq(
-      StructField("_change_type", StringType, nullable = false),
-      StructField("_commit_version", LongType, nullable = false)))
-}
-
-class EvolveChangesScan(path: String, fields: Seq[EvolveField],
-    from: Int, to: Int, ref: String) extends Scan with Batch {
-  override def readSchema(): StructType = EvolveChanges.schema(fields)
-  override def toBatch: Batch = this
-  override def description(): String =
-    s"graft_evolve_changes($path@$ref) ($from,$to]"
-  override def planInputPartitions(): Array[InputPartition] =
-    DigestChanges.plan(path, from, to, ref).toArray
-  override def createReaderFactory(): PartitionReaderFactory =
-    new ChangesReaderFactory(TableLayout.Evolve(fields))
-
-  // STREAMING CDC on the declared schema (round-20): the q244 shape —
-  // offsets are manifest versions, each micro-batch carries its range's
-  // CHANGE rows (deletes and compaction skips included), cells resolved
-  // by field id
-  override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-    new ChangesMicroBatchStream(path, from, ref,
-      new ChangesReaderFactory(TableLayout.Evolve(fields)))
+    new TableScanBuilder(path, layout,
+      manifestName = DigestManifest.mName(ref),
+      streamMaxVersions = Option(options.get("maxVersionsPerTrigger")).map(_.toInt),
+      ref = ref)
 }
 
 /** Provider-options view of an evolve table (q270): `path` +
@@ -619,7 +357,7 @@ class EvolveSource extends org.apache.spark.sql.connector.catalog.TableProvider 
     EvolveSchema.parse(options.get("evolveSchema"))._2
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
     if (options.containsKey("changesFrom"))
-      EvolveChanges.schema(fieldsOf(options))
+      TableLayout.Evolve(fieldsOf(options)).changesSchema
     else EvolveSchema.struct(fieldsOf(options))
   override def getTable(schema: StructType,
       partitioning: Array[org.apache.spark.sql.connector.expressions.Transform],
@@ -627,9 +365,10 @@ class EvolveSource extends org.apache.spark.sql.connector.catalog.TableProvider 
     val opts = new CaseInsensitiveStringMap(properties)
     val ref = Option(opts.get("branch")).getOrElse(DigestManifest.MainRef)
     // the declared-schema CHANGE DATA FEED (round-18): same option
-    // grammar as the digest table's q241 feed
+    // grammar and the same feed as the digest table's q241 one, with each
+    // file's cells resolved by field id
     if (opts.containsKey("changesFrom"))
-      new EvolveChangesTable(opts.get("path"), fieldsOf(opts),
+      new ChangesTable(opts.get("path"), TableLayout.Evolve(fieldsOf(opts)),
         opts.get("changesFrom").toInt,
         Option(opts.get("changesTo")).map(_.toInt), ref)
     else

@@ -577,7 +577,7 @@ object GraftCatalog {
       props: util.Map[String, String]): (Set[String], Set[String]) =
     (Option(props.get("zonemap.columns"))
       .map(DigestSink.parseZonemapCols)
-      .getOrElse(DigestSink.zmCols.keySet),
+      .getOrElse(TableLayout.Digest.zones.keySet),
       Option(props.get("bloom.columns"))
         .map(DigestSink.parseBloomCols)
         .getOrElse(Set.empty[String]))

@@ -264,11 +264,12 @@ private[sources] object ProcedureSupport {
         require(!props.containsKey("branch"),
           s"graft.system.$proc: $tbl is a branch view — rewrite the " +
             "main table (branches publish through fast_forward)")
-        val unknown = cols.filterNot(DigestSink.zmCols.contains)
+        val zoned = TableLayout.Digest.zones
+        val unknown = cols.filterNot(zoned.contains)
         require(unknown.isEmpty,
           s"graft.system.$proc: ${unknown.mkString(", ")} are not " +
             s"zone-mapped columns (supported: " +
-            s"${DigestSink.zmCols.keySet.mkString(", ")})")
+            s"${zoned.keySet.mkString(", ")})")
         false
       case "graft_evolve" =>
         val declared = Option(props.get("zonemap.columns")).toSeq
@@ -1687,7 +1688,7 @@ class ProbeKeyProcedure(catalogName: String) extends UnboundProcedure
         require(column == "doc_id",
           s"graft.system.probe_key: the digest flavor's point key is " +
             s"doc_id, not '$column'")
-        "bf"
+        TableLayout.Digest.bloomAttr
       case "graft_evolve" =>
         val declared = Option(props.get("bloom.columns")).toSeq
           .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty).toSet
@@ -1699,7 +1700,7 @@ class ProbeKeyProcedure(catalogName: String) extends UnboundProcedure
           .find(_.name == column).getOrElse(throw new IllegalArgumentException(
             s"graft.system.probe_key: '$column' is not in the current " +
               s"schema of $tbl")).id
-        s"bf.c$fid"
+        TableLayout.Evolve.bloomAttrOf(TableLayout.Evolve.col(fid))
       case p => throw new IllegalArgumentException(
         s"graft.system.probe_key: $tbl is not a graft_digest or " +
           s"graft_evolve table (provider: $p)")

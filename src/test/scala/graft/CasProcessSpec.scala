@@ -255,9 +255,10 @@ class CasProcessSpec extends AnyFunSuite {
       "the DV commit must not rewrite parquet data bytes")
     // the mask reads position-exact through the REAL parquet row reader:
     // file-global position 1 (doc_id 2) is gone, 1 and 3 survive
-    val reader = new graft.sources.DigestFileReader(
-      graft.sources.DigestFilePartition(dir.toString,
-        "lang_aa-dvfile.parquet", dv = dvEntry.attrs("dv")))
+    val reader = new graft.sources.TableFileReader(
+      graft.sources.TableFilePartition(dir.toString,
+        "lang_aa-dvfile.parquet", dv = dvEntry.attrs("dv")),
+      graft.sources.TableLayout.Digest())
     val served = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
     try while (reader.next()) {
       val r = reader.get()

@@ -511,7 +511,7 @@ class CatalogSpec extends SparkSpec {
 
   test("q235: file pruning keeps files whose names carry no lang (they may " +
       "hold any lang) and never prunes under merge-on-read") {
-    import graft.sources.DigestScanBuilder
+    import graft.sources.{TableLayout, TableScanBuilder}
     import org.apache.spark.sql.sources.EqualTo
     val dir = tmp("graft_prune_spec_").toString
     graft.sources.DigestManifest.publish(dir, Seq(
@@ -519,7 +519,7 @@ class CatalogSpec extends SparkSpec {
     java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, "lang_de-part-00000.csv"), "1,de,10\n")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, "lang_en-part-00000.csv"), "2,en,20\n")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, "part-00001.csv"), "3,de,30\n4,fr,40\n")
-    val sb = new DigestScanBuilder(dir)
+    val sb = new TableScanBuilder(dir, TableLayout.Digest())
     val residual = sb.pushFilters(Array(EqualTo("lang", "de")))
     assert(residual.length == 1, "pushed filter must STAY a residual row check")
     val parts = sb.build().toBatch.planInputPartitions()
@@ -528,7 +528,7 @@ class CatalogSpec extends SparkSpec {
     assert(parts.length == 2, s"expected de + flat file, got ${parts.toSeq}")
     // merge-on-read: pruning disabled (an UPDATE verb can change a row's
     // lang, so a base file's name no longer bounds its merged content)
-    val sbM = new DigestScanBuilder(dir, mergeDeltas = true)
+    val sbM = new TableScanBuilder(dir, TableLayout.Digest(), mergeDeltas = true)
     sbM.pushFilters(Array(EqualTo("lang", "de")))
     assert(sbM.build().toBatch.planInputPartitions().length == 3,
       "merge-on-read scan must not file-prune")
@@ -536,7 +536,7 @@ class CatalogSpec extends SparkSpec {
 
   test("q236: scan statistics are exact from the manifest and shrink with " +
       "pruning; runtime filtering gated off for RLO/merge-on-read scans") {
-    import graft.sources.{DigestScan, DigestScanBuilder}
+    import graft.sources.{TableLayout, TableScan, TableScanBuilder}
     import org.apache.spark.sql.sources.{EqualTo, In}
     val dir = tmp("graft_stats_spec_").toString
     graft.sources.DigestManifest.publish(dir, Seq(
@@ -545,14 +545,14 @@ class CatalogSpec extends SparkSpec {
       java.nio.file.Paths.get(dir, "lang_de-part-00000.csv"), "1,de,10\n2,de,11\n3,de,12\n")
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(dir, "lang_en-part-00000.csv"), "4,en,20\n" * 5)
-    val full = new DigestScanBuilder(dir).build()
-      .asInstanceOf[DigestScan]
+    val full = new TableScanBuilder(dir, TableLayout.Digest()).build()
+      .asInstanceOf[TableScan]
     assert(full.estimateStatistics().numRows().getAsLong == 8L)
     assert(full.estimateStatistics().sizeInBytes().getAsLong > 0L)
     // planning-time pruning shrinks the reported stats with the file list
-    val sb = new DigestScanBuilder(dir)
+    val sb = new TableScanBuilder(dir, TableLayout.Digest())
     sb.pushFilters(Array(EqualTo("lang", "de")))
-    val pruned = sb.build().asInstanceOf[DigestScan]
+    val pruned = sb.build().asInstanceOf[TableScan]
     assert(pruned.estimateStatistics().numRows().getAsLong == 3L)
     // runtime filtering composes with the pushed set (intersection);
     // round-19 adds doc_id (In-set probes zones + per-file blooms, q280)
@@ -566,12 +566,12 @@ class CatalogSpec extends SparkSpec {
     assert(pruned.toBatch.planInputPartitions().isEmpty)
     // the two roles where pruning must stay OFF advertise NO filterable
     // attributes, so the engine never arms a runtime filter there
-    val rlo = new DigestScanBuilder(dir, mergeDeltas = false,
+    val rlo = new TableScanBuilder(dir, TableLayout.Digest(), mergeDeltas = false,
       manifestName = "_MANIFEST", allowPruning = false).build()
-      .asInstanceOf[DigestScan]
+      .asInstanceOf[TableScan]
     assert(rlo.filterAttributes().isEmpty)
-    val mor = new DigestScanBuilder(dir, mergeDeltas = true).build()
-      .asInstanceOf[DigestScan]
+    val mor = new TableScanBuilder(dir, TableLayout.Digest(), mergeDeltas = true).build()
+      .asInstanceOf[TableScan]
     assert(mor.filterAttributes().isEmpty)
   }
 
@@ -630,7 +630,7 @@ class CatalogSpec extends SparkSpec {
 
   test("q238: key-grouped partitioning is declared only when every planned " +
       "file carries its lang, and each split exposes that lang as its key") {
-    import graft.sources.{DigestFilePartition, DigestManifest, DigestScan, DigestScanBuilder}
+    import graft.sources.{DigestManifest, TableFilePartition, TableLayout, TableScan, TableScanBuilder}
     import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, UnknownPartitioning}
     val dir = tmp("graft_spj_spec_").toString
     DigestManifest.publish(dir, Seq(
@@ -639,48 +639,48 @@ class CatalogSpec extends SparkSpec {
       java.nio.file.Paths.get(dir, "lang_de-part-00000.csv"), "1,de,10\n")
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(dir, "lang_en-part-00000.csv"), "2,en,20\n")
-    val kg = new DigestScanBuilder(dir).build().asInstanceOf[DigestScan]
+    val kg = new TableScanBuilder(dir, TableLayout.Digest()).build().asInstanceOf[TableScan]
       .outputPartitioning()
     assert(kg.isInstanceOf[KeyGroupedPartitioning])
     assert(kg.asInstanceOf[KeyGroupedPartitioning].keys().head.describe() == "lang")
     assert(kg.numPartitions() == 2)
     // each split's partition key IS the lang its file name carries
-    assert(DigestFilePartition(dir, "lang_de-part-00000.csv").partitionKey()
+    assert(TableFilePartition(dir, "lang_de-part-00000.csv").partitionKey()
       .getUTF8String(0).toString == "de")
     // a flat file may hold ANY lang — clustering can no longer be declared
     DigestManifest.publish(dir, Seq(
       "lang_de-part-00000.csv,1", "lang_en-part-00000.csv,1", "part-00000.csv,1"))
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(dir, "part-00000.csv"), "3,fr,30\n")
-    assert(new DigestScanBuilder(dir).build().asInstanceOf[DigestScan]
+    assert(new TableScanBuilder(dir, TableLayout.Digest()).build().asInstanceOf[TableScan]
       .outputPartitioning().isInstanceOf[UnknownPartitioning])
     // merge-on-read: an UPDATE verb can rewrite a row's lang — never declared
     val morDir = tmp("graft_spj_spec_mor_").toString
     DigestManifest.publish(morDir, Seq("lang_de-part-00000.csv,1"))
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(morDir, "lang_de-part-00000.csv"), "1,de,10\n")
-    assert(new DigestScanBuilder(morDir, mergeDeltas = true).build()
-      .asInstanceOf[DigestScan].outputPartitioning()
+    assert(new TableScanBuilder(morDir, TableLayout.Digest(), mergeDeltas = true).build()
+      .asInstanceOf[TableScan].outputPartitioning()
       .isInstanceOf[UnknownPartitioning])
   }
 
   test("q239/q240: ordering is declared only for clustered layouts; the " +
       "manifest count pushdown takes only safe shapes and serves exact rows") {
-    import graft.sources.{DigestAggPartition, DigestAggScan, DigestManifest, DigestScan, DigestScanBuilder}
+    import graft.sources.{DigestAggPartition, DigestAggScan, DigestManifest, TableLayout, TableScan, TableScanBuilder}
     import org.apache.spark.sql.connector.expressions.Expressions
     import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, AggregateFunc, CountStar, Max}
     import org.apache.spark.sql.sources.EqualTo
     val dir = tmp("graft_cnt_spec_").toString
     DigestManifest.publish(dir, Seq(
       "lang_de-part-00000.csv,3", "lang_de-part-00001.csv,2", "lang_en-part-00000.csv,5"))
-    def builder() = new DigestScanBuilder(dir)
+    def builder() = new TableScanBuilder(dir, TableLayout.Digest())
     def groupedCount = new Aggregation(Array[AggregateFunc](new CountStar),
       Array[org.apache.spark.sql.connector.expressions.Expression](
         Expressions.column("lang")))
     def globalCount = new Aggregation(Array[AggregateFunc](new CountStar),
       Array.empty[org.apache.spark.sql.connector.expressions.Expression])
     // ordering: clustered layout declares lang ASC
-    val ord = builder().build().asInstanceOf[DigestScan].outputOrdering()
+    val ord = builder().build().asInstanceOf[TableScan].outputOrdering()
     assert(ord.length == 1 && ord.head.expression().describe() == "lang")
     // grouped count pushes and serves exact per-lang sums from the manifest
     val b1 = builder()
@@ -701,7 +701,7 @@ class CatalogSpec extends SparkSpec {
     assert(!builder().pushAggregation(groupedCount),
       "a flat file may hold any lang: GROUP BY lang must not push")
     // a flat file also kills the ordering claim
-    assert(builder().build().asInstanceOf[DigestScan].outputOrdering().isEmpty)
+    assert(builder().build().asInstanceOf[TableScan].outputOrdering().isEmpty)
     // non-count aggregates never push; neither does any shape after a
     // filter was pushed, in the RLO scan role, or under merge-on-read
     val maxAgg = new Aggregation(
@@ -712,20 +712,20 @@ class CatalogSpec extends SparkSpec {
     filtered.pushFilters(Array[org.apache.spark.sql.sources.Filter](
       EqualTo("lang", "de")))
     assert(!filtered.pushAggregation(globalCount))
-    assert(!new DigestScanBuilder(dir, mergeDeltas = false,
+    assert(!new TableScanBuilder(dir, TableLayout.Digest(), mergeDeltas = false,
       manifestName = "_MANIFEST", allowPruning = false).pushAggregation(globalCount))
-    assert(!new DigestScanBuilder(dir, mergeDeltas = true).pushAggregation(globalCount))
+    assert(!new TableScanBuilder(dir, TableLayout.Digest(), mergeDeltas = true).pushAggregation(globalCount))
     // merge-on-read also never declares ordering
     val morDir = tmp("graft_cnt_spec_mor_").toString
     DigestManifest.publish(morDir, Seq("lang_de-part-00000.csv,1"))
-    assert(new DigestScanBuilder(morDir, mergeDeltas = true).build()
-      .asInstanceOf[DigestScan].outputOrdering().isEmpty)
+    assert(new TableScanBuilder(morDir, TableLayout.Digest(), mergeDeltas = true).build()
+      .asInstanceOf[TableScan].outputOrdering().isEmpty)
   }
 
   test("q243/q244: version admission caps micro-batches and AvailableNow " +
       "pins its drain target; the changes stream plans per-version changes; " +
       "the table stream refuses removal commits") {
-    import graft.sources.{ChangesFilePartition, ChangesMicroBatchStream, ChangesReaderFactory, DigestFilePartition, DigestManifest, DigestVersionOffset, TableLayout, TableMicroBatchStream}
+    import graft.sources.{ChangesFilePartition, ChangesMicroBatchStream, ChangesReaderFactory, TableFilePartition, DigestManifest, DigestVersionOffset, TableLayout, TableMicroBatchStream}
     import org.apache.spark.sql.connector.read.streaming.ReadLimit
     val dir = tmp("graft_adm_spec_").toString
     DigestManifest.publish(dir, Seq("lang_de-part-00000.csv,1"))                // v1
@@ -749,7 +749,7 @@ class CatalogSpec extends SparkSpec {
       "a pinned AvailableNow run must not chase commits past its target")
     // a batch range plans exactly the files its versions ADDED
     val parts = st.planInputPartitions(DigestVersionOffset(1), DigestVersionOffset(3))
-      .map(_.asInstanceOf[DigestFilePartition].file).sorted
+      .map(_.asInstanceOf[TableFilePartition].file).sorted
     assert(parts.toSeq == Seq("lang_en-part-00000.csv", "lang_fr-part-00000.csv"))
     // the append-only contract: a removal commit is refused loudly
     DigestManifest.publish(dir, Seq(
@@ -1334,7 +1334,7 @@ class CatalogSpec extends SparkSpec {
 
   test("q251/q242: an orphaned claim (crashed committer) is invisible to " +
       "the table stream and the change feed") {
-    import graft.sources.{ChangesFilePartition, DigestChanges, DigestFilePartition, DigestManifest, DigestVersionOffset, TableLayout, TableMicroBatchStream}
+    import graft.sources.{ChangesFilePartition, DigestChanges, TableFilePartition, DigestManifest, DigestVersionOffset, TableLayout, TableMicroBatchStream}
     val dir = tmp("graft_orphclaim_")
     java.nio.file.Files.write(dir.resolve("a.csv"), java.util.List.of("1,en,10"))
     java.nio.file.Files.write(dir.resolve("b.csv"), java.util.List.of("2,en,20"))
@@ -1351,7 +1351,7 @@ class CatalogSpec extends SparkSpec {
     val stream = new TableMicroBatchStream(dir.toString, TableLayout.Digest())
     val files = stream.planInputPartitions(DigestVersionOffset(0),
       DigestVersionOffset(head))
-      .collect { case p: DigestFilePartition => p.file }
+      .collect { case p: TableFilePartition => p.file }
     assert(files.sorted.toSeq == Seq("a.csv", "b.csv"), files.toSeq.toString)
     // ...and so does the change feed — the orphan's bogus entry never
     // appears as a change
@@ -1562,7 +1562,8 @@ class CatalogSpec extends SparkSpec {
       "part-00001.csv,3,zmax=199,zmin=100",
       "part-00002.csv,3"))
     def planned(allowPruning: Boolean): Int = {
-      val b = new graft.sources.DigestScanBuilder(dir.toString, false,
+      val b = new graft.sources.TableScanBuilder(dir.toString,
+        graft.sources.TableLayout.Digest(), false,
         "_MANIFEST", allowPruning)
       b.pushFilters(Array(org.apache.spark.sql.sources.LessThan("doc_id",
         java.lang.Long.valueOf(50L))))
@@ -1582,7 +1583,8 @@ class CatalogSpec extends SparkSpec {
       "part-00001.csv,3,nmax=500,nmin=300,zmax=19,zmin=10",
       "part-00002.csv,3,nmax=80,nmin=20,zmax=29,zmin=20"))
     def planned(fs: org.apache.spark.sql.sources.Filter*): Int = {
-      val b = new graft.sources.DigestScanBuilder(dir.toString)
+      val b = new graft.sources.TableScanBuilder(dir.toString,
+        graft.sources.TableLayout.Digest())
       b.pushFilters(fs.toArray)
       b.build().toBatch.planInputPartitions().length
     }

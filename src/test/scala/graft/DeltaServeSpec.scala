@@ -5,8 +5,8 @@ import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.{DeltaFold, DigestFilePartition, DigestInsertsPartition,
-  DigestManifest, DigestReaderFactory, DigestScan, DigestSink}
+import graft.sources.{DeltaFold, DigestInsertsPartition, DigestManifest,
+  DigestSink, TableFilePartition, TableLayout, TableReaderFactory, TableScan}
 
 /** Merge-on-read SERVE boundedness (round-18, judge item 4): the driver
   * plans verb-log FILE NAMES only — tasks read and fold the log — and a
@@ -23,7 +23,7 @@ class DeltaServeSpec extends AnyFunSuite {
 
   private def drain(p: org.apache.spark.sql.connector.read.InputPartition)
       : Seq[(Long, String, Long)] = {
-    val r = new DigestReaderFactory().createReader(p)
+    val r = new TableReaderFactory(TableLayout.Digest()).createReader(p)
     val out = scala.collection.mutable.ArrayBuffer.empty[(Long, String, Long)]
     try while (r.next()) {
       val row = r.get()
@@ -50,8 +50,8 @@ class DeltaServeSpec extends AnyFunSuite {
     val old = DigestSink.insertShardBytes
     DigestSink.insertShardBytes = 512 // fixture-scale multi-shard
     try {
-      val parts = new DigestScan(path, mergeDeltas = true).planInputPartitions()
-      val basePs = parts.collect { case p: DigestFilePartition => p }
+      val parts = new TableScan(path, TableLayout.Digest(), mergeDeltas = true).planInputPartitions()
+      val basePs = parts.collect { case p: TableFilePartition => p }
       val insPs = parts.collect { case p: DigestInsertsPartition => p }
       assert(basePs.length == 1 && insPs.length > 1,
         s"expected multi-shard inserts, got ${insPs.length} of ${parts.length}")
@@ -86,7 +86,7 @@ class DeltaServeSpec extends AnyFunSuite {
     Files.write(dir.resolve("delta-tiny.csv"),
       "I,7,bb,7\n".getBytes(StandardCharsets.UTF_8))
     DigestManifest.publishAppend(path, Seq("delta-tiny.csv,1"), 1)
-    val parts = new DigestScan(path, mergeDeltas = true).planInputPartitions()
+    val parts = new TableScan(path, TableLayout.Digest(), mergeDeltas = true).planInputPartitions()
     val insPs = parts.collect { case p: DigestInsertsPartition => p }
     assert(insPs.length == 1, insPs.toString)
     assert(drain(insPs.head) == Seq((7L, "bb", 7L)))

@@ -142,6 +142,33 @@ class LintSpec extends AnyFunSuite {
         s"$audited — read committed data files through TableRows")
   }
 
+  /** Every manifest table, digest and evolve alike, plans its reads
+    * through one scan builder (`TableScanBuilder` in
+    * sources/TableCore.scala), which owns the filter pushdown and the one
+    * file-skipping predicate; the sequence source pushes its own id
+    * range. This lint pins the main sources naming
+    * `SupportsPushDownFilters` to those two files.
+    */
+  test("filter pushdown is implemented only by the manifest scan and the " +
+      "sequence source") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala/graft")
+    val files = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filter { p =>
+        java.nio.file.Files.readAllLines(p).asScala.exists { l =>
+          val t = l.trim
+          l.contains("SupportsPushDownFilters") &&
+            !t.startsWith("//") && !t.startsWith("*")
+        }
+      }
+      .map(p => root.relativize(p).toString.replace('\\', '/'))
+      .toSet
+    assert(files == Set("sources/TableCore.scala", "sources/SeqSource.scala"),
+      s"SupportsPushDownFilters in $files — manifest tables push filters " +
+        "through TableScanBuilder")
+  }
+
   /** Every table task file is staged and renamed by one writer
     * (`TableDataWriter` in sources/TableCore.scala); only the delta-flavor
     * verb log and the epoch sink, whose files are not table data rows,

@@ -66,4 +66,29 @@ class SessionConfSpec extends SparkSpec {
       assert(changed.isEmpty, s"q178Under(cbo=$cbo) changed session conf keys $changed")
     }
   }
+
+  test("q238, q239 and q248 return the rows of the plan they prove, not a lazy re-plan") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val aqe = new AdaptiveSparkPlanHelper {}
+    def joins(plan: SparkPlan): Seq[SparkPlan] = aqe.collect(plan) { case j: BaseJoinExec => j }
+    // re-plan each returned frame the way Verify and Bench do, outside the
+    // query's conf scope
+    def replanned(q: String): SparkPlan = {
+      val df = SparkEntry.queries(q)(spark, sf).coalesce(1)
+      df.collect()
+      df.queryExecution.executedPlan
+    }
+    val pushed = replanned("q248_join_pushdown")
+    assert(joins(pushed).isEmpty, s"q248: a join survives the re-plan:\n$pushed")
+    Seq("q238_storage_partitioned_join", "q239_ordered_spj_join").foreach { q =>
+      val plan = replanned(q)
+      joins(plan).foreach { j =>
+        assert(aqe.collect(j) { case e: Exchange => e }.isEmpty,
+          s"$q: the re-planned join exchanges its input:\n$plan")
+      }
+    }
+  }
 }
