@@ -179,35 +179,13 @@ object DigestSink {
     cols
   }
 
-  /** Paths whose NEXT batch write must lay rows out RANGE-CLUSTERED and
-    * sorted on the given columns into `buckets` writer tasks (q263,
-    * `CALL graft.system.rewrite_sorted`): the Write declares an ORDERED
-    * distribution and the ENGINE plans the range exchange + sort, so
-    * every committed file covers a tight zone — the write-time
-    * clustering that restores zone-map pruning after shuffled ingest.
-    */
-  private val pendingRangeLayout =
-    new java.util.concurrent.ConcurrentHashMap[String, (Seq[String], Int)]()
-
-  private[sources] def declareRangeLayoutForNextWrite(path: String,
-      cols: Seq[String], buckets: Int): Unit =
-    pendingRangeLayout.put(
-      Paths.get(path).toAbsolutePath.normalize().toString, (cols, buckets))
-
-  private[sources] def clearRangeLayout(path: String): Unit =
-    pendingRangeLayout.remove(Paths.get(path).toAbsolutePath.normalize().toString)
-
-  private[sources] def rangeLayoutFor(path: String): Option[(Seq[String], Int)] =
-    Option(pendingRangeLayout.get(
-      Paths.get(path).toAbsolutePath.normalize().toString))
-
   /** Paths whose NEXT batch write must PRESERVE the incoming task layout
-    * (q277, `CALL graft.system.rewrite_zorder`): the procedure pre-shapes
-    * the data itself (range-partitioned + sorted on an interleaved-bit
-    * z-value — a COMPUTED column no declarable column distribution can
-    * express), so the Write declares an UNSPECIFIED distribution and the
-    * engine plans no exchange at all; each writer task's files then cover
-    * one tight z-tile, which bounds EVERY interleaved column's zone.
+    * (q263/q277, `CALL graft.system.rewrite_sorted` / `rewrite_zorder`):
+    * the procedure shapes the data itself (range-partitioned + sorted on
+    * its key columns, [[ProcedureSupport.clusteredRewrite]]), so the
+    * Write declares an UNSPECIFIED distribution and the engine plans no
+    * exchange at all; each writer task's files then cover one tight key
+    * range, which bounds every clustered column's zone.
     */
   private val pendingPreservedLayout =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
@@ -1886,9 +1864,22 @@ class DigestSinkTable(path: String, langSplit: Boolean = false,
 
   override def deleteWhere(filters: Array[Filter]): Unit = {
     require(canDeleteWhere(filters), s"undeletable filters: ${filters.mkString(",")}")
-    val (baseVersion, old) = DigestManifest.head(path, ref)
+    retire(filters)
+  }
+
+  /** The metadata DELETE commit, shared by DROP PARTITION: retires every
+    * file of the listing at `planned` that the lang `filters` cover, as
+    * one replace against that version, so a commit that registers after
+    * `planned` aborts it with ConcurrentModificationException instead of
+    * vanishing from the listing. With `always = false` nothing is
+    * published when no file is covered.
+    */
+  private[graft] def retire(filters: Array[Filter], always: Boolean = true,
+      planned: (Int, Seq[String]) = DigestManifest.head(path, ref)): Unit = {
+    val (baseVersion, old) = planned
     val covered = DigestSink.langFiles(filters)
     val (dead, keep) = old.partition(line => covered(line.split(",")(0)))
+    if (dead.isEmpty && !always) return
     // publish the shrunk manifest FIRST (atomic temp+rename), THEN delete
     // the dropped files: the published listing never names a file that is
     // already gone, so a reader planning at any instant sees a complete
@@ -1949,55 +1940,28 @@ class DigestWrite(path: String, layout: TableLayout.Digest,
     cols: Array[Int] = Array.empty,
     retainHistory: Boolean = false, ref: String = DigestManifest.MainRef)
     extends Write with RequiresDistributionAndOrdering {
-  private val clusteredByLang = requireDist || layout.langSplit
-
-  // q263: a pending `rewrite_sorted` layout overrides the default
-  // contract — the Write declares an ORDERED (range) distribution on the
-  // sort columns and the ENGINE plans the range exchange + sort, so each
-  // writer task's files cover one tight zone
-  private val rangeLayout: Option[(Seq[String], Int)] =
-    DigestSink.rangeLayoutFor(path)
-
-  // q277: a pending `rewrite_zorder` pre-shaped the incoming data on a
-  // computed z-value — declare NO distribution/ordering so the engine
-  // keeps the procedure's layout instead of re-clustering it by lang
-  private val preservedLayout: Boolean = DigestSink.preservedLayoutFor(path)
-
   // q187: the sink-declared layout contract. Clustering by lang puts each
   // lang's rows in exactly one writer task; ordering (lang, doc_id) makes
   // every committed file internally sorted. Unspecified when the caller
-  // didn't opt in — the base q168 path plans exactly as before.
+  // didn't opt in — the base q168 path plans exactly as before — and when
+  // a pending clustered rewrite (q263/q277) pre-shaped the incoming data,
+  // so the engine keeps the procedure's layout instead of re-clustering
+  // it by lang
+  private val clustered = (requireDist || layout.langSplit) &&
+    !DigestSink.preservedLayoutFor(path)
+
   override def requiredDistribution(): Distribution =
-    rangeLayout match {
-      case _ if preservedLayout => Distributions.unspecified()
-      case Some((sortCols, _)) =>
-        Distributions.ordered(sortCols.toArray.map(c =>
-          Expressions.sort(Expressions.column(c), SortDirection.ASCENDING)))
-      case None if clusteredByLang =>
-        Distributions.clustered(Array(Expressions.column("lang")))
-      case None => Distributions.unspecified()
-    }
+    if (clustered) Distributions.clustered(Array(Expressions.column("lang")))
+    else Distributions.unspecified()
 
   override def requiredOrdering(): Array[SortOrder] =
-    rangeLayout match {
-      case _ if preservedLayout => Array.empty
-      case Some((sortCols, _)) =>
-        sortCols.toArray.map(c =>
-          Expressions.sort(Expressions.column(c), SortDirection.ASCENDING))
-      case None if clusteredByLang =>
-        Array(
-          Expressions.sort(Expressions.column("lang"), SortDirection.ASCENDING),
-          Expressions.sort(Expressions.column("doc_id"), SortDirection.ASCENDING))
-      case None => Array.empty
-    }
+    if (clustered)
+      Array(
+        Expressions.sort(Expressions.column("lang"), SortDirection.ASCENDING),
+        Expressions.sort(Expressions.column("doc_id"), SortDirection.ASCENDING))
+    else Array.empty
 
-  override def requiredNumPartitions(): Int =
-    rangeLayout match {
-      case _ if preservedLayout => 0
-      case Some((_, buckets)) => buckets
-      case None if clusteredByLang => 4
-      case None => 0
-    }
+  override def requiredNumPartitions(): Int = if (clustered) 4 else 0
 
   override def toBatch: BatchWrite =
     new TableBatchWrite(path, layout, ref,
@@ -2159,6 +2123,7 @@ class DigestDeltaBatchWrite(path: String, cols: Array[Int])
   // fold replays verbs in manifest order — append order IS commit order);
   // base entries survive untouched by construction
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
+    StagedFiles.sweep(path, StagedFiles.jobMarker(jobTag))
     val fresh = messages.toSeq.flatMap(TableLayout.Digest().lines).sorted
     val (baseVersion, old) = DigestManifest.head(path)
     // job-unique naming makes a duplicate structurally impossible; keep
@@ -2174,7 +2139,7 @@ class DigestDeltaBatchWrite(path: String, cols: Array[Int])
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
-    StagedFiles.sweep(path)
+    StagedFiles.sweep(path, StagedFiles.jobMarker(jobTag))
 }
 
 /** BRANCH flavor (q255, `TBLPROPERTIES('branch'='b')`): the same data
@@ -2281,17 +2246,18 @@ case class DigestDeltaWriterFactory(path: String, cols: Array[Int],
     new DigestDeltaWriter(path, partitionId, taskId, cols, jobTag)
 }
 
-/** Per-task delta-log writer: one staged `delta-` file of verb lines
-  * (`D,id` / `U,id,lang,n_chars` / `I,id,lang,n_chars`), attempt-staged
-  * and renamed on task commit like every other writer in this sink.
+/** Per-task delta-log writer, digest-only (the q207 merge-on-read log):
+  * one `delta-j<tag>-part-<partition>.csv` file of verb lines (`D,id` /
+  * `U,id,lang,n_chars` / `I,id,lang,n_chars`), staged by the one rule of
+  * [[StagedFiles]] like every table task file.
   */
 class DigestDeltaWriter(path: String, partitionId: Int, taskId: Long,
     cols: Array[Int], jobTag: String)
     extends org.apache.spark.sql.connector.write.DeltaWriter[InternalRow] {
   Files.createDirectories(Paths.get(path))
-  private val staged =
-    Paths.get(path, f"delta-j$jobTag-part-$partitionId%05d-attempt-$taskId.staged")
-  private val out = Files.newBufferedWriter(staged, StandardCharsets.UTF_8)
+  private val staged = new StagedFiles.Attempt(path,
+    f"delta-${StagedFiles.jobMarker(jobTag)}part-$partitionId%05d", taskId)
+  private val out = Files.newBufferedWriter(staged.path, StandardCharsets.UTF_8)
   private var rows = 0L
 
   override def delete(meta: InternalRow, id: InternalRow): Unit = {
@@ -2314,15 +2280,11 @@ class DigestDeltaWriter(path: String, partitionId: Int, taskId: Long,
     // would pollute the log (and the task count grew with the sharded
     // merge-on-read serve — an empty inserts shard must stay invisible)
     if (rows == 0L) {
-      Files.deleteIfExists(staged)
+      staged.discard()
       TableCommitMessage(Seq.empty)
-    } else {
-      val fin = Paths.get(path, f"delta-j$jobTag-part-$partitionId%05d.csv")
-      Files.move(staged, fin, StandardCopyOption.REPLACE_EXISTING)
-      TableCommitMessage(Seq(CommittedFile(fin.getFileName.toString, rows)))
-    }
+    } else TableCommitMessage(Seq(CommittedFile(staged.publish(".csv"), rows)))
   }
-  override def abort(): Unit = { out.close(); Files.deleteIfExists(staged) }
+  override def abort(): Unit = { out.close(); staged.discard() }
   override def close(): Unit = ()
 }
 

@@ -4049,8 +4049,8 @@ object Formats {
   // write-time clustering action that keeps the declared zones TIGHT:
   // shuffled ingest widens every file's zone to ~[min, max] (the
   // fileReadEvents counter proves a band query opens ALL files), the
-  // rewrite re-lays the table range-clustered through a writer-declared
-  // ORDERED distribution (the engine plans the range exchange + sort),
+  // rewrite re-lays the table range-partitioned and sorted on the
+  // columns (the procedure shapes the data, the write keeps its layout),
   // and the same band query then opens only its band's files. The tag
   // makes the rewrite content-preserving to the change feed.
   def q263RewriteSorted(s: SparkSession, dir: String): DataFrame = {

@@ -1123,17 +1123,43 @@ class TableFileReader(p: TableFilePartition, layout: TableLayout)
   override def close(): Unit = rows.close()
 }
 
-/** Abort cleanup for every job and epoch writer: removes the staged
-  * (never committed) task outputs in `path` whose names match `name`.
+/** THE staged-file rule of every task output file: the table insert
+  * writer's data files and the delta flavor's verb logs. A task attempt
+  * writes `<name>-attempt-<task>.staged`, keyed by the ATTEMPT; its task
+  * commit publishes it by rename to `<name><ext>`, keyed by the
+  * PARTITION, so exactly one attempt's output is visible however many
+  * attempts ran, and a retried or replayed attempt rewrites the same
+  * final name; its task abort discards it. A job or epoch commit or
+  * abort [[sweep]]s what attempts that never reached their own abort (a
+  * killed task) left staged under its job tag or epoch marker.
   */
 private[sources] object StagedFiles {
-  def sweep(path: String, name: String => Boolean = _ => true): Unit = {
+  final class Attempt(dir: String, name: String, taskId: Long) {
+    val path: Path = Paths.get(dir, s"$name-attempt-$taskId.staged")
+
+    /** Publishes the staged file as `name + ext`; returns that name. */
+    def publish(ext: String): String = {
+      val fin = name + ext
+      Files.move(path, Paths.get(dir, fin), StandardCopyOption.REPLACE_EXISTING)
+      fin
+    }
+
+    def discard(): Unit = Files.deleteIfExists(path)
+  }
+
+  /** The marker in every file name a batch job tagged `jobTag` writes. */
+  def jobMarker(jobTag: String): String = s"j$jobTag-"
+
+  /** Removes the staged (never published) files in `path` whose names
+    * contain `marker`.
+    */
+  def sweep(path: String, marker: String): Unit = {
     val dir = Paths.get(path)
     if (Files.isDirectory(dir)) {
       val listing = Files.list(dir)
       try listing.forEach { p =>
         val n = p.getFileName.toString
-        if (n.endsWith(".staged") && name(n)) Files.deleteIfExists(p)
+        if (n.endsWith(".staged") && n.contains(marker)) Files.deleteIfExists(p)
       } finally listing.close()
     }
   }
@@ -1157,11 +1183,8 @@ case class TableCommitMessage(files: Seq[CommittedFile])
 /** THE task writer of every table insert — batch INSERT/overwrite, the
   * group-based rewrite, the insert halves of DV DELETE/UPDATE/MERGE and
   * the epoch streaming write — for both flavors. One open file per stem
-  * ([[TableLayout.stemOf]]): staged as
-  * `<stem>[j<tag>-]part-<partition>-attempt-<task>.staged`, keyed by the
-  * ATTEMPT, and renamed on commit to `<stem>[j<tag>-]part-<partition><ext>`,
-  * keyed by the PARTITION — rename-on-commit makes exactly one attempt's
-  * output visible however many attempts ran, and the job tag makes the
+  * ([[TableLayout.stemOf]]), named `<stem>[j<tag>-]part-<partition><ext>`
+  * and staged by the one rule of [[StagedFiles]]; the job tag makes the
   * final names unique per job. CSV cells are comma-separated with `\N`
   * for NULL ([[CsvCell]]); parquet columns are the layout's file schema.
   * `cols` addresses the incoming rows ([[TableLayout.rowIdx]]).
@@ -1169,7 +1192,7 @@ case class TableCommitMessage(files: Seq[CommittedFile])
 private[graft] final class TableDataWriter(path: String, layout: TableLayout,
     partitionId: Int, taskId: Long, jobTag: String,
     cols: Array[Int] = Array.empty) extends DataWriter[InternalRow] {
-  private val tagPart = if (jobTag.isEmpty) "" else s"j$jobTag-"
+  private val tagPart = if (jobTag.isEmpty) "" else StagedFiles.jobMarker(jobTag)
   private val schema = layout.fileSchema
   private val types = schema.fields.map(_.dataType)
   private val nullable = schema.fields.map(_.nullable)
@@ -1181,14 +1204,14 @@ private[graft] final class TableDataWriter(path: String, layout: TableLayout,
   Files.createDirectories(Paths.get(path))
 
   private final class OpenFile(stem: String) {
-    private val name = f"$stem${tagPart}part-$partitionId%05d"
-    private val staged = Paths.get(path, s"$name-attempt-$taskId.staged")
+    private val staged = new StagedFiles.Attempt(path,
+      f"$stem${tagPart}part-$partitionId%05d", taskId)
     private val csv =
       if (layout.plane.parquet) null
-      else Files.newBufferedWriter(staged, StandardCharsets.UTF_8)
+      else Files.newBufferedWriter(staged.path, StandardCharsets.UTF_8)
     private val pq =
       if (!layout.plane.parquet) null
-      else new ParquetData.GenericRowsWriter(staged, message,
+      else new ParquetData.GenericRowsWriter(staged.path, message,
         layout.plane.rowGroupBytes, layout.plane.rowGroupRows,
         layout.parquetBlooms)
     private var rows = 0L
@@ -1236,9 +1259,7 @@ private[graft] final class TableDataWriter(path: String, layout: TableLayout,
 
     def commit(): CommittedFile = {
       close()
-      val fin = name + layout.plane.ext
-      Files.move(staged, Paths.get(path, fin), StandardCopyOption.REPLACE_EXISTING)
-      CommittedFile(fin, rows,
+      CommittedFile(staged.publish(layout.plane.ext), rows,
         zoneAt.indices.filter(k => lo(k) <= hi(k))
           .map(k => schema(zoneAt(k)).name -> (lo(k), hi(k))).toMap,
         // saturation-gated: an over-full filter excludes nothing, so it is
@@ -1247,7 +1268,7 @@ private[graft] final class TableDataWriter(path: String, layout: TableLayout,
           .map(schema(bloomAt(k)).name -> _)).toMap)
     }
 
-    def abort(): Unit = { close(); Files.deleteIfExists(staged) }
+    def abort(): Unit = { close(); staged.discard() }
   }
 
   private val open = mutable.LinkedHashMap.empty[String, OpenFile]
@@ -1325,6 +1346,7 @@ class TableBatchWrite(path: String, layout: TableLayout,
     LayoutWriterFactory(path, layout, jobTag, cols)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
+    StagedFiles.sweep(path, StagedFiles.jobMarker(jobTag))
     def name(line: String): String = line.takeWhile(_ != ',')
     val fresh = messages.toSeq.flatMap(layout.lines).sorted
     // plan against the REGISTERED head, remembering its version: an
@@ -1362,7 +1384,7 @@ class TableBatchWrite(path: String, layout: TableLayout,
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
-    StagedFiles.sweep(path)
+    StagedFiles.sweep(path, StagedFiles.jobMarker(jobTag))
 }
 
 // ---------------------------------------------------------------------------
@@ -1486,6 +1508,7 @@ class DvBatchWrite(path: String, layout: TableLayout, baseVersion: Int,
   // aborts loudly). Deletes and inserts commit atomically: no reader can
   // see an update's halves separately.
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
+    StagedFiles.sweep(path, StagedFiles.jobMarker(jobTag))
     val merged = mutable.LinkedHashMap.empty[String, mutable.ArrayBuffer[Long]]
     val fresh = mutable.ArrayBuffer.empty[String]
     messages.foreach {
@@ -1541,7 +1564,7 @@ class DvBatchWrite(path: String, layout: TableLayout, baseVersion: Int,
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
-    StagedFiles.sweep(path)
+    StagedFiles.sweep(path, StagedFiles.jobMarker(jobTag))
 }
 
 // ---------------------------------------------------------------------------
@@ -1557,7 +1580,8 @@ class DvBatchWrite(path: String, layout: TableLayout, baseVersion: Int,
   * holds. Every epoch becomes one `_MANIFEST.v<N>` version carrying the
   * declared zone/bloom attrs like any batch commit, so batch readers,
   * time travel and partition DDL see streamed data the moment its epoch
-  * commits — the [[EpochSink]] exactly-once shape, inside the table.
+  * commits. Nothing is visible before the epoch's commit point, and a
+  * replay leaves the listing byte-identical (q174 streams through this).
   */
 class TableStreamingWrite(path: String, layout: TableLayout,
     ref: String = DigestManifest.MainRef) extends StreamingWrite {
@@ -1567,12 +1591,13 @@ class TableStreamingWrite(path: String, layout: TableLayout,
     LayoutWriterFactory(path, layout)
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
+    val marker = layout.epochMarker(epochId)
+    StagedFiles.sweep(path, marker)
     val (baseVersion, old) = DigestManifest.head(path, ref)
     // replay idempotency: entries the manifest already holds win. Only
     // THIS epoch's own names can collide (they carry its marker), so the
     // dedup set is O(epoch files), not the whole folded listing — the
     // O(changes)-per-commit discipline at 10⁶+ entry tables
-    val marker = layout.epochMarker(epochId)
     val epochNames = old.iterator.map(_.split(",")(0))
       .filter(_.contains(marker)).toSet
     val lines = messages.toSeq.flatMap(layout.lines).sorted
@@ -1582,7 +1607,7 @@ class TableStreamingWrite(path: String, layout: TableLayout,
   }
 
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
-    StagedFiles.sweep(path, _.contains(layout.epochMarker(epochId)))
+    StagedFiles.sweep(path, layout.epochMarker(epochId))
 }
 
 /** STREAMING READ of a table (q242): the commit log doubles as a stream —

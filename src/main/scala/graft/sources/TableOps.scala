@@ -10,6 +10,7 @@ import org.apache.spark.sql.connector.catalog.SupportsPartitionManagement
 import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure, ProcedureParameter, UnboundProcedure}
 import org.apache.spark.sql.connector.expressions.{Expressions, Transform}
 import org.apache.spark.sql.connector.read.{LocalScan, Scan}
+import org.apache.spark.sql.sources.In
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -25,8 +26,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * file with its metadata — a declared-but-empty partition is a real
   * catalog object, the shape every warehouse's `ADD PARTITION
   * LOCATION ...` workflow depends on). DROP PARTITION retires both: the
-  * manifest shrinks first (atomic publish, same ordering contract as
-  * deleteWhere), files follow — survivors byte-identical.
+  * manifest shrinks first through the metadata DELETE commit
+  * ([[DigestSinkTable.retire]], one optimistic replace: an append that
+  * lands meanwhile aborts the drop instead of vanishing), files follow —
+  * survivors byte-identical.
   */
 class DigestPartitionedTable(path: String)
     extends DigestSinkTable(path, langSplit = true)
@@ -109,25 +112,8 @@ class DigestPartitionedTable(path: String)
     writeDeclared(declared() + (lang -> props))
   }
 
-  override def dropPartition(ident: InternalRow): Boolean = {
-    val lang = langOfIdent(ident)
-    if (!allLangs().contains(lang)) return false
-    // shrink the manifest first (atomic publish), delete data files after
-    // — identical ordering contract to deleteWhere; declared-entry removal
-    // last (pure metadata)
-    val old = DigestManifest.listingFor(path, "_MANIFEST")
-    if (old.nonEmpty) {
-      val (dead, keep) = old.partition(l =>
-        DigestSink.langOf(l.split(",")(0)).contains(lang))
-      if (dead.nonEmpty) {
-        DigestManifest.publish(path, keep)
-        dead.map(_.split(",")(0))
-          .foreach(f => Files.deleteIfExists(Paths.get(path, f)))
-      }
-    }
-    writeDeclared(declared() - lang)
-    true
-  }
+  override def dropPartition(ident: InternalRow): Boolean =
+    dropPartitions(Array(ident))
 
   override def replacePartitionMetadata(ident: InternalRow,
       properties: util.Map[String, String]): Unit = {
@@ -166,19 +152,13 @@ class DigestPartitionedTable(path: String)
     writeDeclared(declared() ++ add)
   }
 
+  // the manifest shrinks through the metadata DELETE commit (one replace
+  // for the whole set, files deleted after it), then the declared entries
+  // go (pure metadata)
   override def dropPartitions(idents: Array[InternalRow]): Boolean = {
     val langs = idents.map(langOfIdent).toSet
     if (!langs.forall(allLangs().contains)) return false // nothing dropped
-    val old = DigestManifest.listingFor(path, "_MANIFEST")
-    if (old.nonEmpty) {
-      val (dead, keep) = old.partition(l =>
-        DigestSink.langOf(l.split(",")(0)).exists(langs.contains))
-      if (dead.nonEmpty) {
-        DigestManifest.publish(path, keep) // one commit for the whole set
-        dead.map(_.split(",")(0))
-          .foreach(f => Files.deleteIfExists(Paths.get(path, f)))
-      }
-    }
+    retire(Array(In("lang", langs.toArray[Any])), always = false)
     writeDeclared(declared() -- langs)
     true
   }
@@ -245,11 +225,10 @@ private[sources] object ProcedureSupport {
       Array(InternalRow(after.size.toLong, after.map(_.rows).sum, version)))
   }
 
-  /** Validate a clustering rewrite's target flavor + columns; returns
-    * true for the declared-schema (evolve) flavor. Digest tables cluster
-    * on the fixed zone-mappable columns; evolve tables on their OWN
-    * declared `'zonemap.columns'` (the zones the rewrite exists to
-    * tighten — clustering on an unzoned column would prune nothing).
+  /** Validate a clustering rewrite's target flavor + columns. Digest
+    * tables cluster on the fixed zone-mappable columns; evolve tables on
+    * their OWN declared `'zonemap.columns'` (the zones the rewrite exists
+    * to tighten — clustering on an unzoned column would prune nothing).
     * A branch-propped EVOLVE table is the WAP write half (round-20,
     * judge item 3): the rewrite's truncate-overwrite stages on the
     * branch ref — invisible to main until an audited `fast_forward`
@@ -258,7 +237,7 @@ private[sources] object ProcedureSupport {
     * a main-ref write layout).
     */
   def clusterableFlavor(props: util.Map[String, String], tbl: String,
-      cols: Seq[String], proc: String): Boolean =
+      cols: Seq[String], proc: String): Unit =
     props.getOrDefault("provider", "") match {
       case "graft_digest" =>
         require(!props.containsKey("branch"),
@@ -270,7 +249,6 @@ private[sources] object ProcedureSupport {
           s"graft.system.$proc: ${unknown.mkString(", ")} are not " +
             s"zone-mapped columns (supported: " +
             s"${zoned.keySet.mkString(", ")})")
-        false
       case "graft_evolve" =>
         val declared = Option(props.get("zonemap.columns")).toSeq
           .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty).toSet
@@ -279,7 +257,6 @@ private[sources] object ProcedureSupport {
           s"graft.system.$proc: ${unknown.mkString(", ")} are not declared " +
             s"zone columns of $tbl (zonemap.columns: " +
             s"${declared.toSeq.sorted.mkString(", ")})")
-        true
       case p => throw new IllegalArgumentException(
         s"graft.system.$proc: $tbl is not a graft_digest or graft_evolve " +
           s"table (provider: $p)")
@@ -308,6 +285,56 @@ private[sources] object ProcedureSupport {
         .forEach(f => Files.deleteIfExists(f))
       finally walk.close()
     }
+  }
+
+  /** The one clustered rewrite of `rewrite_sorted` and `rewrite_zorder`
+    * (q263/q277), for both flavors: snapshot the table, range-partition
+    * the snapshot into `buckets` tasks on the key columns `key` computes
+    * from it, sort each task on them, and truncate-overwrite through the
+    * committed write path under a PRESERVED-layout declaration
+    * ([[DigestSink.declarePreservedLayoutForNextWrite]]; evolve tables
+    * declare no write distribution at all), so the engine keeps the
+    * procedure's exchange and each committed file covers one tight key
+    * range. The commit is tagged content-preserving, so a change feed
+    * never sees it as data churn. A branch-propped evolve table stages
+    * the rewrite on its own ref (the WAP write half): the tag, the
+    * publish and the post-check are ref-qualified, and main is untouched
+    * until fast_forward.
+    */
+  def clusteredRewrite(catalogName: String, tbl: String, cols: Seq[String],
+      buckets: Int, proc: String)(
+      key: org.apache.spark.sql.DataFrame => Seq[org.apache.spark.sql.Column])
+      : util.Iterator[Scan] = {
+    import org.apache.spark.sql.functions.{col, lit}
+    require(buckets >= 2 && buckets <= 4096,
+      s"graft.system.$proc: buckets must be in [2, 4096], got $buckets")
+    val (props, path) = resolve(catalogName, tbl, proc, requireDelta = false)
+    clusterableFlavor(props, tbl, cols, proc)
+    val ref = props.getOrDefault("branch", DigestManifest.MainRef)
+    val spark = org.apache.spark.sql.SparkSession.active
+    val full = (catalogName +: tbl.split("\\.").toSeq).map(p => s"`$p`").mkString(".")
+    // snapshot OUTSIDE the listing: a write cannot overwrite what it reads
+    withStagedSnapshot(spark, path, full, proc) { df =>
+      val keys = key(df).zipWithIndex.map { case (k, i) => k.as(s"__graft_k$i") }
+      val names = keys.indices.map(i => s"__graft_k$i")
+      DigestManifest.tagNextReplaceAsCompaction(path, ref)
+      DigestSink.declarePreservedLayoutForNextWrite(path)
+      try df.select(col("*") +: keys: _*)
+        .repartitionByRange(buckets, names.map(col): _*)
+        .sortWithinPartitions(names.map(col): _*)
+        .drop(names: _*)
+        .writeTo(full)
+        .overwrite(lit(true))
+      finally {
+        DigestSink.clearPreservedLayout(path)
+        DigestManifest.clearCompactionTag(path, ref)
+      }
+    }
+    require(DigestManifest.isCompaction(path,
+        DigestManifest.currentVersion(path, ref), ref),
+      s"graft.system.$proc: the rewrite commit did not carry its " +
+        "content-preserving tag")
+    util.Collections.singletonList(rewriteSummary(path, ref)).iterator()
   }
 }
 
@@ -1252,14 +1279,11 @@ class CompactProcedure(catalogName: String) extends UnboundProcedure
   * buckets => 8)` (q263): WRITE-TIME CLUSTERING — the maintenance action
   * that keeps zone maps (q253/q257) effective. Shuffled ingest widens
   * every file's zone toward [min, max] and the skipping layer stops
-  * skipping; this procedure snapshots the table and rewrites it through
-  * the committed overwrite path with a DECLARED ordered distribution on
-  * `cols` ([[DigestWrite.requiredDistribution]] →
-  * `Distributions.ordered`), so the ENGINE plans the range exchange +
-  * sort into `buckets` writer tasks and every committed file covers one
-  * tight zone. The commit is tagged content-preserving (atomic with the
-  * CAS claim, same contract as compact) so a change feed never sees it
-  * as data churn. At 100 TB this is the rewrite-data-files/z-order
+  * skipping; this procedure rewrites the table range-partitioned on
+  * `cols` into `buckets` writer tasks, each sorted on them, so every
+  * committed file covers one tight zone
+  * ([[ProcedureSupport.clusteredRewrite]], shared with rewrite_zorder).
+  * At 100 TB this is the rewrite-data-files/z-order
   * maintenance job every lakehouse format ships — run it after bulk
   * unsorted loads to restore pruning.
   */
@@ -1280,51 +1304,10 @@ class RewriteSortedProcedure(catalogName: String) extends UnboundProcedure
     val tbl = input.getUTF8String(0).toString
     val cols = input.getUTF8String(1).toString
       .split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    val buckets = input.getInt(2)
     require(cols.nonEmpty, "graft.system.rewrite_sorted: cols must name " +
       "at least one zone-mapped column")
-    require(buckets >= 2 && buckets <= 4096,
-      s"graft.system.rewrite_sorted: buckets must be in [2, 4096], got $buckets")
-    val (props, path) = ProcedureSupport.resolve(catalogName, tbl,
-      "rewrite_sorted", requireDelta = false)
-    val evolve = ProcedureSupport.clusterableFlavor(props, tbl, cols,
-      "rewrite_sorted")
-    // a branch-propped EVOLVE table stages the rewrite on its own ref
-    // (the WAP write half, round-20) — the tag, the publish, and every
-    // post-check are ref-qualified; main is untouched until fast_forward
-    val ref = props.getOrDefault("branch", DigestManifest.MainRef)
-
-    val spark = org.apache.spark.sql.SparkSession.active
-    val full = (catalogName +: tbl.split("\\.").toSeq).map(p => s"`$p`").mkString(".")
-    // snapshot OUTSIDE the listing (cannot overwrite what is being
-    // read), then rewrite through the committed truncate-overwrite path.
-    // The digest flavor declares the range layout and lets the ENGINE
-    // plan the exchange + sort; the evolve flavor declares no write
-    // distribution, so the procedure shapes the data itself and the
-    // engine keeps its partitioning verbatim.
-    ProcedureSupport.withStagedSnapshot(spark, path, full,
-      "rewrite_sorted") { df =>
-      DigestManifest.tagNextReplaceAsCompaction(path, ref)
-      if (!evolve) DigestSink.declareRangeLayoutForNextWrite(path, cols, buckets)
-      try {
-        val shaped =
-          if (evolve) df.repartitionByRange(buckets,
-              cols.map(org.apache.spark.sql.functions.col): _*)
-            .sortWithinPartitions(cols.head, cols.tail: _*)
-          else df
-        shaped.writeTo(full)
-          .overwrite(org.apache.spark.sql.functions.lit(true))
-      } finally {
-        if (!evolve) DigestSink.clearRangeLayout(path)
-        DigestManifest.clearCompactionTag(path, ref)
-      }
-    }
-    require(DigestManifest.isCompaction(path,
-        DigestManifest.currentVersion(path, ref), ref),
-      "graft.system.rewrite_sorted: the rewrite commit did not carry its " +
-        "content-preserving tag")
-    util.Collections.singletonList(
-      ProcedureSupport.rewriteSummary(path, ref)).iterator()
+    ProcedureSupport.clusteredRewrite(catalogName, tbl, cols, input.getInt(2),
+      "rewrite_sorted")(_ => cols.map(org.apache.spark.sql.functions.col))
   }
 }
 
@@ -1448,12 +1431,9 @@ class RollbackProcedure(catalogName: String) extends UnboundProcedure
   * duplicating the table per sort order.
   *
   * The z-value is computed by the procedure (min/max-scaled to
-  * `bitsPerCol` bits per column, bit-interleaved), the data is
-  * range-partitioned + sorted on it, and the write declares a PRESERVED
-  * layout ([[DigestSink.declarePreservedLayoutForNextWrite]]) — no
-  * declarable column distribution can express a computed interleave, so
-  * the engine is told to keep the procedure's own exchange. The commit
-  * is tagged content-preserving, exactly like compact/rewrite_sorted.
+  * `bitsPerCol` bits per column, bit-interleaved) and is the one key
+  * column of the rewrite it shares with rewrite_sorted
+  * ([[ProcedureSupport.clusteredRewrite]]).
   */
 class RewriteZorderProcedure(catalogName: String) extends UnboundProcedure
     with BoundProcedure {
@@ -1472,26 +1452,14 @@ class RewriteZorderProcedure(catalogName: String) extends UnboundProcedure
     val tbl = input.getUTF8String(0).toString
     val cols = input.getUTF8String(1).toString
       .split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    val buckets = input.getInt(2)
     require(cols.size >= 2,
       "graft.system.rewrite_zorder: z-ordering needs at least two columns " +
         "(one column is plain clustering — use rewrite_sorted)")
     require(cols.distinct.size == cols.size,
       s"graft.system.rewrite_zorder: duplicate columns in ${cols.mkString(",")}")
-    require(buckets >= 2 && buckets <= 4096,
-      s"graft.system.rewrite_zorder: buckets must be in [2, 4096], got $buckets")
-    val (props, path) = ProcedureSupport.resolve(catalogName, tbl,
-      "rewrite_zorder", requireDelta = false)
-    ProcedureSupport.clusterableFlavor(props, tbl, cols, "rewrite_zorder")
-    // branch-propped evolve tables stage on their own ref (WAP write
-    // half, round-20) — see rewrite_sorted
-    val ref = props.getOrDefault("branch", DigestManifest.MainRef)
-
-    val spark = org.apache.spark.sql.SparkSession.active
-    import org.apache.spark.sql.functions._
-    val full = (catalogName +: tbl.split("\\.").toSeq).map(p => s"`$p`").mkString(".")
-    ProcedureSupport.withStagedSnapshot(spark, path, full,
+    ProcedureSupport.clusteredRewrite(catalogName, tbl, cols, input.getInt(2),
       "rewrite_zorder") { df =>
+      import org.apache.spark.sql.functions._
       // per-column bounds for the scaling — a bounded driver read of
       // 2·|cols| longs, never rows
       val aggs = cols.flatMap(c => Seq(min(col(c)), max(col(c))))
@@ -1521,28 +1489,8 @@ class RewriteZorderProcedure(catalogName: String) extends UnboundProcedure
             b * cols.size + i))
         }
       }
-      DigestManifest.tagNextReplaceAsCompaction(path, ref)
-      // digest declares a PRESERVED layout so its lang-clustering write
-      // contract steps aside; evolve declares no distribution, so the
-      // procedure's exchange survives without a declaration
-      DigestSink.declarePreservedLayoutForNextWrite(path)
-      try df.withColumn("__graft_z", z)
-        .repartitionByRange(buckets, col("__graft_z"))
-        .sortWithinPartitions("__graft_z")
-        .drop("__graft_z")
-        .writeTo(full)
-        .overwrite(lit(true))
-      finally {
-        DigestSink.clearPreservedLayout(path)
-        DigestManifest.clearCompactionTag(path, ref)
-      }
+      Seq(z)
     }
-    require(DigestManifest.isCompaction(path,
-        DigestManifest.currentVersion(path, ref), ref),
-      "graft.system.rewrite_zorder: the rewrite commit did not carry its " +
-        "content-preserving tag")
-    util.Collections.singletonList(
-      ProcedureSupport.rewriteSummary(path, ref)).iterator()
   }
 }
 

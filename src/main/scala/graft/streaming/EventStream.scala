@@ -693,28 +693,25 @@ object EventStream {
       .orderBy("user_id")
   }
 
-  /** q174: the same CDC changelog as q119, driven through a CUSTOM
-    * DataSource V2 STREAMING sink ([[graft.sources.EpochSink]]) instead of
-    * foreachBatch — `Write.toStreaming` → per-epoch writer factory →
-    * epoch-scoped two-phase commit, the exactly-once contract streaming
-    * table formats implement. Each micro-batch (epoch) stages
-    * attempt-keyed files, task-commits by rename, and epoch-commits by
-    * publishing an atomic `_EPOCH_E_COMMIT` manifest; a replayed epoch
-    * (driver failure between sink commit and checkpoint) re-commits
-    * idempotently — first marker wins (the replay-sequencing contract is
-    * additionally spec-pinned by direct protocol calls).
+  /** q174: the same CDC changelog as q119, driven through a DataSource V2
+    * STREAMING write into a `graft_evolve` table addressed by `path` and
+    * `evolveSchema` ([[graft.sources.EvolveSource]]) instead of
+    * foreachBatch. Each micro-batch (epoch) commits through the table's
+    * own epoch write ([[graft.sources.TableStreamingWrite]]): task files
+    * are attempt-staged and published by rename, and the epoch commit
+    * appends them to the manifest as one version. A replayed epoch
+    * (a failure between sink commit and checkpoint write-ahead) rewrites
+    * its own `ev-je<epoch>-` names and publishes nothing new.
     *
-    * The round trip is then read back THROUGH the manifests (only
+    * The round trip is then read back through the manifest scan (only
     * committed epochs are visible) and collapsed with the q117 batch
-    * changelog apply — so the oracle is the SAME SQL as q117/q119:
-    * streaming write path, commit protocol, serialization, and manifest
+    * changelog apply, so the oracle is the SAME SQL as q117/q119:
+    * streaming write path, commit protocol, serialization and manifest
     * read path all sit on the hash-checked line. Timestamps travel as
     * epoch micros (UTC session), so reconstruction is bit-exact.
     *
     * Scale shape: writer parallelism is the stream's partitioning (no
-    * driver funnel); per-epoch driver commit is O(files). At 100 TB the
-    * rename becomes an object-store multipart-complete and the marker a
-    * table-format snapshot — the protocol is unchanged.
+    * single-node funnel); the per-epoch commit is O(files).
     */
   def q174StreamEpochSink(s: SparkSession, dir: String): DataFrame = {
     val staged = graft.TempDirs.staged(s"events_cdc:$dir") { p =>
@@ -724,7 +721,36 @@ object EventStream {
     }
     val sinkDir = graft.TempDirs.staged(s"epoch_sink:$dir")()
     val ckpt = graft.TempDirs.staged(s"epoch_sink_ckpt:$dir")()
-    val feed = s.readStream
+    q174Stream(s, staged.toString, sinkDir.toString, ckpt.toString)
+    if (graft.sources.DigestManifest.listingFor(sinkDir.toString, "_MANIFEST").isEmpty)
+      throw new IllegalStateException("epoch sink committed no epochs")
+    val back = s.read.format(classOf[graft.sources.EvolveSource].getName)
+      .options(q174Sink(sinkDir.toString)).load()
+      .select(col("user_id"),
+        expr("CAST(timestamp_micros(ts_us) AS TIMESTAMP_NTZ)").as("ts"),
+        col("event_id"), col("event_type"))
+    graft.ops.Warehouse.cdcCollapse(back)
+  }
+
+  /** The options that address q174's sink table at `sinkDir`: its path
+    * and its `(event_id, ts_us, user_id, event_type)` schema.
+    */
+  private[graft] def q174Sink(sinkDir: String): Map[String, String] = {
+    val (nextId, fields) = graft.sources.EvolveSchema.fromStruct(StructType(Seq(
+      StructField("event_id", LongType),
+      StructField("ts_us", LongType),
+      StructField("user_id", LongType),
+      StructField("event_type", StringType))))
+    Map("path" -> sinkDir,
+      "evolveSchema" -> graft.sources.EvolveSchema.serialize(nextId, fields))
+  }
+
+  /** Streams the staged events at `feedDir` into q174's sink table, one
+    * file per epoch, and waits for the drain.
+    */
+  private[graft] def q174Stream(s: SparkSession, feedDir: String,
+      sinkDir: String, ckpt: String): Unit =
+    s.readStream
       .schema(StructType(Seq(
         StructField("event_id", LongType),
         StructField("ts", TimestampNTZType),
@@ -733,27 +759,17 @@ object EventStream {
         StructField("value", DoubleType),
         StructField("props", StringType))))
       .option("maxFilesPerTrigger", "1")
-      .parquet(staged.toString)
-    val q = feed
+      .parquet(feedDir)
       .select(col("event_id"),
         expr("unix_micros(CAST(ts AS TIMESTAMP))").as("ts_us"),
         col("user_id"), col("event_type"))
       .writeStream
-      .format(classOf[graft.sources.EpochSink].getName)
-      .option("path", sinkDir.toString)
-      .option("checkpointLocation", ckpt.toString)
+      .format(classOf[graft.sources.EvolveSource].getName)
+      .options(q174Sink(sinkDir))
+      .option("checkpointLocation", ckpt)
       .trigger(Trigger.AvailableNow())
       .start()
-    q.awaitTermination()
-    val files = graft.sources.EpochSink.committedFiles(sinkDir.toString)
-    if (files.isEmpty)
-      throw new IllegalStateException("epoch sink committed no epochs")
-    val back = s.read.schema(graft.sources.EpochSink.rowSchema).csv(files: _*)
-      .select(col("user_id"),
-        expr("CAST(timestamp_micros(ts_us) AS TIMESTAMP_NTZ)").as("ts"),
-        col("event_id"), col("event_type"))
-    graft.ops.Warehouse.cdcCollapse(back)
-  }
+      .awaitTermination()
 
   /** q132: the Spark-4 `transformWithState` arbitrary-state surface — the
     * successor API to q64's `flatMapGroupsWithState` (explicit
@@ -1286,7 +1302,7 @@ object EventStream {
        |ORDER BY hour_start, n_name""".stripMargin
 
   // ---- q217: ForeachWriter sink — the per-row streaming sink API ----------
-  // The last streaming-sink surface next to the V2 EpochSink (q174):
+  // The last streaming-sink surface next to the V2 table sink (q174):
   // `ForeachWriter`'s open(partition, epoch)/process/close contract, the
   // convenience API for pushing rows at external systems. Correct use is
   // EPOCH-AWARE: each (partition, epoch) opens one output unit, so a

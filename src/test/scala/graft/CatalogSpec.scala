@@ -266,6 +266,26 @@ class CatalogSpec extends SparkSpec {
     assert(t.dropPartitions(Array(row("aa"), row("bb"))) && langs().isEmpty)
   }
 
+  test("q226: a partition drop planned against a stale head aborts, and " +
+      "the interleaved append stays in the listing") {
+    val dir = tmp("graft_drop_cas_spec_").toString
+    val t = new DigestPartitionedTable(dir)
+    def names() = DigestManifest.listingFor(dir, "_MANIFEST").map(_.takeWhile(_ != ','))
+    DigestManifest.publish(dir, Seq("lang_en-part-00000.csv,3", "lang_de-part-00000.csv,2"))
+    val planned = DigestManifest.head(dir)
+    // an append registers between the drop's read and its publish
+    DigestManifest.publishAppend(dir, Seq("lang_en-part-00001.csv,1"), planned._1)
+    intercept[java.util.ConcurrentModificationException] {
+      t.retire(Array(org.apache.spark.sql.sources.In("lang", Array[Any]("en"))),
+        always = false, planned = planned)
+    }
+    assert(names() == Seq("lang_en-part-00000.csv", "lang_de-part-00000.csv",
+      "lang_en-part-00001.csv"), names().toString)
+    // re-planned against the new head, the drop retires the appended file too
+    assert(t.dropPartition(InternalRow(UTF8String.fromString("en"))))
+    assert(names() == Seq("lang_de-part-00000.csv"), names().toString)
+  }
+
   test("q230: TRUNCATE TABLE empties via one committed metadata operation " +
       "and the table stays writable") {
     withCatalog {

@@ -96,9 +96,8 @@ class LintSpec extends AnyFunSuite {
       }
       .toSeq.groupBy(identity).view.mapValues(_.size).toMap
     val audited = Map(
-      // partition DDL (DROP PARTITION, single and atomic multi-partition)
-      // and branch creation (the fork's first snapshot)
-      "sources/TableOps.scala" -> 3,
+      // branch creation (the fork's first snapshot)
+      "sources/TableOps.scala" -> 1,
       // the change-feed soak tool's hand-built listings
       "tools/SoakFeed.scala" -> 1,
     )
@@ -169,10 +168,10 @@ class LintSpec extends AnyFunSuite {
         "through TableScanBuilder")
   }
 
-  /** Every table task file is staged and renamed by one writer
-    * (`TableDataWriter` in sources/TableCore.scala); only the delta-flavor
-    * verb log and the epoch sink, whose files are not table data rows,
-    * stage their own. Every parquet data file is written by one row writer
+  /** Every task output file, table data rows and the delta flavor's verb
+    * logs alike, is staged, published and discarded by one rule
+    * (`StagedFiles.Attempt` in sources/TableCore.scala), the single place
+    * for a task-retry hook. Every parquet data file is written by one row writer
     * (`ParquetData.GenericRowsWriter`). This lint pins the
     * `-attempt-$taskId.staged` and `ExampleParquetWriter.builder(` sites in
     * main sources to those.
@@ -194,16 +193,13 @@ class LintSpec extends AnyFunSuite {
         }
         .toSeq.groupBy(identity).view.mapValues(_.size).toMap
     val staged = Map(
-      // TableDataWriter: every insert of either flavor
+      // StagedFiles.Attempt: every task file (TableDataWriter's inserts of
+      // either flavor, DigestDeltaWriter's verb logs)
       "sources/TableCore.scala" -> 1,
-      // DigestDeltaWriter: the merge-on-read verb log
-      "sources/DigestSink.scala" -> 1,
-      // EpochDataWriter: the epoch sink's files
-      "sources/EpochSink.scala" -> 1,
     )
     assert(sites("-attempt-$taskId.staged") == staged,
       s"un-audited task staging sites: ${sites("-attempt-$taskId.staged")} vs " +
-        s"audited $staged — write table data files through TableDataWriter")
+        s"audited $staged — stage task files through StagedFiles.Attempt")
     val builders = Map("sources/ParquetData.scala" -> 1)
     assert(sites("ExampleParquetWriter.builder(") == builders,
       s"un-audited parquet writer sites: ${sites("ExampleParquetWriter.builder(")} " +

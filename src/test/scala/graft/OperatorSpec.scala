@@ -698,105 +698,84 @@ class OperatorSpec extends SparkSpec {
   test("q174: epoch sink commit sequencing — replayed epoch commits " +
       "idempotently, uncommitted epochs stay invisible") {
     import scala.jdk.CollectionConverters._
-    import graft.sources.{EpochCommitMessage, EpochDataWriter, EpochSink, EpochStreamingWrite}
+    import graft.sources.{DigestManifest, EvolveSchema, LayoutWriterFactory, ManifestEntry, TableCommitMessage, TableLayout, TableStreamingWrite}
     import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.connector.write.WriterCommitMessage
     import org.apache.spark.unsafe.types.UTF8String
     val dir = java.nio.file.Files.createTempDirectory("graft_epoch_spec_")
+    // q174's sink table: an evolve layout over its four columns
+    val layout = TableLayout.Evolve(EvolveSchema.parse(
+      streaming.EventStream.q174Sink(dir.toString)("evolveSchema"))._2)
     def row(id: Long, us: Long, uid: Long, tpe: String) =
       InternalRow(id, us, uid, UTF8String.fromString(tpe))
-    val write = new EpochStreamingWrite(dir.toString)
-    // epoch 0, attempt 1: task-commit renames staged → epoch-keyed final
-    val w0 = new EpochDataWriter(dir.toString, 0, 11L, 0L)
+    def listing() = DigestManifest.listingFor(dir.toString, "_MANIFEST")
+    def entries() = listing().map(ManifestEntry.parse).map(e => (e.file, e.rows))
+    def files() = {
+      val l = java.nio.file.Files.list(dir)
+      try l.iterator().asScala.map(_.getFileName.toString).toVector.sorted
+      finally l.close()
+    }
+    val factory = LayoutWriterFactory(dir.toString, layout)
+    val write = new TableStreamingWrite(dir.toString, layout)
+    // epoch 0, attempt 11: task-commit renames staged → epoch-keyed final
+    val w0 = factory.createWriter(0, 11L, 0L)
     w0.write(row(1L, 1000L, 7L, "click"))
     w0.write(row(2L, 2000L, 7L, "view"))
-    val m0 = w0.commit().asInstanceOf[EpochCommitMessage]
-    assert(m0.epochId == 0L && m0.rows == 2L)
-    // BEFORE the epoch commit, readers honoring manifests see NOTHING
-    assert(EpochSink.committedFiles(dir.toString).isEmpty,
-      "uncommitted epoch leaked into the committed view")
-    write.commit(0L, Array[org.apache.spark.sql.connector.write.WriterCommitMessage](m0))
-    val visible1 = EpochSink.committedFiles(dir.toString)
-    assert(visible1.map(f => f.substring(f.lastIndexOf('/') + 1))
-      == Seq("epoch-0-part-00000.csv"))
-    val manifest1 = java.nio.file.Files.readAllLines(
-      dir.resolve("_EPOCH_0_COMMIT")).get(0)
-    assert(manifest1 == "epoch-0-part-00000.csv,2")
+    val m0 = w0.commit().asInstanceOf[TableCommitMessage]
+    assert(m0.files.map(f => (f.fileName, f.rows)) == Seq(("ev-je0-part-00000.csv", 2L)))
+    // BEFORE the epoch commit, manifest readers see NOTHING
+    assert(listing().isEmpty, "uncommitted epoch leaked into the committed view")
+    write.commit(0L, Array[WriterCommitMessage](m0))
+    val visible1 = listing()
+    assert(entries() == Seq(("ev-je0-part-00000.csv", 2L)))
+    val bytes0 = java.nio.file.Files.readAllBytes(dir.resolve("ev-je0-part-00000.csv"))
     // REPLAY: driver died between sink commit and checkpoint — Spark
     // re-runs epoch 0 (same offsets → same bytes, new attempt id) and
     // calls commit(0, …) again. The replayed task overwrites the SAME
-    // final file; the second epoch commit must be a no-op (first marker
-    // wins) — not a crash, not a duplicate, not a torn manifest.
-    val w0r = new EpochDataWriter(dir.toString, 0, 42L, 0L)
+    // final file; the second epoch commit publishes nothing — not a
+    // crash, not a duplicate entry, not a new version.
+    val w0r = factory.createWriter(0, 42L, 0L)
     w0r.write(row(1L, 1000L, 7L, "click"))
     w0r.write(row(2L, 2000L, 7L, "view"))
-    val m0r = w0r.commit().asInstanceOf[EpochCommitMessage]
-    write.commit(0L, Array[org.apache.spark.sql.connector.write.WriterCommitMessage](m0r))
-    assert(EpochSink.committedFiles(dir.toString) == visible1,
-      "epoch replay changed the committed view")
-    assert(java.nio.file.Files.readAllLines(dir.resolve("_EPOCH_0_COMMIT"))
-      .get(0) == manifest1, "epoch replay rewrote the manifest")
+    val m0r = w0r.commit().asInstanceOf[TableCommitMessage]
+    assert(m0r.files.map(_.fileName) == m0.files.map(_.fileName))
+    write.commit(0L, Array[WriterCommitMessage](m0r))
+    assert(listing() == visible1, "epoch replay changed the committed view")
+    assert(DigestManifest.currentVersion(dir.toString) == 1,
+      "epoch replay published a version")
+    assert(java.nio.file.Files.readAllBytes(dir.resolve("ev-je0-part-00000.csv"))
+      .sameElements(bytes0), "epoch replay changed the epoch's file")
     // an aborted attempt of a LATER epoch leaves no trace: staged file
-    // removed, no marker, committed view unchanged
-    val w1 = new EpochDataWriter(dir.toString, 0, 13L, 1L)
+    // removed, no entry, committed view unchanged
+    val w1 = factory.createWriter(0, 13L, 1L)
     w1.write(row(3L, 3000L, 8L, "error"))
     w1.abort()
     write.abort(1L, Array.empty)
-    assert(EpochSink.committedFiles(dir.toString) == visible1)
-    val leftover = {
-      val l = java.nio.file.Files.list(dir)
-      try l.iterator().asScala.map(_.getFileName.toString)
-        .filter(_.contains("epoch-1")).toVector
-      finally l.close()
-    }
+    assert(listing() == visible1)
+    val leftover = files().filter(_.contains("je1"))
     assert(leftover.isEmpty, s"aborted epoch left $leftover")
-    // epoch 1 then commits for real — the committed view is the ordered
-    // union of per-epoch manifests
-    val w1b = new EpochDataWriter(dir.toString, 0, 14L, 1L)
+    // epoch 1 then commits for real — the committed view appends it
+    val w1b = factory.createWriter(0, 14L, 1L)
     w1b.write(row(3L, 3000L, 8L, "purchase"))
-    val m1 = w1b.commit().asInstanceOf[EpochCommitMessage]
-    write.commit(1L, Array[org.apache.spark.sql.connector.write.WriterCommitMessage](m1))
-    assert(EpochSink.committedFiles(dir.toString)
-      .map(f => f.substring(f.lastIndexOf('/') + 1))
-      == Seq("epoch-0-part-00000.csv", "epoch-1-part-00000.csv"))
+    val m1 = w1b.commit().asInstanceOf[TableCommitMessage]
+    write.commit(1L, Array[WriterCommitMessage](m1))
+    assert(entries() == Seq(("ev-je0-part-00000.csv", 2L), ("ev-je1-part-00000.csv", 1L)))
   }
 
   test("q174: a full stream re-run into the same sink dir is idempotent " +
       "end-to-end — the live replay path, not just the protocol calls") {
     // fresh checkpoint + same sink dir = every epoch re-delivered and
-    // re-committed against existing markers; the committed view and the
-    // collapsed result must not change
+    // re-committed against the entries already listed; the committed view
+    // and the collapsed result must not change
     val first = streaming.EventStream.q174StreamEpochSink(spark, sf).collect()
-    val sinkDir = graft.TempDirs.staged(s"epoch_sink:$sf")()
-    val before = graft.sources.EpochSink.committedFiles(sinkDir.toString)
-    val rerun = {
-      // same staged feed, same sink, FRESH checkpoint → full re-delivery
-      import org.apache.spark.sql.streaming.Trigger
-      import org.apache.spark.sql.types._
-      val staged = graft.TempDirs.staged(s"events_cdc:$sf")()
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_epoch_replay_")
-      val q = spark.readStream
-        .schema(StructType(Seq(
-          StructField("event_id", LongType),
-          StructField("ts", TimestampNTZType),
-          StructField("user_id", LongType),
-          StructField("event_type", StringType),
-          StructField("value", DoubleType),
-          StructField("props", StringType))))
-        .option("maxFilesPerTrigger", "1")
-        .parquet(staged.toString)
-        .select(col("event_id"),
-          expr("unix_micros(CAST(ts AS TIMESTAMP))").as("ts_us"),
-          col("user_id"), col("event_type"))
-        .writeStream
-        .format(classOf[graft.sources.EpochSink].getName)
-        .option("path", sinkDir.toString)
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      graft.sources.EpochSink.committedFiles(sinkDir.toString)
-    }
-    assert(rerun == before, "re-delivered epochs changed the committed view")
+    val sinkDir = graft.TempDirs.staged(s"epoch_sink:$sf")().toString
+    def listing() = graft.sources.DigestManifest.listingFor(sinkDir, "_MANIFEST")
+    val before = listing()
+    // same staged feed, same sink, FRESH checkpoint → full re-delivery
+    streaming.EventStream.q174Stream(spark,
+      graft.TempDirs.staged(s"events_cdc:$sf")().toString, sinkDir,
+      java.nio.file.Files.createTempDirectory("graft_epoch_replay_").toString)
+    assert(listing() == before, "re-delivered epochs changed the committed view")
     val second = streaming.EventStream.q174StreamEpochSink(spark, sf).collect()
     assert(second.toSeq == first.toSeq,
       "epoch replay changed the collapsed CDC result")

@@ -157,4 +157,55 @@ class TableWriterSpec extends AnyFunSuite {
       }
     }
   }
+
+  test("a retried task attempt publishes one final file and one manifest " +
+      "entry and leaves nothing staged: batch insert, epoch and delta-log " +
+      "writers") {
+    import org.apache.spark.sql.connector.write.WriterCommitMessage
+    import graft.sources.{DigestDeltaBatchWrite, DigestManifest, TableBatchWrite, TableStreamingWrite}
+    val layout = TableLayout.Evolve(evolveFields)
+    // a task attempt that wrote one row: its task commit and task abort
+    type Attempt = (() => WriterCommitMessage, () => Unit)
+    def data(w: DataWriter[InternalRow], row: InternalRow): Attempt = {
+      w.write(row)
+      (() => w.commit(), () => w.abort())
+    }
+    // per writer: start attempt `task` of partition `Part`, and the job
+    // or epoch commit over the task messages
+    def writers(dir: String): Seq[(String, Long => Attempt, Array[WriterCommitMessage] => Unit)] = {
+      val batch = new TableBatchWrite(dir, layout)
+      val stream = new TableStreamingWrite(dir, layout)
+      val delta = new DigestDeltaBatchWrite(dir, Array(0, 1, 2))
+      Seq(
+        ("batch insert",
+          t => data(batch.createBatchWriterFactory(null).createWriter(Part, t),
+            evolveRows.head),
+          ms => batch.commit(ms)),
+        ("epoch",
+          t => data(stream.createStreamingWriterFactory(null)
+            .createWriter(Part, t, 5L), evolveRows.head),
+          ms => stream.commit(5L, ms)),
+        ("delta log",
+          { t =>
+            val w = delta.createBatchWriterFactory(null).createWriter(Part, t)
+            w.insert(digestRows.head)
+            (() => w.commit(), () => w.abort())
+          },
+          ms => delta.commit(ms)))
+    }
+    for (killed <- Seq(true, false); i <- 0 until 3) {
+      val dir = java.nio.file.Files.createTempDirectory("graft_retry_spec_")
+      val (name, attempt, commitJob) = writers(dir.toString)(i)
+      // attempt 1 is left staged, as a killed task leaves it, or aborted
+      val first = attempt(1L)
+      if (!killed) first._2()
+      // attempt 2 of the same partition commits, then the job or epoch
+      commitJob(Array(attempt(2L)._1()))
+      val what = s"$name, first attempt ${if (killed) "killed" else "aborted"}"
+      val files = listing(dir).filterNot(_.startsWith("_"))
+      assert(files.size == 1 && !files.head.endsWith(".staged"), s"$what: $files")
+      val entries = DigestManifest.listingFor(dir.toString, "_MANIFEST")
+      assert(entries.map(_.takeWhile(_ != ',')) == files, s"$what: $entries")
+    }
+  }
 }
