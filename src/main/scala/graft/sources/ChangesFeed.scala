@@ -89,21 +89,6 @@ object DigestChanges {
     StructField("lang", StringType, nullable = true),
     StructField("n_chars", LongType, nullable = true)) ++ changeFields)
 
-  private[sources] def manifestFiles(path: String, v: Int): Seq[String] =
-    manifestEntries(path, v).map(_.file)
-
-  private[sources] def manifestEntries(path: String, v: Int,
-      ref: String = DigestManifest.MainRef): Seq[ManifestEntry] =
-    if (v == 0) Seq.empty
-    else {
-      require(Files.exists(
-          Paths.get(path, s"${DigestManifest.mName(ref)}.v$v")),
-        s"graft_digest changes: version $v of ref '$ref' is not resolvable " +
-          s"at $path (expired? the feed needs its snapshots retained)")
-      // resolves the sharded snapshot chain (delta → nearest full base)
-      DigestManifest.listingAt(path, ref, v).map(ManifestEntry.parse)
-    }
-
   /** The REGISTERED main versions in ascending order — the feed AND the
     * table stream iterate these, never raw integers: a crashed committer
     * can leave a claimed `_MANIFEST.v<k>` snapshot that was never
@@ -121,15 +106,15 @@ object DigestChanges {
   /** The per-version change partitions for `(from, to]`.
     *
     * PLANNING IS O(changes), NOT O(table-files): every commit records its
-    * own diff as `_CHANGES.v<N>` at publish time
-    * ([[DigestManifest]].writeChangeRecord) — `+entry` added, `-entry`
-    * removed, `~old|new` mutated in place (deletion-vector growth, q252)
-    * — so the feed reads one record per version; at 10⁶ manifest entries
-    * that is the difference between a driver bottleneck and a metadata
-    * lookup. A version without a record (written before records existed)
-    * falls back to the full snapshot diff, which yields the identical
-    * answer. Compaction commits (tagged content-preserving) are skipped
-    * whole.
+    * own diff at publish time ([[DigestManifest.changeRecords]] reads it:
+    * a delta snapshot's body, or a full-shaped version's change record)
+    * — `+entry` added, `-entry` removed, `~old|new` mutated in place
+    * (deletion-vector growth, q252) — so the feed reads one record per
+    * version; at 10⁶ manifest entries that is the difference between a
+    * driver bottleneck and a metadata lookup. A version without a record
+    * (written before records existed, or after a version gap) falls back
+    * to the full snapshot diff, which yields the identical answer.
+    * Compaction commits (tagged content-preserving) are skipped whole.
     */
   private[graft] def plan(path: String, from: Int, to: Int,
       ref: String = DigestManifest.MainRef): Seq[InputPartition] = {
@@ -161,30 +146,28 @@ object DigestChanges {
     // be skipped — and a branch compaction, if one is ever tagged,
     // skips only its own branch's feed
     if (DigestManifest.isCompaction(path, v, ref)) return Seq.empty
-    val rec = Paths.get(path, s"${DigestManifest.changesName(ref)}.v$v")
     val (added, removed, mutated) =
-      if (Files.exists(rec)) {
-        val lines = scala.jdk.CollectionConverters.ListHasAsScala(
-          Files.readAllLines(rec)).asScala.filter(_.nonEmpty).toSeq
-        (lines.collect { case l if l.startsWith("+") => ManifestEntry.parse(l.tail) },
-          lines.collect { case l if l.startsWith("-") => ManifestEntry.parse(l.tail) }
-            .sortBy(_.file),
-          lines.collect { case l if l.startsWith("~") =>
-            val i = l.indexOf('|')
-            require(i > 0, s"graft_digest changes: malformed record '$l'")
-            (ManifestEntry.parse(l.substring(1, i)),
-              ManifestEntry.parse(l.substring(i + 1)))
-          })
-      } else {
-        // legacy commit without a record: full snapshot diff
-        val prevE = manifestEntries(path, prevV, ref)
-        val curE = manifestEntries(path, v, ref)
-        val prev = prevE.map(e => e.file -> e).toMap
-        val cur = curE.map(e => e.file -> e).toMap
-        (curE.filterNot(e => prev.contains(e.file)),
-          prevE.filterNot(e => cur.contains(e.file)).sortBy(_.file),
-          curE.flatMap(e => prev.get(e.file)
-            .filter(_ != e).map(pe => (pe, e))))
+      DigestManifest.changeRecords(path, ref, prevV, v) match {
+        case Some(recs) =>
+          import DigestManifest.Record
+          (recs.collect { case Record(None, Some(n)) => ManifestEntry.parse(n) },
+            recs.collect { case Record(Some(o), None) => ManifestEntry.parse(o) }
+              .sortBy(_.file),
+            recs.collect { case Record(Some(o), Some(n)) =>
+              (ManifestEntry.parse(o), ManifestEntry.parse(n))
+            })
+        case None =>
+          // no record: full snapshot diff
+          def entries(at: Int) =
+            DigestManifest.listingAt(path, ref, at).map(ManifestEntry.parse)
+          val prevE = entries(prevV)
+          val curE = entries(v)
+          val prev = prevE.map(e => e.file -> e).toMap
+          val cur = curE.map(e => e.file -> e).toMap
+          (curE.filterNot(e => prev.contains(e.file)),
+            prevE.filterNot(e => cur.contains(e.file)).sortBy(_.file),
+            curE.flatMap(e => prev.get(e.file)
+              .filter(_ != e).map(pe => (pe, e))))
       }
     // a version that REMOVES live delta verb files (a rollback across
     // uncompacted row-level DML, round-20 — or any overwrite that folds
@@ -305,7 +288,7 @@ object DigestChanges {
     // mutations never move an id across its entry's recorded zone.
     val (zLo, zHi) = TableLayout.Digest.zones("doc_id")
     val bfAttr = TableLayout.Digest.bloomAttr
-    val listing = DigestManifest.listingAtPruned(path, ref, v, None,
+    val listing = DigestManifest.listingAt(path, ref, v, None,
       Map("doc_id" -> (ids.min, ids.max)), Map(bfAttr -> ids))
       .map(ManifestEntry.parse)
     val prefix = listing.takeWhile(_.file != beforeFile)

@@ -482,11 +482,12 @@ private[graft] object BloomCodec {
   *
   *   - FULL: plain `file,rows[,k=v]*` lines (v1, every
   *     [[BaseEvery]]-th version, and any commit whose delta would not be
-  *     both smaller and fold-exact — truncate, whole-table overwrite);
+  *     both smaller and fold-exact — truncate, whole-table overwrite),
+  *     with the commit's change records beside it in `_CHANGES.v<N>`;
   *   - DELTA: a `#base:<v-1>` header followed by this commit's change
-  *     records in the `_CHANGES.v<N>` grammar (`+added`, `-removed`,
-  *     `~old|new`) — O(this commit's changes) bytes however many files
-  *     the table holds.
+  *     records (`+added`, `-removed`, `~old|new`) — O(this commit's
+  *     changes) bytes however many files the table holds, and the
+  *     version's only change record.
   *
   * The CURRENT pointer `_MANIFEST[@ref]` is a one-line
   * `#version:<N>` indirection (an empty table's pointer is empty), so
@@ -538,20 +539,19 @@ private[graft] object DigestManifest {
   private[sources] def changesName(ref: String): String =
     if (ref == MainRef) "_CHANGES" else s"_CHANGES@${checkRef(ref)}"
 
-  /** O(changes) CDF METADATA: every main commit records ITS OWN diff as
-    * `_CHANGES.v<N>` — `+<entry>` added, `-<entry>` removed,
-    * `~<old>|<new>` an entry mutated in place (only a deletion-vector
-    * growth does this) — written between the CAS claim and registration,
-    * so a registered version always carries its record. The change feed
-    * ([[DigestChanges.plan]]) then reads ONE O(changes-of-v) record per
-    * version instead of set-diffing two full snapshots — the difference
-    * between O(changes) and O(table-files) planning per commit at 10⁶
-    * manifest entries. A missing record (pre-upgrade commits) falls back
-    * to the snapshot diff, which yields the identical answer.
+  /** O(changes) CDF METADATA for a FULL-SHAPED slot: a version whose
+    * snapshot is not a `#base:` delta (v1, every [[BaseEvery]]-th base,
+    * sharded bases, the truncate and whole-overwrite fallbacks, an expiry
+    * rebase) records its own diff as `_CHANGES.v<N>`. A delta snapshot's
+    * body already IS its version's change record, so it writes none: every
+    * registered version carries exactly one record, which
+    * [[changeRecords]] reads for the change feed — one O(changes-of-v)
+    * read per version instead of a set-diff of two full snapshots. A
+    * version with neither (written before records existed) falls back to
+    * the snapshot diff, which yields the identical answer.
     */
   private[graft] def stageChangeRecord(dir: java.nio.file.Path,
-      oldLines: Seq[String], newLines: Seq[String],
-      knownRecords: Option[Seq[String]] = None): java.nio.file.Path = {
+      records: Seq[String]): java.nio.file.Path = {
     // staged under a CLAIM-UNIQUE temp name and renamed into place inside
     // [[finishCommit]] only after the slot-bytes verification passes: a
     // committer whose claim was reclaimed during a stall can no longer
@@ -560,16 +560,23 @@ private[graft] object DigestManifest {
     // The `.changes-tmp-` prefix matches no metadata glob, so a crash
     // leaves plain sweepable garbage for remove_orphan_files.
     val tmp = Files.createTempFile(dir, ".changes-tmp-", "")
-    Files.write(tmp, knownRecords.getOrElse(deltaRecords(oldLines, newLines))
-      .mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
+    Files.write(tmp, records.mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
     tmp
   }
 
-  /** The change records describing `newLines` relative to `oldLines` —
-    * the one grammar shared by the CDF metadata (`_CHANGES.v<N>`) and
-    * the delta-shaped snapshot bodies: `+entry` added, `-entry` removed,
-    * `~old|new` an entry mutated in place (only a deletion-vector growth
-    * does this). O(changes) lines regardless of table size.
+  /** Move a staged change record into place as version `v`'s record.
+    * REPLACE_EXISTING is safe: a pre-existing record under `v` can only be
+    * a dead committer's leftover, because the caller holds `v`'s slot.
+    */
+  private def placeChangeRecord(dir: java.nio.file.Path, ref: String, v: Int,
+      staged: java.nio.file.Path): Unit =
+    Files.move(staged, dir.resolve(s"${changesName(ref)}.v$v"),
+      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+
+  /** The change records describing `newLines` relative to `oldLines`:
+    * `+entry` added, `-entry` removed, `~old|new` an entry mutated in
+    * place (only a deletion-vector growth or a rollback's shrink does
+    * this). O(changes) lines regardless of table size.
     */
   private[graft] def deltaRecords(oldLines: Seq[String],
       newLines: Seq[String]): Seq[String] = {
@@ -583,13 +590,26 @@ private[graft] object DigestManifest {
       }
   }
 
-  /** Apply one version's change records to its base listing. The commit
-    * ORDER CONTRACT survives the fold: surviving base entries keep their
-    * committed order (removals drop lines, mutations replace in place)
-    * and added entries append after them in record order — exactly how
-    * every commit path builds its listing, which [[slotBytesFor]]
-    * additionally verifies per commit before choosing the delta shape.
+  /** One change record: the entry before (`old`) and after (`neu`) the
+    * commit. `+entry` has no old side, `-entry` no new side, `~old|new`
+    * both.
     */
+  private[graft] case class Record(old: Option[String], neu: Option[String])
+
+  /** The one parser of the change-record grammar — snapshot delta bodies
+    * and `_CHANGES` files alike. Anything else is corruption and fails
+    * loudly.
+    */
+  private[graft] def parseRecord(r: String): Record =
+    if (r.startsWith("+")) Record(None, Some(r.substring(1)))
+    else if (r.startsWith("-")) Record(Some(r.substring(1)), None)
+    else {
+      val i = r.indexOf('|')
+      require(r.startsWith("~") && i > 0,
+        s"graft_digest: malformed snapshot record '$r'")
+      Record(Some(r.substring(1, i)), Some(r.substring(i + 1)))
+    }
+
   /** First field (the file name) of a manifest line — `indexOf`, not a
     * regex split: the fold runs this over every line of a 10⁵-entry
     * listing per plan.
@@ -599,45 +619,29 @@ private[graft] object DigestManifest {
     if (i < 0) l else l.substring(0, i)
   }
 
-  private[graft] def foldRecords(base: Seq[String],
-      records: Seq[String]): Seq[String] = {
-    val adds = records.collect { case r if r.startsWith("+") => r.tail }
-    val removed = records.collect {
-      case r if r.startsWith("-") => fileOf(r.tail)
-    }.toSet
-    val mutated: Map[String, String] = records.collect {
-      case r if r.startsWith("~") =>
-        val i = r.indexOf('|')
-        require(i > 0, s"graft_digest: malformed snapshot record '$r'")
-        fileOf(r.substring(1, i)) -> r.substring(i + 1)
-    }.toMap
-    // all-appends (the common commit) skips the per-line rebuild
-    if (removed.isEmpty && mutated.isEmpty) base ++ adds
-    else base.filterNot(l => removed.contains(fileOf(l)))
-      .map(l => mutated.getOrElse(fileOf(l), l)) ++ adds
-  }
-
-  /** [[foldRecords]] over a PARTIAL (shard-pruned) base: a `~` mutation
-    * whose old side lives in a skipped shard UPSERTS its new side instead
-    * of no-opping. Over a full base this is byte-identical to
-    * [[foldRecords]]; over a pruned base it closes the one hole in the
-    * superset contract — a mutation that WIDENS an entry's zone past the
-    * shard summary computed at base-write time must still surface (the
-    * scan's own `survives` re-filter keeps or drops it from current
-    * attrs). Without the upsert such an entry would vanish from the plan.
+  /** Apply one version's change records to its base listing — the one
+    * fold. The commit ORDER CONTRACT survives it: surviving base entries
+    * keep their committed order (removals drop lines, mutations replace
+    * in place) and added entries append after them in record order —
+    * exactly how every commit path builds its listing, which
+    * [[slotBytesFor]] verifies per commit before choosing the delta shape.
+    *
+    * Over a PARTIAL (shard-pruned) base, a `~` mutation whose old side
+    * lives in a skipped shard UPSERTS its new side instead of no-opping:
+    * a mutation that WIDENS an entry's zone past the shard summary
+    * computed at base-write time must still surface (the scan's own
+    * `survives` re-filter keeps or drops it from current attrs). Over a
+    * full base no such mutation exists — [[deltaRecords]] emits `~` only
+    * for files on both sides — so the upsert never fires there.
     */
   private[graft] def foldRecordsUpsert(base: Seq[String],
       records: Seq[String]): Seq[String] = {
-    val adds = records.collect { case r if r.startsWith("+") => r.tail }
-    val removed = records.collect {
-      case r if r.startsWith("-") => fileOf(r.tail)
-    }.toSet
-    val mutated: Map[String, String] = records.collect {
-      case r if r.startsWith("~") =>
-        val i = r.indexOf('|')
-        require(i > 0, s"graft_digest: malformed snapshot record '$r'")
-        fileOf(r.substring(1, i)) -> r.substring(i + 1)
-    }.toMap
+    val recs = records.map(parseRecord)
+    val adds = recs.collect { case Record(None, Some(n)) => n }
+    val removed = recs.collect { case Record(Some(o), None) => fileOf(o) }.toSet
+    val mutated: Map[String, String] =
+      recs.collect { case Record(Some(o), Some(n)) => fileOf(o) -> n }.toMap
+    // all-appends (the common commit) skips the per-line rebuild
     if (removed.isEmpty && mutated.isEmpty) return base ++ adds
     val applied = scala.collection.mutable.Set.empty[String]
     val kept = base.filterNot(l => removed.contains(fileOf(l))).map { l =>
@@ -653,19 +657,8 @@ private[graft] object DigestManifest {
     kept ++ orphaned ++ adds
   }
 
-  /** The bytes to CAS-claim version `v` with: a `#base:<v-1>` delta when
-    * the delta is both smaller than the full listing and fold-exact
-    * (order included), a full listing otherwise — so correctness never
-    * depends on a caller's listing being delta-expressible, and every
-    * [[BaseEvery]]-th version re-anchors the chain.
-    *
-    * `knownRecords`: a caller that KNOWS its own change records (an
-    * append knows it appended `fresh`) passes them so the commit never
-    * re-DIFFS the full listing — without this, commit CPU was O(table)
-    * per commit (two O(n) maps in [[deltaRecords]] plus a full
-    * `mkString` just to size-compare: the 10⁶-entry soak crawled).
-    * Known records skip the fold-verify (true by construction for
-    * appends) and the full listing is SIZED without materializing.
+  /** Bytes of `neu` written as a full listing, sized without
+    * materializing it.
     */
   private def fullSize(neu: Seq[String]): Long =
     if (neu.isEmpty) 0L
@@ -716,8 +709,14 @@ private[graft] object DigestManifest {
     * sweeps by age.
     */
   private[graft] case class SlotBytes(bytes: Array[Byte],
-      shards: Seq[java.nio.file.Path]) {
+      shards: Seq[java.nio.file.Path], record: Option[Seq[String]] = None) {
     def discard(): Unit = shards.foreach(Files.deleteIfExists)
+
+    /** Stage the change record a full-shaped slot carries (a delta slot's
+      * body is its record) for [[finishCommit]].
+      */
+    def stageRecord(dir: java.nio.file.Path): Option[java.nio.file.Path] =
+      record.map(stageChangeRecord(dir, _))
   }
 
   /** Write `neu` as per-group shard files and return the header bytes
@@ -945,7 +944,8 @@ private[graft] object DigestManifest {
     * listing otherwise (sharded past [[shardMinEntries]]) — so
     * correctness never depends on a caller's listing being
     * delta-expressible, and every [[BaseEvery]]-th version re-anchors the
-    * chain.
+    * chain. A full-shaped slot carries the commit's change records for
+    * `_CHANGES.v<N>`; a delta slot's body is its record.
     *
     * `knownRecords`: a caller that KNOWS its own change records (an
     * append knows it appended `fresh`) passes them so the commit never
@@ -958,23 +958,18 @@ private[graft] object DigestManifest {
   private def slotBytesFor(dir: java.nio.file.Path, v: Int, ref: String,
       base: Seq[String], neu: Seq[String],
       knownRecords: Option[Seq[String]] = None): SlotBytes = {
+    lazy val recs = knownRecords.getOrElse(deltaRecords(base, neu))
     def full: SlotBytes =
-      if (neu.size >= shardMinEntries) writeShardedBase(dir, v, ref, neu)
-      else SlotBytes(neu.mkString("\n").getBytes(StandardCharsets.UTF_8), Nil)
+      (if (neu.size >= shardMinEntries) writeShardedBase(dir, v, ref, neu)
+      else SlotBytes(neu.mkString("\n").getBytes(StandardCharsets.UTF_8), Nil))
+        .copy(record = Some(recs))
     if (v <= 1 || v % BaseEvery == 0 || base.isEmpty) return full
-    knownRecords match {
-      case Some(recs) =>
-        val delta = (s"#base:${v - 1}" +: recs).mkString("\n")
-          .getBytes(StandardCharsets.UTF_8)
-        if (delta.length < fullSize(neu)) SlotBytes(delta, Nil) else full
-      case None =>
-        val recs = deltaRecords(base, neu)
-        val delta = (s"#base:${v - 1}" +: recs).mkString("\n")
-          .getBytes(StandardCharsets.UTF_8)
-        if (delta.length < fullSize(neu) && foldRecords(base, recs) == neu)
-          SlotBytes(delta, Nil)
-        else full
-    }
+    val delta = (s"#base:${v - 1}" +: recs).mkString("\n")
+      .getBytes(StandardCharsets.UTF_8)
+    if (delta.length < fullSize(neu) &&
+        (knownRecords.isDefined || foldRecordsUpsert(base, recs) == neu))
+      SlotBytes(delta, Nil)
+    else full
   }
 
   /** Per-(table, ref) cache of the last FOLDED listing, so repeated head
@@ -1015,62 +1010,144 @@ private[graft] object DigestManifest {
   // materialization of the 373 MB / 10⁷-line fold sidecar per cold plan.
   private def readLines(f: java.nio.file.Path): Seq[String] = {
     val in = Files.newBufferedReader(f, StandardCharsets.UTF_8)
-    try {
-      val b = Vector.newBuilder[String]
-      var l = in.readLine()
-      while (l != null) {
-        if (l.nonEmpty) b += l
-        l = in.readLine()
-      }
-      b.result()
-    } finally in.close()
+    try readRest(in) finally in.close()
   }
+
+  private def readRest(in: java.io.BufferedReader): Vector[String] = {
+    val b = Vector.newBuilder[String]
+    var l = in.readLine()
+    while (l != null) {
+      if (l.nonEmpty) b += l
+      l = in.readLine()
+    }
+    b.result()
+  }
+
+  /** One snapshot on a `#base:` chain. Its header line is read first: a
+    * delta's records are read on in the same pass, while the snapshot
+    * that ends the chain (full, sharded or missing) is read whole only
+    * when its [[body]] is asked for.
+    */
+  private final class Link(path: String, ref: String, val v: Int) {
+    val file: java.nio.file.Path = Paths.get(path, s"${mName(ref)}.v$v")
+
+    private lazy val header: (Option[Int], Seq[String]) =
+      if (!Files.exists(file)) (None, Nil)
+      else {
+        val in = Files.newBufferedReader(file, StandardCharsets.UTF_8)
+        try {
+          val h = Option(in.readLine()).getOrElse("")
+          if (h.startsWith("#base:")) (Some(h.drop(6).toInt), readRest(in))
+          else (None, Nil)
+        } finally in.close()
+      }
+
+    /** The version this snapshot is a `#base:` delta against. */
+    def base: Option[Int] = header._1
+
+    /** A delta's change records, or the whole snapshot that ends the
+      * chain.
+      */
+    lazy val body: Seq[String] =
+      if (base.isDefined) header._2
+      else {
+        require(Files.exists(file),
+          s"graft_digest: version $v of ref '$ref' is not resolvable " +
+            s"at $path (expired? snapshots must be retained to read it)")
+        readLines(file)
+      }
+  }
+
+  /** Version `v`'s snapshot and the `#base:` chain below it, newest first
+    * — the one chain walk. It follows each delta's header to its base
+    * version and ends after the first snapshot that is not a delta (or at
+    * a `#base:0`). Lazy: a walk that stops early (a valid cached fold, a
+    * probe hit) reads nothing past where it stopped.
+    */
+  private def chain(path: String, ref: String, v: Int): Iterator[Link] =
+    Iterator.iterate(Option.when(v > 0)(new Link(path, ref, v)))(
+      _.flatMap(_.base).filter(_ > 0).map(new Link(path, ref, _)))
+      .takeWhile(_.isDefined).map(_.get)
+
+  /** The snapshot FILES `(v, ref)` resolves through: the numbered
+    * snapshot plus its `#base:` delta chain. What drop_branch keeps for a
+    * tag pin, and what releasing the last pin of a dead branch sweeps.
+    */
+  private[sources] def chainFiles(path: String, ref: String, v: Int): Seq[String] =
+    chain(path, ref, v).map(_.file.getFileName.toString).toSeq
+
+  /** The listing a chain-ending snapshot's lines hold: a sharded header
+    * resolves through its fold sidecar, or all its shards.
+    */
+  private def fullListing(path: String, lines: Seq[String]): Seq[String] =
+    if (lines.headOption.contains("#sharded"))
+      readFoldSidecar(path, lines).getOrElse(readShardedBase(path, lines, None))
+    else lines
 
   /** Resolve the LOGICAL listing of version `v` of `ref`: walk the delta
     * chain back to the nearest full base (or the validated cached fold),
     * then apply the records forward. O(changes since base/cache), with
     * the chain length bounded by [[BaseEvery]].
+    *
+    * GROUP-PRUNED resolution (a pushed lang set `groups`, zone `ranges`
+    * or bloom `points`): a sharded base contributes only the shards
+    * matching `groups` (plus the ungrouped catch-all) whose zone and
+    * bloom summaries admit the predicates. The result is a SUPERSET of
+    * the full listing's entries whose group is in `groups` and a SUBSET
+    * of the full listing — delta records are replayed unfiltered (an add
+    * outside `groups` appends an entry the scan's own `survives` pruning
+    * drops; a removal/mutation of an entry a skipped shard held no-ops
+    * against the partial base), so every consumer that re-filters by its
+    * own predicate gets exactly the same survivors as the full fold,
+    * while the driver reads O(matching shards + changes) bytes instead of
+    * the whole table's metadata. Plain (unsharded) snapshots resolve
+    * IDENTICALLY either way — pruning here is physical shard skipping,
+    * never a logical filter. A valid cached full fold of `v` itself is
+    * used (its residency is already paid) but is group-FILTERED before
+    * returning — in-memory, zero extra I/O — so a pruned read never hands
+    * back foreign-group entries just because a full fold happened to be
+    * cached; a pruned fold is never cached.
     */
-  private[graft] def listingAt(path: String, ref: String, v: Int): Seq[String] = {
+  private[graft] def listingAt(path: String, ref: String, v: Int,
+      groups: Option[Set[String]] = None,
+      ranges: Map[String, (Long, Long)] = Map.empty,
+      points: Map[String, Set[Long]] = Map.empty): Seq[String] = {
     if (v == 0) return Seq.empty
+    val pruned = groups.isDefined || ranges.nonEmpty || points.nonEmpty
     val key = cacheKey(path, ref)
-    def validCache(cur: Int): Option[Seq[String]] = {
+    def validCache(l: Link): Option[Seq[String]] = {
       val c = headCache.get(key)
-      if (c == null || c.v != cur) None
-      else {
-        val f = Paths.get(path, s"${mName(ref)}.v$cur")
-        if (Files.exists(f) && Files.size(f) == c.size &&
-            Files.getLastModifiedTime(f).toMillis == c.mtime) Some(c.lines)
-        else None
-      }
+      if (c == null || c.v != l.v || (pruned && l.v != v)) None
+      else if (Files.exists(l.file) && Files.size(l.file) == c.size &&
+          Files.getLastModifiedTime(l.file).toMillis == c.mtime) Some(c.lines)
+      else None
     }
     var stack = List.empty[Seq[String]] // ascending version order at exit
-    var cur = v
-    var base: Seq[String] = null
-    while (base == null) {
-      validCache(cur) match {
-        case Some(lines) => base = lines
-        case None =>
-          val f = Paths.get(path, s"${mName(ref)}.v$cur")
-          require(Files.exists(f),
-            s"graft_digest: version $cur of ref '$ref' is not resolvable " +
-              s"at $path (expired? snapshots must be retained to read it)")
-          val lines = readLines(f)
-          lines.headOption match {
-            case Some(h) if h.startsWith("#base:") =>
-              stack ::= lines.tail
-              cur = h.drop(6).toInt
-              if (cur == 0) base = Seq.empty
-            case Some("#sharded") =>
-              base = readFoldSidecar(path, lines)
-                .getOrElse(readShardedBase(path, lines, None))
-            case _ => base = lines
+    var base: Seq[String] = Seq.empty
+    val links = chain(path, ref, v)
+    var done = false
+    while (!done && links.hasNext) {
+      val l = links.next()
+      validCache(l) match {
+        // zone ranges are NOT re-checked here — the result stays a
+        // superset and every consumer re-filters by its own predicate
+        case Some(lines) if pruned =>
+          return lines.filter { e =>
+            val g = groupOf(fileOf(e))
+            g.isEmpty || groups.forall(_.contains(g))
           }
+        case Some(lines) => base = lines; done = true
+        case None if l.base.isDefined => stack ::= l.body
+        case None if pruned && l.body.headOption.contains("#sharded") =>
+          base = readShardedBase(path, l.body, groups, ranges, points); done = true
+        case None => base = fullListing(path, l.body); done = true
       }
     }
-    val folded = stack.foldLeft(base)(foldRecords)
+    // upsert fold: over a pruned base, a mutation whose old side sits in
+    // a skipped shard must surface its new side (see [[foldRecordsUpsert]])
+    val folded = stack.foldLeft(base)(foldRecordsUpsert)
     val slot = Paths.get(path, s"${mName(ref)}.v$v")
-    if (Files.exists(slot)) {
+    if (!pruned && Files.exists(slot)) {
       // bounded: a long session touches hundreds of (mostly tiny, mostly
       // dead) table paths — past the cap the whole cache resets rather
       // than pinning every listing ever planned; correctness never
@@ -1084,117 +1161,56 @@ private[graft] object DigestManifest {
     folded
   }
 
-  /** GROUP-PRUNED listing resolution: like [[listingAt]], but a sharded
-    * base contributes only the shards matching `groups` (plus the
-    * ungrouped catch-all). The result is a SUPERSET of the full listing's
-    * entries whose group is in `groups` and a SUBSET of the full listing
-    * — delta records are replayed unfiltered (an add outside `groups`
-    * appends an entry the scan's own `survives` pruning drops; a
-    * removal/mutation of an entry a skipped shard held no-ops against the
-    * partial base), so every consumer that re-filters by its own
-    * predicate gets exactly the same survivors as the full fold, while
-    * the driver reads O(matching shards + changes) bytes instead of the
-    * whole table's metadata. Plain (unsharded) snapshots resolve
-    * IDENTICALLY to [[listingAt]] — pruning here is physical shard
-    * skipping, never a logical filter. A valid cached full fold is used
-    * when present (its residency is already paid) but is group-FILTERED
-    * before returning — in-memory, zero extra I/O — so a pruned read
-    * never hands back foreign-group entries just because a full fold
-    * happened to be cached; a pruned fold is never cached.
-    */
-  private[graft] def listingAtPruned(path: String, ref: String, v: Int,
-      groups: Option[Set[String]],
-      ranges: Map[String, (Long, Long)] = Map.empty,
-      points: Map[String, Set[Long]] = Map.empty): Seq[String] = {
-    if (v == 0) return Seq.empty
-    val key = cacheKey(path, ref)
-    val c = headCache.get(key)
-    if (c != null && c.v == v) {
-      val f = Paths.get(path, s"${mName(ref)}.v$v")
-      if (Files.exists(f) && Files.size(f) == c.size &&
-          Files.getLastModifiedTime(f).toMillis == c.mtime)
-        // group-filter the cached full fold in memory (zero extra I/O);
-        // zone ranges are NOT re-checked here — the result stays a
-        // superset and every consumer re-filters by its own predicate
-        return c.lines.filter { l =>
-          val g = groupOf(fileOf(l))
-          g.isEmpty || groups.forall(_.contains(g))
-        }
-    }
-    var stack = List.empty[Seq[String]]
-    var cur = v
-    var base: Seq[String] = null
-    while (base == null) {
-      val f = Paths.get(path, s"${mName(ref)}.v$cur")
-      require(Files.exists(f),
-        s"graft_digest: version $cur of ref '$ref' is not resolvable " +
-          s"at $path (expired? snapshots must be retained to read it)")
-      val lines = readLines(f)
-      lines.headOption match {
-        case Some(h) if h.startsWith("#base:") =>
-          stack ::= lines.tail
-          cur = h.drop(6).toInt
-          if (cur == 0) base = Seq.empty
-        case Some("#sharded") =>
-          base = readShardedBase(path, lines, groups, ranges, points)
-        case _ => base = lines
-      }
-    }
-    // upsert fold: a mutation whose old side sits in a skipped shard must
-    // surface its new side (see [[foldRecordsUpsert]])
-    stack.foldLeft(base)(foldRecordsUpsert)
-  }
-
   /** Resolve any manifest FILE NAME — the current pointer
     * (`_MANIFEST[@ref]`), a numbered snapshot (`_MANIFEST[@ref].v<k>`),
     * or a legacy/hand-written full listing — to its logical listing.
     * Missing file resolves to the empty listing (matching every caller's
     * historical `if exists` guard); a broken delta chain fails loudly
     * inside [[listingAt]].
+    *
+    * A pushed lang set (`groups`), zone `ranges` or bloom `points`
+    * resolve PRUNED — the scan's entry point, with [[listingAt]]'s
+    * superset contract; with none, the listing resolves through the head
+    * cache and the fold sidecar.
     */
-  def listingFor(path: String, name: String): Seq[String] = {
-    val f = Paths.get(path, name)
-    if (!Files.exists(f)) return Seq.empty
-    val lines = readLines(f)
-    lines.headOption match {
-      case Some(h) if h.startsWith("#version:") =>
-        listingAt(path, refOfManifestName(name)._1, h.drop(9).trim.toInt)
-      case Some(h) if h.startsWith("#base:") =>
-        val (ref, v) = refOfManifestName(name)
-        require(v > 0,
-          s"graft_digest: $name is delta-shaped but not a numbered snapshot")
-        listingAt(path, ref, v)
-      case Some("#sharded") =>
-        readFoldSidecar(path, lines)
-          .getOrElse(readShardedBase(path, lines, None))
-      case _ => lines
-    }
-  }
-
-  /** [[listingFor]] with group pruning — the scan's entry point when a
-    * lang predicate was pushed: resolves through the pointer/snapshot
-    * indirections to [[listingAtPruned]]. Same superset contract.
-    */
-  private[graft] def listingForPruned(path: String, name: String,
-      groups: Option[Set[String]],
+  def listingFor(path: String, name: String,
+      groups: Option[Set[String]] = None,
       ranges: Map[String, (Long, Long)] = Map.empty,
       points: Map[String, Set[Long]] = Map.empty): Seq[String] = {
     val f = Paths.get(path, name)
     if (!Files.exists(f)) return Seq.empty
+    val pruned = groups.isDefined || ranges.nonEmpty || points.nonEmpty
     val lines = readLines(f)
     lines.headOption match {
       case Some(h) if h.startsWith("#version:") =>
-        listingAtPruned(path, refOfManifestName(name)._1,
-          h.drop(9).trim.toInt, groups, ranges, points)
+        listingAt(path, refOfManifestName(name)._1, h.drop(9).trim.toInt,
+          groups, ranges, points)
       case Some(h) if h.startsWith("#base:") =>
         val (ref, v) = refOfManifestName(name)
         require(v > 0,
           s"graft_digest: $name is delta-shaped but not a numbered snapshot")
-        listingAtPruned(path, ref, v, groups, ranges, points)
-      case Some("#sharded") =>
+        listingAt(path, ref, v, groups, ranges, points)
+      case Some("#sharded") if pruned =>
         readShardedBase(path, lines, groups, ranges, points)
-      case _ => lines
+      case _ => fullListing(path, lines)
     }
+  }
+
+  /** Version `v`'s change records relative to `prevV`, the previous
+    * REGISTERED version — the one reader the change feed plans from. The
+    * snapshot body when its header is `#base:<prevV>` (read header-first,
+    * so a full base is never read whole to learn it is not a delta), else
+    * the `_CHANGES` record a full-shaped slot carries, else None: the
+    * caller diffs the two snapshots (a version gap, or a table written
+    * before records existed).
+    */
+  private[graft] def changeRecords(path: String, ref: String, prevV: Int,
+      v: Int): Option[Seq[Record]] = {
+    val snap = new Link(path, ref, v)
+    val rec = Paths.get(path, s"${changesName(ref)}.v$v")
+    if (snap.base.contains(prevV)) Some(snap.body.map(parseRecord))
+    else if (Files.exists(rec)) Some(readLines(rec).map(parseRecord))
+    else None
   }
 
   /** METADATA-ONLY EXISTENCE PROBE (round-20, judge item 4): may any
@@ -1207,65 +1223,49 @@ private[graft] object DigestManifest {
     * summary) are read CHEAPEST-FIRST off the `#rows:` weights and the
     * scan SHORT-CIRCUITS on the first admitting entry — an EXISTS-style
     * answer on a 10⁷-entry table reads one small shard, never the fold.
+    * The chain walk is lazy, so no delta past the first hit is read.
     * Returns (mayContain, baseShardsRead).
     */
   private[graft] def probeKey(path: String, ref: String, key: String,
       id: Long): (Boolean, Long) = {
-    def admits(attrs: Map[String, String]): Boolean =
-      attrs.get(key).forall(enc => BloomCodec.mayContain(enc, id))
-    var cur = currentVersion(path, ref)
-    if (cur == 0) return (false, 0L)
+    def admits(entry: String): Boolean =
+      ManifestEntry.parse(entry).attrs.get(key)
+        .forall(enc => BloomCodec.mayContain(enc, id))
     var shardsRead = 0L
-    while (true) {
-      val f = Paths.get(path, s"${mName(ref)}.v$cur")
-      require(Files.exists(f),
-        s"graft_digest probe: version $cur of ref '$ref' is not " +
-          s"resolvable at $path")
-      val lines = readLines(f)
-      lines.headOption match {
-        case Some(h) if h.startsWith("#base:") =>
-          // O(changes) record check: an added or mutated-in entry that
-          // admits short-circuits the whole probe
-          val hit = lines.tail.exists { r =>
-            if (r.startsWith("+")) admits(ManifestEntry.parse(r.tail).attrs)
-            else if (r.startsWith("~")) {
-              val i = r.indexOf('|')
-              admits(ManifestEntry.parse(r.substring(i + 1)).attrs)
-            } else false
-          }
-          if (hit) return (true, shardsRead)
-          cur = h.drop(6).toInt
-          if (cur == 0) return (false, shardsRead)
-        case Some("#sharded") =>
-          val blooms = shardBlooms(lines)
-          val weights = shardWeights(lines)
-          val candidates = shardRefs(lines).map(_._1).filter { n =>
-            blooms.getOrElse(n, Map.empty).get(key)
-              .forall(enc => BloomCodec.mayContain(enc, id))
-          }.sortBy(n => weights.getOrElse(n, Long.MaxValue))
-          candidates.foreach { n =>
-            val sf = Paths.get(path, n)
-            // a missing referenced shard is corruption, not exclusion:
-            // skipping it silently could return false — which the probe
-            // CONTRACT defines as proof of absence. Refuse loudly like
-            // the base reader.
-            require(Files.exists(sf),
-              s"graft_digest probe: referenced base shard $n is missing " +
-                s"at $path — metadata corrupted or swept while referenced")
-            shardsRead += 1
-            shardReadEvents.incrementAndGet()
-            val hit = readLines(sf).exists { l =>
-              admits(ManifestEntry.parse(l.drop(l.indexOf(':') + 1)).attrs)
-            }
-            if (hit) return (true, shardsRead)
-          }
-          return (false, shardsRead)
-        case _ =>
-          return (lines.exists(l => admits(ManifestEntry.parse(l).attrs)),
-            shardsRead)
-      }
+    val links = chain(path, ref, currentVersion(path, ref))
+    while (links.hasNext) {
+      val l = links.next()
+      if (l.base.isDefined) {
+        // O(changes) record check: an added or mutated-in entry that
+        // admits short-circuits the whole probe
+        if (l.body.exists(r => parseRecord(r).neu.exists(admits)))
+          return (true, shardsRead)
+      } else if (l.body.headOption.contains("#sharded")) {
+        val lines = l.body
+        val blooms = shardBlooms(lines)
+        val weights = shardWeights(lines)
+        val candidates = shardRefs(lines).map(_._1).filter { n =>
+          blooms.getOrElse(n, Map.empty).get(key)
+            .forall(enc => BloomCodec.mayContain(enc, id))
+        }.sortBy(n => weights.getOrElse(n, Long.MaxValue))
+        candidates.foreach { n =>
+          val sf = Paths.get(path, n)
+          // a missing referenced shard is corruption, not exclusion:
+          // skipping it silently could return false — which the probe
+          // CONTRACT defines as proof of absence. Refuse loudly like
+          // the base reader.
+          require(Files.exists(sf),
+            s"graft_digest probe: referenced base shard $n is missing " +
+              s"at $path — metadata corrupted or swept while referenced")
+          shardsRead += 1
+          shardReadEvents.incrementAndGet()
+          if (readLines(sf).exists(l => admits(l.drop(l.indexOf(':') + 1))))
+            return (true, shardsRead)
+        }
+        return (false, shardsRead)
+      } else return (l.body.exists(admits), shardsRead)
     }
-    (false, shardsRead) // unreachable
+    (false, shardsRead)
   }
 
   /** `(ref, version)` named by a manifest file name; version 0 for the
@@ -1297,32 +1297,29 @@ private[graft] object DigestManifest {
     val f = Paths.get(path, name)
     if (!Files.exists(f)) return Set.empty
     val lines = readLines(f)
-    // a sharded header mentions its shard FILES (so reachability keeps
-    // them) and, through them, every data file their entries name
-    if (lines.headOption.contains("#sharded")) {
-      val refs = shardRefs(lines)
-      // the fold sidecar is header-referenced metadata too: reachability
-      // must keep it or remove_orphan_files would sweep a live sidecar
-      val fold = lines.filter(_.startsWith("#fold:")).map(_.drop(6)).toSet
-      return fold ++ refs.map(_._1).toSet ++
-        refs.iterator.flatMap { case (n, _) =>
-          val sf = Paths.get(path, n)
-          if (!Files.exists(sf)) Iterator.empty
-          else readLines(sf).iterator.map { l =>
-            fileOf(l.drop(l.indexOf(':') + 1))
+    lines.headOption match {
+      // a sharded header mentions its shard FILES (so reachability keeps
+      // them) and, through them, every data file their entries name
+      case Some("#sharded") =>
+        val refs = shardRefs(lines)
+        // the fold sidecar is header-referenced metadata too: reachability
+        // must keep it or remove_orphan_files would sweep a live sidecar
+        val fold = lines.filter(_.startsWith("#fold:")).map(_.drop(6)).toSet
+        fold ++ refs.map(_._1).toSet ++
+          refs.iterator.flatMap { case (n, _) =>
+            val sf = Paths.get(path, n)
+            if (!Files.exists(sf)) Iterator.empty
+            else readLines(sf).iterator.map { l =>
+              fileOf(l.drop(l.indexOf(':') + 1))
+            }
           }
-        }
+      case Some(h) if h.startsWith("#base:") =>
+        lines.iterator.drop(1).flatMap { r =>
+          val rec = parseRecord(r)
+          rec.old.iterator ++ rec.neu.iterator
+        }.map(fileOf).toSet
+      case _ => lines.iterator.filterNot(_.startsWith("#")).map(fileOf).toSet
     }
-    lines.iterator.flatMap { l =>
-      if (l.startsWith("#")) Iterator.empty
-      else if (l.startsWith("+") || l.startsWith("-"))
-        Iterator.single(l.tail.split(",")(0))
-      else if (l.startsWith("~")) {
-        val i = l.indexOf('|')
-        Iterator(l.substring(1, i).split(",")(0),
-          l.substring(i + 1).split(",")(0))
-      } else Iterator.single(l.split(",")(0))
-    }.toSet
   }
 
   /** How long a CAS loser waits for a claimed-but-unregistered version to
@@ -1377,18 +1374,6 @@ private[graft] object DigestManifest {
       case _: java.nio.file.FileAlreadyExistsException => false
     }
 
-  /** Claim EXACTLY version `v` — the linearization point of every commit.
-    * Returns true if this committer owns the slot. Returns false when the
-    * slot's holder REGISTERED `v` (or anything past it): a genuine
-    * predecessor — the caller re-reads the head and rebases or aborts.
-    * A slot held by a claim that never registers within [[OrphanWaitMs]]
-    * is an abandoned (crashed) committer: its bytes are atomically moved
-    * aside to a `.orphan-` name (exactly one mover wins; the file is
-    * swept by remove_orphan_files) and the claim retries. A stalled-but-
-    * alive holder that lost its slot this way fails LOUDLY at
-    * registration — [[finishCommit]] re-reads the slot and refuses to
-    * register bytes it did not write — never silently.
-    */
   /** Test-only interleaving hook, invoked between the orphan move and the
     * registration re-check: lets a spec deterministically land a
     * registration inside the TOCTOU window the restore below closes.
@@ -1412,6 +1397,18 @@ private[graft] object DigestManifest {
       .collect { case a if a.length >= 3 => a(2) }
   }
 
+  /** Claim EXACTLY version `v` — the linearization point of every commit.
+    * Returns true if this committer owns the slot. Returns false when the
+    * slot's holder REGISTERED `v` (or anything past it): a genuine
+    * predecessor — the caller re-reads the head and rebases or aborts.
+    * A slot held by a claim that never registers within [[OrphanWaitMs]]
+    * is an abandoned (crashed) committer: its bytes are atomically moved
+    * aside to a `.orphan-` name (exactly one mover wins; the file is
+    * swept by remove_orphan_files) and the claim retries. A stalled-but-
+    * alive holder that lost its slot this way fails LOUDLY at
+    * registration — [[finishCommit]] re-reads the slot and refuses to
+    * register bytes it did not write — never silently.
+    */
   private[graft] def claimExact(dir: java.nio.file.Path, path: String, v: Int,
       bytes: Array[Byte], ref: String): Boolean = {
     var attempts = 0
@@ -1480,13 +1477,15 @@ private[graft] object DigestManifest {
     * slot with: if the slot no longer holds them, the claim was reclaimed
     * as an abandoned orphan during a stall — registering would publish
     * ANOTHER committer's content under this committer's version, so it
-    * refuses loudly instead.
+    * refuses loudly instead. `changeTemp` is the staged change record of
+    * a full-shaped slot ([[SlotBytes.stageRecord]]); a delta slot has
+    * none.
     */
   private[graft] def finishCommit(dir: java.nio.file.Path, path: String,
       v: Int, ref: String, bytes: Array[Byte],
-      changeTemp: java.nio.file.Path, compaction: Boolean = false): Int = {
+      changeTemp: Option[java.nio.file.Path], compaction: Boolean = false): Int = {
     def refuse(why: String): Nothing = {
-      Files.deleteIfExists(changeTemp)
+      changeTemp.foreach(Files.deleteIfExists)
       throw new java.util.ConcurrentModificationException(
         s"graft_digest: $why — the commit did NOT publish; re-plan and retry")
     }
@@ -1505,11 +1504,8 @@ private[graft] object DigestManifest {
     // the change record flips in ATOMICALLY and only after the ownership
     // checks above: a reclaimed-and-superseded committer aborts before
     // reaching this rename, so it can no longer clobber the winning
-    // committer's registered record. REPLACE_EXISTING is safe here — a
-    // pre-existing record under this version can only be a DEAD
-    // committer's leftover, because we hold the verified slot for v.
-    Files.move(changeTemp, dir.resolve(s"${changesName(ref)}.v$v"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    // committer's registered record
+    changeTemp.foreach(placeChangeRecord(dir, ref, v, _))
     // a compaction's tag lands between the claim and registration: a
     // reader either sees an unregistered (invisible) version or a
     // registered-and-tagged one — and only AFTER the ownership checks, so
@@ -1575,22 +1571,7 @@ private[graft] object DigestManifest {
     * committer's slot or skipping its registered content.
     */
   def publish(path: String, lines: Seq[String], ref: String = MainRef): Int =
-    synchronized {
-      val dir = Paths.get(path)
-      Files.createDirectories(dir)
-      var v = -1
-      var base: Seq[String] = Seq.empty
-      var claimed: Array[Byte] = null
-      while (v < 0) {
-        val (hv, hlines) = head(path, ref)
-        val sb = slotBytesFor(dir, hv + 1, ref, hlines, lines)
-        if (claimExact(dir, path, hv + 1, sb.bytes, ref)) {
-          v = hv + 1; base = hlines; claimed = sb.bytes
-        } else sb.discard()
-      }
-      finishCommit(dir, path, v, ref, claimed,
-        stageChangeRecord(dir, base, lines))
-    }
+    synchronized(claimPastHead(path, ref, None)(_ => lines))
 
   /** Optimistic APPEND commit: `fresh` lines are appended to whatever the
     * head is NOW — if the head moved past `baseVersion` since the caller
@@ -1603,27 +1584,30 @@ private[graft] object DigestManifest {
     */
   def publishAppend(path: String, fresh: Seq[String], baseVersion: Int,
       ref: String = MainRef): Int =
-    synchronized {
-      val dir = Paths.get(path)
-      Files.createDirectories(dir)
-      var v = -1
-      var base: Seq[String] = Seq.empty
-      var claimed: Array[Byte] = null
-      // an append KNOWS its own change records — no O(table) re-diff
-      val recs = fresh.map("+" + _)
-      while (v < 0) {
-        val (hv, hlines) = head(path, ref)
-        // rebase: appends commute — surviving head entries keep their
-        // order (delta replay order is manifest order), fresh goes last
-        val sb = slotBytesFor(dir, hv + 1, ref, hlines, hlines ++ fresh,
-          Some(recs))
-        if (claimExact(dir, path, hv + 1, sb.bytes, ref)) {
-          v = hv + 1; base = hlines; claimed = sb.bytes
-        } else sb.discard()
-      }
-      finishCommit(dir, path, v, ref, claimed,
-        stageChangeRecord(dir, base, base ++ fresh, Some(recs)))
+    // an append KNOWS its own change records — no O(table) re-diff.
+    // Surviving head entries keep their order (delta replay order is
+    // manifest order), fresh goes last
+    synchronized(claimPastHead(path, ref, Some(fresh.map("+" + _)))(_ ++ fresh))
+
+  /** Claim one past the registered head with the listing `next` builds
+    * from the head's, re-reading the head after every lost slot race,
+    * then register the claim.
+    */
+  private def claimPastHead(path: String, ref: String,
+      knownRecords: Option[Seq[String]])(next: Seq[String] => Seq[String]): Int = {
+    val dir = Paths.get(path)
+    Files.createDirectories(dir)
+    var v = -1
+    var claimed: SlotBytes = null
+    while (v < 0) {
+      val (hv, hlines) = head(path, ref)
+      val sb = slotBytesFor(dir, hv + 1, ref, hlines, next(hlines), knownRecords)
+      if (claimExact(dir, path, hv + 1, sb.bytes, ref)) {
+        v = hv + 1; claimed = sb
+      } else sb.discard()
     }
+    finishCommit(dir, path, v, ref, claimed.bytes, claimed.stageRecord(dir))
+  }
 
   /** Optimistic REPLACE commit: the full listing was computed FROM
     * `baseVersion` (overwrite-by-filter, row-level rewrite, deleteWhere,
@@ -1655,8 +1639,7 @@ private[graft] object DigestManifest {
             s"was committed by another writer since this operation planned " +
             s"against version $baseVersion; re-plan the operation")
       }
-      finishCommit(dir, path, target, ref, sb.bytes,
-        stageChangeRecord(dir, base, lines, knownRecords),
+      finishCommit(dir, path, target, ref, sb.bytes, sb.stageRecord(dir),
         compaction = pendingCompaction.remove(compactionKey(path, ref)))
     }
 
@@ -1719,17 +1702,23 @@ private[graft] object DigestManifest {
       java.nio.file.StandardOpenOption.APPEND)
   }
 
-  /** Rewrite registered version `v`'s snapshot as a FULL base holding
-    * `folded` (the expiry rebase: a kept delta whose chain passes through
-    * an expiring version is folded to full so the chain cut cannot strand
-    * it). Sharded past [[shardMinEntries]] like any committed base; the
-    * header flips in atomically AFTER its shards exist, and a replaced
-    * sharded header's old shards become unreferenced garbage
-    * remove_orphan_files sweeps.
+  /** The expiry rebase: when registered version `v`'s snapshot is a
+    * delta against a version outside `kept`, rewrite it as a FULL base of
+    * its folded listing so the chain cut cannot strand it (the logical
+    * listing is unchanged — only the physical shape). A delta's body is
+    * its version's only change record, so it is first kept as the
+    * `_CHANGES` record every full-shaped version carries. Sharded past
+    * [[shardMinEntries]] like any committed base; the header flips in
+    * atomically AFTER its shards exist, and a replaced sharded header's
+    * old shards become unreferenced garbage remove_orphan_files sweeps.
     */
-  private[graft] def rewriteSnapshotAsBase(path: String, ref: String, v: Int,
-      folded: Seq[String]): Unit = {
+  private[graft] def rebaseIfStranded(path: String, ref: String, v: Int,
+      kept: Set[Int]): Unit = {
+    val snap = new Link(path, ref, v)
+    if (snap.base.forall(kept.contains)) return
     val dir = Paths.get(path)
+    val folded = listingAt(path, ref, v)
+    placeChangeRecord(dir, ref, v, stageChangeRecord(dir, snap.body))
     val sb =
       if (folded.size >= shardMinEntries) writeShardedBase(dir, v, ref, folded)
       else SlotBytes(folded.mkString("\n").getBytes(StandardCharsets.UTF_8), Nil)

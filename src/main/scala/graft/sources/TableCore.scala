@@ -757,7 +757,7 @@ class TableScan(path: String, layout: TableLayout,
 
   /** Files this scan will read after every pruning stage. With a pushed
     * lang set, range or point the listing resolves PRUNED
-    * ([[DigestManifest.listingForPruned]]): on a shard-summarized table
+    * ([[DigestManifest.listingFor]]): on a shard-summarized table
     * the driver reads only the matching lang shards' metadata (plus the
     * catch-all) whose zone and bloom summaries admit the predicates,
     * instead of folding the whole table — the returned superset is
@@ -782,9 +782,8 @@ class TableScan(path: String, layout: TableLayout,
     // needle points for the SHARD-bloom summaries (`#bloom:` headers)
     val effPoints = livePoints.map { case (c, pts) => layout.bloomAttr(c) -> pts }
     val listing =
-      if (allowPruning && !mergeDeltas &&
-          (pruneSet.isDefined || effRanges.nonEmpty || effPoints.nonEmpty))
-        DigestManifest.listingForPruned(path, manifestName, pruneSet,
+      if (allowPruning && !mergeDeltas)
+        DigestManifest.listingFor(path, manifestName, pruneSet,
           effRanges, effPoints)
       else DigestManifest.listingFor(path, manifestName)
     listing.map(layout.entry)

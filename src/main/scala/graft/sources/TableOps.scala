@@ -462,28 +462,11 @@ class ExpireSnapshotsProcedure(catalogName: String) extends UnboundProcedure
         otherManifests.flatMap(ProcedureSupport.manifestLines(path, _)))
         .map(_.split(",")(0)).toSet
 
-    // 0. REBASE kept delta-shaped snapshots whose chain passes through an
-    //    expiring version: rewrite them as full listings (atomic tmp +
-    //    rename; the LOGICAL listing is unchanged — only the physical
-    //    shape) so deleting the expired base files below cannot strand a
-    //    kept version on an unresolvable chain. With bases every commit
-    //    at most the OLDEST kept version needs this, but the loop is
-    //    shape-driven, not position-driven.
+    // 0. REBASE every kept delta whose base expires, so deleting the
+    //    expired snapshots below cannot strand a kept version. Usually only
+    //    the OLDEST kept version needs it, but the loop is shape-driven.
     val keptSet = kept.map(_._1).toSet
-    kept.foreach { case (v, _, _) =>
-      val snap = Paths.get(path, s"$mStem.v$v")
-      if (Files.exists(snap)) {
-        val first = {
-          import scala.jdk.CollectionConverters._
-          Files.readAllLines(snap).asScala.find(_.nonEmpty)
-        }
-        val baseOf = first.filter(_.startsWith("#base:")).map(_.drop(6).toInt)
-        if (baseOf.exists(b => !keptSet.contains(b))) {
-          val folded = DigestManifest.listingAt(path, ref, v)
-          DigestManifest.rewriteSnapshotAsBase(path, ref, v, folded)
-        }
-      }
-    }
+    kept.foreach { case (v, _, _) => DigestManifest.rebaseIfStranded(path, ref, v, keptSet) }
 
     // 1. pointers first: rewrite the version log atomically, drop expired
     //    snapshot manifests
@@ -798,14 +781,14 @@ class DropBranchProcedure(catalogName: String) extends UnboundProcedure
     // else (pointer, version log, CDF records, unpinned snapshots) goes.
     val keep: Set[String] = DigestTags.tagsOf(path).toSeq
       .collect { case (_, (v, r)) if r == branch => v }
-      .flatMap(v => DigestTags.chainFiles(path, branch, v)).toSet
+      .flatMap(v => DigestManifest.chainFiles(path, branch, v)).toSet
     var dropped = 0L
     val listing = Files.list(dir)
     val doomed = try listing.iterator().asScala.filter { p =>
       val n = p.getFileName.toString
       (n == prefix || n.startsWith(s"$prefix.v") ||
         n == s"_VERSIONS@$branch" || n == s"_BASE@$branch" ||
-        n.startsWith(s"_CHANGES@$branch.v")) && // the ref's CDF metadata (q262)
+        n.startsWith(s"${DigestManifest.changesName(branch)}.v")) && // the ref's CDF metadata (q262)
         !keep.contains(n)
     }.toSeq finally listing.close()
     doomed.foreach { p => Files.deleteIfExists(p); dropped += 1 }
@@ -858,29 +841,6 @@ private[sources] object DigestTags {
     Files.move(t, file(path),
       java.nio.file.StandardCopyOption.REPLACE_EXISTING,
       java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-  }
-
-  /** The snapshot FILES a tagged (version, ref) resolves through: the
-    * numbered snapshot plus its `#base:` delta chain. What drop_branch
-    * must keep, and what releasing the last pin of a dead branch sweeps.
-    */
-  def chainFiles(path: String, ref: String, v0: Int): Seq[String] = {
-    val names = scala.collection.mutable.ArrayBuffer.empty[String]
-    var cur = v0
-    var done = false
-    while (!done && cur > 0) {
-      val name = s"${DigestManifest.mName(ref)}.v$cur"
-      names += name
-      val f = Paths.get(path, name)
-      if (!Files.exists(f)) done = true
-      else {
-        val in = Files.newBufferedReader(f)
-        val first = try Option(in.readLine()).getOrElse("") finally in.close()
-        if (first.startsWith("#base:")) cur = first.drop(6).toInt
-        else done = true
-      }
-    }
-    names.toSeq
   }
 }
 
@@ -978,7 +938,7 @@ class DropTagProcedure(catalogName: String) extends UnboundProcedure
     if (ref != DigestManifest.MainRef &&
         DigestManifest.currentVersion(path, ref) == 0 &&
         !remaining.values.exists(_._2 == ref))
-      DigestTags.chainFiles(path, ref, v)
+      DigestManifest.chainFiles(path, ref, v)
         .foreach(n => Files.deleteIfExists(Paths.get(path, n)))
     val schema = StructType(Seq(
       StructField("tag", StringType, nullable = false),
@@ -1158,7 +1118,8 @@ class RemoveOrphanFilesProcedure(catalogName: String) extends UnboundProcedure
       entries.foreach { p =>
         val n = p.getFileName.toString
         val isMeta = n.startsWith("_MANIFEST") || n.startsWith("_VERSIONS") ||
-          n.startsWith("_BASE@") || n.startsWith("_CHANGES") ||
+          n.startsWith("_BASE@") ||
+          n.startsWith(DigestManifest.changesName(DigestManifest.MainRef)) ||
           n == "_COMPACTIONS" || n == "_PARTITIONS" || n == "_TAGS"
         if (!isMeta && !Files.isDirectory(p) && !reachable.contains(n)) {
           if (Files.getLastModifiedTime(p).compareTo(cutoff) < 0) {

@@ -135,10 +135,11 @@ object SoakFeed {
 
     // ---- plan_ochanges: CDF planning cost vs table file count -----------
     // One append commit on a 1k-file and a 10k-file manifest; planning 50
-    // times through the per-commit `_CHANGES.v` record must be FLAT in
-    // file count (O(changes)), while the legacy snapshot-diff fallback
-    // (record deleted) scales with the listing — the measured gap IS the
-    // claim the record layer makes for 10⁶-entry tables.
+    // times through the commit's change record (v2's delta body) must be
+    // FLAT in file count (O(changes)), while the snapshot-diff fallback
+    // (v2 rewritten as a full base without a record) scales with the
+    // listing — the measured gap IS the claim the record layer makes for
+    // 10⁶-entry tables.
     Seq(1000, 10000).foreach { files =>
       val p = java.nio.file.Files.createTempDirectory(s"soak_plan_$files-")
       val lines = (0 until files).map(i => f"lang_en-jx-part-$i%05d.csv,10")
@@ -148,7 +149,10 @@ object SoakFeed {
       timed(s"plan_rec_$files") {
         (1 to 50).foreach(_ => graft.sources.DigestChanges.plan(p.toString, 1, 2))
       }
-      java.nio.file.Files.delete(p.resolve("_CHANGES.v2"))
+      java.nio.file.Files.write(p.resolve("_MANIFEST.v2"),
+        graft.sources.DigestManifest.listingAt(p.toString,
+          graft.sources.DigestManifest.MainRef, 2)
+          .mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
       timed(s"plan_diff_$files") {
         (1 to 50).foreach(_ => graft.sources.DigestChanges.plan(p.toString, 1, 2))
       }

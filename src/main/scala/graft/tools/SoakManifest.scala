@@ -21,14 +21,15 @@ import graft.sources.DigestManifest
   *     unavoidable first-plan cost of an UNPRUNED scan.
   *   - `pruned_cold_us` / `pruned_bytes` / `pruned_entries` — the
   *     round-17 claim: a lang-pruned plan after a cold restart resolves
-  *     through `listingForPruned`, reading ONLY the matching lang's base
+  *     through `listingFor`, reading ONLY the matching lang's base
   *     shard (plus catch-all + delta snapshots). The rung ladder grows
   *     the LANG COUNT with the table (fixed ~31k entries per lang — how
   *     a real corpus grows), so pruned cost must stay FLAT while the
   *     table grows 100×: driver bytes proportional to the queried
   *     partition, never the table.
   *   - `cdf_plan_us` — change-feed planning for the last commit
-  *     (already O(changes) via `_CHANGES.v<N>`, round-15).
+  *     (already O(changes): the commit's change record is its delta
+  *     snapshot's body).
   *
   * Usage: runMain graft.tools.SoakManifest [maxEntries]
   */
@@ -111,7 +112,7 @@ object SoakManifest {
       var prunedEntries = 0
       val wantLang = s"l${nLangs - 1}"
       val prunedCold = timeUs {
-        prunedEntries = DigestManifest.listingForPruned(path, "_MANIFEST",
+        prunedEntries = DigestManifest.listingFor(path, "_MANIFEST",
           Some(Set(wantLang))).size
       }
       // driver bytes the pruned plan read: matching + catch-all shards of
@@ -165,7 +166,7 @@ object SoakManifest {
       val bandLo = (target / 2) * 100L
       val bandHi = bandLo + 100L * 100L - 1L
       val bandedCold = timeUs {
-        bandedEntries = DigestManifest.listingForPruned(zpath, "_MANIFEST",
+        bandedEntries = DigestManifest.listingFor(zpath, "_MANIFEST",
           None, Map("doc_id" -> (bandLo, bandHi))).size
       }
       // driver bytes the banded plan read: the chain base's header + the
@@ -228,7 +229,7 @@ object SoakManifest {
       var needleShards = 0L
       val needleCold = timeUs {
         val before = DigestManifest.shardReadEvents.get()
-        DigestManifest.listingForPruned(bpath, "_MANIFEST",
+        DigestManifest.listingFor(bpath, "_MANIFEST",
           None, Map.empty, Map("bf" -> Set(needleId)))
         needleShards = DigestManifest.shardReadEvents.get() - before
       }

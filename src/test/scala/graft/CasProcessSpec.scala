@@ -199,9 +199,10 @@ class CasProcessSpec extends AnyFunSuite {
     // the DV version's change record is the in-place mutation grammar
     val dvv = childOut.linesIterator.collectFirst {
       case l if l.startsWith("DVGROWN=") => l.drop(8).trim.toInt }.get
-    val rec = new String(java.nio.file.Files.readAllBytes(
-      dir.resolve(s"_CHANGES.v$dvv")), "UTF-8")
-    assert(rec.startsWith("~") && rec.contains("dv="), rec)
+    val recs = DigestManifest.changeRecords(dir.toString,
+      DigestManifest.MainRef, dvv - 1, dvv).get
+    assert(recs.head.old.isDefined && recs.head.neu.isDefined &&
+      recs.exists(_.neu.exists(_.contains("dv="))), recs)
   }
 
   test("the PARQUET plane's zero-rewrite DV race: a second JVM grows the " +

@@ -87,16 +87,18 @@ class CommitProtocolSpec extends AnyFunSuite {
     Files.write(dir.resolve("lang_ww-winner.csv"), "9,ww,1\n".getBytes("UTF-8"))
     assert(DigestManifest.claimExact(dir, path, 2, wBytes,
       DigestManifest.MainRef))
-    val wTemp = DigestManifest.stageChangeRecord(dir, base, wLines)
+    val wTemp = DigestManifest.stageChangeRecord(dir,
+      DigestManifest.deltaRecords(base, wLines))
     assert(DigestManifest.finishCommit(dir, path, 2, DigestManifest.MainRef,
-      wBytes, wTemp) == 2)
+      wBytes, Some(wTemp)) == 2)
     val wRecord = Files.readAllBytes(dir.resolve("_CHANGES.v2"))
     // S wakes and tries to finish: it must refuse at the slot-bytes check
     // — BEFORE any change-record write — and delete its staged temp
-    val sTemp = DigestManifest.stageChangeRecord(dir, base, sLines)
+    val sTemp = DigestManifest.stageChangeRecord(dir,
+      DigestManifest.deltaRecords(base, sLines))
     val ex = intercept[java.util.ConcurrentModificationException] {
       DigestManifest.finishCommit(dir, path, 2, DigestManifest.MainRef,
-        sBytes, sTemp)
+        sBytes, Some(sTemp))
     }
     assert(ex.getMessage.contains("did NOT publish"))
     assert(java.util.Arrays.equals(
@@ -121,16 +123,18 @@ class CommitProtocolSpec extends AnyFunSuite {
     Files.write(dir.resolve("lang_dd-dup.csv"), "4,dd,1\n".getBytes("UTF-8"))
     assert(DigestManifest.claimExact(dir, path, 2, bytes,
       DigestManifest.MainRef))
-    val t1 = DigestManifest.stageChangeRecord(dir, base, lines)
+    val t1 = DigestManifest.stageChangeRecord(dir,
+      DigestManifest.deltaRecords(base, lines))
     assert(DigestManifest.finishCommit(dir, path, 2, DigestManifest.MainRef,
-      bytes, t1) == 2)
+      bytes, Some(t1)) == 2)
     // same committer (restored slot, matching bytes) finishing again must
     // refuse — registering twice would publish two contents under one
     // version number the moment the contents diverge
-    val t2 = DigestManifest.stageChangeRecord(dir, base, lines)
+    val t2 = DigestManifest.stageChangeRecord(dir,
+      DigestManifest.deltaRecords(base, lines))
     intercept[java.util.ConcurrentModificationException] {
       DigestManifest.finishCommit(dir, path, 2, DigestManifest.MainRef,
-        bytes, t2)
+        bytes, Some(t2))
     }
     assert(!Files.exists(t2))
     assert(DigestManifest.currentVersion(path) == 2)

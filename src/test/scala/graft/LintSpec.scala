@@ -276,4 +276,39 @@ class LintSpec extends AnyFunSuite {
       s"conf restored outside Tables.withConf: ${sites("conf.unset(")} — " +
         "scope query conf with Tables.withConf")
   }
+
+  /** One owner of the change-record layout: `DigestManifest` names the
+    * `_CHANGES[@ref]` files (written only beside full-shaped snapshots)
+    * and parses the `+`/`-`/`~old|new` grammar in one function, which the
+    * fold, the probe, GC reachability and the change feed all read
+    * through. A second stem builder or `~` splitter would let a reader
+    * drift from the one rule. Pinned by enclosing def.
+    */
+  test("change records: one stem builder and one grammar parser") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala/graft")
+    def sites(token: String): Seq[String] =
+      java.nio.file.Files.walk(root).iterator().asScala
+        .filter(_.toString.endsWith(".scala"))
+        .flatMap { p =>
+          val file = root.relativize(p).toString.replace('\\', '/')
+          val lines = java.nio.file.Files.readAllLines(p).asScala.toIndexedSeq
+          lines.indices.collect {
+            case i if lines(i).contains(token) && {
+                val t = lines(i).trim
+                !t.startsWith("//") && !t.startsWith("*")
+              } =>
+              val owner = lines.take(i).reverse.find(_.contains(" def "))
+                .flatMap("def (\\w+)".r.findFirstMatchIn(_)).map(_.group(1))
+              s"$file:${owner.getOrElse("?")}"
+          }
+        }
+        .toSeq.sorted
+    assert(sites("\"_CHANGES") == Seq("sources/DigestSink.scala:changesName"),
+      s"the _CHANGES stem is built outside DigestManifest.changesName: " +
+        sites("\"_CHANGES"))
+    assert(sites("indexOf('|')") == Seq("sources/DigestSink.scala:parseRecord"),
+      s"a change record is split outside DigestManifest.parseRecord: " +
+        sites("indexOf('|')"))
+  }
 }

@@ -207,7 +207,7 @@ class ManifestFoldPropertySpec extends org.scalatest.funsuite.AnyFunSuite {
     def file(l: String): String = l.split(",")(0)
     val prop = forAll(listingGen, listingGen) { (a: Seq[String], b: Seq[String]) =>
       val recs = m.deltaRecords(a, b)
-      val folded = m.foldRecords(a, recs)
+      val folded = m.foldRecordsUpsert(a, recs)
       val aFiles = a.map(file).toSet
       val kept = b.filter(l => aFiles(file(l)))
       val fresh = b.filterNot(l => aFiles(file(l)))
@@ -234,7 +234,7 @@ class ManifestFoldPropertySpec extends org.scalatest.funsuite.AnyFunSuite {
       Gen.chooseNum(1L, 99L).map(r => s"g$i.csv,$r")))
       .map(_.distinctBy(_.split(",")(0)))
     val prop = forAll(listingGen, freshGen) { (base: Seq[String], fresh: Seq[String]) =>
-      m.foldRecords(base, fresh.map("+" + _)) == base ++ fresh
+      m.foldRecordsUpsert(base, fresh.map("+" + _)) == base ++ fresh
     }
     val res = SCTest.check(prop)(_.withMinSuccessfulTests(500))
     assert(res.passed, res.status.toString)
@@ -254,7 +254,7 @@ class ManifestFoldPropertySpec extends org.scalatest.funsuite.AnyFunSuite {
       }
       val adds = Seq("zz-new.csv,5")
       recs ++= adds.map("+" + _)
-      m.foldRecords(base, recs.toSeq) == mutated ++ adds
+      m.foldRecordsUpsert(base, recs.toSeq) == mutated ++ adds
     }
     val res = SCTest.check(prop)(_.withMinSuccessfulTests(500))
     assert(res.passed, res.status.toString)

@@ -79,7 +79,7 @@ class ShardGroupSpec extends AnyFunSuite with SparkSpec {
       // in a skipped group (must no-op against the partial base)
       DigestManifest.publishAppend(path, Seq("lang_bb-f4.csv,11"), 1)
       DigestManifest.publishAppend(path, Seq("lang_cc-f3.csv,12"), 2)
-      val pruned = DigestManifest.listingForPruned(path, "_MANIFEST", Some(Set("bb")))
+      val pruned = DigestManifest.listingFor(path, "_MANIFEST", Some(Set("bb")))
       val bbAndCatchall = mixed.filter(l =>
         l.startsWith("lang_bb-") || l.startsWith("part-"))
       // base contribution: exactly bb + catch-all, in order; replayed
@@ -104,7 +104,7 @@ class ShardGroupSpec extends AnyFunSuite with SparkSpec {
         .map(l => if (l == "lang_bb-f2.csv,6") "lang_bb-f2.csv,5,dv=AQ" else l)
       assert(DigestManifest.publishReplace(path, v2Lines, 1) == 2)
       assert(DigestManifest.head(path) == (2, v2Lines))
-      val prunedBb = DigestManifest.listingForPruned(path, "_MANIFEST",
+      val prunedBb = DigestManifest.listingFor(path, "_MANIFEST",
         Some(Set("bb")))
       assert(prunedBb.contains("lang_bb-f2.csv,5,dv=AQ") &&
         !prunedBb.exists(_.startsWith("lang_aa-")), prunedBb.toString)
@@ -131,7 +131,7 @@ class ShardGroupSpec extends AnyFunSuite with SparkSpec {
           .size == v, s"version $v must fold to $v entries")
       }
       DigestManifest.clearHeadCacheForTest()
-      val pruned = DigestManifest.listingForPruned(path, "_MANIFEST",
+      val pruned = DigestManifest.listingFor(path, "_MANIFEST",
         Some(Set("l1")))
       // base shard l1 (i%3==1 for i in 1..16 → f1,f4,f7,f10,f13,f16 = 6
       // entries) + the 4 post-base adds (v17..v20) unfiltered
@@ -182,15 +182,15 @@ class ShardGroupSpec extends AnyFunSuite with SparkSpec {
       DigestManifest.publishAppend(path, lines, 0)
       DigestManifest.clearHeadCacheForTest()
       // band [450, 520] overlaps only the middle sub-shard (entries 4-7)
-      val banded = DigestManifest.listingForPruned(path, "_MANIFEST",
+      val banded = DigestManifest.listingFor(path, "_MANIFEST",
         None, Map("doc_id" -> (450L, 520L)))
       assert(banded == lines.slice(4, 8), banded.toString)
       // conjunction with a group set still works (same lang here)
-      val both = DigestManifest.listingForPruned(path, "_MANIFEST",
+      val both = DigestManifest.listingFor(path, "_MANIFEST",
         Some(Set("en")), Map("doc_id" -> (450L, 520L)))
       assert(both == lines.slice(4, 8), both.toString)
       // a foreign-lang set empties it (no catch-all in this table)
-      assert(DigestManifest.listingForPruned(path, "_MANIFEST",
+      assert(DigestManifest.listingFor(path, "_MANIFEST",
         Some(Set("fr")), Map("doc_id" -> (450L, 520L))).isEmpty)
       // and the full fold is untouched
       assert(DigestManifest.head(path)._2 == lines)
@@ -214,7 +214,7 @@ class ShardGroupSpec extends AnyFunSuite with SparkSpec {
       DigestManifest.clearHeadCacheForTest()
       // a band hitting NOTHING still returns the summary-less shard's
       // entries — the scan's own survives() decides from current attrs
-      val banded = DigestManifest.listingForPruned(path, "_MANIFEST",
+      val banded = DigestManifest.listingFor(path, "_MANIFEST",
         None, Map("doc_id" -> (100000L, 100010L)))
       assert(banded.contains("lang_en-plain.csv,7"), banded.toString)
       assert(!banded.exists(_.startsWith("lang_en-z0")), banded.toString)
@@ -237,7 +237,7 @@ class ShardGroupSpec extends AnyFunSuite with SparkSpec {
       // banded read for the NEW range: entry 0's base shard [0,399] is
       // skipped, but the delta's mutation record must upsert the widened
       // line — without the upsert the live row would vanish from the plan
-      val banded = DigestManifest.listingForPruned(path, "_MANIFEST",
+      val banded = DigestManifest.listingFor(path, "_MANIFEST",
         None, Map("doc_id" -> (5000L, 5050L)))
       assert(banded.contains(widened), banded.toString)
       // and over a FULL base the upsert fold is byte-identical
@@ -350,7 +350,7 @@ class ShardGroupSpec extends AnyFunSuite with SparkSpec {
       def plan(ids: Set[Long]): (Seq[String], Long) = {
         DigestManifest.clearHeadCacheForTest()
         val before = DigestManifest.shardReadEvents.get()
-        val got = DigestManifest.listingForPruned(path, "_MANIFEST",
+        val got = DigestManifest.listingFor(path, "_MANIFEST",
           None, Map.empty, Map("bf" -> ids))
         (got, DigestManifest.shardReadEvents.get() - before)
       }
@@ -364,7 +364,7 @@ class ShardGroupSpec extends AnyFunSuite with SparkSpec {
       assert(missShards == 0, s"absent needle read $missShards shards")
       // no false negative for ANY stored id: its entry always survives
       for (g <- 0 until 3; k <- 0 until 3; id <- idsOf(g, k)) {
-        val got = DigestManifest.listingForPruned(path, "_MANIFEST",
+        val got = DigestManifest.listingFor(path, "_MANIFEST",
           None, Map.empty, Map("bf" -> Set(id)))
         assert(got.exists(_.startsWith(s"lang_l$g-p$k.csv")),
           s"id $id lost its entry lang_l$g-p$k.csv")
@@ -394,7 +394,7 @@ class ShardGroupSpec extends AnyFunSuite with SparkSpec {
         assert(zoneLines == 3, s"one c1 summary per sub-shard, got $zoneLines")
         DigestManifest.clearHeadCacheForTest()
         val before = DigestManifest.shardReadEvents.get()
-        val got = DigestManifest.listingForPruned(path, "_MANIFEST",
+        val got = DigestManifest.listingFor(path, "_MANIFEST",
           None, Map("c1" -> (450L, 520L)))
         val read = DigestManifest.shardReadEvents.get() - before
         assert(read == 1, s"a one-shard band must read 1 sub-shard, read $read")

@@ -100,7 +100,7 @@ class SoakRungSpec extends AnyFunSuite {
     })
     DigestManifest.clearHeadCacheForTest()
     val before = DigestManifest.shardReadEvents.get()
-    val listing = DigestManifest.listingForPruned(path, "_MANIFEST",
+    val listing = DigestManifest.listingFor(path, "_MANIFEST",
       None, Map.empty, Map("bf" -> Set(needleId)))
     val read = DigestManifest.shardReadEvents.get() - before
     assert(read == expected,
