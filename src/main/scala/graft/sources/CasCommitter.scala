@@ -36,8 +36,7 @@ object CasCommitter {
         val f = s"lang_$tag-cas$i.csv"
         Files.write(Paths.get(dir, f),
           s"$i,$tag,1\n".getBytes(StandardCharsets.UTF_8))
-        DigestManifest.publishAppend(dir, Seq(s"$f,1"),
-          DigestManifest.currentVersion(dir))
+        DigestManifest.publishAppend(dir, Seq(s"$f,1"))
       }
       println(s"HEAD=${DigestManifest.currentVersion(dir)}")
     case "branch-append" =>
@@ -49,8 +48,7 @@ object CasCommitter {
         val f = s"lang_$tag-bcas$i.csv"
         Files.write(Paths.get(dir, f),
           s"$i,$tag,1\n".getBytes(StandardCharsets.UTF_8))
-        DigestManifest.publishAppend(dir, Seq(s"$f,1"),
-          DigestManifest.currentVersion(dir, branch), branch)
+        DigestManifest.publishAppend(dir, Seq(s"$f,1"), branch)
       }
       println(s"HEAD=${DigestManifest.currentVersion(dir, branch)}")
     case "dv-grow" =>

@@ -96,12 +96,8 @@ object DigestChanges {
     * state would invent changes.
     */
   private[sources] def registeredVersions(path: String,
-      ref: String = DigestManifest.MainRef): Seq[Int] = {
-    val vf = Paths.get(path, DigestManifest.vName(ref))
-    if (!Files.exists(vf)) Seq.empty
-    else scala.jdk.CollectionConverters.ListHasAsScala(Files.readAllLines(vf))
-      .asScala.filter(_.nonEmpty).map(_.split(",")(0).toInt).toSeq.sorted
-  }
+      ref: String = DigestManifest.MainRef): Seq[Int] =
+    DigestManifest.registrations(path, ref).map(_.v)
 
   /** The per-version change partitions for `(from, to]`.
     *
@@ -114,7 +110,7 @@ object DigestChanges {
     * driver bottleneck and a metadata lookup. A version without a record
     * (written before records existed, or after a version gap) falls back
     * to the full snapshot diff, which yields the identical answer.
-    * Compaction commits (tagged content-preserving) are skipped whole.
+    * Compaction commits (marked content-preserving) are skipped whole.
     */
   private[graft] def plan(path: String, from: Int, to: Int,
       ref: String = DigestManifest.MainRef): Seq[InputPartition] = {
@@ -134,17 +130,17 @@ object DigestChanges {
     */
   private def planVersion(path: String, prevV: Int, v: Int,
       ref: String): Seq[InputPartition] = {
-    // a commit tagged content-preserving ([[DigestManifest.markCompaction]]
-    // — the snapshot + truncate-overwrite cycle that folds a delta log or
-    // deletion vectors into fresh base files) carries ZERO logical
-    // changes and is skipped whole. An UNTAGGED delta-removing commit
-    // (INSERT OVERWRITE / TRUNCATE over a live log) genuinely changes
-    // data — emitting zero change rows would silently diverge every
-    // downstream CDC consumer, so the feed refuses loudly instead.
-    // ref-qualified lookup: a branch commit whose version NUMBER collides
-    // with a tagged main compaction (branch logs restart at v1) must not
-    // be skipped — and a branch compaction, if one is ever tagged,
-    // skips only its own branch's feed
+    // a commit registered with the compaction mark
+    // ([[DigestManifest.Registration]] — the snapshot + truncate-overwrite
+    // cycle that folds a delta log or deletion vectors into fresh base
+    // files) carries ZERO logical changes and is skipped whole. An
+    // UNMARKED delta-removing commit (INSERT OVERWRITE / TRUNCATE over a
+    // live log) genuinely changes data — emitting zero change rows would
+    // silently diverge every downstream CDC consumer, so the feed refuses
+    // loudly instead. The mark lives in the ref's own version log: a
+    // branch commit whose version NUMBER collides with a main compaction
+    // (branch logs restart at v1) is never skipped, and a branch
+    // compaction skips only its own branch's feed
     if (DigestManifest.isCompaction(path, v, ref)) return Seq.empty
     val (added, removed, mutated) =
       DigestManifest.changeRecords(path, ref, prevV, v) match {

@@ -469,8 +469,8 @@ private[graft] object BloomCodec {
 /** The table's COMMIT LOG. Every manifest publish goes through here: the
   * new listing is first snapshotted as the next numbered version
   * (`_MANIFEST.v<N>`, a fresh file no current reader can be holding), its
-  * (version, epoch-micros) pair is appended to `_VERSIONS`, and only then
-  * does the atomic temp+rename flip `_MANIFEST` — so the CURRENT pointer
+  * [[Registration]] line is appended to the ref's version log, and only
+  * then does the atomic temp+rename flip `_MANIFEST` — so the CURRENT pointer
   * moves last and a versioned snapshot exists for every state the table
   * ever published. This is the metadata layer `VERSION AS OF` /
   * `TIMESTAMP AS OF` (q224) resolves against — the same
@@ -531,6 +531,56 @@ private[graft] object DigestManifest {
 
   private[sources] def vName(ref: String): String =
     if (ref == MainRef) "_VERSIONS" else s"_VERSIONS@${checkRef(ref)}"
+
+  /** One registered version: the ref's version-log line
+    * `v,micros,hash[,c]`. `hash` is the MD5 of the claimed snapshot bytes
+    * ([[claimExact]]'s restore check reads it; hand-written 2-field lines
+    * have none). `compaction` marks a CONTENT-PRESERVING commit — the
+    * snapshot + truncate-overwrite cycle that folds a delta log or
+    * deletion vectors into fresh base files — which the change feed skips
+    * whole. The mark is a field of the registration itself, written in
+    * the same O_APPEND, so it can neither outlive its version (expiry
+    * writes kept lines back, `drop_branch` deletes the log) nor land on a
+    * version that never registered.
+    */
+  private[graft] final case class Registration(v: Int, micros: Long,
+      hash: Option[String], compaction: Boolean) {
+    def line: String =
+      (Seq(v.toString, micros.toString) ++ hash ++
+        (if (compaction) Seq("c") else Nil)).mkString(",")
+  }
+
+  /** The one reader of a ref's version log: every registered version in
+    * ascending order, from one read of the file. Empty when the ref has
+    * never committed.
+    */
+  private[graft] def registrations(path: String,
+      ref: String = MainRef): Seq[Registration] = {
+    val vf = Paths.get(path, vName(ref))
+    if (!Files.exists(vf)) Seq.empty
+    else scala.jdk.CollectionConverters.ListHasAsScala(Files.readAllLines(vf))
+      .asScala.iterator.filter(_.nonEmpty).map { l =>
+        val a = l.split(",")
+        Registration(a(0).toInt, a(1).toLong, a.lift(2), a.lift(3).contains("c"))
+      }.toSeq.sortBy(_.v)
+  }
+
+  /** Every ref with a version log — main first, then the branches in
+    * name order. Main is listed even before its first commit.
+    */
+  private[sources] def refs(path: String): Seq[String] = {
+    val dir = Paths.get(path)
+    val stem = vName(MainRef) + "@"
+    MainRef +: (
+      if (!Files.isDirectory(dir)) Seq.empty
+      else {
+        val listing = Files.list(dir)
+        try scala.jdk.CollectionConverters.IteratorHasAsScala(listing.iterator())
+          .asScala.map(_.getFileName.toString)
+          .filter(_.startsWith(stem)).map(_.drop(stem.length)).toSeq.sorted
+        finally listing.close()
+      })
+  }
 
   /** The ref's change-record file stem (q262: every ref keeps its own
     * O(changes) CDF metadata, so a branch's change history is auditable
@@ -1329,30 +1379,37 @@ private[graft] object DigestManifest {
     */
   private val OrphanWaitMs = 2000L
 
-  /** Paths whose NEXT publishReplace is a content-preserving compaction
-    * commit: the tag is then written between the CAS claim and
-    * registration — atomic with the commit from any reader's view, since
-    * an unregistered version is invisible ([[DigestChanges
-    * .registeredVersions]]). Closes the crash window where a compaction
-    * commit published but its `_COMPACTIONS` tag never landed, bricking
-    * the change feed over that range.
+  /** (path, ref) keys whose NEXT publishReplace is a content-preserving
+    * compaction commit, set only inside [[compacting]]. An in-process side
+    * channel because the commit runs deep inside a DSv2 overwrite that
+    * cannot carry the fact itself; [[finishCommit]] writes it into the
+    * registration line.
     */
   private val pendingCompaction =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
   // keyed by (path, ref): a concurrent commit on a DIFFERENT ref (a q264
-  // branch DV delete racing a main compaction) must never consume the tag
-  // and mark its own — genuinely data-changing — version as
+  // branch DV delete racing a main compaction) must never consume the mark
+  // and register its own — genuinely data-changing — version as
   // content-preserving, which would make the main change feed silently
   // skip it
   private def compactionKey(path: String, ref: String): String =
     Paths.get(path).toAbsolutePath.normalize().toString + "#" + ref
 
-  def tagNextReplaceAsCompaction(path: String, ref: String = MainRef): Unit =
-    pendingCompaction.add(compactionKey(path, ref))
-
-  def clearCompactionTag(path: String, ref: String = MainRef): Unit =
-    pendingCompaction.remove(compactionKey(path, ref))
+  /** Run `body`, whose replace commit on `ref` is content-preserving (the
+    * logical rows are unchanged; only files move), and register that
+    * commit with the compaction mark. Afterwards the registered head on
+    * `ref` must carry the mark: a body that committed nothing, or whose
+    * commit went another way, fails loudly under `what`'s name.
+    */
+  def compacting[A](path: String, ref: String, what: String)(body: => A): A = {
+    val key = compactionKey(path, ref)
+    pendingCompaction.add(key)
+    val out = try body finally pendingCompaction.remove(key)
+    require(isCompaction(path, currentVersion(path, ref), ref),
+      s"$what: the commit did not register as a compaction on ref '$ref'")
+    out
+  }
 
   /** CAS-claim version `v`: atomically create `_MANIFEST.v<v>` with the
     * snapshot bytes (full or `#base:`-delta — [[slotBytesFor]]).
@@ -1384,18 +1441,11 @@ private[graft] object DigestManifest {
     java.security.MessageDigest.getInstance("MD5").digest(bytes)
       .map(b => f"$b%02x").mkString
 
-  /** Version `v`'s registered content hash (the registration's 3rd
-    * field) — None on legacy 2-field records or an unregistered `v`.
+  /** Version `v`'s registered content hash — None on legacy 2-field
+    * records or an unregistered `v`.
     */
-  private def registeredHash(dir: java.nio.file.Path, ref: String,
-      v: Int): Option[String] = {
-    val vf = dir.resolve(vName(ref))
-    if (!Files.exists(vf)) return None
-    scala.jdk.CollectionConverters.ListHasAsScala(Files.readAllLines(vf))
-      .asScala.filter(_.nonEmpty).map(_.split(","))
-      .find(_(0).toInt == v)
-      .collect { case a if a.length >= 3 => a(2) }
-  }
+  private def registeredHash(path: String, ref: String, v: Int): Option[String] =
+    registrations(path, ref).find(_.v == v).flatMap(_.hash)
 
   /** Claim EXACTLY version `v` — the linearization point of every commit.
     * Returns true if this committer owns the slot. Returns false when the
@@ -1441,7 +1491,7 @@ private[graft] object DigestManifest {
       // stays for GC. Legacy hashless registrations restore as before.
       if (moved && currentVersion(path, ref) >= v) {
         val slot = dir.resolve(s"${mName(ref)}.v$v")
-        val restore = registeredHash(dir, ref, v) match {
+        val restore = registeredHash(path, ref, v) match {
           case None => true
           case Some(h) =>
             contentHash(Files.readAllBytes(aside)) == h &&
@@ -1469,8 +1519,9 @@ private[graft] object DigestManifest {
     (v, listingAt(path, ref, v))
   }
 
-  /** Register a claimed version in `_VERSIONS` (one atomic O_APPEND
-    * record) and flip the `_MANIFEST` pointer forward. The pointer flip
+  /** Register a claimed version (one atomic O_APPEND of its
+    * [[Registration]] line, carrying the compaction mark when
+    * `compaction`) and flip the `_MANIFEST` pointer forward. The pointer flip
     * re-checks after moving: two processes flipping out of order converge
     * on the newest registered version because the snapshot files they copy
     * from are immutable. `bytes` are the bytes this committer claimed the
@@ -1498,7 +1549,8 @@ private[graft] object DigestManifest {
     // committer's slot was reclaimed-then-restored during a stall race
     // (claimExact's TOCTOU restore) — registering again would publish two
     // contents under one version number
-    if (currentVersion(path, ref) >= v)
+    val registered = registrations(path, ref)
+    if (registered.lastOption.exists(_.v >= v))
       refuse(s"version $v at $path was already registered by another " +
         "committer while this committer stalled")
     // the change record flips in ATOMICALLY and only after the ownership
@@ -1506,37 +1558,23 @@ private[graft] object DigestManifest {
     // reaching this rename, so it can no longer clobber the winning
     // committer's registered record
     changeTemp.foreach(placeChangeRecord(dir, ref, v, _))
-    // a compaction's tag lands between the claim and registration: a
-    // reader either sees an unregistered (invisible) version or a
-    // registered-and-tagged one — and only AFTER the ownership checks, so
-    // a reclaimed loser can never mis-tag the winner's version
-    if (compaction) markCompaction(path, v, ref)
-    // a NON-compaction registering v must scrub a dead compactor's
-    // leftover tag for the same (ref, version) — crash between its tag
-    // and its registration — or the change feed silently skips this data
-    // commit. Ref-qualified: a branch registering ITS version N must not
-    // touch main's legitimate compaction tag for main's version N
-    else unmarkCompaction(dir, path, v, ref)
-    // strictly monotone micros IN FILE ORDER: seed from the last
-    // registered record so a second process continues the sequence
-    val lastRegistered = {
-      val vf = dir.resolve(vName(ref))
-      if (!Files.exists(vf)) 0L
-      else scala.jdk.CollectionConverters.ListHasAsScala(Files.readAllLines(vf))
-        .asScala.filter(_.nonEmpty).lastOption
-        .map(_.split(",")(1).toLong).getOrElse(0L)
-    }
+    // strictly monotone micros IN FILE ORDER: seed from the registered
+    // records so a second process continues the sequence
+    val lastRegistered = registered.map(_.micros).maxOption.getOrElse(0L)
     val now = System.currentTimeMillis() * 1000L
     val ts = lastMicros.updateAndGet(prev =>
       math.max(math.max(now, prev + 1), lastRegistered + 1))
-    // registration CARRIES the snapshot's content hash (3rd field;
-    // legacy 2-field lines parse everywhere — consumers read fields 0/1):
-    // the claimExact TOCTOU restore uses it to tell "the bytes I moved
-    // aside ARE the registered content" from "an interloper registered
-    // its own content in my stall window" — restoring blindly in the
-    // second case would overwrite a REGISTERED snapshot with stale bytes
+    // the registration CARRIES the snapshot's content hash: the
+    // claimExact TOCTOU restore uses it to tell "the bytes I moved aside
+    // ARE the registered content" from "an interloper registered its own
+    // content in my stall window" — restoring blindly in the second case
+    // would overwrite a REGISTERED snapshot with stale bytes. The
+    // compaction mark rides the same append, so a reader sees either no
+    // registration or a registered-and-marked one, and a reclaimed loser
+    // (refused above) can never mark the winner's version
     Files.write(dir.resolve(vName(ref)),
-      s"$v,$ts,${contentHash(bytes)}\n".getBytes(StandardCharsets.UTF_8),
+      (Registration(v, ts, Some(contentHash(bytes)), compaction).line + "\n")
+        .getBytes(StandardCharsets.UTF_8),
       java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.APPEND)
     var flips = 0
     var settled = false
@@ -1574,16 +1612,14 @@ private[graft] object DigestManifest {
     synchronized(claimPastHead(path, ref, None)(_ => lines))
 
   /** Optimistic APPEND commit: `fresh` lines are appended to whatever the
-    * head is NOW — if the head moved past `baseVersion` since the caller
-    * planned, the commit REBASES (appends commute with any interleaved
-    * commit) and both committers survive as consecutive versions. The
-    * claim targets EXACTLY head+1: losing the slot race means another
-    * commit registered first, and the retry re-reads the new head and
-    * rebases onto its content — an interleaved commit can never be
-    * skipped past and silently dropped.
+    * registered head is when the claim is made — appends commute with any
+    * interleaved commit, so both committers survive as consecutive
+    * versions. The claim targets EXACTLY head+1: losing the slot race
+    * means another commit registered first, and the retry re-reads the
+    * new head and rebases onto its content — an interleaved commit can
+    * never be skipped past and silently dropped.
     */
-  def publishAppend(path: String, fresh: Seq[String], baseVersion: Int,
-      ref: String = MainRef): Int =
+  def publishAppend(path: String, fresh: Seq[String], ref: String = MainRef): Int =
     // an append KNOWS its own change records — no O(table) re-diff.
     // Surviving head entries keep their order (delta replay order is
     // manifest order), fresh goes last
@@ -1616,7 +1652,9 @@ private[graft] object DigestManifest {
     * racing from the same base, the claim's `O_CREAT|O_EXCL` picks ONE
     * winner across processes, and every loser — and every replace whose
     * base was already stale — ABORTS loudly instead of silently dropping
-    * the interleaved commit. The caller re-plans and retries.
+    * the interleaved commit. The caller re-plans and retries. Inside
+    * [[compacting]] for this `(path, ref)`, the registration carries the
+    * compaction mark.
     */
   def publishReplace(path: String, lines: Seq[String], baseVersion: Int,
       ref: String = MainRef, knownRecords: Option[Seq[String]] = None): Int =
@@ -1642,65 +1680,6 @@ private[graft] object DigestManifest {
       finishCommit(dir, path, target, ref, sb.bytes, sb.stageRecord(dir),
         compaction = pendingCompaction.remove(compactionKey(path, ref)))
     }
-
-  /** Tag version `v` on `ref` as a CONTENT-PRESERVING compaction commit
-    * (the snapshot + truncate-overwrite cycle that folds the delta log
-    * into fresh base files without changing the logical rows). The change
-    * feed uses this tag — and ONLY this tag — to decide a delta-removing
-    * commit may be skipped: an untagged commit that retires delta files
-    * (INSERT OVERWRITE / TRUNCATE over a live log) genuinely changes
-    * data, and [[DigestChanges.plan]] refuses it loudly rather than
-    * silently emitting zero change rows.
-    *
-    * Entries are REF-QUALIFIED (`<ref>:<v>`; legacy bare `<v>` lines
-    * parse as main): branch logs start at v1, so a bare version number
-    * could not tell a branch commit from a main compaction with the same
-    * number — a branch commit would scrub (or inherit) main's tag.
-    * Scrubs are APPEND-ONLY tombstones (`!<ref>:<v>`): a whole-file
-    * rewrite raced against a concurrent O_APPEND tag from another
-    * process would silently drop the tag; with both paths O_APPEND, the
-    * later line wins (file order IS append order) and nothing is lost.
-    */
-  def markCompaction(path: String, v: Int, ref: String = MainRef): Unit =
-    synchronized {
-      Files.write(Paths.get(path, "_COMPACTIONS"),
-        s"$ref:$v\n".getBytes(StandardCharsets.UTF_8),
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.APPEND)
-    }
-
-  /** One `_COMPACTIONS` line → (isTombstone, ref, version); bare-number
-    * legacy lines qualify as main.
-    */
-  private def parseCompactionLine(raw: String): Option[(Boolean, String, Int)] = {
-    val line = raw.trim
-    if (line.isEmpty) None
-    else {
-      val tomb = line.startsWith("!")
-      val body = if (tomb) line.tail else line
-      val i = body.lastIndexOf(':')
-      val (ref, vs) = if (i < 0) (MainRef, body) else
-        (body.substring(0, i), body.substring(i + 1))
-      vs.toIntOption.map(v => (tomb, ref, v))
-    }
-  }
-
-  /** Remove a STALE compaction tag for `v` on `ref`: a compactor that
-    * crashed between tagging and registering leaves the tag on an
-    * unregistered version number; the data-changing committer that later
-    * reclaims and registers `v` must scrub it (exactly like it scrubs the
-    * dead change record) or the change feed silently skips its commit.
-    * The scrub is an appended tombstone, never a rewrite (see
-    * [[markCompaction]]).
-    */
-  private def unmarkCompaction(dir: java.nio.file.Path, path: String,
-      v: Int, ref: String): Unit = synchronized {
-    if (!isCompaction(path, v, ref)) return
-    Files.write(dir.resolve("_COMPACTIONS"),
-      s"!$ref:$v\n".getBytes(StandardCharsets.UTF_8),
-      java.nio.file.StandardOpenOption.CREATE,
-      java.nio.file.StandardOpenOption.APPEND)
-  }
 
   /** The expiry rebase: when registered version `v`'s snapshot is a
     * delta against a version outside `kept`, rewrite it as a FULL base of
@@ -1728,49 +1707,28 @@ private[graft] object DigestManifest {
       StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
   }
 
-  def isCompaction(path: String, v: Int, ref: String = MainRef): Boolean = {
-    val f = Paths.get(path, "_COMPACTIONS")
-    if (!Files.exists(f)) return false
-    // last matching line wins: a tombstone cancels an earlier tag, and a
-    // (theoretical) later re-tag would re-arm it — file order IS append
-    // order, both writers use O_APPEND
-    var tagged = false
-    scala.jdk.CollectionConverters.ListHasAsScala(Files.readAllLines(f))
-      .asScala.foreach { raw =>
-        parseCompactionLine(raw) match {
-          case Some((tomb, r, n)) if r == ref && n == v => tagged = !tomb
-          case _ => ()
-        }
-      }
-    tagged
-  }
+  /** Whether registered version `v` on `ref` carries the compaction mark
+    * (false for an unregistered `v`).
+    */
+  def isCompaction(path: String, v: Int, ref: String = MainRef): Boolean =
+    registrations(path, ref).exists(r => r.v == v && r.compaction)
 
-  def currentVersion(path: String, ref: String = MainRef): Int = {
-    val vf = Paths.get(path, vName(ref))
-    if (!Files.exists(vf)) 0
-    else {
-      val ls = scala.jdk.CollectionConverters.ListHasAsScala(
-        Files.readAllLines(vf)).asScala.filter(_.nonEmpty)
-      if (ls.isEmpty) 0 else ls.map(_.split(",")(0).toInt).max
-    }
-  }
+  def currentVersion(path: String, ref: String = MainRef): Int =
+    registrations(path, ref).lastOption.fold(0)(_.v)
 
   /** Resolve `TIMESTAMP AS OF` micros to the latest version committed at
     * or before it (the standard as-of semantics) — per ref: a branch's
     * own commit log carries its own timestamps (q262).
     */
   def versionAt(path: String, micros: Long, ref: String = MainRef): Int = {
-    val vf = Paths.get(path, vName(ref))
-    require(Files.exists(vf),
+    val entries = registrations(path, ref)
+    require(entries.nonEmpty,
       s"graft_digest: no commit log for ref '$ref' at $path")
-    val entries = scala.jdk.CollectionConverters.ListHasAsScala(
-      Files.readAllLines(vf)).asScala.filter(_.nonEmpty)
-      .map { l => val a = l.split(","); (a(0).toInt, a(1).toLong) }
-    val at = entries.filter(_._2 <= micros)
+    val at = entries.filter(_.micros <= micros)
     require(at.nonEmpty,
       s"graft_digest: no committed version at or before timestamp $micros " +
-        s"(earliest commit: ${entries.map(_._2).min})")
-    at.map(_._1).max
+        s"(earliest commit: ${entries.map(_.micros).min})")
+    at.map(_.v).max
   }
 }
 
@@ -2114,7 +2072,7 @@ class DigestDeltaBatchWrite(path: String, cols: Array[Int])
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     StagedFiles.sweep(path, StagedFiles.jobMarker(jobTag))
     val fresh = messages.toSeq.flatMap(TableLayout.Digest().lines).sorted
-    val (baseVersion, old) = DigestManifest.head(path)
+    val old = DigestManifest.head(path)._2
     // job-unique naming makes a duplicate structurally impossible; keep
     // the check as the loud backstop (a duplicate entry would be read
     // twice by the merge-on-read scan, corrupting its view)
@@ -2124,7 +2082,7 @@ class DigestDeltaBatchWrite(path: String, cols: Array[Int])
       s"graft_digest: delta commit would duplicate manifest entries: $dup")
     // a delta log commit is an APPEND in manifest terms — it commutes
     // with interleaved commits, so the CAS path rebases instead of aborts
-    DigestManifest.publishAppend(path, fresh, baseVersion)
+    DigestManifest.publishAppend(path, fresh)
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =

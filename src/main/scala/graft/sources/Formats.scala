@@ -813,9 +813,9 @@ object Formats {
       val snap = p.resolve("snapshot").toString
       s.table(tbl).write.mode("overwrite").parquet(snap)
       s.read.parquet(snap).createOrReplaceTempView("q211_snap")
-      DigestManifest.tagNextReplaceAsCompaction(sink.toString)
-      try s.sql(s"INSERT OVERWRITE $tbl SELECT doc_id, lang, n_chars FROM q211_snap")
-      finally DigestManifest.clearCompactionTag(sink.toString)
+      DigestManifest.compacting(sink.toString, DigestManifest.MainRef, "q211") {
+        s.sql(s"INSERT OVERWRITE $tbl SELECT doc_id, lang, n_chars FROM q211_snap")
+      }
       val after = manifest()
       require(!after.exists(_.startsWith("delta-")),
         s"q211: compaction must retire the delta log:\n$after")
@@ -1337,9 +1337,9 @@ object Formats {
       val snap = p.resolve("snapshot").toString
       s.table(tbl).write.mode("overwrite").parquet(snap)
       s.read.parquet(snap).createOrReplaceTempView("q224_snap")
-      DigestManifest.tagNextReplaceAsCompaction(sink.toString)
-      try s.sql(s"INSERT OVERWRITE $tbl SELECT doc_id, lang, n_chars FROM q224_snap")
-      finally DigestManifest.clearCompactionTag(sink.toString)
+      DigestManifest.compacting(sink.toString, DigestManifest.MainRef, "q224") {
+        s.sql(s"INSERT OVERWRITE $tbl SELECT doc_id, lang, n_chars FROM q224_snap")
+      }
       def manifest(name: String): Seq[String] =
         DigestManifest.listingFor(sink.toString, name)
       require(manifest("_MANIFEST.v2").exists(_.startsWith("delta-")) &&
@@ -2332,14 +2332,8 @@ object Formats {
   def q268CdfTimestamp(s: SparkSession, dir: String): DataFrame = {
     val staged = stageChangesTable(s, dir)
     val sink = staged.resolve("sink").toString
-    val commits: Seq[(Int, Long)] = {
-      val vf = java.nio.file.Paths.get(sink, "_VERSIONS")
-      scala.jdk.CollectionConverters.ListHasAsScala(
-        java.nio.file.Files.readAllLines(vf)).asScala
-        .filter(_.nonEmpty)
-        .map { l => val a = l.split(","); (a(0).toInt, a(1).toLong) }.toSeq
-    }
-    val ts = commits.toMap
+    val ts: Map[Int, Long] =
+      DigestManifest.registrations(sink).map(r => r.v -> r.micros).toMap
     def byVersion(from: Int, to: Int): DataFrame = s.read
       .format("graft.sources.DigestSink").option("path", sink)
       .option("changesFrom", from.toString)
@@ -3900,8 +3894,7 @@ object Formats {
       (1 to n).foreach { i =>
         F.write(sink.resolve(s"lang_aa-cas$i.csv"),
           s"$i,aa,1\n".getBytes("UTF-8"))
-        DigestManifest.publishAppend(sink.toString, Seq(s"lang_aa-cas$i.csv,1"),
-          DigestManifest.currentVersion(sink.toString))
+        DigestManifest.publishAppend(sink.toString, Seq(s"lang_aa-cas$i.csv,1"))
       }
       val childOut = new String(racer.getInputStream.readAllBytes(), "UTF-8")
       require(racer.waitFor() == 0, s"q261: child committer failed:\n$childOut")
@@ -3923,7 +3916,7 @@ object Formats {
       // file, even transiently or across a crash between the two calls
       F.write(sink.resolve("lang_aa-postorphan.csv"), "99,aa,1\n".getBytes("UTF-8"))
       val reclaimed = DigestManifest.publishAppend(sink.toString,
-        Seq("lang_aa-postorphan.csv,1"), hv)
+        Seq("lang_aa-postorphan.csv,1"))
       require(reclaimed == hv + 1,
         s"q261: the live commit must reclaim the abandoned slot, got v$reclaimed")
       require(!DigestManifest.head(sink.toString)._2.exists(_.contains("ghost")),
@@ -5033,7 +5026,7 @@ object Formats {
   // them. Locks: ingest through the lang-clustered writer leaves BOTH
   // columns' zones wide (probes open every file); after rewrite_zorder,
   // band probes on doc_id AND n_chars each skip files (fileReadEvents),
-  // the rewrite is change-feed-invisible (content-preserving tag), and
+  // the rewrite is change-feed-invisible (registered as a compaction), and
   // the digest read through the pruned scan stays hash-exact.
   def q277Zorder(s: SparkSession, dir: String): DataFrame = {
     val tbl = tableName("zord", dir)
@@ -5375,7 +5368,7 @@ object Formats {
   // exchange itself (evolve declares no write distribution, so its
   // range-partition + sort survives verbatim into one file per tile),
   // and the replace commit publishes through the new evolve
-  // truncate-overwrite path, content-preserving-tagged so the field-id
+  // truncate-overwrite path, registered as a compaction so the field-id
   // change feed never sees data churn. Locks mirror q277 on BOTH
   // dimensions, plus CDF invisibility and a hash-exact digest.
   def q281EvolveZorder(s: SparkSession, dir: String): DataFrame = {
@@ -5672,7 +5665,7 @@ object Formats {
   // predicate cannot express (`unique_key` — a dupe-poisoned rewrite is
   // per-row indistinguishable from the real thing) and PROPAGATES
   // content-preservation: a branch whose every commit since the fork is
-  // a tagged rewrite publishes as ONE content-preserving main commit,
+  // a compaction rewrite publishes as ONE content-preserving main commit,
   // invisible to the change feed. Locks: the poisoned rewrite is BLOCKED
   // at audit with main byte-identical; the clean one publishes as one
   // commit, restores pruning on main, and leaves the CDF unchanged.

@@ -1367,7 +1367,7 @@ class TableBatchWrite(path: String, layout: TableLayout,
     // keeps its committed order untouched and `fresh` appends after it —
     // merge-on-read replays delta entries in manifest order, and
     // job-unique `delta-j<tag>-` names do NOT sort chronologically
-    if (retired.isEmpty) DigestManifest.publishAppend(path, fresh, baseVersion, ref)
+    if (retired.isEmpty) DigestManifest.publishAppend(path, fresh, ref)
     else DigestManifest.publishReplace(path, surviving ++ fresh, baseVersion, ref)
     // physical deletion of the retired files follows, skipped entirely
     // when the table retains history (old versions stay resolvable). A
@@ -1592,7 +1592,7 @@ class TableStreamingWrite(path: String, layout: TableLayout,
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
     val marker = layout.epochMarker(epochId)
     StagedFiles.sweep(path, marker)
-    val (baseVersion, old) = DigestManifest.head(path, ref)
+    val old = DigestManifest.head(path, ref)._2
     // replay idempotency: entries the manifest already holds win. Only
     // THIS epoch's own names can collide (they carry its marker), so the
     // dedup set is O(epoch files), not the whole folded listing — the
@@ -1602,7 +1602,7 @@ class TableStreamingWrite(path: String, layout: TableLayout,
     val lines = messages.toSeq.flatMap(layout.lines).sorted
       .filterNot(l => epochNames.contains(l.split(",")(0)))
     if (lines.nonEmpty)
-      DigestManifest.publishAppend(path, lines, baseVersion, ref)
+      DigestManifest.publishAppend(path, lines, ref)
   }
 
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =

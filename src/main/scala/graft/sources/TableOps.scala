@@ -193,7 +193,7 @@ private[sources] object ProcedureSupport {
   def manifestLines(path: String, name: String): Seq[String] = {
     // manifest files resolve through the sharded-snapshot chain
     // (pointer indirection, `#base:` deltas); other metadata files
-    // (`_VERSIONS`, `_BASE@<branch>`) are plain line files
+    // (`_BASE@<branch>`) are plain line files
     if (name.startsWith("_MANIFEST")) DigestManifest.listingFor(path, name)
     else {
       val mf = Paths.get(path, name)
@@ -295,10 +295,10 @@ private[sources] object ProcedureSupport {
     * ([[DigestSink.declarePreservedLayoutForNextWrite]]; evolve tables
     * declare no write distribution at all), so the engine keeps the
     * procedure's exchange and each committed file covers one tight key
-    * range. The commit is tagged content-preserving, so a change feed
-    * never sees it as data churn. A branch-propped evolve table stages
-    * the rewrite on its own ref (the WAP write half): the tag, the
-    * publish and the post-check are ref-qualified, and main is untouched
+    * range. The commit registers as a compaction, so a change feed never
+    * sees it as data churn. A branch-propped evolve table stages the
+    * rewrite on its own ref (the WAP write half): the mark, the publish
+    * and the post-check are ref-qualified, and main is untouched
     * until fast_forward.
     */
   def clusteredRewrite(catalogName: String, tbl: String, cols: Seq[String],
@@ -317,23 +317,17 @@ private[sources] object ProcedureSupport {
     withStagedSnapshot(spark, path, full, proc) { df =>
       val keys = key(df).zipWithIndex.map { case (k, i) => k.as(s"__graft_k$i") }
       val names = keys.indices.map(i => s"__graft_k$i")
-      DigestManifest.tagNextReplaceAsCompaction(path, ref)
-      DigestSink.declarePreservedLayoutForNextWrite(path)
-      try df.select(col("*") +: keys: _*)
-        .repartitionByRange(buckets, names.map(col): _*)
-        .sortWithinPartitions(names.map(col): _*)
-        .drop(names: _*)
-        .writeTo(full)
-        .overwrite(lit(true))
-      finally {
-        DigestSink.clearPreservedLayout(path)
-        DigestManifest.clearCompactionTag(path, ref)
+      DigestManifest.compacting(path, ref, s"graft.system.$proc") {
+        DigestSink.declarePreservedLayoutForNextWrite(path)
+        try df.select(col("*") +: keys: _*)
+          .repartitionByRange(buckets, names.map(col): _*)
+          .sortWithinPartitions(names.map(col): _*)
+          .drop(names: _*)
+          .writeTo(full)
+          .overwrite(lit(true))
+        finally DigestSink.clearPreservedLayout(path)
       }
     }
-    require(DigestManifest.isCompaction(path,
-        DigestManifest.currentVersion(path, ref), ref),
-      s"graft.system.$proc: the rewrite commit did not carry its " +
-        "content-preserving tag")
     util.Collections.singletonList(rewriteSummary(path, ref)).iterator()
   }
 }
@@ -363,8 +357,7 @@ class HistoryProcedure(catalogName: String) extends UnboundProcedure
     val ref = DigestManifest.checkRef(input.getUTF8String(1).toString)
     val (_, path) = ProcedureSupport.resolve(catalogName, tbl, "history",
       requireDelta = true)
-    val versions = ProcedureSupport.manifestLines(path,
-      DigestManifest.vName(ref)).map(_.split(",")(0).toInt).sorted
+    val versions = DigestManifest.registrations(path, ref).map(_.v)
     require(versions.nonEmpty,
       s"graft.system.history: $tbl has no commits on ref '$ref'")
     val schema = StructType(Seq(
@@ -422,11 +415,9 @@ class ExpireSnapshotsProcedure(catalogName: String) extends UnboundProcedure
     if (ref != DigestManifest.MainRef)
       require(DigestManifest.currentVersion(path, ref) > 0,
         s"graft.system.expire_snapshots: no branch '$ref' on $tbl")
-    // (version, micros, RAW line) — the raw line is written back verbatim
-    // so the registration's content-hash field (3rd) survives expiry
-    val entries = ProcedureSupport.manifestLines(path, DigestManifest.vName(ref))
-      .map { l => val a = l.split(","); (a(0).toInt, a(1).toLong, l) }
-      .sortBy(_._1)
+    // kept registrations are written back whole, so the content hash and
+    // the compaction mark survive expiry
+    val entries = DigestManifest.registrations(path, ref)
     require(entries.nonEmpty, s"graft.system.expire_snapshots: $tbl has no commits")
     // RETENTION PINS (q269): tagged versions are unexpirable regardless of
     // the keep-last policy — an audit pin ("the snapshot release X trained
@@ -439,8 +430,8 @@ class ExpireSnapshotsProcedure(catalogName: String) extends UnboundProcedure
     // stay referenced via the `_MANIFEST@` reference scan)
     val pinned = DigestTags.tagsOf(path).values
       .collect { case (v, r) if r == ref => v }.toSet
-    val keepSet = entries.takeRight(keepLast).map(_._1).toSet ++ pinned
-    val (expired, kept) = entries.partition(e => !keepSet.contains(e._1))
+    val keepSet = entries.takeRight(keepLast).map(_.v).toSet ++ pinned
+    val (expired, kept) = entries.partition(e => !keepSet.contains(e.v))
 
     // files a SURVIVING reader may plan against: every kept snapshot of
     // THIS ref plus its current pointer — and every OTHER ref's pointer
@@ -457,7 +448,7 @@ class ExpireSnapshotsProcedure(catalogName: String) extends UnboundProcedure
       } finally listing.close()
     }
     val referenced: Set[String] =
-      (kept.map(v => s"$mStem.v${v._1}").flatMap(ProcedureSupport.manifestLines(path, _)) ++
+      (kept.map(r => s"$mStem.v${r.v}").flatMap(ProcedureSupport.manifestLines(path, _)) ++
         ProcedureSupport.manifestLines(path, mStem) ++
         otherManifests.flatMap(ProcedureSupport.manifestLines(path, _)))
         .map(_.split(",")(0)).toSet
@@ -465,22 +456,22 @@ class ExpireSnapshotsProcedure(catalogName: String) extends UnboundProcedure
     // 0. REBASE every kept delta whose base expires, so deleting the
     //    expired snapshots below cannot strand a kept version. Usually only
     //    the OLDEST kept version needs it, but the loop is shape-driven.
-    val keptSet = kept.map(_._1).toSet
-    kept.foreach { case (v, _, _) => DigestManifest.rebaseIfStranded(path, ref, v, keptSet) }
+    val keptSet = kept.map(_.v).toSet
+    kept.foreach(r => DigestManifest.rebaseIfStranded(path, ref, r.v, keptSet))
 
     // 1. pointers first: rewrite the version log atomically, drop expired
     //    snapshot manifests
     val tmp = Paths.get(path, s"${DigestManifest.vName(ref)}.tmp")
-    Files.write(tmp, kept.map(_._3).mkString("", "\n", "\n")
+    Files.write(tmp, kept.map(_.line).mkString("", "\n", "\n")
       .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     Files.move(tmp, Paths.get(path, DigestManifest.vName(ref)),
       java.nio.file.StandardCopyOption.REPLACE_EXISTING,
       java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    expired.foreach { case (v, _, _) =>
-      Files.deleteIfExists(Paths.get(path, s"$mStem.v$v"))
+    expired.foreach { r =>
+      Files.deleteIfExists(Paths.get(path, s"$mStem.v${r.v}"))
       // an expired version's change record goes with its snapshot — the
       // feed must fail resolvably on an expired range, not half-plan it
-      Files.deleteIfExists(Paths.get(path, s"$cStem.v$v"))
+      Files.deleteIfExists(Paths.get(path, s"$cStem.v${r.v}"))
     }
 
     // 2. then the data files nothing references anymore (data files only —
@@ -501,7 +492,7 @@ class ExpireSnapshotsProcedure(catalogName: String) extends UnboundProcedure
       StructField("deleted_files", LongType, nullable = false),
       StructField("current_version", LongType, nullable = false)))
     val row: InternalRow =
-      InternalRow(expired.size.toLong, deleted, kept.last._1.toLong)
+      InternalRow(expired.size.toLong, deleted, kept.last.v.toLong)
     util.Collections.singletonList(
       ProcedureSupport.localScan(schema, Array(row))).iterator()
   }
@@ -671,24 +662,22 @@ class FastForwardProcedure(catalogName: String) extends UnboundProcedure
           s"branch '$branch' (duplicate keys) — main left untouched")
     }
     // CONTENT-PRESERVATION PROPAGATION (round-20): when EVERY branch
-    // commit since the fork copy is tagged content-preserving (the
-    // clustering rewrites' staged path), the published replace carries
-    // the same tag — the branch head's content IS main's base content,
-    // so the change feed must not see the publish as data churn. Any
-    // untagged branch commit (real data changes) publishes untagged and
-    // the feed emits the branch's net changes, as before.
-    // iterate REGISTERED branch commits only: an orphaned/abandoned
-    // claim leaves a raw version-number gap whose isCompaction is false,
-    // which would publish an all-rewrites branch UNTAGGED and make the
-    // change feed emit full remove+add churn for a content-identical
-    // publish (ADVICE r20)
-    val preserving = bv >= 1 && DigestChanges
-      .registeredVersions(path, branch).filter(_ >= 2)
-      .forall(v => DigestManifest.isCompaction(path, v, branch))
-    if (preserving) DigestManifest.tagNextReplaceAsCompaction(path)
+    // commit since the fork copy is a compaction (the clustering
+    // rewrites' staged path), the published replace registers as one too
+    // — the branch head's content IS main's base content, so the change
+    // feed must not see the publish as data churn. Any unmarked branch
+    // commit (real data changes) publishes unmarked and the feed emits
+    // the branch's net changes, as before. Only REGISTERED branch commits
+    // count: an abandoned claim leaves a version-number gap, not a
+    // registration
+    val preserving = bv >= 1 && DigestManifest.registrations(path, branch)
+      .filter(_.v >= 2).forall(_.compaction)
+    def publish(): Long = DigestManifest.publishReplace(path, blines, mainV).toLong
     val published =
-      try DigestManifest.publishReplace(path, blines, mainV).toLong
-      finally if (preserving) DigestManifest.clearCompactionTag(path)
+      if (preserving)
+        DigestManifest.compacting(path, DigestManifest.MainRef,
+          "graft.system.fast_forward")(publish())
+      else publish()
     Files.write(baseFile,
       s"$published\n".getBytes(StandardCharsets.UTF_8))
     val schema = StructType(Seq(
@@ -717,19 +706,10 @@ class BranchesProcedure(catalogName: String) extends UnboundProcedure
     Array(ProcedureParameter.in("table", StringType).build())
 
   override def call(input: InternalRow): util.Iterator[Scan] = {
-    import scala.jdk.CollectionConverters._
     val tbl = input.getUTF8String(0).toString
     val (_, path) = ProcedureSupport.resolve(catalogName, tbl, "branches",
       requireDelta = false)
-    val dir = Paths.get(path)
-    val refs =
-      if (!Files.isDirectory(dir)) Seq.empty[String]
-      else {
-        val listing = Files.list(dir)
-        try listing.iterator().asScala.map(_.getFileName.toString)
-          .filter(_.startsWith("_VERSIONS@")).map(_.drop(10)).toSeq.sorted
-        finally listing.close()
-      }
+    val refs = DigestManifest.refs(path).filterNot(_ == DigestManifest.MainRef)
     val schema = StructType(Seq(
       StructField("branch", StringType, nullable = false),
       StructField("head_version", LongType, nullable = false),
@@ -787,7 +767,7 @@ class DropBranchProcedure(catalogName: String) extends UnboundProcedure
     val doomed = try listing.iterator().asScala.filter { p =>
       val n = p.getFileName.toString
       (n == prefix || n.startsWith(s"$prefix.v") ||
-        n == s"_VERSIONS@$branch" || n == s"_BASE@$branch" ||
+        n == DigestManifest.vName(branch) || n == s"_BASE@$branch" ||
         n.startsWith(s"${DigestManifest.changesName(branch)}.v")) && // the ref's CDF metadata (q262)
         !keep.contains(n)
     }.toSeq finally listing.close()
@@ -1044,20 +1024,9 @@ class RemoveOrphanFilesProcedure(catalogName: String) extends UnboundProcedure
     // history. Aged unregistered claims are deleted; recent ones are an
     // in-flight committer's and stay (their data files are age-protected
     // by the same window).
-    val refs: Seq[String] = {
-      if (!Files.isDirectory(dir)) Seq.empty
-      else {
-        val listing = Files.list(dir)
-        try DigestManifest.MainRef +:
-          listing.iterator().asScala.map(_.getFileName.toString)
-            .filter(_.startsWith("_VERSIONS@")).map(_.drop(10)).toSeq
-        finally listing.close()
-      }
-    }
+    val refs = DigestManifest.refs(path)
     val registered: Map[String, Set[Int]] = refs.map { r =>
-      val vName = if (r == DigestManifest.MainRef) "_VERSIONS" else s"_VERSIONS@$r"
-      r -> ProcedureSupport.manifestLines(path, vName)
-        .map(_.split(",")(0).toInt).toSet
+      r -> DigestManifest.registrations(path, r).map(_.v).toSet
     }.toMap
     def claimOf(n: String): Option[(String, Int)] = {
       val (refPart, vPart) = n.indexOf(".v") match {
@@ -1117,10 +1086,11 @@ class RemoveOrphanFilesProcedure(catalogName: String) extends UnboundProcedure
       val entries = try listing.iterator().asScala.toSeq finally listing.close()
       entries.foreach { p =>
         val n = p.getFileName.toString
-        val isMeta = n.startsWith("_MANIFEST") || n.startsWith("_VERSIONS") ||
+        val isMeta = n.startsWith("_MANIFEST") ||
+          n.startsWith(DigestManifest.vName(DigestManifest.MainRef)) ||
           n.startsWith("_BASE@") ||
           n.startsWith(DigestManifest.changesName(DigestManifest.MainRef)) ||
-          n == "_COMPACTIONS" || n == "_PARTITIONS" || n == "_TAGS"
+          n == "_PARTITIONS" || n == "_TAGS"
         if (!isMeta && !Files.isDirectory(p) && !reachable.contains(n)) {
           if (Files.getLastModifiedTime(p).compareTo(cutoff) < 0) {
             Files.deleteIfExists(p); deletedFiles += 1
@@ -1204,23 +1174,19 @@ class CompactProcedure(catalogName: String) extends UnboundProcedure
     // per CALL would fill the disk under repeated maintenance), then
     // replace content through the committed truncate-overwrite path
     ProcedureSupport.withStagedSnapshot(spark, path, full, "compact") { df =>
-      // tag the commit content-preserving ATOMICALLY with the overwrite:
-      // the tag lands between the CAS claim and registration inside
-      // publishReplace, so no reader can ever observe a published-but-
-      // untagged compaction (which would brick the change feed, q241)
-      DigestManifest.tagNextReplaceAsCompaction(path)
-      try df.writeTo(full)
-        .overwrite(org.apache.spark.sql.functions.lit(true))
-      finally DigestManifest.clearCompactionTag(path)
+      // the compaction mark rides the overwrite's own registration line,
+      // so no reader can ever observe a published-but-unmarked compaction
+      // (which would brick the change feed, q241)
+      DigestManifest.compacting(path, DigestManifest.MainRef,
+          "graft.system.compact") {
+        df.writeTo(full).overwrite(org.apache.spark.sql.functions.lit(true))
+      }
     }
     val after = manifest()
     require(!after.exists(_.startsWith("delta-")),
       s"graft.system.compact: log not retired:\n$after")
     require(!after.exists(l => ManifestEntry.parse(l).attrs.contains("dv")),
       s"graft.system.compact: deletion vectors not folded away:\n$after")
-    require(DigestManifest.isCompaction(path, DigestManifest.currentVersion(path)),
-      "graft.system.compact: the overwrite commit did not carry its " +
-        "compaction tag")
 
     val tableRows = after.map(_.split(",")(1).toLong).sum
     val version = DigestManifest.currentVersion(path).toLong
@@ -1464,8 +1430,8 @@ class RewriteZorderProcedure(catalogName: String) extends UnboundProcedure
   * how an existing table reaches them without a hand-written CTAS: flip
   * the DECLARED plane in the registry (future writes use it), then
   * snapshot + truncate-overwrite through the committed write path so
-  * every surviving row lands in target-plane files, tagged
-  * content-preserving (CDF-invisible, like compact). History keeps
+  * every surviving row lands in target-plane files, registered as a
+  * compaction (CDF-invisible, like compact). History keeps
   * time-traveling — pre-conversion snapshots still name their retained
   * CSV bytes, and reads dispatch per FILE byte format, so even a
   * mid-history reader of the mixed state resolves every file.
@@ -1524,26 +1490,22 @@ class RewritePlaneProcedure(catalogName: String) extends UnboundProcedure
       // (reads dispatch per file), with future writes simply on the new
       // plane, which mixed-plane history supports by design.
       props.put("format", target)
-      try {
-        ProcedureSupport.withStagedSnapshot(spark, path, full,
-          "rewrite_plane") { df =>
-          DigestManifest.tagNextReplaceAsCompaction(path)
-          try df.writeTo(full)
-            .overwrite(org.apache.spark.sql.functions.lit(true))
-          finally DigestManifest.clearCompactionTag(path)
+      DigestManifest.compacting(path, DigestManifest.MainRef,
+          "graft.system.rewrite_plane") {
+        try {
+          ProcedureSupport.withStagedSnapshot(spark, path, full,
+            "rewrite_plane") { df =>
+            df.writeTo(full).overwrite(org.apache.spark.sql.functions.lit(true))
+          }
+        } catch { case t: Throwable =>
+          // a failed overwrite never committed: restore the declared plane
+          // — but only if OUR flip is still the current value (a concurrent
+          // property write wins otherwise)
+          props.replace("format", target, current)
+          throw t
         }
-      } catch { case t: Throwable =>
-        // a failed overwrite never committed: restore the declared plane
-        // — but only if OUR flip is still the current value (a concurrent
-        // property write wins otherwise)
-        props.replace("format", target, current)
-        throw t
       }
     }
-    require(DigestManifest.isCompaction(path,
-        DigestManifest.currentVersion(path)),
-      "graft.system.rewrite_plane: the migration commit did not carry " +
-        "its content-preserving tag")
     val after = ProcedureSupport.manifestLines(path, "_MANIFEST")
       .map(ManifestEntry.parse)
     val offPlane = after.filter(e =>

@@ -145,7 +145,7 @@ object SoakFeed {
       val lines = (0 until files).map(i => f"lang_en-jx-part-$i%05d.csv,10")
       graft.sources.DigestManifest.publish(p.toString, lines)
       graft.sources.DigestManifest.publishAppend(p.toString,
-        Seq("lang_en-jy-part-00000.csv,5"), 1)
+        Seq("lang_en-jy-part-00000.csv,5"))
       timed(s"plan_rec_$files") {
         (1 to 50).foreach(_ => graft.sources.DigestChanges.plan(p.toString, 1, 2))
       }

@@ -58,15 +58,13 @@ object SoakManifest {
       while (n < target) {
         val batch = (n until math.min(n + batchSize, target))
           .map(i => s"lang_l${i % nLangs}-part-$i.csv,${i % 97 + 1}")
-        DigestManifest.publishAppend(path, batch,
-          DigestManifest.currentVersion(path))
+        DigestManifest.publishAppend(path, batch)
         n += batch.size
         commits += 1
       }
       // the steady small writer's commit at this table size
       val tail = (0 until 10).map(i => s"lang_l0-tail-$i.csv,1")
-      DigestManifest.publishAppend(path, tail,
-        DigestManifest.currentVersion(path))
+      DigestManifest.publishAppend(path, tail)
       commits += 1
       val hv = DigestManifest.currentVersion(path)
       val tailBytes = java.nio.file.Files.size(
@@ -103,7 +101,7 @@ object SoakManifest {
       }
       // warm: the previous commit primed the cache; one more tiny commit
       // then head() folds exactly that one delta
-      DigestManifest.publishAppend(path, Seq("lang_l0-hot.csv,1"), hv)
+      DigestManifest.publishAppend(path, Seq("lang_l0-hot.csv,1"))
       val hot = timeUs(DigestManifest.head(path))
       DigestManifest.clearHeadCacheForTest()
       val cold = timeUs(DigestManifest.head(path))
@@ -155,8 +153,7 @@ object SoakManifest {
         val batch = (zn until math.min(zn + batchSize, target)).map(i =>
           s"lang_l${i % zLangs}-part-$i.csv,${i % 97 + 1}," +
             s"zmin=${i * 100L},zmax=${i * 100L + 99L}")
-        DigestManifest.publishAppend(zpath, batch,
-          DigestManifest.currentVersion(zpath))
+        DigestManifest.publishAppend(zpath, batch)
         zn += batch.size
       }
       val zhv = DigestManifest.currentVersion(zpath)
@@ -220,8 +217,7 @@ object SoakManifest {
           s"lang_l${i % 4}-part-$i.csv,${i % 97 + 1}," +
             s"bf=${graft.sources.BloomCodec.encode(build, i % 97 + 1)}"
         }
-        DigestManifest.publishAppend(bpath, batch,
-          DigestManifest.currentVersion(bpath))
+        DigestManifest.publishAppend(bpath, batch)
         bn += batch.size
       }
       DigestManifest.clearHeadCacheForTest()

@@ -55,8 +55,7 @@ class CasProcessSpec extends AnyFunSuite {
       val f = s"lang_aa-cas$i.csv"
       java.nio.file.Files.write(dir.resolve(f),
         s"$i,aa,1\n".getBytes("UTF-8"))
-      DigestManifest.publishAppend(dir.toString, Seq(s"$f,1"),
-        DigestManifest.currentVersion(dir.toString))
+      DigestManifest.publishAppend(dir.toString, Seq(s"$f,1"))
     }
     val childOut = new String(child.getInputStream.readAllBytes(), "UTF-8")
     assert(child.waitFor() == 0, s"child failed:\n$childOut")
@@ -82,7 +81,7 @@ class CasProcessSpec extends AnyFunSuite {
     java.nio.file.Files.write(dir.resolve("lang_aa-base.csv"),
       "1,aa,10\n".getBytes("UTF-8"))
     assert(DigestManifest.publishAppend(dir.toString,
-      Seq("lang_aa-base.csv,1"), 0) == 1)
+      Seq("lang_aa-base.csv,1")) == 1)
     // the child claims v2 exactly like a live committer, then dies
     // without registering
     val (code, out) = runChild("claim-and-die", dir.toString)
@@ -108,7 +107,7 @@ class CasProcessSpec extends AnyFunSuite {
     java.nio.file.Files.write(dir.resolve("lang_aa-r.csv"),
       "1,aa,10\n".getBytes("UTF-8"))
     assert(DigestManifest.publishAppend(dir.toString,
-      Seq("lang_aa-r.csv,1"), 0) == 1)
+      Seq("lang_aa-r.csv,1")) == 1)
     val base = DigestManifest.currentVersion(dir.toString)
     // another process commits AFTER this JVM planned its replace
     val (code, out) = runChild("append", dir.toString, "1", "bb")
@@ -128,7 +127,7 @@ class CasProcessSpec extends AnyFunSuite {
     java.nio.file.Files.write(dir.resolve("lang_aa-base.csv"),
       "1,aa,10\n".getBytes("UTF-8"))
     assert(DigestManifest.publishAppend(dir.toString,
-      Seq("lang_aa-base.csv,1"), 0) == 1)
+      Seq("lang_aa-base.csv,1")) == 1)
     // fork the branch ref (dev v1 = main's head listing)
     DigestManifest.publish(dir.toString, DigestManifest.head(dir.toString)._2,
       "dev")
@@ -140,8 +139,7 @@ class CasProcessSpec extends AnyFunSuite {
     for (i <- 1 to n) {
       val f = s"lang_aa-bcas$i.csv"
       java.nio.file.Files.write(dir.resolve(f), s"$i,aa,1\n".getBytes("UTF-8"))
-      DigestManifest.publishAppend(dir.toString, Seq(s"$f,1"),
-        DigestManifest.currentVersion(dir.toString, "dev"), "dev")
+      DigestManifest.publishAppend(dir.toString, Seq(s"$f,1"), "dev")
     }
     val childOut = new String(child.getInputStream.readAllBytes(), "UTF-8")
     assert(child.waitFor() == 0, s"child failed:\n$childOut")
@@ -169,7 +167,7 @@ class CasProcessSpec extends AnyFunSuite {
     java.nio.file.Files.write(dir.resolve("lang_aa-dvfile.csv"),
       "1,aa,10\n2,aa,20\n3,aa,30\n".getBytes("UTF-8"))
     assert(DigestManifest.publishAppend(dir.toString,
-      Seq("lang_aa-dvfile.csv,3"), 0) == 1)
+      Seq("lang_aa-dvfile.csv,3")) == 1)
     val n = 6
     val pb = new ProcessBuilder((Seq("java", "-cp", childClasspath,
       "graft.sources.CasCommitter", "dv-grow", dir.toString,
@@ -178,8 +176,7 @@ class CasProcessSpec extends AnyFunSuite {
     for (i <- 1 to n) {
       val f = s"lang_aa-app$i.csv"
       java.nio.file.Files.write(dir.resolve(f), s"$i,aa,1\n".getBytes("UTF-8"))
-      DigestManifest.publishAppend(dir.toString, Seq(s"$f,1"),
-        DigestManifest.currentVersion(dir.toString))
+      DigestManifest.publishAppend(dir.toString, Seq(s"$f,1"))
     }
     val childOut = new String(child.getInputStream.readAllBytes(), "UTF-8")
     assert(child.waitFor() == 0, s"dv child failed:\n$childOut")
@@ -220,7 +217,7 @@ class CasProcessSpec extends AnyFunSuite {
     writePq("lang_aa-dvfile.parquet", Seq((1L, "aa", 10L), (2L, "aa", 20L),
       (3L, "aa", 30L)))
     assert(DigestManifest.publishAppend(dir.toString,
-      Seq("lang_aa-dvfile.parquet,3"), 0) == 1)
+      Seq("lang_aa-dvfile.parquet,3")) == 1)
     val md5Before = java.security.MessageDigest.getInstance("MD5").digest(
       java.nio.file.Files.readAllBytes(dir.resolve("lang_aa-dvfile.parquet")))
     // the DV grow is METADATA-ONLY, so the child needs no parquet libs —
@@ -233,8 +230,7 @@ class CasProcessSpec extends AnyFunSuite {
     for (i <- 1 to n) {
       val f = s"lang_aa-pq$i.parquet"
       writePq(f, Seq((100L + i, "aa", 1L)))
-      DigestManifest.publishAppend(dir.toString, Seq(s"$f,1"),
-        DigestManifest.currentVersion(dir.toString))
+      DigestManifest.publishAppend(dir.toString, Seq(s"$f,1"))
     }
     val childOut = new String(child.getInputStream.readAllBytes(), "UTF-8")
     assert(child.waitFor() == 0, s"pq dv child failed:\n$childOut")

@@ -274,7 +274,7 @@ class CatalogSpec extends SparkSpec {
     DigestManifest.publish(dir, Seq("lang_en-part-00000.csv,3", "lang_de-part-00000.csv,2"))
     val planned = DigestManifest.head(dir)
     // an append registers between the drop's read and its publish
-    DigestManifest.publishAppend(dir, Seq("lang_en-part-00001.csv,1"), planned._1)
+    DigestManifest.publishAppend(dir, Seq("lang_en-part-00001.csv,1"))
     intercept[java.util.ConcurrentModificationException] {
       t.retire(Array(org.apache.spark.sql.sources.In("lang", Array[Any]("en"))),
         always = false, planned = planned)
@@ -344,6 +344,48 @@ class CatalogSpec extends SparkSpec {
           .head().getLong(0) == v.toLong, s"kept version $v unreadable")
       }
       assert(spark.table(tbl).count() == 20L)
+      spark.sql(s"DROP TABLE $tbl")
+    }
+  }
+
+  test("q229 × compaction marks: a kept compaction version stays marked " +
+      "through expiry and the feed still skips it; an expired one's mark " +
+      "goes with its registration") {
+    withCatalog {
+      val dir = tmp("graft_expire_mark_")
+      val path = dir.toString
+      val short = s"ns.expmark_${System.nanoTime()}"
+      val tbl = s"graft.$short"
+      spark.sql(s"""CREATE TABLE $tbl (doc_id BIGINT, lang STRING, n_chars BIGINT)
+                   |USING graft_digest TBLPROPERTIES ('path'='$dir', 'delta'='true')""".stripMargin)
+      def compact(): Unit =
+        spark.sql(s"CALL graft.system.compact(table => '$short')").collect()
+      spark.sql(s"INSERT INTO $tbl VALUES (1, 'en', 10)") // v1
+      spark.sql(s"INSERT INTO $tbl VALUES (2, 'de', 20)") // v2
+      spark.sql(s"DELETE FROM $tbl WHERE doc_id = 1") // v3: a verb log
+      compact() // v4
+      spark.sql(s"INSERT INTO $tbl VALUES (3, 'fr', 30)") // v5
+      spark.sql(s"DELETE FROM $tbl WHERE doc_id = 2") // v6: a verb log
+      compact() // v7
+      spark.sql(s"INSERT INTO $tbl VALUES (4, 'it', 40)") // v8
+      assert(DigestManifest.registrations(path).filter(_.compaction).map(_.v) == Seq(4, 7))
+      spark.sql(s"CALL graft.system.expire_snapshots(table => '$short', keep_last => 4)")
+        .collect()
+      val kept = DigestManifest.registrations(path)
+      assert(kept.map(_.v) == Seq(5, 6, 7, 8))
+      assert(kept.filter(_.compaction).map(_.v) == Seq(7))
+      assert(DigestManifest.isCompaction(path, 7))
+      assert(!DigestManifest.isCompaction(path, 4), "an expired version keeps no mark")
+      // the feed skips the kept compaction (an unmarked delta-retiring
+      // commit would refuse) and serves the data commits around it
+      assert(graft.sources.DigestChanges.plan(path, 6, 7).isEmpty)
+      def feed(from: Int, to: Int): Seq[String] = spark.read
+        .format("graft.sources.DigestSink").option("path", path)
+        .option("changesFrom", from.toString).option("changesTo", to.toString)
+        .load().collect().map(_.toString).toSeq.sorted
+      assert(feed(6, 8) == feed(7, 8))
+      assert(feed(7, 8).size == 1)
+      assert(spark.table(tbl).count() == 2L)
       spark.sql(s"DROP TABLE $tbl")
     }
   }
@@ -921,9 +963,9 @@ class CatalogSpec extends SparkSpec {
     val (base0, lines0) = DigestManifest.head(dir.toString)
     assert(base0 == 0 && lines0.isEmpty)
     assert(DigestManifest.publishAppend(dir.toString,
-      Seq("lang_aa-cas1.csv,1"), base0) == 1)
+      Seq("lang_aa-cas1.csv,1")) == 1)
     val v2 = DigestManifest.publishAppend(dir.toString,
-      Seq("lang_bb-cas2.csv,1"), base0) // stale base: head moved to 1
+      Seq("lang_bb-cas2.csv,1")) // planned at v0: head moved to 1
     assert(v2 == 2, s"loser must rebase to the next consecutive version, got $v2")
     // nothing lost: the head holds BOTH commits, earlier first
     assert(DigestManifest.head(dir.toString) ==
@@ -942,7 +984,7 @@ class CatalogSpec extends SparkSpec {
     java.nio.file.Files.write(dir.resolve("lang_bb-o2.csv"),
       "2,bb,20\n".getBytes("UTF-8"))
     assert(DigestManifest.publishAppend(dir.toString,
-      Seq("lang_aa-o1.csv,1"), 0) == 1)
+      Seq("lang_aa-o1.csv,1")) == 1)
     // a foreign process CLAIMED v2 (CREATE_NEW won) and died before
     // registering it in _VERSIONS
     java.nio.file.Files.write(dir.resolve("_MANIFEST.v2"),
@@ -950,7 +992,7 @@ class CatalogSpec extends SparkSpec {
       java.nio.file.StandardOpenOption.CREATE_NEW)
     val t0 = System.nanoTime()
     val v = DigestManifest.publishAppend(dir.toString,
-      Seq("lang_bb-o2.csv,1"), 1)
+      Seq("lang_bb-o2.csv,1"))
     val waitedMs = (System.nanoTime() - t0) / 1000000L
     assert(v == 2, s"live commit must reclaim the abandoned claim slot, got v$v")
     assert(waitedMs >= 1500L,
@@ -977,7 +1019,7 @@ class CatalogSpec extends SparkSpec {
     java.nio.file.Files.write(dir.resolve("lang_aa-r1.csv"),
       "1,aa,10\n".getBytes("UTF-8"))
     assert(DigestManifest.publishAppend(dir.toString,
-      Seq("lang_aa-r1.csv,1"), 0) == 1)
+      Seq("lang_aa-r1.csv,1")) == 1)
     intercept[java.util.ConcurrentModificationException] {
       DigestManifest.publishReplace(dir.toString, Seq.empty, 0) // planned at v0
     }
@@ -1310,14 +1352,14 @@ class CatalogSpec extends SparkSpec {
     val dir = tmp("graft_refs_spec_").toString
     DigestManifest.publish(dir, Seq("a.csv,1"))
     DigestManifest.publish(dir, Seq("a.csv,1", "b.csv,2"), "dev")
-    DigestManifest.publishAppend(dir, Seq("c.csv,3"), 1, "dev")
+    DigestManifest.publishAppend(dir, Seq("c.csv,3"), "dev")
     assert(DigestManifest.currentVersion(dir) == 1)
     assert(DigestManifest.currentVersion(dir, "dev") == 2)
     assert(DigestManifest.head(dir)._2 == Seq("a.csv,1"))
     assert(DigestManifest.head(dir, "dev")._2 ==
       Seq("a.csv,1", "b.csv,2", "c.csv,3"))
     // main committing PAST the branch stays main-scoped too
-    DigestManifest.publishAppend(dir, Seq("d.csv,4"), 1)
+    DigestManifest.publishAppend(dir, Seq("d.csv,4"))
     assert(DigestManifest.currentVersion(dir) == 2)
     assert(DigestManifest.currentVersion(dir, "dev") == 2)
     // ref names are path-safe by construction
@@ -1364,7 +1406,7 @@ class CatalogSpec extends SparkSpec {
     java.nio.file.Files.write(dir.resolve("_MANIFEST.v2"),
       java.util.List.of("a.csv,1", "bogus.csv,999"))
     // the next live commit waits out the orphan and reclaims its slot
-    DigestManifest.publishAppend(dir.toString, Seq("b.csv,1"), 1)
+    DigestManifest.publishAppend(dir.toString, Seq("b.csv,1"))
     val head = DigestManifest.currentVersion(dir.toString)
     assert(head == 2, s"expected the live commit to reclaim the orphan slot, got v$head")
     // the table stream plans exactly the two REGISTERED commits' adds

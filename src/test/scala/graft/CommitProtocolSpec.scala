@@ -27,7 +27,7 @@ class CommitProtocolSpec extends AnyFunSuite {
 
   private def seedTable(dir: java.nio.file.Path): Unit = {
     Files.write(dir.resolve("lang_aa-seed.csv"), "1,aa,1\n".getBytes("UTF-8"))
-    DigestManifest.publishAppend(dir.toString, Seq("lang_aa-seed.csv,1"), 0)
+    DigestManifest.publishAppend(dir.toString, Seq("lang_aa-seed.csv,1"))
   }
 
   private def bytesOf(lines: Seq[String]): Array[Byte] =
@@ -54,7 +54,7 @@ class CommitProtocolSpec extends AnyFunSuite {
     try {
       Files.write(dir.resolve("lang_cc-late.csv"), "3,cc,1\n".getBytes("UTF-8"))
       val v = DigestManifest.publishAppend(path,
-        Seq("lang_cc-late.csv,1"), 1)
+        Seq("lang_cc-late.csv,1"))
       // the live committer rebased PAST the registered v2, never onto it
       assert(v == 3)
       // the registered snapshot was restored byte-identically — the chain
@@ -145,21 +145,20 @@ class CommitProtocolSpec extends AnyFunSuite {
     val dir = tmp("graft_proto_tag_")
     val path = dir.toString
     seedTable(dir)
-    DigestManifest.tagNextReplaceAsCompaction(path)
-    try {
+    DigestManifest.compacting(path, DigestManifest.MainRef, "spec") {
       // a branch DV-style replace interleaves while the main compaction's
-      // tag is pending: it must NOT be marked content-preserving
+      // mark is pending: it must NOT be marked content-preserving
       Files.write(dir.resolve("lang_ee-branch.csv"), "5,ee,1\n".getBytes("UTF-8"))
       val bv = DigestManifest.publishReplace(path,
         Seq("lang_ee-branch.csv,1"), 0, ref = "dev")
       assert(!DigestManifest.isCompaction(path, bv),
         "a branch commit consumed the main compaction tag")
-      // the tag survives for the commit it was meant for
+      // the mark survives for the commit it was meant for
       val mv = DigestManifest.publishReplace(path,
         Seq("lang_aa-seed.csv,1"), DigestManifest.currentVersion(path))
       assert(DigestManifest.isCompaction(path, mv),
         "the main replace the tag targeted must be marked a compaction")
-    } finally DigestManifest.clearCompactionTag(path)
+    }
   }
 
   test("a branch commit whose version NUMBER reaches a tagged main " +
@@ -167,18 +166,24 @@ class CommitProtocolSpec extends AnyFunSuite {
     val dir = tmp("graft_proto_refscrub_")
     val path = dir.toString
     seedTable(dir)
-    // main compacts at v2 (tag applied through the real replace path)
-    DigestManifest.tagNextReplaceAsCompaction(path)
-    val mv = try DigestManifest.publishReplace(path,
-      Seq("lang_aa-seed.csv,1"), 1)
-    finally DigestManifest.clearCompactionTag(path)
+    // main compacts at v2 (marked through the real replace path)
+    val mv = DigestManifest.compacting(path, DigestManifest.MainRef, "spec") {
+      DigestManifest.publishReplace(path, Seq("lang_aa-seed.csv,1"), 1)
+    }
     assert(DigestManifest.isCompaction(path, mv))
+    // the mark is the registration's 4th field; no side file exists
+    val mainLog = scala.jdk.CollectionConverters.ListHasAsScala(
+      Files.readAllLines(dir.resolve("_VERSIONS"))).asScala
+    assert(mainLog.last.startsWith(s"$mv,") && mainLog.last.endsWith(",c") &&
+      mainLog.last.split(",").length == 4, mainLog)
+    assert(!mainLog.init.exists(_.endsWith(",c")), mainLog)
+    assert(!Files.exists(dir.resolve("_COMPACTIONS")))
     // branch logs restart at v1: commit on a branch until ITS version
     // number equals main's compaction version — each branch registration
-    // scrubs stale tags for (branch, v), never (main, v)
+    // lands in the branch's own log, never in main's
     (1 to mv).foreach { i =>
       Files.write(dir.resolve(s"lang_br$i.csv"), s"$i,br,1\n".getBytes("UTF-8"))
-      DigestManifest.publishAppend(path, Seq(s"lang_br$i.csv,1"), i - 1,
+      DigestManifest.publishAppend(path, Seq(s"lang_br$i.csv,1"),
         ref = "dev")
     }
     assert(DigestManifest.currentVersion(path, "dev") == mv)
@@ -195,29 +200,51 @@ class CommitProtocolSpec extends AnyFunSuite {
       "the branch's data commit at the colliding number must still serve")
   }
 
-  test("the stale-tag scrub is an append-only tombstone: a dead " +
-      "compactor's tag cancels without a file rewrite, legacy bare lines " +
-      "parse as main") {
-    val dir = tmp("graft_proto_tomb_")
+  test("a compactor's abandoned claim is reclaimed by a data commit, " +
+      "which registers unmarked and is served by the change feed") {
+    val dir = tmp("graft_proto_deadcompactor_")
     val path = dir.toString
     seedTable(dir)
-    // legacy writer left a BARE version number (pre-ref-qualified format):
-    // it must read as main's tag
-    Files.write(dir.resolve("_COMPACTIONS"), "2\n".getBytes("UTF-8"))
-    assert(DigestManifest.isCompaction(path, 2))
-    assert(!DigestManifest.isCompaction(path, 2, "dev"))
-    // a data commit registering v2 on main scrubs the dead compactor's
-    // leftover tag — by appending a tombstone, never rewriting (a rewrite
-    // raced against a concurrent O_APPEND tag would drop the tag)
+    // a compactor claims v2 with its rewritten listing, then dies before
+    // registering: no mark exists anywhere, because the mark is only
+    // ever written as part of a registration line
+    Files.write(dir.resolve("lang_aa-compacted.csv"), "1,aa,1\n".getBytes("UTF-8"))
+    assert(DigestManifest.claimExact(dir, path, 2,
+      bytesOf(Seq("lang_aa-compacted.csv,1")), DigestManifest.MainRef))
+    // a data commit waits out the orphan window, reclaims v2, registers
     Files.write(dir.resolve("lang_ff-data.csv"), "6,ff,1\n".getBytes("UTF-8"))
-    DigestManifest.publishAppend(path, Seq("lang_ff-data.csv,1"), 1)
+    assert(DigestManifest.publishAppend(path, Seq("lang_ff-data.csv,1")) == 2)
     assert(!DigestManifest.isCompaction(path, 2),
-      "the dead compactor's stale tag must be scrubbed by the data commit")
-    val lines = scala.jdk.CollectionConverters.ListHasAsScala(
-      Files.readAllLines(dir.resolve("_COMPACTIONS"))).asScala
-    assert(lines.contains("2"), "the original tag line must survive " +
-      "(append-only file — no rewrite)")
-    assert(lines.exists(_.startsWith("!")), "the scrub must be a tombstone")
+      "the reclaimed data commit must not read as a compaction")
+    assert(!DigestManifest.registrations(path).exists(_.compaction))
+    assert(!Files.exists(dir.resolve("_COMPACTIONS")))
+    val served = graft.sources.DigestChanges.plan(path, 1, 2)
+    assert(served.nonEmpty, "the change feed must serve the data commit")
+    assert(DigestManifest.head(path)._2 ==
+      Seq("lang_aa-seed.csv,1", "lang_ff-data.csv,1"),
+      "the dead compactor's bytes must never be served")
+  }
+
+  test("registrations: one parser round-trips 2-field, 3-field and " +
+      "compaction-marked lines, and every version reader is a view of it") {
+    val dir = tmp("graft_proto_regs_")
+    val path = dir.toString
+    val raw = Seq("1,1000", "2,2000,0123abcd", "3,3000,4567cdef,c")
+    Files.write(dir.resolve("_VERSIONS"),
+      raw.mkString("", "\n", "\n").getBytes("UTF-8"))
+    val regs = DigestManifest.registrations(path)
+    assert(regs == Seq(
+      DigestManifest.Registration(1, 1000L, None, compaction = false),
+      DigestManifest.Registration(2, 2000L, Some("0123abcd"), compaction = false),
+      DigestManifest.Registration(3, 3000L, Some("4567cdef"), compaction = true)))
+    assert(regs.map(_.line) == raw)
+    assert(DigestManifest.currentVersion(path) == 3)
+    assert(DigestManifest.versionAt(path, 2500L) == 2)
+    assert(DigestManifest.isCompaction(path, 3))
+    assert(!DigestManifest.isCompaction(path, 2))
+    assert(!DigestManifest.isCompaction(path, 4), "an unregistered version is unmarked")
+    assert(DigestManifest.registrations(path, "dev").isEmpty)
+    assert(DigestManifest.currentVersion(path, "dev") == 0)
   }
 
   test("the CDF to-side guard mirrors the from-side: changesTo together " +

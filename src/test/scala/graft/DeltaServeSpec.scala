@@ -39,13 +39,13 @@ class DeltaServeSpec extends AnyFunSuite {
     val path = dir.toString
     Files.write(dir.resolve("lang_aa-base.csv"),
       "1,aa,10\n2,aa,20\n3,aa,30\n".getBytes(StandardCharsets.UTF_8))
-    DigestManifest.publishAppend(path, Seq("lang_aa-base.csv,3"), 0)
+    DigestManifest.publishAppend(path, Seq("lang_aa-base.csv,3"))
     // a big uncompacted verb log: updates on base rows + many inserts
     val verbs = Seq("U,2,aa,99", "D,3,aa,0") ++
       (100 to 400).map(i => s"I,$i,bb,$i")
     Files.write(dir.resolve("delta-big.csv"),
       verbs.mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
-    DigestManifest.publishAppend(path, Seq(s"delta-big.csv,${verbs.size}"), 1)
+    DigestManifest.publishAppend(path, Seq(s"delta-big.csv,${verbs.size}"))
 
     val old = DigestSink.insertShardBytes
     DigestSink.insertShardBytes = 512 // fixture-scale multi-shard
@@ -82,10 +82,10 @@ class DeltaServeSpec extends AnyFunSuite {
     val path = dir.toString
     Files.write(dir.resolve("lang_aa-base.csv"),
       "1,aa,10\n".getBytes(StandardCharsets.UTF_8))
-    DigestManifest.publishAppend(path, Seq("lang_aa-base.csv,1"), 0)
+    DigestManifest.publishAppend(path, Seq("lang_aa-base.csv,1"))
     Files.write(dir.resolve("delta-tiny.csv"),
       "I,7,bb,7\n".getBytes(StandardCharsets.UTF_8))
-    DigestManifest.publishAppend(path, Seq("delta-tiny.csv,1"), 1)
+    DigestManifest.publishAppend(path, Seq("delta-tiny.csv,1"))
     val parts = new TableScan(path, TableLayout.Digest(), mergeDeltas = true).planInputPartitions()
     val insPs = parts.collect { case p: DigestInsertsPartition => p }
     assert(insPs.length == 1, insPs.toString)

@@ -277,6 +277,32 @@ class LintSpec extends AnyFunSuite {
         "scope query conf with Tables.withConf")
   }
 
+  /** `file:enclosing def` of every non-comment main-source line holding
+    * `token`: the nearest MEMBER def (two-space indent) at or above the
+    * line, so a nested helper def never hides its enclosing member.
+    */
+  private def sites(token: String): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala/graft")
+    java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap { p =>
+        val file = root.relativize(p).toString.replace('\\', '/')
+        val lines = java.nio.file.Files.readAllLines(p).asScala.toIndexedSeq
+        lines.indices.collect {
+          case i if lines(i).contains(token) && {
+              val t = lines(i).trim
+              !t.startsWith("//") && !t.startsWith("*")
+            } =>
+            val owner = lines.take(i + 1).reverse
+              .find(l => l.startsWith("  ") && !l.startsWith("   ") && l.contains(" def "))
+              .flatMap("def (\\w+)".r.findFirstMatchIn(_)).map(_.group(1))
+            s"$file:${owner.getOrElse("?")}"
+        }
+      }
+      .toSeq.sorted
+  }
+
   /** One owner of the change-record layout: `DigestManifest` names the
     * `_CHANGES[@ref]` files (written only beside full-shaped snapshots)
     * and parses the `+`/`-`/`~old|new` grammar in one function, which the
@@ -285,30 +311,46 @@ class LintSpec extends AnyFunSuite {
     * drift from the one rule. Pinned by enclosing def.
     */
   test("change records: one stem builder and one grammar parser") {
-    import scala.jdk.CollectionConverters._
-    val root = java.nio.file.Paths.get("src/main/scala/graft")
-    def sites(token: String): Seq[String] =
-      java.nio.file.Files.walk(root).iterator().asScala
-        .filter(_.toString.endsWith(".scala"))
-        .flatMap { p =>
-          val file = root.relativize(p).toString.replace('\\', '/')
-          val lines = java.nio.file.Files.readAllLines(p).asScala.toIndexedSeq
-          lines.indices.collect {
-            case i if lines(i).contains(token) && {
-                val t = lines(i).trim
-                !t.startsWith("//") && !t.startsWith("*")
-              } =>
-              val owner = lines.take(i).reverse.find(_.contains(" def "))
-                .flatMap("def (\\w+)".r.findFirstMatchIn(_)).map(_.group(1))
-              s"$file:${owner.getOrElse("?")}"
-          }
-        }
-        .toSeq.sorted
     assert(sites("\"_CHANGES") == Seq("sources/DigestSink.scala:changesName"),
       s"the _CHANGES stem is built outside DigestManifest.changesName: " +
         sites("\"_CHANGES"))
     assert(sites("indexOf('|')") == Seq("sources/DigestSink.scala:parseRecord"),
       s"a change record is split outside DigestManifest.parseRecord: " +
         sites("indexOf('|')"))
+  }
+
+  /** One owner of the version log: `DigestManifest.vName` is the only
+    * spelling of the `_VERSIONS[@ref]` name and `registrations` the only
+    * parser of its `v,micros,hash[,c]` lines; every reader (head version,
+    * as-of lookup, content hash, compaction mark, history, expiry, GC, the
+    * change feed) is a view of it. The compaction mark is a field of the
+    * registration, so no `_COMPACTIONS` side file may come back. The
+    * other uses of the name (the append, the expiry rewrite, the ref
+    * lister, file-name matches) are pinned by enclosing def.
+    */
+  test("version log: one name, one parser, the mark inside the line") {
+    assert(sites("\"_VERSIONS") == Seq("sources/DigestSink.scala:vName"),
+      s"the _VERSIONS name is spelled outside DigestManifest.vName: " +
+        sites("\"_VERSIONS"))
+    val sideFile = {
+      import scala.jdk.CollectionConverters._
+      java.nio.file.Files.walk(java.nio.file.Paths.get("src/main")).iterator().asScala
+        .filter(p => java.nio.file.Files.isRegularFile(p) &&
+          new String(java.nio.file.Files.readAllBytes(p), "UTF-8").contains("_COMPACTIONS"))
+        .toSeq
+    }
+    assert(sideFile.isEmpty, s"a _COMPACTIONS side file is back: $sideFile")
+    assert(sites("vName(") == Seq(
+        "DigestSink.scala:finishCommit", // the registration append
+        "DigestSink.scala:refs",
+        "DigestSink.scala:registrations",
+        "DigestSink.scala:vName",
+        "TableOps.scala:call", // expire_snapshots: the kept-line rewrite
+        "TableOps.scala:call",
+        "TableOps.scala:call", // drop_branch: the branch's log goes with it
+        "TableOps.scala:call") // remove_orphan_files: a metadata name
+        .map("sources/" + _),
+      s"a new version-log site — read it through " +
+        s"DigestManifest.registrations: ${sites("vName(")}")
   }
 }

@@ -32,7 +32,7 @@ class ManifestShardSpec extends AnyFunSuite {
     val dir = tmp("graft_shard_delta_")
     (1 to 12).foreach { i =>
       DigestManifest.publishAppend(dir.toString,
-        Seq(s"lang_aa-f$i.csv,$i"), DigestManifest.currentVersion(dir.toString))
+        Seq(s"lang_aa-f$i.csv,$i"))
     }
     // v1 is a full base, v2.. are deltas naming only their own change
     assert(!rawLines(dir, "_MANIFEST.v1").head.startsWith("#"))
@@ -58,7 +58,7 @@ class ManifestShardSpec extends AnyFunSuite {
     val dir = tmp("graft_shard_base_")
     (1 to 20).foreach { i =>
       DigestManifest.publishAppend(dir.toString,
-        Seq(s"lang_aa-f$i.csv,$i"), DigestManifest.currentVersion(dir.toString))
+        Seq(s"lang_aa-f$i.csv,$i"))
     }
     assert(!rawLines(dir, "_MANIFEST.v16").head.startsWith("#"),
       "v16 must be a full base")
@@ -79,7 +79,7 @@ class ManifestShardSpec extends AnyFunSuite {
     // listing (on a tiny table the size heuristic rightly prefers full)
     (1 to 9).foreach { i =>
       DigestManifest.publishAppend(dir.toString,
-        Seq(s"lang_aa-f$i.csv,$i"), DigestManifest.currentVersion(dir.toString))
+        Seq(s"lang_aa-f$i.csv,$i"))
     }
     // DV-style in-place mutation of one entry + removal of another
     val mutated = (1 to 9).map {
@@ -125,7 +125,7 @@ class ManifestShardSpec extends AnyFunSuite {
     assert(DigestManifest.listingFor(dir.toString, "_MANIFEST") ==
       Seq("a.csv,1", "b.csv,2"))
     // a commit on top of the legacy state shards from there on
-    DigestManifest.publishAppend(dir.toString, Seq("c.csv,3"), 1)
+    DigestManifest.publishAppend(dir.toString, Seq("c.csv,3"))
     assert(rawLines(dir, "_MANIFEST.v2").head == "#base:1")
     assert(rawLines(dir, "_MANIFEST") == Seq("#version:2"))
     assert(DigestManifest.listingFor(dir.toString, "_MANIFEST") ==
@@ -138,7 +138,7 @@ class ManifestShardSpec extends AnyFunSuite {
     val dir = tmp("graft_shard_cache_")
     (1 to 5).foreach { i =>
       DigestManifest.publishAppend(dir.toString,
-        Seq(s"f$i.csv,$i"), DigestManifest.currentVersion(dir.toString))
+        Seq(s"f$i.csv,$i"))
     }
     val hot = DigestManifest.head(dir.toString)
     DigestManifest.clearHeadCacheForTest()
@@ -149,7 +149,7 @@ class ManifestShardSpec extends AnyFunSuite {
       .foreach(java.nio.file.Files.delete)
     (1 to 5).foreach { i =>
       DigestManifest.publishAppend(dir.toString,
-        Seq(s"OTHER$i.csv,$i"), DigestManifest.currentVersion(dir.toString))
+        Seq(s"OTHER$i.csv,$i"))
     }
     assert(DigestManifest.head(dir.toString) ==
       (5, (1 to 5).map(i => s"OTHER$i.csv,$i")),
@@ -162,7 +162,7 @@ class ManifestShardSpec extends AnyFunSuite {
     val base = (1 to 6).map(i => s"lang_aa-file-$i.csv,$i")
     DigestManifest.publish(dir.toString, base)
     DigestManifest.publish(dir.toString, base, "dev")
-    DigestManifest.publishAppend(dir.toString, Seq("lang_bb-new.csv,7"), 1, "dev")
+    DigestManifest.publishAppend(dir.toString, Seq("lang_bb-new.csv,7"), "dev")
     assert(rawLines(dir, "_MANIFEST@dev.v2").head == "#base:1")
     assert(rawLines(dir, "_MANIFEST@dev") == Seq("#version:2"))
     assert(DigestManifest.head(dir.toString, "dev") ==
@@ -273,7 +273,7 @@ class BranchTimestampSpec extends org.scalatest.funsuite.AnyFunSuite {
     val m = graft.sources.DigestManifest
     m.publish(dir.toString, Seq("a.csv,1"))
     m.publish(dir.toString, Seq("a.csv,1"), "dev")
-    m.publishAppend(dir.toString, Seq("b.csv,2"), 1, "dev")
+    m.publishAppend(dir.toString, Seq("b.csv,2"), "dev")
     def tsOf(name: String, v: Int): Long = {
       import scala.jdk.CollectionConverters._
       java.nio.file.Files.readAllLines(dir.resolve(name)).asScala

@@ -44,7 +44,7 @@ class ShardGroupSpec extends AnyFunSuite with SparkSpec {
     withThreshold(4) {
       val dir = tmp("graft_shard_rt_")
       val path = dir.toString
-      assert(DigestManifest.publishAppend(path, mixed, 0) == 1)
+      assert(DigestManifest.publishAppend(path, mixed) == 1)
       val slot = dir.resolve("_MANIFEST.v1")
       assert(firstLine(slot) == "#sharded", "v1 at 10 entries must shard")
       import scala.jdk.CollectionConverters._
@@ -61,7 +61,7 @@ class ShardGroupSpec extends AnyFunSuite with SparkSpec {
       "byte-identical to the unsharded protocol") {
     withThreshold(100) {
       val dir = tmp("graft_shard_off_")
-      DigestManifest.publishAppend(dir.toString, mixed, 0)
+      DigestManifest.publishAppend(dir.toString, mixed)
       assert(firstLine(dir.resolve("_MANIFEST.v1")) == mixed.head)
       import scala.jdk.CollectionConverters._
       assert(!Files.list(dir).iterator().asScala.exists(
@@ -74,11 +74,11 @@ class ShardGroupSpec extends AnyFunSuite with SparkSpec {
     withThreshold(4) {
       val dir = tmp("graft_shard_pruned_")
       val path = dir.toString
-      DigestManifest.publishAppend(path, mixed, 0)
+      DigestManifest.publishAppend(path, mixed)
       // post-base commits: one matching add, one foreign add, one removal
       // in a skipped group (must no-op against the partial base)
-      DigestManifest.publishAppend(path, Seq("lang_bb-f4.csv,11"), 1)
-      DigestManifest.publishAppend(path, Seq("lang_cc-f3.csv,12"), 2)
+      DigestManifest.publishAppend(path, Seq("lang_bb-f4.csv,11"))
+      DigestManifest.publishAppend(path, Seq("lang_cc-f3.csv,12"))
       val pruned = DigestManifest.listingFor(path, "_MANIFEST", Some(Set("bb")))
       val bbAndCatchall = mixed.filter(l =>
         l.startsWith("lang_bb-") || l.startsWith("part-"))
@@ -98,7 +98,7 @@ class ShardGroupSpec extends AnyFunSuite with SparkSpec {
     withThreshold(4) {
       val dir = tmp("graft_shard_fold_")
       val path = dir.toString
-      DigestManifest.publishAppend(path, mixed, 0)
+      DigestManifest.publishAppend(path, mixed)
       // v2: replace — drop lang_aa-f2 and mutate lang_bb-f2's entry
       val v2Lines = mixed.filterNot(_ == "lang_aa-f2.csv,4")
         .map(l => if (l == "lang_bb-f2.csv,6") "lang_bb-f2.csv,5,dv=AQ" else l)
@@ -121,8 +121,7 @@ class ShardGroupSpec extends AnyFunSuite with SparkSpec {
       // 20 single-entry appends: v16 is a periodic FULL base and has 16
       // entries >= threshold, so it shards mid-chain
       (1 to 20).foreach { i =>
-        DigestManifest.publishAppend(path, Seq(s"lang_l${i % 3}-f$i.csv,$i"),
-          DigestManifest.currentVersion(path))
+        DigestManifest.publishAppend(path, Seq(s"lang_l${i % 3}-f$i.csv,$i"))
       }
       assert(firstLine(dir.resolve("_MANIFEST.v16")) == "#sharded")
       DigestManifest.clearHeadCacheForTest()
@@ -158,7 +157,7 @@ class ShardGroupSpec extends AnyFunSuite with SparkSpec {
       val dir = tmp("graft_shard_split_")
       val path = dir.toString
       val lines = zoned(10)
-      DigestManifest.publishAppend(path, lines, 0)
+      DigestManifest.publishAppend(path, lines)
       import scala.jdk.CollectionConverters._
       val header = Files.readAllLines(dir.resolve("_MANIFEST.v1")).asScala
       assert(header.head == "#sharded")
@@ -179,7 +178,7 @@ class ShardGroupSpec extends AnyFunSuite with SparkSpec {
       val dir = tmp("graft_shard_zone_")
       val path = dir.toString
       val lines = zoned(12) // 3 sub-shards: [0,399],[400,799],[800,1199]
-      DigestManifest.publishAppend(path, lines, 0)
+      DigestManifest.publishAppend(path, lines)
       DigestManifest.clearHeadCacheForTest()
       // band [450, 520] overlaps only the middle sub-shard (entries 4-7)
       val banded = DigestManifest.listingFor(path, "_MANIFEST",
@@ -204,7 +203,7 @@ class ShardGroupSpec extends AnyFunSuite with SparkSpec {
       val path = dir.toString
       val lines = zoned(4) ++ Seq("lang_en-plain.csv,7") ++
         zoned(4).map(_.replace("-z", "-w")) // second zoned run, same zones
-      DigestManifest.publishAppend(path, lines, 0)
+      DigestManifest.publishAppend(path, lines)
       import scala.jdk.CollectionConverters._
       val header = Files.readAllLines(dir.resolve("_MANIFEST.v1")).asScala
       // 9 entries / target 4 → 3 sub-shards; the middle one holds the
@@ -227,7 +226,7 @@ class ShardGroupSpec extends AnyFunSuite with SparkSpec {
       val dir = tmp("graft_shard_upsert_")
       val path = dir.toString
       val lines = zoned(12)
-      DigestManifest.publishAppend(path, lines, 0)
+      DigestManifest.publishAppend(path, lines)
       // v2 mutates entry 0 (shard [0,399]) to cover a FAR band — wider
       // than the base-write-time shard summary knows
       val widened = "lang_en-z0.csv,10,zmin=5000,zmax=5099"
@@ -255,7 +254,7 @@ class ShardGroupSpec extends AnyFunSuite with SparkSpec {
       mixed.foreach { l =>
         Files.write(dir.resolve(l.split(",")(0)), "1,aa,1\n".getBytes("UTF-8"))
       }
-      DigestManifest.publishAppend(path, mixed, 0)
+      DigestManifest.publishAppend(path, mixed)
       import scala.jdk.CollectionConverters._
       def shards(): Seq[java.nio.file.Path] =
         Files.list(dir).iterator().asScala
@@ -293,7 +292,7 @@ class ShardGroupSpec extends AnyFunSuite with SparkSpec {
       mixed.foreach { l =>
         Files.write(dir.resolve(l.split(",")(0)), "1,aa,1\n".getBytes("UTF-8"))
       }
-      DigestManifest.publishAppend(path, mixed, 0)
+      DigestManifest.publishAppend(path, mixed)
       import scala.jdk.CollectionConverters._
       def folds(): Seq[java.nio.file.Path] = Files.list(dir).iterator().asScala
         .filter(_.getFileName.toString.startsWith(".fold._MANIFEST")).toSeq
@@ -341,7 +340,7 @@ class ShardGroupSpec extends AnyFunSuite with SparkSpec {
         idsOf(g, k).foreach(BloomCodec.add(b, _))
         s"lang_l$g-p$k.csv,10,bf=${BloomCodec.encode(b, 10)}"
       }
-      assert(DigestManifest.publishAppend(path, lines, 0) == 1)
+      assert(DigestManifest.publishAppend(path, lines) == 1)
       assert(firstLine(dir.resolve("_MANIFEST.v1")) == "#sharded")
       val header = Files.readAllLines(dir.resolve("_MANIFEST.v1"))
       import scala.jdk.CollectionConverters._
@@ -386,7 +385,7 @@ class ShardGroupSpec extends AnyFunSuite with SparkSpec {
         // 12 untagged entries -> 3 sub-shards of 4
         val lines = (0 until 12).map(i =>
           s"ev-p$i.parquet,100,ids=1;2,zmin.c1=${i * 100},zmax.c1=${i * 100 + 99}")
-        assert(DigestManifest.publishAppend(path, lines, 0) == 1)
+        assert(DigestManifest.publishAppend(path, lines) == 1)
         assert(firstLine(dir.resolve("_MANIFEST.v1")) == "#sharded")
         import scala.jdk.CollectionConverters._
         val zoneLines = Files.readAllLines(dir.resolve("_MANIFEST.v1"))
@@ -423,10 +422,9 @@ class ShardGroupSpec extends AnyFunSuite with SparkSpec {
       // seed (shards at 64+), warm the cache, then one tiny append: the
       // warm fold must apply exactly that delta on the cached base
       val seed = (0 until 300).map(i => s"lang_l${i % 3}-p$i.csv,${i % 7 + 1}")
-      DigestManifest.publishAppend(path, seed, 0)
+      DigestManifest.publishAppend(path, seed)
       DigestManifest.head(path)
-      DigestManifest.publishAppend(path, Seq("lang_l0-tail.csv,5"),
-        DigestManifest.currentVersion(path))
+      DigestManifest.publishAppend(path, Seq("lang_l0-tail.csv,5"))
       assert(warmVsCold() == seed :+ "lang_l0-tail.csv,5")
       // a replace that mutates one entry in place and removes another —
       // the non-append fold path
@@ -440,8 +438,7 @@ class ShardGroupSpec extends AnyFunSuite with SparkSpec {
       // pile on commits past the next periodic FULL base: the warm fold
       // must stay exact across the delta->base re-anchor
       (0 until 20).foreach { k =>
-        DigestManifest.publishAppend(path, Seq(s"lang_l0-extra$k.csv,1"),
-          DigestManifest.currentVersion(path))
+        DigestManifest.publishAppend(path, Seq(s"lang_l0-extra$k.csv,1"))
       }
       assert(warmVsCold() ==
         mutated ++ (0 until 20).map(k => s"lang_l0-extra$k.csv,1"))

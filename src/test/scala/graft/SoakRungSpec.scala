@@ -29,15 +29,13 @@ class SoakRungSpec extends AnyFunSuite {
     while (n < target) {
       val lines = (n until math.min(n + batch, target))
         .map(i => s"lang_l${i % 4}-part-$i.csv,${i % 97 + 1}")
-      DigestManifest.publishAppend(path, lines,
-        DigestManifest.currentVersion(path))
+      DigestManifest.publishAppend(path, lines)
       n += lines.size
     }
     // prime the cache, land one tiny commit, then measure the warm fold:
     // exactly that one delta on top of the cached listing
     DigestManifest.head(path)
-    DigestManifest.publishAppend(path, Seq("lang_l0-hot.csv,1"),
-      DigestManifest.currentVersion(path))
+    DigestManifest.publishAppend(path, Seq("lang_l0-hot.csv,1"))
     val t0 = System.nanoTime()
     val (_, lines) = DigestManifest.head(path)
     val hotUs = (System.nanoTime() - t0) / 1000L
@@ -64,8 +62,7 @@ class SoakRungSpec extends AnyFunSuite {
         s"lang_l${i % 4}-part-$i.csv,${i % 97 + 1}," +
           s"bf=${BloomCodec.encode(build, i % 97 + 1)}"
       }
-      DigestManifest.publishAppend(path, lines,
-        DigestManifest.currentVersion(path))
+      DigestManifest.publishAppend(path, lines)
       n += lines.size
     }
     val needleId = (target / 2) / 10000L
